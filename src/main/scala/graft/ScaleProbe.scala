@@ -1010,7 +1010,6 @@ object ScaleProbe {
       // vectors only for the ShortK-bounded shortlist
       if (only.forall(_.contains("q510_policy_committed"))) {
         import graft.expressions.VectorExpressions.l2sqF
-        import org.apache.spark.sql.expressions.Window
         val vecs = shifted(Tables.embeddings(spark, sfDir),
           Seq("vec_id"), n, 100000000L)
           .select(col("vec_id"),
@@ -1044,16 +1043,13 @@ object ScaleProbe {
             queries, codedBack, "vec_id", "v", cents, cb,
             math.min(graft.operators.Similarity.numProbes(ncl),
               cents.size), 40)
-          short
+          graft.operators.TopK.rank(short
             .join(vecs.select(col("vec_id").as("neighbor_id"),
               col("v").as("__nv")), Seq("neighbor_id"))
             .join(queries.select(col("vec_id").as("query_id"),
               col("v").as("__qv")), Seq("query_id"))
-            .withColumn("__d", l2sqF(col("__qv"), col("__nv")))
-            .withColumn("rn2", row_number().over(
-              Window.partitionBy(col("query_id"))
-                .orderBy(col("__d").asc, col("neighbor_id"))))
-            .filter(col("rn2") <= 10)
+            .withColumn("__d", l2sqF(col("__qv"), col("__nv"))),
+            "query_id", col("__d").asc, "neighbor_id", 10)
         }
       }
       // q515 shape: deletion-vector delete + cold preassigned serve —
@@ -1136,7 +1132,6 @@ object ScaleProbe {
       // curve with a smaller candidate constant
       if (only.forall(_.contains("q520_dv_filtered_adc"))) {
         import graft.expressions.VectorExpressions.l2sqF
-        import org.apache.spark.sql.expressions.Window
         val vecs = shifted(Tables.embeddings(spark, sfDir),
           Seq("vec_id"), n, 100000000L)
           .select(col("vec_id"),
@@ -1175,16 +1170,13 @@ object ScaleProbe {
               cents.size), cents.size, total / 20, total)
           val short = graft.operators.Similarity.ivfPqAdcTopK(
             queries, live, "vec_id", "v", cents, cb, widened, 40)
-          short
+          graft.operators.TopK.rank(short
             .join(vecs.select(col("vec_id").as("neighbor_id"),
               col("v").as("__nv")), Seq("neighbor_id"))
             .join(queries.select(col("vec_id").as("query_id"),
               col("v").as("__qv")), Seq("query_id"))
-            .withColumn("__d", l2sqF(col("__qv"), col("__nv")))
-            .withColumn("rn2", row_number().over(
-              Window.partitionBy(col("query_id"))
-                .orderBy(col("__d").asc, col("neighbor_id"))))
-            .filter(col("rn2") <= 10)
+            .withColumn("__d", l2sqF(col("__qv"), col("__nv"))),
+            "query_id", col("__d").asc, "neighbor_id", 10)
         }
       }
       // q509 shape: streaming IVF ingest — the quantizer FREEZES at

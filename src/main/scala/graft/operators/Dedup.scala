@@ -970,9 +970,10 @@ object Dedup {
     * zero-loss baseline.
     *
     * Caller contract: ids unique, one row per id. Null text is
-    * treated as empty. `bandWidth` no longer drives the access path;
-    * the `bandWidth > maxDist` guard is kept as the API's documented
-    * contract (callers sized it against maxDist).
+    * treated as empty. `bandWidth` is deprecated and ignored: it no
+    * longer drives the access path, and the old `bandWidth > maxDist`
+    * guard is gone, so any value is accepted. The parameter stays
+    * only for source compatibility.
     */
   def editDistanceJoin(docs: DataFrame, idCol: String, textCol: String,
       maxDist: Int, @deprecated("unused since exact-length blocking; " +

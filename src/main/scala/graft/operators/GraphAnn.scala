@@ -85,19 +85,15 @@ object GraphAnn {
       idCol: String, codeCol: String, k: Int): DataFrame = {
     val sc = codes.select(col(idCol).as("src"), col(codeCol).as("__sc"))
     val dc = codes.select(col(idCol).as("dst"), col(codeCol).as("__dc"))
-    val w = Window.partitionBy(col("src"))
-      .orderBy(col("idot").desc, col("dst"))
     // dst-join first, src-join LAST (optimization r15, guide §2.4):
     // when the code joins shuffle (corpus-sized codes at scale), the
     // final join leaves the frame hash-partitioned by src — exactly
     // the top-k window's required distribution, so the window's own
     // exchange is elided
-    cand.join(dc, "dst").join(sc, "src")
-      .withColumn("idot", dotI(col("__sc"), col("__dc")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("src"), col("rn").cast("long").as("rn"), col("dst"),
-        col("idot"))
+    TopK.rank(cand.join(dc, "dst").join(sc, "src")
+        .withColumn("idot", dotI(col("__sc"), col("__dc"))),
+        "src", col("idot").desc, "dst", k)
+      .select(col("src"), col("rn"), col("dst"), col("idot"))
   }
 
   /** NN-descent: `rounds` rounds of co-neighbor refinement over the
@@ -420,18 +416,9 @@ object GraphAnn {
       switchBelow: Long): DataFrame = {
     val nAllowed = allowed.count()
     if (nAllowed <= switchBelow) {
-      val qc = queries.select(col(idCol).as("query_id"),
-        col(codeCol).as("__qc"))
-      val ac = allowed.select(col(idCol).as("neighbor_id"),
-        col(codeCol).as("__nc"))
-      qc.join(ac, col("query_id") =!= col("neighbor_id"))
-        .withColumn("idot", dotI(col("__qc"), col("__nc")))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("query_id"))
-            .orderBy(col("idot").desc, col("neighbor_id"))).cast("long"))
-        .filter(col("rn") <= topK)
+      TopK.exact(queries, allowed, idCol, codeCol, dotI, _.desc, topK)
         .select(col("query_id"), col("rn"), col("neighbor_id"),
-          col("idot"), lit("exact_scan").as("plan"))
+          col("score").as("idot"), lit("exact_scan").as("plan"))
     } else {
       val overlay = nnDescent(allowed, idCol, codeCol,
         k = 4, rounds = 1, buckets = math.max(1,
@@ -498,9 +485,8 @@ object GraphAnn {
           .select(col("query_id"), col("dst").as("node")))
       st = dedupKeep(st.union(exp), beam).localCheckpoint(false)
     }
-    st.filter(col("node") =!= col("query_id"))
-      .withColumn("rn", row_number().over(wBeam).cast("long"))
-      .filter(col("rn") <= topK)
+    TopK.rank(st.filter(col("node") =!= col("query_id")), "query_id",
+        col("idot").desc, "node", topK)
       .select(col("query_id"), col("rn"), col("node").as("neighbor_id"),
         col("idot"))
   }
@@ -544,8 +530,11 @@ object GraphAnn {
     val q = queries.select(col(idCol).as("query_id"),
         col(codeCol).as("__qc"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // `allowed` may repeat a node; deduplicate before the left join or
+    // every repeat duplicates that node's corpus row
     val cs = codes.select(col(idCol).as("node"), col(codeCol).as("__nc"))
-      .join(allowed.withColumn("__m", lit(true)), Seq("node"), "left")
+      .join(allowed.select(col("node")).distinct().withColumn("__m", lit(true)),
+        Seq("node"), "left")
       .select(col("node"), col("__nc"),
         coalesce(col("__m"), lit(false)).as("__m"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -566,8 +555,6 @@ object GraphAnn {
           .orderBy(col("__h"), col("node")).limit(entryK)
           .select(col("node")))
       .distinct()
-    val wBeam = Window.partitionBy(col("query_id"))
-      .orderBy(col("idot").desc, col("node"))
     // the per-step cut window: partitioned by (query_id, tag) — for
     // each tag's row set this is the SAME dedup+rank as a window
     // partitioned by query_id alone over that set
@@ -641,9 +628,8 @@ object GraphAnn {
       st = dedupKeep(st.unionByName(tagged(scored(pairs))), beam)
         .localCheckpoint(false)
     }
-    st.filter(col("__t") === "r")
-      .withColumn("rn", row_number().over(wBeam).cast("long"))
-      .filter(col("rn") <= topK)
+    TopK.rank(st.filter(col("__t") === "r"), "query_id", col("idot").desc,
+        "node", topK)
       .select(col("query_id"), col("rn"), col("node").as("neighbor_id"),
         col("idot"))
   }

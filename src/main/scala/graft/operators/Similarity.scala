@@ -63,27 +63,21 @@ object Similarity {
 
   /** Exact top-k neighbors for each query vector. `queries` must be
     * small (it is broadcast); `corpus` streams. Self-matches excluded.
+    * The cosine instance of [[TopK.exact]].
     */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
-      vecCol: String, k: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"))
-    // spread the STREAMED side: the |corpus|×|queries| cosine map runs
-    // in the corpus scan's stage, a single task on an under-split
-    // local source — the serial-CPU wall of every brute-force truth
-    // gate (guide §2.2; no-op at scale)
-    val c = Spread.byKey(
-      corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("nvec")),
-      "neighbor_id")
-    val scored = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", cosineNative(col("qvec"), col("nvec")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("rn").cast("long").as("rn"),
-        col("neighbor_id"), col("cos").as("cosine"))
-  }
+      vecCol: String, k: Int): DataFrame =
+    TopK.exact(queries, corpus, idCol, vecCol, cosineNative, _.desc, k)
+      .withColumnRenamed("score", "cosine")
+
+  /** Cosine-rank an ANN probe's candidate pairs (query_id, qvec,
+    * neighbor_id, nvec, …): (query_id, rn, neighbor_id, cosine).
+    */
+  private def cosineTopK(cands: DataFrame, k: Int): DataFrame =
+    TopK.rank(cands.withColumn("cos", cosineNative(col("qvec"), col("nvec"))),
+        "query_id", col("cos").desc, "neighbor_id", k)
+      .select(col("query_id"), col("rn"), col("neighbor_id"),
+        col("cos").as("cosine"))
 
   /** Deterministic random hyperplanes (fixed seed), `planes` × `dim`. */
   def hyperplanes(planes: Int, dim: Int): Seq[Seq[Double]] = {
@@ -129,24 +123,15 @@ object Similarity {
         .select(col(id), col(vec), col("tb.t").as("t"), col("tb.b").as("b"))
     val q = bucketed(queries, "query_id", "qvec")
     val c = bucketed(corpus, "neighbor_id", "nvec")
-    val cands = c.join(broadcast(q.select(col("query_id"), col("t"), col("b"))),
-        Seq("t", "b"))
-      .filter(col("query_id") =!= col("neighbor_id"))
+    val cands = TopK.probe(c, q.select(col("query_id"), col("t"), col("b")),
+        "t", "b")
       .select(col("query_id"), col("neighbor_id"))
       .distinct()
-    val scored = cands
+    cosineTopK(cands
       .join(broadcast(queries.select(col(idCol).as("query_id"),
         col(vecCol).as("qvec"))), Seq("query_id"))
       .join(corpus.select(col(idCol).as("neighbor_id"),
-        col(vecCol).as("nvec")), Seq("neighbor_id"))
-      .withColumn("cos", cosineNative(col("qvec"), col("nvec")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("rn").cast("long").as("rn"),
-        col("neighbor_id"), col("cos").as("cosine"))
+        col(vecCol).as("nvec")), Seq("neighbor_id")), k)
   }
 
   /** IVF coarse quantizer: index of the nearest centroid by cosine
@@ -363,15 +348,7 @@ object Similarity {
       explode(assignCells(col(vecCol), cents, probes)).as("cell"))
     val c = coded.select(col(idCol).as("neighbor_id"),
       col(vecCol).as("nvec"), col(cellCol).as("cell"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    c.join(broadcast(q), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", cosineNative(col("qvec"), col("nvec")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("rn").cast("long").as("rn"),
-        col("neighbor_id"), col("cos").as("cosine"))
+    cosineTopK(TopK.probe(c, q, "cell"), k)
   }
 
   /** Quantizer-drift audit — the RETRAIN trigger of the incremental
@@ -466,15 +443,11 @@ object Similarity {
     */
   def hardNegatives(served: DataFrame, positives: DataFrame,
       scoreCol: String, m: Int): DataFrame = {
-    require(m >= 1)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col(scoreCol).desc, col("neighbor_id"))
-    served
+    val unlabeled = served
       .join(positives.select(col("query_id"), col("neighbor_id")),
         Seq("query_id", "neighbor_id"), "left_anti")
-      .withColumn("negative_rank", row_number().over(w).cast("long"))
-      .filter(col("negative_rank") <= m)
-      .select(col("query_id"), col("negative_rank"),
+    TopK.rank(unlabeled, "query_id", col(scoreCol).desc, "neighbor_id", m)
+      .select(col("query_id"), col("rn").as("negative_rank"),
         col("neighbor_id"), col(scoreCol))
   }
 
@@ -533,16 +506,7 @@ object Similarity {
       explode(assignCells(col(vecCol), cents, probes)).as("cell"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("nvec"),
       assignCell(col(vecCol), cents).as("cell"))
-    val scored = c.join(broadcast(q), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", cosineNative(col("qvec"), col("nvec")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("rn").cast("long").as("rn"),
-        col("neighbor_id"), col("cos").as("cosine"))
+    cosineTopK(TopK.probe(c, q, "cell"), k)
   }
 
   /** Multi-probe LSH ANN top-k: each query probes its own bucket plus
@@ -575,16 +539,7 @@ object Similarity {
         .as("bucket"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("nvec"),
       hyperplaneBucket(col(vecCol), planes).as("bucket"))
-    val scored = c.join(broadcast(q), Seq("bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", cosineNative(col("qvec"), col("nvec")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("rn").cast("long").as("rn"),
-        col("neighbor_id"), col("cos").as("cosine"))
+    cosineTopK(TopK.probe(c, q, "bucket"), k)
   }
 
   /** IVF ANN top-k: probe only the query's own centroid cell. Same
@@ -599,16 +554,7 @@ object Similarity {
       ivfAssign(col(vecCol), centroids).as("cell"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("nvec"),
       ivfAssign(col(vecCol), centroids).as("cell"))
-    val scored = c.join(broadcast(q), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", cosineNative(col("qvec"), col("nvec")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("rn").cast("long").as("rn"),
-        col("neighbor_id"), col("cos").as("cosine"))
+    cosineTopK(TopK.probe(c, q, "cell"), k)
   }
 
   /** IVF serving against a PERSISTED index: the [[annTopKIvf]] probe
@@ -627,16 +573,7 @@ object Similarity {
       k: Int): DataFrame = {
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
       ivfAssign(col(vecCol), centroids).as("cell"))
-    val scored = index.join(broadcast(q), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", cosineNative(col("qvec"), col("nvec")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("rn").cast("long").as("rn"),
-        col("neighbor_id"), col("cos").as("cosine"))
+    cosineTopK(TopK.probe(index, q, "cell"), k)
   }
 
   /** The index frame [[annTopKIvfServe]] consumes: corpus vectors
@@ -659,16 +596,7 @@ object Similarity {
       hyperplaneBucket(col(vecCol), planes).as("bucket"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("nvec"),
       hyperplaneBucket(col(vecCol), planes).as("bucket"))
-    val scored = c.join(broadcast(q), Seq("bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", cosineNative(col("qvec"), col("nvec")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("rn").cast("long").as("rn"),
-        col("neighbor_id"), col("cos").as("cosine"))
+    cosineTopK(TopK.probe(c, q, "bucket"), k)
   }
 
   /** Top principal direction of the (uncentered) embedding
@@ -758,19 +686,14 @@ object Similarity {
     // (VectorExpressionsSpec), which is what quantizeInt8 emits
     val idot = graft.expressions.VectorExpressions.dotI(
       col("query_id_q"), col("neighbor_id_q"))
-    val scored = c.join(broadcast(q), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
+    val scored = TopK.probe(c, q, "cell")
       .withColumn("idot", idot)
       .withColumn("score",
         (col("query_id_scale") * col("neighbor_id_scale")) *
           col("idot").cast("double"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("neighbor_id"))
-    scored
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("rn").cast("long").as("rn"),
-        col("neighbor_id"), col("idot"), col("score"))
+    TopK.rank(scored, "query_id", col("score").desc, "neighbor_id", k)
+      .select(col("query_id"), col("rn"), col("neighbor_id"), col("idot"),
+        col("score"))
   }
 
   /** Symmetric int8 quantization of an embedding vector — the 4×
@@ -907,26 +830,21 @@ object Similarity {
     * ([[graft.operators.Corpus.negativeSample]]) don't. Same broadcast
     * nested-loop shape as [[bruteForceTopK]] (the documented exact
     * baseline; the ANN variants are the scale route — swap the scored
-    * frame for an `annTopK*` probe with a label filter).
+    * frame for an `annTopK*` probe with a label filter). The label
+    * rides with the vector through [[TopK.pairs]], and the
+    * different-label predicate filters the pairs before ranking.
     */
   def hardNegatives(queries: DataFrame, corpus: DataFrame, idCol: String,
       vecCol: String, labelCol: String, k: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"),
-      col(vecCol).as("qvec"), col(labelCol).as("q_label"))
-    val c = corpus.select(col(idCol).as("neighbor_id"),
-      col(vecCol).as("nvec"), col(labelCol).as("n_label"))
-    val scored = c.join(broadcast(q),
-        col("query_id") =!= col("neighbor_id") &&
-          col("q_label") =!= col("n_label"))
-      .withColumn("cos", cosineNative(col("qvec"), col("nvec")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("q_label"),
-        col("rn").cast("long").as("rn"), col("neighbor_id"),
-        col("n_label"), col("cos").as("cosine"))
+    def labelled(df: DataFrame) = df.select(col(idCol),
+      struct(col(vecCol).as("v"), col(labelCol).as("l")).as("__vl"))
+    val scored = TopK.pairs(labelled(queries), labelled(corpus), idCol,
+        "__vl", (q, n) => cosineNative(q.getField("v"), n.getField("v")))
+      .filter(col("qval.l") =!= col("nval.l"))
+    TopK.rank(scored, "query_id", col("score").desc, "neighbor_id", k)
+      .select(col("query_id"), col("qval.l").as("q_label"), col("rn"),
+        col("neighbor_id"), col("nval.l").as("n_label"),
+        col("score").as("cosine"))
   }
 
   /** Corpus diversity as the SUM OF ALL PAIRWISE Hamming distances
@@ -1112,21 +1030,11 @@ object Similarity {
     */
   def hammingTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
       vecCol: String, dim: Int, k: Int): DataFrame = {
-    def prep(df: DataFrame, id: String) =
-      df.select(col(idCol).as(id),
-        binarizeSign(col(vecCol), dim).as(s"${id}_w"))
-    val q = prep(queries, "query_id")
-    val c = prep(corpus, "neighbor_id")
-    val scored = c.join(broadcast(q),
-        col("query_id") =!= col("neighbor_id"))
-      .withColumn("hdist", graft.expressions.VectorExpressions.hammingW(
-        col("query_id_w"), col("neighbor_id_w")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("hdist").asc, col("neighbor_id"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("rn").cast("long").as("rn"),
-        col("neighbor_id"), col("hdist"))
+    def prep(df: DataFrame) =
+      df.select(col(idCol), binarizeSign(col(vecCol), dim).as("__w"))
+    TopK.exact(prep(queries), prep(corpus), idCol, "__w",
+        graft.expressions.VectorExpressions.hammingW, _.asc, k)
+      .withColumnRenamed("score", "hdist")
   }
 
   // ------------------------------------------------------------------
@@ -1253,19 +1161,17 @@ object Similarity {
   def pqAdcTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
       vecCol: String, codebooks: Seq[Seq[Seq[Double]]], k: Int)
       : DataFrame = {
+    // keeps its own join (no corpus Spread): the TopK.exact shape
+    // measured slower on q212/q443 at sf0.1
     val c = corpus.select(col(idCol).as("neighbor_id"),
       pqEncode(col(vecCol), codebooks).as("codes"))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     val adist = graft.expressions.PqExpressions.pqAdc(
       col("qv"), col("codes"), codebooks)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adist").asc, col("neighbor_id"))
-    c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("adist", adist)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("rn").cast("long").as("rn"),
-        col("neighbor_id"), col("adist"))
+    TopK.rank(c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
+        .withColumn("adist", adist), "query_id", col("adist").asc,
+        "neighbor_id", k)
+      .select(col("query_id"), col("rn"), col("neighbor_id"), col("adist"))
   }
 
   /** Centroid of a runtime cell id against a trained (cell, centroid)
@@ -1337,15 +1243,9 @@ object Similarity {
       col("cell"), col("codes"))
     val adist = graft.expressions.PqExpressions.pqAdc(
       col("qres"), col("codes"), codebooks)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("adist").asc, col("neighbor_id"))
-    c.join(broadcast(q), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("adist", adist)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("rn").cast("long").as("rn"),
-        col("neighbor_id"), col("adist"))
+    TopK.rank(TopK.probe(c, q, "cell").withColumn("adist", adist),
+        "query_id", col("adist").asc, "neighbor_id", k)
+      .select(col("query_id"), col("rn"), col("neighbor_id"), col("adist"))
   }
 
   /** The IVF-PQ index build: (id, cell, codes) with codes the
@@ -1445,15 +1345,12 @@ object Similarity {
     val b = df.select(col(idCol).as("vid"), col(vecCol).as("v"),
       col(labelCol).as("lbl"),
       hyperplaneBucket(col(vecCol), planes).as("bucket"))
-    val w = Window.partitionBy(col("vid"))
-      .orderBy(col("cos").desc, col("nid"))
-    val top = b.as("a")
+    val top = TopK.rank(b.as("a")
       .join(b.select(col("vid").as("nid"), col("v").as("nv"),
         col("lbl").as("nlbl"), col("bucket")).as("c"), Seq("bucket"))
       .filter(col("vid") =!= col("nid"))
-      .withColumn("cos", cosineNative(col("v"), col("nv")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
+      .withColumn("cos", cosineNative(col("v"), col("nv"))),
+      "vid", col("cos").desc, "nid", k)
     val agg = top.groupBy(col("vid"))
       .agg(count(lit(1)).as("n_neighbors"),
         sum(when(col("lbl") === col("nlbl"), 1L).otherwise(0L))
@@ -1514,12 +1411,9 @@ object Similarity {
         array((0 until dim).map(d =>
           col(s"s$d").cast("double") /
             (col("n").cast("double") * KmQ)): _*).as("__c"))
-    val w = Window.partitionBy(col(grpCol))
-      .orderBy(col("cos").asc, col(idCol))
-    df.join(broadcast(cents), Seq(grpCol))
-      .withColumn("cos", cosineNative(col(vecCol), col("__c")))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= bottomK)
+    TopK.rank(df.join(broadcast(cents), Seq(grpCol))
+        .withColumn("cos", cosineNative(col(vecCol), col("__c"))),
+        grpCol, col("cos").asc, idCol, bottomK)
       .select(col(grpCol), col("rn"), col(idCol), col("n_members"),
         col("cos"))
   }
@@ -1602,12 +1496,10 @@ object Similarity {
       col(vecCol).as("__qv"))
     val cv = corpus.select(col(idCol).as("neighbor_id"),
       col(vecCol).as("__nv"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    cv.join(broadcast(sl.join(qv, Seq("query_id"))), Seq("neighbor_id"))
-      .withColumn("cosine", cosineNative(col("__qv"), col("__nv")))
-      .withColumn("rn", row_number().over(w).cast("long"))
-      .filter(col("rn") <= k)
+    TopK.rank(
+        cv.join(broadcast(sl.join(qv, Seq("query_id"))), Seq("neighbor_id"))
+          .withColumn("cosine", cosineNative(col("__qv"), col("__nv"))),
+        "query_id", col("cosine").desc, "neighbor_id", k)
       .select(col("query_id"), col("rn"), col("neighbor_id"),
         col("cosine"))
   }
@@ -1649,15 +1541,11 @@ object Similarity {
     val base = cands.select(col("query_id"), col("cand_id"),
       col("rel").cast("long").as("rel"), col("cvec"))
       .localCheckpoint(true)
-    def winner(scored: DataFrame, r: Int): DataFrame = {
-      val w = Window.partitionBy(col("query_id"))
-        .orderBy(col("score").desc, col("cand_id"))
-      scored.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1)
+    def winner(scored: DataFrame, r: Int): DataFrame =
+      TopK.rank(scored, "query_id", col("score").desc, "cand_id", 1)
         .select(col("query_id"), lit(r.toLong).as("rank"),
           col("cand_id"), col("rel"), col("maxsim"), col("score"),
           col("cvec"))
-    }
     var selected = winner(base
       .withColumn("maxsim", lit(0L))
       .withColumn("score", col("rel") * lambdaPpm), 1)

@@ -119,21 +119,32 @@ object EdgePipeline {
       numAttrs = Seq("Private_links_num", "Public_links_num"),
       textAttrs = Seq("Model", "Version"))
 
+  /** Target table and unique merge key of one gold table. */
+  final case class MergeTarget(table: String, keys: Seq[String])
+
+  /** The edge-side gold tables' merge targets — shared by [[run]] and
+    * [[PowerBiPipeline.run]].
+    */
+  val EdgeTarget: MergeTarget = MergeTarget("Edge", Seq("EdgeID"))
+  // composite key: link internalIds are only unique PER EDGE (the
+  // same caveat Links.enrichLinkMetrics documents) — a bare LinkUUID
+  // key would let same-id links on different edges overwrite each
+  // other in the merge
+  val LinksTarget: MergeTarget = MergeTarget("Links", Seq("EdgeID", "LinkUUID"))
+  val EdgeAttributesTarget: MergeTarget =
+    MergeTarget("EdgeAttributes", Seq("uuid", "name"))
+
   /** Run the full slice into a JDBC target (idempotent merges; safe to
     * re-run — the reconciliation test replays it).
     */
   def run(edges: DataFrame, url: String,
       dialect: JdbcUpsertSink.Dialect): Unit = {
+    def w(df: DataFrame, t: MergeTarget): Unit =
+      JdbcUpsertSink.write(df, url, t.table, t.keys, dialect)
     val gold = edgeGold(edges)
-    JdbcUpsertSink.write(gold, url, "Edge", Seq("EdgeID"), dialect)
-    // composite key: link internalIds are only unique PER EDGE (the
-    // same caveat Links.enrichLinkMetrics documents) — a bare
-    // LinkUUID key would let same-id links on different edges
-    // overwrite each other in the merge
-    JdbcUpsertSink.write(linksGold(edges), url, "Links",
-      Seq("EdgeID", "LinkUUID"), dialect)
-    JdbcUpsertSink.write(edgeAttributes(gold), url, "EdgeAttributes",
-      Seq("uuid", "name"), dialect)
+    w(gold, EdgeTarget)
+    w(linksGold(edges), LinksTarget)
+    w(edgeAttributes(gold), EdgeAttributesTarget)
   }
 
   /** §3.3 reconciliation (`inventory_sla.py:106-140`): the minimal

@@ -239,15 +239,15 @@ object PowerBiPipeline {
       JdbcUpsertSink.write(
         writePartitions.map(df.coalesce).getOrElse(df),
         url, table, keys, dialect, updateColsOpt)
+    import EdgePipeline.{EdgeAttributesTarget, EdgeTarget, LinksTarget}
     w(gold.customer, "Customer", Seq("CustomerID"))
-    w(gold.edge, "Edge", Seq("EdgeID"))
-    // composite key: internalIds are only unique per edge (see
-    // EdgePipeline.run)
-    w(gold.links, "Links", Seq("EdgeID", "LinkUUID"))
+    w(gold.edge, EdgeTarget.table, EdgeTarget.keys)
+    w(gold.links, LinksTarget.table, LinksTarget.keys)
     w(gold.events, "Events", Seq("EventID"), Some(Seq.empty))
     w(gold.dailyQoe, "DailyQOE", Seq("EdgeKey", "QoeDate"))
     w(gold.license, "License", Seq("EdgeID"))
-    w(gold.edgeAttributes, "EdgeAttributes", Seq("uuid", "name"))
+    w(gold.edgeAttributes, EdgeAttributesTarget.table,
+      EdgeAttributesTarget.keys)
     w(gold.customerAttributes, "CustomerAttributes", Seq("uuid", "name"))
   }
 

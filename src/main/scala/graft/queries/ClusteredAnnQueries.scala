@@ -511,57 +511,60 @@ object ClusteredAnnQueries extends QueryPack {
       cents: Seq[(Int, Seq[Double])]): Int =
     math.min(Similarity.numProbes(ncl), cents.size)
 
-  /** Brute-force cosine top-k (self excluded) — the IVF family's
-    * exact ground truth (double vectors, cosine ranking).
+  /** Exact top-`k` (query_id, neighbor_id) pairs of `queries` over
+    * `corpus`, self excluded, under `score` on `valCol` — the ground
+    * truth the recall rows measure against ([[graft.operators.TopK]]).
     */
-  private def bruteCosTopK(queries: DataFrame, corpus: DataFrame): DataFrame = {
-    val qc = queries.select(col("vec_id").as("query_id"),
-      col("v").as("__qv"))
-    qc.join(corpus.select(col("vec_id").as("neighbor_id"),
-        col("v").as("__nv")),
-        col("query_id") =!= col("neighbor_id"))
-      .withColumn("__c", Similarity.cosineNative(col("__qv"), col("__nv")))
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("__c").desc, col("neighbor_id"))))
-      .filter(col("__rn") <= TopK)
+  private def exactPairs(queries: DataFrame, corpus: DataFrame,
+      valCol: String, score: (Column, Column) => Column,
+      order: Column => Column, k: Int = TopK): DataFrame =
+    graft.operators.TopK.exact(queries, corpus, "vec_id", valCol, score,
+        order, k)
       .select(col("query_id"), col("neighbor_id"))
-  }
 
-  /** Brute-force exact L2 top-k (self excluded) — the PQ family's
-    * ground truth (squared L2 is the metric ADC approximates). The
+  /** Brute-force cosine top-k — the IVF family's exact ground truth
+    * (double vectors, cosine ranking). Keeps its own unhinted join
+    * (Spark picks the broadcast side): on this helper's gates the
+    * broadcast-queries + Spread-corpus shape of
+    * [[graft.operators.TopK.exact]] measured slower at sf0.1 by more
+    * than the run-to-run spread of this join.
+    */
+  private def bruteCosTopK(queries: DataFrame, corpus: DataFrame): DataFrame =
+    graft.operators.TopK.rank(
+        queries.select(col("vec_id").as("query_id"), col("v").as("__qv"))
+          .join(corpus.select(col("vec_id").as("neighbor_id"),
+            col("v").as("__nv")), col("query_id") =!= col("neighbor_id"))
+          .withColumn("__c", Similarity.cosineNative(col("__qv"), col("__nv"))),
+        "query_id", col("__c").desc, "neighbor_id", TopK)
+      .select(col("query_id"), col("neighbor_id"))
+
+  /** Brute-force exact L2 top-k — the PQ family's ground truth
+    * (squared L2 is the metric ADC approximates). The
     * `(__d asc, neighbor_id)` tiebreak must stay bit-identical with
     * [[rerankL2]] and every oracle's `l2dAt` ranking.
     */
   private def bruteL2TopK(queries: DataFrame,
-      corpus: DataFrame): DataFrame = {
-    import graft.expressions.VectorExpressions.l2sqF
-    queries.select(col("vec_id").as("query_id"), col("v").as("__qv"))
-      .join(corpus.select(col("vec_id").as("neighbor_id"),
-        col("v").as("__nv")),
-        col("query_id") =!= col("neighbor_id"))
-      .withColumn("__d", l2sqF(col("__qv"), col("__nv")))
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("__d").asc, col("neighbor_id"))))
-      .filter(col("__rn") <= TopK)
-      .select(col("query_id"), col("neighbor_id"))
-  }
+      corpus: DataFrame): DataFrame =
+    exactPairs(queries, corpus, "v",
+      graft.expressions.VectorExpressions.l2sqF, _.asc)
 
   /** Exact-L2 re-rank of a (query_id, neighbor_id, …) shortlist
     * against the raw vectors — the production second stage shared by
     * every ADC gate (the shortlist is ShortK-bounded, so the raw-
-    * vector join is the only cold read the serve pays).
+    * vector join is the only cold read the serve pays). The JL/SQ8
+    * gates re-rank on the integer codes with [[l2iCol]]. Every
+    * shortlist row keeps its rank (no limit).
     */
   private def rerankL2(short: DataFrame, queries: DataFrame,
-      corpus: DataFrame): DataFrame = {
-    import graft.expressions.VectorExpressions.l2sqF
+      corpus: DataFrame, valCol: String = "v",
+      dist: (Column, Column) => Column =
+        graft.expressions.VectorExpressions.l2sqF): DataFrame = {
     short
       .join(corpus.select(col("vec_id").as("neighbor_id"),
-        col("v").as("__nv")), Seq("neighbor_id"))
+        col(valCol).as("__nv")), Seq("neighbor_id"))
       .join(queries.select(col("vec_id").as("query_id"),
-        col("v").as("__qv")), Seq("query_id"))
-      .withColumn("__d", l2sqF(col("__qv"), col("__nv")))
+        col(valCol).as("__qv")), Seq("query_id"))
+      .withColumn("__d", dist(col("__qv"), col("__nv")))
       .withColumn("rn2", row_number().over(
         Window.partitionBy(col("query_id"))
           .orderBy(col("__d").asc, col("neighbor_id"))))
@@ -724,19 +727,8 @@ object ClusteredAnnQueries extends QueryPack {
   }
 
   /** Exact integer-dot top-k over `corpus` (self excluded). */
-  private def bruteTopK(queries: DataFrame, corpus: DataFrame): DataFrame = {
-    val qc = queries.select(col("vec_id").as("query_id"),
-      col("code").as("__qc"))
-    qc.join(corpus.select(col("vec_id").as("neighbor_id"),
-        col("code").as("__nc")),
-        col("query_id") =!= col("neighbor_id"))
-      .withColumn("__d", dotI(col("__qc"), col("__nc")))
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("__d").desc, col("neighbor_id"))))
-      .filter(col("__rn") <= TopK)
-      .select(col("query_id"), col("neighbor_id"))
-  }
+  private def bruteTopK(queries: DataFrame, corpus: DataFrame): DataFrame =
+    exactPairs(queries, corpus, "code", dotI, _.desc)
 
   /** One (family, n_queries, denom, hits, recall_ppm) row. */
   private def recallRow(family: String, queries: DataFrame,
@@ -800,19 +792,8 @@ object ClusteredAnnQueries extends QueryPack {
           "vec_id", "v", cents, TopK, Probes)
         // exact top-k under the SAME metric the serve ranks by
         // (cosine): brute-force cosine, ties to the smaller id
-        val qc = queries.select(col("vec_id").as("query_id"),
-          col("v").as("__qv"))
-        val exact = qc.join(vecs.select(col("vec_id").as("neighbor_id"),
-            col("v").as("__nv")),
-            col("query_id") =!= col("neighbor_id"))
-          .withColumn("__c",
-            Similarity.cosineNative(col("__qv"), col("__nv")))
-          .withColumn("__rn", row_number().over(
-            Window.partitionBy(col("query_id"))
-              .orderBy(col("__c").desc, col("neighbor_id"))))
-          .filter(col("__rn") <= TopK)
-          .select(col("query_id"), col("neighbor_id"))
-        recallRow("ivf_multiprobe", queries, served, exact)
+        recallRow("ivf_multiprobe", queries, served,
+          bruteCosTopK(queries, vecs))
       },
       {
         Some(s"""WITH $codesCte,
@@ -1158,40 +1139,12 @@ object ClusteredAnnQueries extends QueryPack {
             Similarity.jlProjectInt(col("code"), Dim, JlDim, ":jl"))
           .localCheckpoint(true)
         val queries = proj.filter(col("vec_id") % 25 === 0)
-        val shortlist = queries
-          .select(col("vec_id").as("query_id"), col("y").as("__qy"))
-          .join(proj.select(col("vec_id").as("neighbor_id"),
-            col("y").as("__ny")),
-            col("query_id") =!= col("neighbor_id"))
-          .withColumn("__pd", l2iCol(col("__qy"), col("__ny")))
-          .withColumn("rn", row_number().over(
-            Window.partitionBy(col("query_id"))
-              .orderBy(col("__pd").asc, col("neighbor_id"))))
-          .filter(col("rn") <= JlShortK)
+        val shortlist = graft.operators.TopK.exact(queries, proj, "vec_id",
+            "y", l2iCol, _.asc, JlShortK)
           .select(col("query_id"), col("neighbor_id"), col("rn"))
           .localCheckpoint(true)
-        val rerank = shortlist
-          .join(proj.select(col("vec_id").as("neighbor_id"),
-            col("code").as("__nc")), Seq("neighbor_id"))
-          .join(queries.select(col("vec_id").as("query_id"),
-            col("code").as("__qc")), Seq("query_id"))
-          .withColumn("__d", l2iCol(col("__qc"), col("__nc")))
-          .withColumn("rn2", row_number().over(
-            Window.partitionBy(col("query_id"))
-              .orderBy(col("__d").asc, col("neighbor_id"))))
-          .select(col("query_id"), col("neighbor_id"),
-            col("rn2").as("rn"))
-        val exact = queries
-          .select(col("vec_id").as("query_id"), col("code").as("__qc"))
-          .join(proj.select(col("vec_id").as("neighbor_id"),
-            col("code").as("__nc")),
-            col("query_id") =!= col("neighbor_id"))
-          .withColumn("__d", l2iCol(col("__qc"), col("__nc")))
-          .withColumn("__rn", row_number().over(
-            Window.partitionBy(col("query_id"))
-              .orderBy(col("__d").asc, col("neighbor_id"))))
-          .filter(col("__rn") <= TopK)
-          .select(col("query_id"), col("neighbor_id"))
+        val rerank = rerankL2(shortlist, queries, proj, "code", l2iCol)
+        val exact = exactPairs(queries, proj, "code", l2iCol, _.asc)
           .localCheckpoint(true)
         recallRow("jl_direct", queries, shortlist, exact)
           .unionByName(recallRow("jl_rerank", queries, rerank, exact))
@@ -1240,40 +1193,12 @@ object ClusteredAnnQueries extends QueryPack {
             Similarity.sq8Encode(col("code"), ranges))
           .localCheckpoint(true)
         val queries = enc.filter(col("vec_id") % 25 === 0)
-        val shortlist = queries
-          .select(col("vec_id").as("query_id"), col("sq").as("__qs"))
-          .join(enc.select(col("vec_id").as("neighbor_id"),
-            col("sq").as("__ns")),
-            col("query_id") =!= col("neighbor_id"))
-          .withColumn("__sd", l2iCol(col("__qs"), col("__ns")))
-          .withColumn("rn", row_number().over(
-            Window.partitionBy(col("query_id"))
-              .orderBy(col("__sd").asc, col("neighbor_id"))))
-          .filter(col("rn") <= JlShortK)
+        val shortlist = graft.operators.TopK.exact(queries, enc, "vec_id",
+            "sq", l2iCol, _.asc, JlShortK)
           .select(col("query_id"), col("neighbor_id"), col("rn"))
           .localCheckpoint(true)
-        val rerank = shortlist
-          .join(enc.select(col("vec_id").as("neighbor_id"),
-            col("code").as("__nc")), Seq("neighbor_id"))
-          .join(queries.select(col("vec_id").as("query_id"),
-            col("code").as("__qc")), Seq("query_id"))
-          .withColumn("__d", l2iCol(col("__qc"), col("__nc")))
-          .withColumn("rn2", row_number().over(
-            Window.partitionBy(col("query_id"))
-              .orderBy(col("__d").asc, col("neighbor_id"))))
-          .select(col("query_id"), col("neighbor_id"),
-            col("rn2").as("rn"))
-        val exact = queries
-          .select(col("vec_id").as("query_id"), col("code").as("__qc"))
-          .join(enc.select(col("vec_id").as("neighbor_id"),
-            col("code").as("__nc")),
-            col("query_id") =!= col("neighbor_id"))
-          .withColumn("__d", l2iCol(col("__qc"), col("__nc")))
-          .withColumn("__rn", row_number().over(
-            Window.partitionBy(col("query_id"))
-              .orderBy(col("__d").asc, col("neighbor_id"))))
-          .filter(col("__rn") <= TopK)
-          .select(col("query_id"), col("neighbor_id"))
+        val rerank = rerankL2(shortlist, queries, enc, "code", l2iCol)
+        val exact = exactPairs(queries, enc, "code", l2iCol, _.asc)
           .localCheckpoint(true)
         recallRow("sq8_direct", queries, shortlist, exact)
           .unionByName(recallRow("sq8_rerank", queries, rerank, exact))
@@ -1628,18 +1553,7 @@ object ClusteredAnnQueries extends QueryPack {
         val queries = queriesOf(codes)
         val served = GraphAnn.beamServe(queries, graph, codes,
           "vec_id", "code", EntryK, Beam, Steps, topK = 10)
-        val qc = queries.select(col("vec_id").as("query_id"),
-          col("code").as("__qc"))
-        val positives = qc
-          .join(codes.select(col("vec_id").as("neighbor_id"),
-            col("code").as("__nc")),
-            col("query_id") =!= col("neighbor_id"))
-          .withColumn("__d", dotI(col("__qc"), col("__nc")))
-          .withColumn("__rn", row_number().over(
-            Window.partitionBy(col("query_id"))
-              .orderBy(col("__d").desc, col("neighbor_id"))))
-          .filter(col("__rn") === 1)
-          .select(col("query_id"), col("neighbor_id"))
+        val positives = exactPairs(queries, codes, "code", dotI, _.desc, 1)
         Similarity.hardNegatives(served, positives, "idot", m = 5)
           .orderBy(col("query_id"), col("negative_rank"))
       },
@@ -2758,16 +2672,18 @@ object ClusteredAnnQueries extends QueryPack {
           val choice = IndexPolicy.choose(n, Dim, allowed, budget)
           val row = choice match {
             case IndexPolicy.Flat =>
+              // the flat index IS the exact scan. It keeps its own
+              // unhinted join: q522 read slower at sf0.1 with
+              // TopK.exact's broadcast + Spread shape here
               val ac = codes.filter(cond)
-              val served = qi.select(col("vec_id").as("query_id"),
-                  col("code").as("__qc"))
-                .join(ac.select(col("vec_id").as("neighbor_id"),
-                  col("code").as("__nc")),
-                  col("query_id") =!= col("neighbor_id"))
-                .withColumn("__d", dotI(col("__qc"), col("__nc")))
-                .withColumn("rn", row_number().over(
-                  Window.partitionBy(col("query_id"))
-                    .orderBy(col("__d").desc, col("neighbor_id"))))
+              val served = graft.operators.TopK.rank(
+                  qi.select(col("vec_id").as("query_id"),
+                      col("code").as("__qc"))
+                    .join(ac.select(col("vec_id").as("neighbor_id"),
+                      col("code").as("__nc")),
+                      col("query_id") =!= col("neighbor_id"))
+                    .withColumn("__d", dotI(col("__qc"), col("__nc"))),
+                  "query_id", col("__d").desc, "neighbor_id", TopK)
                 .select(col("query_id"), col("neighbor_id"), col("rn"))
               recallRow(name, qi, served, bruteTopK(qi, ac))
             case IndexPolicy.Graph =>

@@ -1,7 +1,6 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 import graft.Tables
 import graft.operators.{GraphAnn, Similarity}
@@ -185,17 +184,8 @@ object GraphAnnQueries extends QueryPack {
   private def auditExact(served: org.apache.spark.sql.DataFrame,
       queries: org.apache.spark.sql.DataFrame,
       codes: org.apache.spark.sql.DataFrame) = {
-    val qc = queries.select(col("vec_id").as("query_id"),
-      col("code").as("__qc"))
-    val exact = qc
-      .join(codes.select(col("vec_id").as("neighbor_id"),
-        col("code").as("__nc")),
-        col("query_id") =!= col("neighbor_id"))
-      .withColumn("__d", dotI(col("__qc"), col("__nc")))
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("__d").desc, col("neighbor_id"))))
-      .filter(col("__rn") <= TopK)
+    val exact = graft.operators.TopK.exact(queries, codes, "vec_id", "code",
+        dotI, _.desc, TopK)
       .select(col("query_id"), col("neighbor_id"), lit(true).as("__hit"))
     served.join(exact, Seq("query_id", "neighbor_id"), "left")
       .withColumn("in_exact_top3", coalesce(col("__hit"), lit(false)))

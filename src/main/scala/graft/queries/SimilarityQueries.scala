@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.Similarity
+import graft.operators.{Similarity, TopK}
 import graft.queries.Fixtures.materializeAndDelete
 
 /** q31–q32, q39: similarity search over the embeddings table — exact
@@ -1279,22 +1279,14 @@ object SimilarityQueries extends QueryPack {
     // identical greedy rounds as CTEs (the q433 discipline).
     "q442_mmr_rerank" -> Q(
       (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
         val coded = Tables.embeddings(s, dir).select(col("vec_id"),
           Similarity.quantizeInt8(col("embedding")).getField("q").as("cv"))
-        val q = coded.filter(col("vec_id") % 100 === 0)
-          .select(col("vec_id").as("query_id"), col("cv").as("qv"))
-        val pairs = coded
-          .select(col("vec_id").as("cand_id"), col("cv").as("cvec"))
-          .join(broadcast(q), col("query_id") =!= col("cand_id"))
-          .withColumn("rel", graft.expressions.VectorExpressions.dotI(
-            col("qv"), col("cvec")))
-        val w = Window.partitionBy(col("query_id"))
-          .orderBy(col("rel").desc, col("cand_id"))
-        val cands = pairs.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") <= 8)
-          .select(col("query_id"), col("cand_id"), col("rel"),
-            col("cvec"))
+        val pairs = TopK.pairs(coded.filter(col("vec_id") % 100 === 0),
+          coded, "vec_id", "cv", graft.expressions.VectorExpressions.dotI)
+        val cands = TopK.rank(pairs, "query_id", col("score").desc,
+            "neighbor_id", 8)
+          .select(col("query_id"), col("neighbor_id").as("cand_id"),
+            col("score").as("rel"), col("nval").as("cvec"))
         Similarity.mmrRerank(cands, lambdaPpm = 700000L, k = 3)
           .orderBy(col("query_id"), col("rank"))
       },
@@ -1437,7 +1429,6 @@ object SimilarityQueries extends QueryPack {
     // hash-gates — not just each leg.
     "q455_drift_gated_maintenance" -> Q(
       (s, dir) => {
-        import org.apache.spark.sql.expressions.Window
         import org.apache.spark.sql.DataFrame
         val e = Tables.embeddings(s, dir)
           .select(col("vec_id"), vec(col("embedding")).as("v"))
@@ -1453,16 +1444,11 @@ object SimilarityQueries extends QueryPack {
           val qq = q.select(col("vec_id").as("query_id"),
             col("v").as("qvec"),
             Similarity.kmAssign(col("v"), cents).as("cell"))
-          val w = Window.partitionBy(col("query_id"))
-            .orderBy(col("cos").desc, col("neighbor_id"))
-          idx.join(broadcast(qq), Seq("cell"))
-            .filter(col("query_id") =!= col("neighbor_id"))
-            .withColumn("cos",
-              Similarity.cosineNative(col("qvec"), col("nvec")))
-            .withColumn("rn", row_number().over(w))
-            .filter(col("rn") <= 3)
-            .select(col("query_id"), col("rn").cast("long").as("rn"),
-              col("neighbor_id"), col("cos").as("cosine"))
+          TopK.rank(TopK.probe(idx, qq, "cell").withColumn("cos",
+              Similarity.cosineNative(col("qvec"), col("nvec"))),
+              "query_id", col("cos").desc, "neighbor_id", 3)
+            .select(col("query_id"), col("rn"), col("neighbor_id"),
+              col("cos").as("cosine"))
         }
         def scenario(tag: String, delta: DataFrame) = {
           val drift = graft.operators.QualityFilters

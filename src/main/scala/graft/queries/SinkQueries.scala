@@ -630,9 +630,9 @@ object SinkQueries extends QueryPack {
           .select(col("nk"), (col("cnt") * 2).as("n"), lit("second").as("src"))
           .coalesce(1)
         JdbcUpsertSink.write(batch1, url, "seen", Seq("nk"),
-          JdbcUpsertSink.DerbyInsertIfAbsent)
+          JdbcUpsertSink.DerbyMerge, updateColsOpt = Some(Seq.empty))
         JdbcUpsertSink.write(batch2, url, "seen", Seq("nk"),
-          JdbcUpsertSink.DerbyInsertIfAbsent)
+          JdbcUpsertSink.DerbyMerge, updateColsOpt = Some(Seq.empty))
         materializeAndDrop(
           s.read.format("jdbc").option("url", url)
             .option("dbtable", "seen").load()

@@ -72,8 +72,10 @@ object JdbcUpsertSink {
       val on = keyCols.map(k => s"t.$k = ?").mkString(" AND ")
       val ins = s"(${cols.mkString(", ")}) VALUES (${cols.map(_ => "?").mkString(", ")})"
       if (updateCols.isEmpty)
-        // all-key table: degenerate to insert-if-absent (a MATCHED
-        // clause with an empty SET list is invalid SQL)
+        // all-key table, or `updateColsOpt = Some(Seq.empty)`: K2
+        // insert-if-absent, the reference's INSERT IGNORE for Events
+        // (`fun_mysql_inserts.py:277-288`; a MATCHED clause with an
+        // empty SET list is invalid SQL)
         s"""MERGE INTO $table t
            |USING SYSIBM.SYSDUMMY1 s ON $on
            |WHEN NOT MATCHED THEN INSERT $ins""".stripMargin
@@ -87,22 +89,6 @@ object JdbcUpsertSink {
     }
     def bindOrder(cols: Seq[String], keyCols: Seq[String],
         updateCols: Seq[String]): Seq[String] = keyCols ++ updateCols ++ cols
-  }
-
-  /** K2 `INSERT IGNORE` semantics (Events dedupe on its unique key,
-    * `fun_mysql_inserts.py:277-288`): merge that never updates.
-    */
-  case object DerbyInsertIfAbsent extends Dialect {
-    def upsertSql(table: String, cols: Seq[String], keyCols: Seq[String],
-        updateCols: Seq[String]): String = {
-      val on = keyCols.map(k => s"t.$k = ?").mkString(" AND ")
-      val ins = s"(${cols.mkString(", ")}) VALUES (${cols.map(_ => "?").mkString(", ")})"
-      s"""MERGE INTO $table t
-         |USING SYSIBM.SYSDUMMY1 s ON $on
-         |WHEN NOT MATCHED THEN INSERT $ins""".stripMargin
-    }
-    def bindOrder(cols: Seq[String], keyCols: Seq[String],
-        updateCols: Seq[String]): Seq[String] = keyCols ++ cols
   }
 
   private def setParam(ps: PreparedStatement, idx: Int, dt: DataType,

@@ -220,6 +220,22 @@ class GraphAnnSpec extends SparkSpec {
     assert(served.sortBy(_._2).map(_._3).toSeq === exact)
   }
 
+  test("beamServeFiltered ranks each node once when the allowed set repeats nodes") {
+    import spark.implicits._
+    val graph = GraphAnn.nnDescent(codesDf, "vec_id", "code",
+      k = 4, rounds = 3, buckets = 2)
+    val allowed = codesDf.filter(col("vec_id").isin(6L, 8L))
+    // steps = 0: the served list is the entry set's matched rows, so a
+    // repeated allowed node shows up as a repeated neighbour
+    val served = GraphAnn.beamServeFiltered(
+        codesDf.filter(col("vec_id") === 1L), graph, codesDf,
+        allowed.union(allowed), "vec_id", "code", entryK = 8, beam = 6,
+        steps = 0, topK = 4)
+      .select("query_id", "neighbor_id").as[(Long, Long)].collect()
+    assert(served.length === served.distinct.length)
+    assert(served.map(_._2).toSet === Set(6L, 8L))
+  }
+
   test("beamServeFilteredLayered collects only allowed nodes through a layer descent") {
     import spark.implicits._
     val graph = GraphAnn.nnDescent(codesDf, "vec_id", "code",

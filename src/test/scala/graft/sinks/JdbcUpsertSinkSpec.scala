@@ -58,8 +58,10 @@ class JdbcUpsertSinkSpec extends SparkSpec {
     withTable("CREATE TABLE ev (k INT PRIMARY KEY, v VARCHAR(50))", "ev") {
       val b1 = Seq((1, "first")).toDF("k", "v")
       val b2 = Seq((1, "second"), (2, "new")).toDF("k", "v")
-      JdbcUpsertSink.write(b1, url, "ev", Seq("k"), JdbcUpsertSink.DerbyInsertIfAbsent)
-      JdbcUpsertSink.write(b2, url, "ev", Seq("k"), JdbcUpsertSink.DerbyInsertIfAbsent)
+      JdbcUpsertSink.write(b1, url, "ev", Seq("k"), JdbcUpsertSink.DerbyMerge,
+        updateColsOpt = Some(Seq.empty))
+      JdbcUpsertSink.write(b2, url, "ev", Seq("k"), JdbcUpsertSink.DerbyMerge,
+        updateColsOpt = Some(Seq.empty))
       assert(queryAll("SELECT k, v FROM ev ORDER BY k") ===
         Seq(Seq(1, "first"), Seq(2, "new")))
     }
