@@ -485,10 +485,22 @@ object GraphAnn {
           .select(col("query_id"), col("dst").as("node")))
       st = dedupKeep(st.union(exp), beam).localCheckpoint(false)
     }
-    TopK.rank(st.filter(col("node") =!= col("query_id")), "query_id",
-        col("idot").desc, "node", topK)
+    released(TopK.rank(st.filter(col("node") =!= col("query_id")),
+        "query_id", col("idot").desc, "node", topK)
       .select(col("query_id"), col("rn"), col("node").as("neighbor_id"),
-        col("idot"))
+        col("idot")), q +: cs +: layersP.map(_._1))
+  }
+
+  /** Materialise a beam core's served top-k, then unpersist the frames
+    * the walk persisted: the returned frame reads only its own
+    * checkpoint, and a long-lived session does not accumulate one
+    * cached query/codes/graph copy per serve call.
+    */
+  private def released(served: DataFrame,
+      persisted: Seq[DataFrame]): DataFrame = {
+    val out = served.localCheckpoint()
+    persisted.foreach(_.unpersist())
+    out
   }
 
   private def beamCoreFiltered(queries: DataFrame, codes: DataFrame,
@@ -628,9 +640,9 @@ object GraphAnn {
       st = dedupKeep(st.unionByName(tagged(scored(pairs))), beam)
         .localCheckpoint(false)
     }
-    TopK.rank(st.filter(col("__t") === "r"), "query_id", col("idot").desc,
-        "node", topK)
+    released(TopK.rank(st.filter(col("__t") === "r"), "query_id",
+        col("idot").desc, "node", topK)
       .select(col("query_id"), col("rn"), col("node").as("neighbor_id"),
-        col("idot"))
+        col("idot")), q +: cs +: layersP.map(_._1))
   }
 }

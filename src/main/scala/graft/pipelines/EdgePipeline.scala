@@ -7,6 +7,7 @@ import graft.functions.Text
 import graft.model.Schemas
 import graft.operators.Melt
 import graft.sinks.JdbcUpsertSink
+import graft.sinks.JdbcUpsertSink.MergeTarget
 
 /** Gold-table slice (SURVEY §7.2.2-3, §3.1 restatement): nested edge
   * documents → Edge + Links + EdgeAttributes, written through the
@@ -119,9 +120,6 @@ object EdgePipeline {
       numAttrs = Seq("Private_links_num", "Public_links_num"),
       textAttrs = Seq("Model", "Version"))
 
-  /** Target table and unique merge key of one gold table. */
-  final case class MergeTarget(table: String, keys: Seq[String])
-
   /** The edge-side gold tables' merge targets — shared by [[run]] and
     * [[PowerBiPipeline.run]].
     */
@@ -139,12 +137,11 @@ object EdgePipeline {
     */
   def run(edges: DataFrame, url: String,
       dialect: JdbcUpsertSink.Dialect): Unit = {
-    def w(df: DataFrame, t: MergeTarget): Unit =
-      JdbcUpsertSink.write(df, url, t.table, t.keys, dialect)
     val gold = edgeGold(edges)
-    w(gold, EdgeTarget)
-    w(linksGold(edges), LinksTarget)
-    w(edgeAttributes(gold), EdgeAttributesTarget)
+    JdbcUpsertSink.writeAll(Seq(
+      gold -> EdgeTarget,
+      linksGold(edges) -> LinksTarget,
+      edgeAttributes(gold) -> EdgeAttributesTarget), url, dialect)
   }
 
   /** §3.3 reconciliation (`inventory_sla.py:106-140`): the minimal

@@ -7,6 +7,7 @@ import graft.functions.{Dates, Text}
 import graft.model.Schemas
 import graft.operators.{Aggregates, ConfigStack, License, Melt, Qoe, Relational}
 import graft.sinks.JdbcUpsertSink
+import graft.sinks.JdbcUpsertSink.MergeTarget
 
 /** §3.1 end-to-end: the whole `powerbi_main_script.py` run as ONE
   * declarative DAG (`process_customer` + `process_full_edge`,
@@ -226,29 +227,34 @@ object PowerBiPipeline {
     * statements' worth of batches). Events is insert-only (K2): an
     * event is an immutable fact, replay must not touch it.
     *
-    * `writePartitions` bounds the concurrent connections per table
+    * The eight tables merge concurrently ([[JdbcUpsertSink.writeAll]],
+    * one driver thread per table). Every table is attempted even when
+    * one fails; the first failure in table order is rethrown once all
+    * writes have finished.
+    *
+    * `writePartitions` bounds the concurrent connections PER TABLE
     * (the sink's own guidance: coalesce to the database's connection
-    * budget BEFORE the write). Embedded Derby in the specs takes 1 —
-    * parallel MERGE statements on one table can deadlock its lock
-    * manager; a production MySQL target takes its pool size.
+    * budget BEFORE the write), so at most 8 × `writePartitions`
+    * connections are open at once. Embedded Derby in the specs takes
+    * 1 — parallel MERGE statements on one table can deadlock its lock
+    * manager; a production MySQL target takes its connection budget
+    * divided by the table count.
     */
   def run(gold: Gold, url: String, dialect: JdbcUpsertSink.Dialect,
       writePartitions: Option[Int] = None): Unit = {
-    def w(df: DataFrame, table: String, keys: Seq[String],
-        updateColsOpt: Option[Seq[String]] = None): Unit =
-      JdbcUpsertSink.write(
-        writePartitions.map(df.coalesce).getOrElse(df),
-        url, table, keys, dialect, updateColsOpt)
     import EdgePipeline.{EdgeAttributesTarget, EdgeTarget, LinksTarget}
-    w(gold.customer, "Customer", Seq("CustomerID"))
-    w(gold.edge, EdgeTarget.table, EdgeTarget.keys)
-    w(gold.links, LinksTarget.table, LinksTarget.keys)
-    w(gold.events, "Events", Seq("EventID"), Some(Seq.empty))
-    w(gold.dailyQoe, "DailyQOE", Seq("EdgeKey", "QoeDate"))
-    w(gold.license, "License", Seq("EdgeID"))
-    w(gold.edgeAttributes, EdgeAttributesTarget.table,
-      EdgeAttributesTarget.keys)
-    w(gold.customerAttributes, "CustomerAttributes", Seq("uuid", "name"))
+    JdbcUpsertSink.writeAll(Seq(
+      gold.customer -> MergeTarget("Customer", Seq("CustomerID")),
+      gold.edge -> EdgeTarget,
+      gold.links -> LinksTarget,
+      gold.events -> MergeTarget("Events", Seq("EventID"),
+        updateCols = Some(Seq.empty)),
+      gold.dailyQoe -> MergeTarget("DailyQOE", Seq("EdgeKey", "QoeDate")),
+      gold.license -> MergeTarget("License", Seq("EdgeID")),
+      gold.edgeAttributes -> EdgeAttributesTarget,
+      gold.customerAttributes ->
+        MergeTarget("CustomerAttributes", Seq("uuid", "name"))),
+      url, dialect, writePartitions)
   }
 
   /** §3.3 reconciliation (A20, `inventory_sla.py:106-140`): per-

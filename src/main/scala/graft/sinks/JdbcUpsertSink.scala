@@ -26,9 +26,20 @@ import org.apache.spark.sql.types._
   *    are safe with no transactional coordination;
   *  - the per-row dynamic-SQL string interpolation of
   *    `fun_mysql_inserts.py:125-153` (injection-prone) is replaced by
-  *    a fixed statement with bound parameters.
+  *    a fixed statement with bound parameters;
+  *  - a pipeline's tables merge CONCURRENTLY ([[writeAll]]), one
+  *    driver thread per table — the reference's thread pool over
+  *    independent units of work (`powerbi_main_script.py:85-93`). The
+  *    per-table merge is unchanged, so a per-table connection bound
+  *    of `p` means at most tables × `p` connections open at once.
   */
 object JdbcUpsertSink {
+
+  /** Target table and unique merge key of one table; `updateCols` as
+    * in [[write]] (`Some(Seq.empty)` = insert-only, K2).
+    */
+  final case class MergeTarget(table: String, keys: Seq[String],
+      updateCols: Option[Seq[String]] = None)
 
   /** Engine-specific merge statement over fixed column lists. */
   sealed trait Dialect {
@@ -126,7 +137,9 @@ object JdbcUpsertSink {
     // partitions MERGE-ing into one table under full-suite load can
     // trip Derby-internal latch errors (Page.unlatch NPE). Serialize
     // the test dialects to one writer; MySQL (production) stays
-    // partition-parallel.
+    // partition-parallel. (Concurrent writers on DIFFERENT tables, as
+    // [[writeAll]] runs them, are safe: PowerBiPipelineSpec runs all
+    // eight tables five times in a row into one database.)
     val singleWriter = dialect != MySql
     val target = if (singleWriter) df.coalesce(1) else df
 
@@ -192,6 +205,45 @@ object JdbcUpsertSink {
           try conn.close() catch { case _: Exception => () }
         }
       }
+    }
+  }
+
+  /** Merge each frame into its target, all tables at once: one
+    * [[write]] per table, each on its own driver thread, so the
+    * tables' small Spark jobs overlap instead of queueing behind one
+    * another. `writePartitions` coalesces each frame before its write
+    * — a PER-TABLE connection bound.
+    *
+    * The threads are created per call: Spark's local properties (job
+    * group, description, scheduler pool) are inheritable thread-locals
+    * copied when a thread is constructed, so every table's jobs carry
+    * the caller's properties as of this call.
+    *
+    * Every table is attempted and every write has finished before
+    * this returns (an interrupt is deferred until then); the first
+    * failure in `targets` order is rethrown, with the later ones
+    * suppressed on it.
+    */
+  def writeAll(targets: Seq[(DataFrame, MergeTarget)], url: String,
+      dialect: Dialect, writePartitions: Option[Int] = None): Unit = {
+    val failures = new Array[Throwable](targets.size)
+    val writers = targets.zipWithIndex.map { case ((df, t), i) =>
+      new Thread(() =>
+        try write(writePartitions.map(df.coalesce).getOrElse(df), url,
+          t.table, t.keys, dialect, t.updateCols)
+        catch { case e: Throwable => failures(i) = e },
+        s"jdbc-upsert-${t.table}")
+    }
+    var interrupted = false
+    try writers.foreach(_.start())
+    finally writers.foreach { w =>
+      while (w.isAlive)
+        try w.join() catch { case _: InterruptedException => interrupted = true }
+    }
+    if (interrupted) Thread.currentThread().interrupt()
+    failures.filter(_ != null).toList match {
+      case first :: rest => rest.foreach(first.addSuppressed); throw first
+      case Nil => ()
     }
   }
 }

@@ -216,7 +216,8 @@ object TxLog {
     * rows, (min,max) per stat column); THROWS on anything the footer
     * can't answer exactly — callers wrap and fall back to the scan.
     */
-  private def footerFileStats(dataAbs: String, statCols: Seq[String])
+  private[sources] def footerFileStats(dataAbs: String,
+      statCols: Seq[String])
       : IndexedSeq[(String, Long, IndexedSeq[(Long, Long)])] = {
     import scala.jdk.CollectionConverters._
     val conf = hadoopConf()
@@ -224,15 +225,26 @@ object TxLog {
     val fs = root.getFileSystem(conf)
     val rootQ = fs.makeQualified(root)
     val rootPrefix = rootQ.toString + "/"
+    // Spark's own listing rule (InMemoryFileIndex), applied to every
+    // segment below the root so the footer form sees exactly the
+    // files the scan form reads: `.`/`_` names are hidden — a
+    // leftover `_temporary/` attempt dir included — except `_c=v`
+    // partition directories
+    def hidden(seg: String): Boolean =
+      seg.startsWith(".") || (seg.startsWith("_") && !seg.contains("="))
     val files = {
       val buf = collection.mutable.ArrayBuffer
         .empty[org.apache.hadoop.fs.Path]
       val it = fs.listFiles(rootQ, true)
       while (it.hasNext) {
         val st = it.next()
-        val nm = st.getPath.getName
-        if (st.isFile && nm.endsWith(".parquet") &&
-          !nm.startsWith(".") && !nm.startsWith("_"))
+        val q = fs.makeQualified(st.getPath).toString
+        // a file escaping the root is judged by its name here and
+        // rejected by the escape check below
+        val sub = if (q.startsWith(rootPrefix)) q.stripPrefix(rootPrefix)
+          else st.getPath.getName
+        if (st.isFile && st.getPath.getName.endsWith(".parquet") &&
+          !sub.split('/').exists(hidden))
           buf += st.getPath
       }
       buf.toIndexedSeq

@@ -97,6 +97,30 @@ class GraphAnnSpec extends SparkSpec {
     assert(served(6L) === bruteTopK(6L, 3))
   }
 
+  test("beam serves unpersist the frames their walk persisted") {
+    val sc = spark.sparkContext
+    // cached frames only: Spark's cache names each cached RDD after
+    // its plan. A localCheckpoint also registers its (unnamed) RDD as
+    // persistent, and the ContextCleaner reclaims it once the frame is
+    // unreachable — the walk's per-step states and the served result
+    // are such checkpoints.
+    def persisted(): Set[String] =
+      sc.getPersistentRDDs.values.filter(_.name != null)
+        .map(_.toString).toSet
+    val graph = GraphAnn.nnDescent(codesDf, "vec_id", "code",
+      k = 4, rounds = 3, buckets = 2).localCheckpoint()
+    val queries = codesDf.filter(col("vec_id").isin(1L, 6L))
+    val before = persisted()
+    val plain = GraphAnn.beamServe(queries, graph, codesDf, "vec_id",
+      "code", entryK = 2, beam = 6, steps = 3, topK = 3)
+    val filtered = GraphAnn.beamServeFiltered(queries, graph, codesDf,
+      codesDf.filter(col("vec_id").isin(6L, 8L)), "vec_id", "code",
+      entryK = 2, beam = 6, steps = 3, topK = 3)
+    assert(plain.count() === 6L)
+    assert(filtered.count() === 3L) // allowed {6, 8}, self excluded
+    assert((persisted() -- before).isEmpty)
+  }
+
   test("beamServeLayered with one full layer IS beamServe") {
     import spark.implicits._
     val graph = GraphAnn.nnDescent(codesDf, "vec_id", "code",

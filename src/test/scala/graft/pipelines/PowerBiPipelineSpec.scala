@@ -1,6 +1,10 @@
 package graft.pipelines
 
-import java.sql.DriverManager
+import java.sql.{DriverManager, SQLException}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
 
 import graft.SparkSpec
 import graft.model.Schemas
@@ -134,21 +138,31 @@ class PowerBiPipelineSpec extends SparkSpec {
     } finally conn.close()
   }
 
-  private def snapshot(): Map[String, Seq[Seq[Any]]] =
-    tables.map { t =>
+  private def snapshot(of: Seq[String] = tables): Map[String, Seq[Seq[Any]]] =
+    of.map { t =>
       t -> queryAll(s"SELECT * FROM $t ORDER BY 1, 2")
     }.toMap
 
+  private def gold = PowerBiPipeline.build(inputs, "vco1",
+    moved = Map("c-moved" -> Seq("vco1")), eventSkip = Seq("SKIPME"))
+
+  private def run(g: PowerBiPipeline.Gold): Unit =
+    PowerBiPipeline.run(g, url, JdbcUpsertSink.DerbyMerge, writePartitions = Some(1))
+
   test("full DAG: golden values per table and replay idempotence") {
     ddl()
-    val gold = PowerBiPipeline.build(inputs, "vco1",
-      moved = Map("c-moved" -> Seq("vco1")), eventSkip = Seq("SKIPME"))
-    PowerBiPipeline.run(gold, url, JdbcUpsertSink.DerbyMerge, writePartitions = Some(1))
+    val g = gold
+    run(g)
     val first = snapshot()
-    PowerBiPipeline.run(gold, url, JdbcUpsertSink.DerbyMerge, writePartitions = Some(1)) // replay
-    val second = snapshot()
-    for (t <- tables)
-      assert(first(t) === second(t), s"table $t changed on replay")
+    // four replays into the same database: the eight tables merge
+    // concurrently, so this is also the cross-table concurrency check
+    // on embedded Derby
+    for (replay <- 1 to 4) {
+      run(g)
+      val again = snapshot()
+      for (t <- tables)
+        assert(first(t) === again(t), s"table $t changed on replay $replay")
+    }
 
     // Customer: moved + null-logicalId dropped; F1/F2/F3 applied
     assert(queryAll(
@@ -203,6 +217,58 @@ class PowerBiPipelineSpec extends SparkSpec {
         |WHERE uuid = 'c-1' ORDER BY name""".stripMargin) ===
       Seq(Seq("no_backup", 0.0), Seq("no_ha", 0.0),
         Seq("no_private_link", 0.0), Seq("no_wireless", 0.0)))
+  }
+
+  test("a failing table fails the run but every other table is merged") {
+    ddl()
+    val g = gold
+    run(g)
+    val full = snapshot()
+    ddl()
+    val conn = DriverManager.getConnection(url)
+    try conn.createStatement().executeUpdate("DROP TABLE License")
+    finally conn.close()
+    val e = intercept[Exception](run(g))
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+    assert(causes.exists {
+      case s: SQLException => s.getMessage.contains("LICENSE")
+      case _ => false
+    }, e)
+    val others = tables.filterNot(_ == "License")
+    assert(snapshot(others) === full.filter(kv => others.contains(kv._1)))
+    import scala.jdk.CollectionConverters._
+    assert(!Thread.getAllStackTraces.keySet.asScala
+      .exists(_.getName.startsWith("jdbc-upsert-")))
+  }
+
+  test("the sink's jobs carry the caller's local properties") {
+    ddl()
+    val g = gold
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val t0 = System.currentTimeMillis()
+    // submission time, not delivery: the bus may still deliver jobs of
+    // earlier tests after the listener is added
+    val listener = new SparkListener {
+      override def onJobStart(job: SparkListenerJobStart): Unit =
+        if (job.time >= t0)
+          seen.add(Option(job.properties)
+            .flatMap(p => Option(p.getProperty("graft.spec.tag")))
+            .getOrElse("<unset>"))
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.spec.tag", "powerbi-run")
+    try run(g)
+    finally {
+      sc.setLocalProperty("graft.spec.tag", null)
+      // at least one job per table
+      try eventually(timeout(Span(30, Seconds))) {
+        assert(seen.size >= tables.size)
+      } finally sc.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    // every job the run submitted, not just some
+    assert(seen.asScala.toSet === Set("powerbi-run"))
   }
 
   test("reconciliation: minimal-path counts equal full-pipeline counts") {

@@ -58,6 +58,24 @@ class TxLogSpec extends SparkSpec {
     }
   }
 
+  test("footer stats skip files under hidden directories (leftover _temporary/)") {
+    import spark.implicits._
+    withTable { t =>
+      (1L to 100L).toDF("k").repartition(2).write.parquet(t)
+      // a failed attempt's leftover: the scan form (Spark's listing)
+      // never reads it, so the footer form must not count it either
+      val part = new java.io.File(t).listFiles()
+        .find(_.getName.endsWith(".parquet")).get.toPath
+      val stale = java.nio.file.Paths.get(t, "_temporary", "0", "task_0")
+      java.nio.file.Files.createDirectories(stale)
+      java.nio.file.Files.copy(part, stale.resolve(part.getFileName))
+      val stats = TxLog.footerFileStats(t, Seq("k"))
+      assert(stats.map(_._2).sum === spark.read.parquet(t).count())
+      assert(stats.map(_._2).sum === 100L)
+      assert(!stats.exists(_._1.contains("_temporary")))
+    }
+  }
+
   test("prunedRead skips non-overlapping files and loses nothing") {
     import spark.implicits._
     withTable { t =>
