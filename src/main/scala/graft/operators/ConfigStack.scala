@@ -23,6 +23,15 @@ import org.apache.spark.sql.functions._
   *    (`update_license_and_link_usage:1999-2003`): profile level only
   *    when all of pb/css/nvs are false — see
   *    [[License.levelFallback]].
+  *
+  * A Column is a tree, not a DAG — a Scala `val` used N times is
+  * analysed, optimised and code-generated N times; branch at the
+  * leaves and build each subterm once. So the schema-version branch
+  * sits on the two leaves it changes (each level's QOS rules array and
+  * the controlPlane `vpn` struct), one fold sets all five pb flags of
+  * a level, and a subterm read more than once is bound to one lambda
+  * variable ([[bind]]). `ConfigStackSpec` and `PowerBiPipelineSpec`
+  * bound the analysed plan sizes.
   */
 object ConfigStack {
 
@@ -35,12 +44,19 @@ object ConfigStack {
   private def module(stack: Column, i: Int, name: String): Column =
     Nested.moduleByName(level(stack, i).getField("modules"), "name", name)
 
+  /** `body(value)` with `value` built and evaluated once: `body` sees
+    * it as one lambda variable, so each use is a single node instead
+    * of a copy of `value`'s tree.
+    */
+  private def bind(value: Column)(body: Column => Column): Column =
+    aggregate(array(), value, (acc, _) => acc, body)
+
   // ------------------------------------------------------------- QOS pb
 
   /** One QOS rule classified by the reference's elif chain into the
     * flag named by `which` ∈ {gw, direct, hub, css, nvs}.
     */
-  private def ruleFlag(rule: Column, which: String): Column = {
+  private[operators] def ruleFlag(rule: Column, which: String): Column = {
     val e2c = rule.getField("action").getField("routeType") === "edge2Cloud"
     val policy = coalesce(
       rule.getField("action").getField("edge2CloudRouteAction")
@@ -58,25 +74,34 @@ object ConfigStack {
     }
   }
 
+  /** ([[ruleFlag]] `which`, output field) of the five pb flags. */
+  private val pbFlagFields = Seq("gw" -> "pb_via_gw",
+    "direct" -> "pb_internet_via_direct", "hub" -> "pb_internet_via_hub",
+    "css" -> "css_via_gw", "nvs" -> "nvs_via_gw")
+
+  private def noRules = array().cast(
+    org.apache.spark.sql.types.ArrayType(graft.model.Schemas.qosRule))
+
   /** `process_segment_pb` / `process_nonsegment_pb` for one level:
     * returns (pb_via_gw, pb_internet_via_direct, pb_internet_via_hub,
-    * css_via_gw, nvs_via_gw) as a struct column. Segmented stacks read
-    * segment 0's rules only.
+    * css_via_gw, nvs_via_gw) as a struct column. `segmented` (see
+    * [[isSegmented]]) picks the rules array: segment 0's rules for
+    * segmented stacks, the flat rules otherwise. One fold over the
+    * rules sets all five flags; a flag is true when any rule
+    * classifies into it.
     */
-  def pbFlags(stack: Column, levelIdx: Int, segmented: Boolean): Column = {
-    val qos = module(stack, levelIdx, "QOS")
-    val rules =
-      if (segmented)
-        get(qos.getField("data").getField("segments"), lit(0)).getField("rules")
-      else qos.getField("data").getField("rules")
-    val safe = coalesce(rules, array().cast(
-      org.apache.spark.sql.types.ArrayType(graft.model.Schemas.qosRule)))
-    struct(
-      Nested.existsAny(safe, ruleFlag(_, "gw")).as("pb_via_gw"),
-      Nested.existsAny(safe, ruleFlag(_, "direct")).as("pb_internet_via_direct"),
-      Nested.existsAny(safe, ruleFlag(_, "hub")).as("pb_internet_via_hub"),
-      Nested.existsAny(safe, ruleFlag(_, "css")).as("css_via_gw"),
-      Nested.existsAny(safe, ruleFlag(_, "nvs")).as("nvs_via_gw"))
+  def pbFlags(stack: Column, levelIdx: Int, segmented: Column): Column = {
+    val data = module(stack, levelIdx, "QOS").getField("data")
+    val rules = when(segmented,
+        get(data.getField("segments"), lit(0)).getField("rules"))
+      .otherwise(data.getField("rules"))
+    // the zero's fields are declared non-nullable, so no partial result
+    // may be null: a null rule flag counts as false, as in existsAny
+    aggregate(coalesce(rules, noRules),
+      struct(pbFlagFields.map { case (_, f) => lit(false).as(f) }: _*),
+      (acc, rule) => struct(pbFlagFields.map { case (which, f) =>
+        (acc.getField(f) || coalesce(ruleFlag(rule, which), lit(false))).as(f)
+      }: _*))
   }
 
   /** The feature-set pb scan with its VALUE-based level fallback:
@@ -84,13 +109,12 @@ object ConfigStack {
     * of pb/css/nvs are false (`powerbi_main_fun.py:1999-2003,
     * 2018-2022`).
     */
-  def pbFlagsWithFallback(stack: Column, segmented: Boolean): Column = {
-    val e = pbFlags(stack, 0, segmented)
-    val p = pbFlags(stack, 1, segmented)
-    val useProfile = !e.getField("pb_via_gw") && !e.getField("css_via_gw") &&
-      !e.getField("nvs_via_gw")
-    when(useProfile, p).otherwise(e)
-  }
+  def pbFlagsWithFallback(stack: Column, segmented: Column): Column =
+    bind(pbFlags(stack, 0, segmented)) { e =>
+      val useProfile = !e.getField("pb_via_gw") && !e.getField("css_via_gw") &&
+        !e.getField("nvs_via_gw")
+      when(useProfile, pbFlags(stack, 1, segmented)).otherwise(e)
+    }
 
   // -------------------------------------------------------- firewall 3.x
 
@@ -161,59 +185,52 @@ object ConfigStack {
   }
 
   /** The full feature-set derivation of `update_license_and_link_usage`
-    * (`powerbi_main_fun.py:1981-2035`): branch on schemaVersion, take
-    * b2b from the Edge-Specific controlPlane, pb/css/nvs from the QOS
-    * scan with value-based level fallback, then the Premium/Enterprise
-    * elif chain. One struct column per edge document — the whole
-    * config analysis is a projection.
+    * (`powerbi_main_fun.py:1981-2035`): b2b from the Edge-Specific
+    * controlPlane, pb/css/nvs from the QOS scan with value-based level
+    * fallback, both read per [[isSegmented]], then the
+    * Premium/Enterprise elif chain. One struct column per edge
+    * document — the whole config analysis is a projection.
     */
   def featureSetFromStack(stack: Column): Column = {
-    def branch(segmented: Boolean) = {
-      val b2b = b2bFlags(stack, segmented)
-      val pb = pbFlagsWithFallback(stack, segmented)
+    val segmented = isSegmented(stack)
+    bind(struct(b2bFlags(stack, segmented).as("b2b"),
+        pbFlagsWithFallback(stack, segmented).as("pb"))) { flags =>
+      val (b2b, pb) = (flags.getField("b2b"), flags.getField("pb"))
       struct(
-        b2b.getField("b2b_via_gw").as("b2b_via_gw"),
-        b2b.getField("b2b_via_hub").as("b2b_via_hub"),
-        pb.getField("pb_via_gw").as("pb_via_gw"),
-        pb.getField("pb_internet_via_direct").as("pb_internet_via_direct"),
-        pb.getField("pb_internet_via_hub").as("pb_internet_via_hub"),
-        pb.getField("css_via_gw").as("css_via_gw"),
-        pb.getField("nvs_via_gw").as("nvs_via_gw"),
-        License.featureSet(
-          b2b.getField("b2b_via_gw"), pb.getField("pb_via_gw"),
-          pb.getField("css_via_gw"), pb.getField("nvs_via_gw"))
-          .as("feature_set"))
+        Seq("b2b_via_gw", "b2b_via_hub").map(f => b2b.getField(f).as(f)) ++
+          pbFlagFields.map { case (_, f) => pb.getField(f).as(f) } :+
+          License.featureSet(
+            b2b.getField("b2b_via_gw"), pb.getField("pb_via_gw"),
+            pb.getField("css_via_gw"), pb.getField("nvs_via_gw"))
+            .as("feature_set"): _*)
     }
-    when(isSegmented(stack), branch(segmented = true))
-      .otherwise(branch(segmented = false))
   }
 
   // ------------------------------------------------------ controlPlane b2b
 
   /** B2B VPN flags (`update_license_and_link_usage:1981-2024`): from
     * the stack entry NAMED "Edge Specific Profile" (not positional),
-    * controlPlane module; 3.x consults segments[0].vpn (requires
-    * enabled && edgeToEdge), 2.x the flat vpn (edgeToEdge only);
-    * useCloudGateway picks gw vs hub. Returns struct(b2b_via_gw,
-    * b2b_via_hub).
+    * controlPlane module; segmented (3.x) stacks consult
+    * segments[0].vpn (requires enabled && edgeToEdge), 2.x the flat
+    * vpn (edgeToEdge only); useCloudGateway picks gw vs hub. Returns
+    * struct(b2b_via_gw, b2b_via_hub).
     */
-  def b2bFlags(stack: Column, segmented: Boolean): Column = {
+  def b2bFlags(stack: Column, segmented: Column): Column = {
     val edgeSpecific = get(filter(stack,
       l => l.getField("name") === "Edge Specific Profile"), lit(0))
     val cp = Nested.moduleByName(edgeSpecific.getField("modules"), "name",
       "controlPlane").getField("data")
-    val vpn =
-      if (segmented) get(cp.getField("segments"), lit(0)).getField("vpn")
-      else cp.getField("vpn")
-    val active =
-      if (segmented)
-        coalesce(vpn.getField("enabled"), lit(false)) &&
-          coalesce(vpn.getField("edgeToEdge"), lit(false))
-      else coalesce(vpn.getField("edgeToEdge"), lit(false))
-    val useGw = coalesce(
-      vpn.getField("edgeToEdgeDetail").getField("useCloudGateway"), lit(false))
-    struct(
-      (active && useGw).as("b2b_via_gw"),
-      (active && !useGw).as("b2b_via_hub"))
+    val vpn = when(segmented,
+        get(cp.getField("segments"), lit(0)).getField("vpn"))
+      .otherwise(cp.getField("vpn"))
+    bind(vpn) { v =>
+      val active = coalesce(v.getField("edgeToEdge"), lit(false)) &&
+        (!segmented || coalesce(v.getField("enabled"), lit(false)))
+      val useGw = coalesce(
+        v.getField("edgeToEdgeDetail").getField("useCloudGateway"), lit(false))
+      struct(
+        (active && useGw).as("b2b_via_gw"),
+        (active && !useGw).as("b2b_via_hub"))
+    }
   }
 }

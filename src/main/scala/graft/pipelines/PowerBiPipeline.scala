@@ -131,8 +131,11 @@ object PowerBiPipeline {
       sort_array(collect_list(struct(
         col("link").getField("internalId").as("k"),
         col("scoreTx").as("sc")))).as("scores"))
+    // only the feature set goes below the joins: the optimiser cannot
+    // prune fields of a struct built beneath a join
     val fs = stacks.select(col("edgeId"),
-      ConfigStack.featureSetFromStack(col("stack")).as("fs"))
+      ConfigStack.featureSetFromStack(col("stack")).getField("feature_set")
+        .as("feature_set"))
     val hubFlag = hubs.select(col("edgeId"), lit(true).as("is_hub"))
     val base = edges.filter(col("logicalId").isNotNull)
       .select(col("logicalId").as("edgeId"), col("modelNumber"),
@@ -158,8 +161,8 @@ object PowerBiPipeline {
         when(col("scores").isNotNull, License.runningWeightedScore(
           transform(col("scores"), s => s.getField("sc"))))
           .otherwise(lit(0.0d)).as("Score"),
-        coalesce(col("fs").getField("feature_set"),
-          lit("Enterprise Subscription")).as("FeatureSet"),
+        coalesce(col("feature_set"), lit("Enterprise Subscription"))
+          .as("FeatureSet"),
         License.overcapacityEvent(col("modelNumber"), col("lic_mbps"),
           col("edgeState") === "CONNECTED",
           coalesce(col("is_hub"), lit(false)),

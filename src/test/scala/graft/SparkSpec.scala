@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -32,4 +32,13 @@ object SparkSpec {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Expression nodes of `df`'s analysed plan, summed over every
+    * operator. A Column builder that copies a subterm per use shows
+    * up here long before it shows up as run time.
+    */
+  def analyzedExprNodes(df: DataFrame): Int =
+    df.queryExecution.analyzed
+      .collect { case p => p.expressions.map(_.collect { case e => e }.size).sum }
+      .sum
 }

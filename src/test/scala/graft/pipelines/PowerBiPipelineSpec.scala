@@ -271,6 +271,18 @@ class PowerBiPipelineSpec extends SparkSpec {
     assert(seen.asScala.toSet === Set("powerbi-run"))
   }
 
+  test("no gold frame analyses to more than 6,000 expression nodes") {
+    val g = gold
+    val sizes = Map("Customer" -> g.customer, "Edge" -> g.edge,
+      "Links" -> g.links, "Events" -> g.events, "DailyQOE" -> g.dailyQoe,
+      "License" -> g.license, "EdgeAttributes" -> g.edgeAttributes,
+      "CustomerAttributes" -> g.customerAttributes)
+      .map { case (t, df) => t -> SparkSpec.analyzedExprNodes(df) }
+    // License analysed to 22,790 while featureSetFromStack copied its
+    // version branches and flag structs per use
+    assert(sizes.filter(_._2 > 6000) === Map.empty, sizes)
+  }
+
   test("reconciliation: minimal-path counts equal full-pipeline counts") {
     val in = inputs
     // no moved map: every customer (incl. c-moved) is in scope
