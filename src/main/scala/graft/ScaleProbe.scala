@@ -597,12 +597,12 @@ object ScaleProbe {
           .select(col("doc_id"), col("source"), col("n_chars"))
         val t = s"$tmp/tbl"
         val hiX = (n - 1) * 100000000L + 10000L
-        TxLog.commitClustered(docs, t, "overwrite", "doc_id",
-          "n_chars", graft.functions.ZOrder.zKeyNormalized(
+        TxLog.commitClustered(docs, t, "overwrite",
+          Seq("doc_id", "n_chars"), graft.functions.ZOrder.zKeyNormalized(
             col("doc_id"), 0L, hiX, col("n_chars"), 0L, 700L, 8),
           buckets = 16)
-        TxLog.prunedRead2(spark, t, "doc_id", 0L, 2500L,
-          "n_chars", 0L, 300L)._1
+        TxLog.prunedRead(spark, t,
+          Seq(("doc_id", 0L, 2500L), ("n_chars", 0L, 300L)))._1
       }
       // q470 shape: the same rewrite under the Hilbert key — the
       // per-row fold is 8 constant-size steps, so the expectation is
@@ -614,12 +614,12 @@ object ScaleProbe {
           .select(col("doc_id"), col("source"), col("n_chars"))
         val t = s"$tmp/tbl"
         val hiX = (n - 1) * 100000000L + 10000L
-        TxLog.commitClustered(docs, t, "overwrite", "doc_id",
-          "n_chars", graft.functions.ZOrder.hilbertKeyNormalized(
+        TxLog.commitClustered(docs, t, "overwrite",
+          Seq("doc_id", "n_chars"), graft.functions.ZOrder.hilbertKeyNormalized(
             col("doc_id"), 0L, hiX, col("n_chars"), 0L, 700L, 8),
           buckets = 16)
-        TxLog.prunedRead2(spark, t, "doc_id", 0L, 2500L,
-          "n_chars", 0L, 300L)._1
+        TxLog.prunedRead(spark, t,
+          Seq(("doc_id", 0L, 2500L), ("n_chars", 0L, 300L)))._1
       }
       // q469 shape: layered SERVE isolated from the build (graph +
       // upper layer constructed eagerly before the clock) — state is
@@ -723,13 +723,14 @@ object ScaleProbe {
               % 1000).as("aux"))
         val t = s"$tmp/tbl"
         val hiX = (n - 1) * 100000000L + 10000L
-        TxLog.commitClustered3(docs, t, "overwrite", "doc_id",
-          "n_chars", "aux", graft.functions.ZOrder.hilbert3KeyNormalized(
+        TxLog.commitClustered(docs, t, "overwrite",
+          Seq("doc_id", "n_chars", "aux"),
+          graft.functions.ZOrder.hilbert3KeyNormalized(
             col("doc_id"), 0L, hiX, col("n_chars"), 0L, 700L,
             col("aux"), 0L, 999L, 6),
           buckets = 16)
-        TxLog.prunedRead3(spark, t, "doc_id", 0L, 2500L,
-          "n_chars", 0L, 300L, "aux", 0L, 400L)._1
+        TxLog.prunedRead(spark, t, Seq(("doc_id", 0L, 2500L),
+          ("n_chars", 0L, 300L), ("aux", 0L, 400L)))._1
       }
       // q477 shape: k-best Viterbi — the n=3 cell triples the DP
       // constant, never the corpus work; expect flat-with-vocab

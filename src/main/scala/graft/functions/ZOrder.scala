@@ -93,7 +93,8 @@ object ZOrder {
 
   /** [[hilbertKey]] over the same range-normalized axes as
     * [[zKeyNormalized]] — drop-in alternative cluster key for
-    * [[graft.sources.TxLog.commitClustered]].
+    * [[graft.sources.TxLog.commitClustered]] with both axes as stat
+    * columns.
     */
   def hilbertKeyNormalized(x: Column, xLo: Long, xHi: Long,
       y: Column, yLo: Long, yHi: Long, bits: Int): Column = {
@@ -210,8 +211,8 @@ object ZOrder {
   }
 
   /** [[hilbert3Key]] over range-normalized axes — drop-in 3-axis
-    * cluster key for [[graft.sources.TxLog.commitClustered3]]
-    * (e.g. source × time × length).
+    * cluster key for [[graft.sources.TxLog.commitClustered]] with
+    * three stat columns (e.g. source × time × length).
     */
   def hilbert3KeyNormalized(x: Column, xLo: Long, xHi: Long,
       y: Column, yLo: Long, yHi: Long,

@@ -195,9 +195,13 @@ object PowerBiPipeline {
     * INSIDE the per-customer loop AFTER the moved filter
     * (`powerbi_main_fun.py:117-146`), so a moved customer's edges
     * must not produce gold rows either — edges are semi-joined to the
-    * surviving customers, and the per-edge payloads (events, stacks,
-    * link metrics) to the surviving edges. The QoE input is keyed by
-    * the caller's opaque numeric edge key and is scoped upstream.
+    * surviving customers, and events to the surviving edges. Stacks
+    * and link metrics need no scoping of their own: they feed only
+    * [[licenseGold]], whose left joins start from the scoped edges,
+    * so an out-of-scope edge's rows are dropped there (its usage is a
+    * per-edge aggregate, so filtering first changes no surviving
+    * row). The QoE input is keyed by the caller's opaque numeric edge
+    * key and is scoped upstream.
     */
   def build(in: Inputs, vcoName: String,
       moved: Map[String, Seq[String]] = Map.empty,
@@ -209,9 +213,6 @@ object PowerBiPipeline {
     val edgeIds = edges.filter(col("logicalId").isNotNull)
       .select(col("logicalId").as("edgeId"))
     val events = Relational.existsIn(in.events, edgeIds, Seq("edgeId"))
-    val stacks = Relational.existsIn(in.stacks, edgeIds, Seq("edgeId"))
-    val linkMetrics = Relational.existsIn(in.linkMetrics, edgeIds,
-      Seq("edgeId"))
     val edgeG = EdgePipeline.edgeGold(edges)
     Gold(
       customer = customer,
@@ -219,7 +220,7 @@ object PowerBiPipeline {
       links = EdgePipeline.linksGold(edges),
       events = eventsGold(events, eventSkip),
       dailyQoe = dailyQoeGold(in.qoe),
-      license = licenseGold(edges, stacks, linkMetrics, in.hubs),
+      license = licenseGold(edges, in.stacks, in.linkMetrics, in.hubs),
       edgeAttributes = EdgePipeline.edgeAttributes(edgeG),
       customerAttributes = customerAttributesGold(edgeG))
   }

@@ -76,7 +76,7 @@ object SinkQueries extends QueryPack {
         TxLog.commit(docs.repartitionByRange(4, col("doc_id")), t,
           "overwrite", "doc_id")
         materializeAndDelete(
-          TxLog.prunedRead(s, t, "doc_id", 100L, 300L)
+          TxLog.prunedRead(s, t, Seq(("doc_id", 100L, 300L)))._1
             .orderBy(col("doc_id")), tmp)
       },
       Some("""SELECT doc_id, source, lang FROM documents
@@ -1248,22 +1248,22 @@ object SinkQueries extends QueryPack {
         val hi2 = lo2b + (hi2b - lo2b) / 4
         val tmp = java.nio.file.Files.createTempDirectory("graft_zord")
         val t = s"$tmp/tbl"
-        TxLog.commitClustered(docs, t, "overwrite", "doc_id",
-          "n_chars", col("doc_id"), buckets = 16)
-        val (dfB, readB, prunedB, scanB) = TxLog.prunedRead2(s, t,
-          "doc_id", 0L, hi1, "n_chars", 0L, hi2)
+        val axes = Seq("doc_id", "n_chars")
+        val box = Seq(("doc_id", 0L, hi1), ("n_chars", 0L, hi2))
+        TxLog.commitClustered(docs, t, "overwrite", axes, col("doc_id"),
+          buckets = 16)
+        val (dfB, readB, prunedB, scanB) = TxLog.prunedRead(s, t, box)
         def snap(df: org.apache.spark.sql.DataFrame) =
           df.groupBy(col("source"))
             .agg(count(lit(1)).as("cnt"), sum(col("n_chars")).as("chars"))
         val aggB = snap(dfB).collect()
           .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-        TxLog.compactClustered(s, t, "doc_id", "n_chars",
+        TxLog.compactClustered(s, t, axes,
           ZOrder.zKeyNormalized(col("doc_id"), lo1b, hi1b,
             col("n_chars"), lo2b, hi2b, 8), buckets = 16)
-        val (dfA, readA, prunedA, scanA) = TxLog.prunedRead2(s, t,
-          "doc_id", 0L, hi1, "n_chars", 0L, hi2)
-        val (_, read0, pruned0, _) = TxLog.prunedRead2(s, t,
-          "doc_id", 0L, hi1, "n_chars", 0L, hi2, asOf = Some(0L))
+        val (dfA, readA, prunedA, scanA) = TxLog.prunedRead(s, t, box)
+        val (_, read0, pruned0, _) = TxLog.prunedRead(s, t, box,
+          asOf = Some(0L))
         val aggA = snap(dfA).collect()
           .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
         val out = snap(dfA)
@@ -1382,16 +1382,16 @@ object SinkQueries extends QueryPack {
         val hi2 = lo2b + (hi2b - lo2b) * 6 / 8
         val tmp = java.nio.file.Files.createTempDirectory("graft_hilb")
         val (tz, th) = (s"$tmp/z", s"$tmp/h")
-        TxLog.commitClustered(docs, tz, "overwrite", "doc_id", "n_chars",
+        val axes = Seq("doc_id", "n_chars")
+        val box = Seq(("doc_id", lo1, hi1), ("n_chars", lo2, hi2))
+        TxLog.commitClustered(docs, tz, "overwrite", axes,
           ZOrder.zKeyNormalized(col("doc_id"), lo1b, hi1b,
             col("n_chars"), lo2b, hi2b, 8), buckets = 16)
-        TxLog.commitClustered(docs, th, "overwrite", "doc_id", "n_chars",
+        TxLog.commitClustered(docs, th, "overwrite", axes,
           ZOrder.hilbertKeyNormalized(col("doc_id"), lo1b, hi1b,
             col("n_chars"), lo2b, hi2b, 8), buckets = 16)
-        val (dfZ, readZ, prunedZ, scanZ) = TxLog.prunedRead2(s, tz,
-          "doc_id", lo1, hi1, "n_chars", lo2, hi2)
-        val (dfH, readH, prunedH, scanH) = TxLog.prunedRead2(s, th,
-          "doc_id", lo1, hi1, "n_chars", lo2, hi2)
+        val (dfZ, readZ, prunedZ, scanZ) = TxLog.prunedRead(s, tz, box)
+        val (dfH, readH, prunedH, scanH) = TxLog.prunedRead(s, th, box)
         def snap(df: org.apache.spark.sql.DataFrame) =
           df.groupBy(col("source"))
             .agg(count(lit(1)).as("cnt"), sum(col("n_chars")).as("chars"))
@@ -1479,7 +1479,7 @@ object SinkQueries extends QueryPack {
     // 3-AXIS Hilbert clustering (VERDICT r11 item 5): q470 one
     // dimension up — the same table committed under the 3-axis Morton
     // key and under the Skilling 3-D Hilbert key (same normalized
-    // axes, same 16 buckets, THREE stat ranges via commitClustered3),
+    // axes, same 16 buckets, THREE stat ranges via commitClustered),
     // read against the same mid-band BOX on all three axes
     // (doc_id × n_chars × a hash-derived third axis — the
     // source × time × length compaction-key shape). Hilbert's
@@ -1517,20 +1517,19 @@ object SinkQueries extends QueryPack {
         val hi3 = lo3b + (hi3b - lo3b) * 6 / 8
         val tmp = java.nio.file.Files.createTempDirectory("graft_hil3")
         val (tz, th) = (s"$tmp/z", s"$tmp/h")
-        TxLog.commitClustered3(docs, tz, "overwrite",
-          "doc_id", "n_chars", "aux",
+        val axes = Seq("doc_id", "n_chars", "aux")
+        val box = Seq(("doc_id", lo1, hi1), ("n_chars", lo2, hi2),
+          ("aux", lo3, hi3))
+        TxLog.commitClustered(docs, tz, "overwrite", axes,
           ZOrder.zKey3Normalized(col("doc_id"), lo1b, hi1b,
             col("n_chars"), lo2b, hi2b, col("aux"), lo3b, hi3b, 6),
           buckets = 16)
-        TxLog.commitClustered3(docs, th, "overwrite",
-          "doc_id", "n_chars", "aux",
+        TxLog.commitClustered(docs, th, "overwrite", axes,
           ZOrder.hilbert3KeyNormalized(col("doc_id"), lo1b, hi1b,
             col("n_chars"), lo2b, hi2b, col("aux"), lo3b, hi3b, 6),
           buckets = 16)
-        val (dfZ, readZ, prunedZ, scanZ) = TxLog.prunedRead3(s, tz,
-          "doc_id", lo1, hi1, "n_chars", lo2, hi2, "aux", lo3, hi3)
-        val (dfH, readH, prunedH, scanH) = TxLog.prunedRead3(s, th,
-          "doc_id", lo1, hi1, "n_chars", lo2, hi2, "aux", lo3, hi3)
+        val (dfZ, readZ, prunedZ, scanZ) = TxLog.prunedRead(s, tz, box)
+        val (dfH, readH, prunedH, scanH) = TxLog.prunedRead(s, th, box)
         def snap(df: org.apache.spark.sql.DataFrame) =
           df.groupBy(col("source"))
             .agg(count(lit(1)).as("cnt"), sum(col("n_chars")).as("chars"))

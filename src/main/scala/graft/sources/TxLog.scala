@@ -1,6 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -41,7 +43,10 @@ import org.apache.spark.sql.types._
   *
   * Log schema (one JSON line per data or deletion-vector file, flat
   * on purpose so `spark.read.json` consumes the whole `_log/`
-  * directory as one DataFrame): {version, mode, path, rows, mn, mx}.
+  * directory as one DataFrame): {version, mode, path, rows, mn, mx,
+  * pcols, pvals, bloom, mn2, mx2, mn3, mx3, txn} — see [[logSchema]]
+  * for what each optional field holds; writers omit the fields they
+  * do not fill, which read back as null.
   * An `overwrite` commit resets the live set to its own files;
   * `append` adds to it; `delete` adds deletion-vector files that mask
   * rows of the live set. Time travel = filter `version <= asOf`
@@ -72,8 +77,8 @@ object TxLog {
     // Null on files committed by single-stat writers.
     StructField("mn2", LongType),
     StructField("mx2", LongType),
-    // third stat column ([[commitClustered3]] — 3-axis clustered
-    // commits, e.g. source × time × length under a 3-D Hilbert key).
+    // third stat column ([[commitClustered]] with three stat columns
+    // — e.g. source × time × length under a 3-D Hilbert key).
     // Null on one- and two-stat writers.
     StructField("mn3", LongType),
     StructField("mx3", LongType),
@@ -81,6 +86,18 @@ object TxLog {
     // the exactly-once dedup key for at-least-once upstreams. Null on
     // commits without one.
     StructField("txn", StringType)))
+
+  /** The log carries up to three per-file stat ranges: (mn,mx),
+    * (mn2,mx2), (mn3,mx3).
+    */
+  private val MaxStatAxes = 3
+
+  private def checkAxes(n: Int): Unit =
+    require(n >= 1 && n <= MaxStatAxes,
+      s"1 to $MaxStatAxes stat axes supported (the log's stat ranges), got $n")
+
+  /** Log-field suffix of stat axis `i`: mn/mx, mn2/mx2, mn3/mx3. */
+  private def statSuffix(i: Int): String = if (i == 0) "" else (i + 1).toString
 
   private def logDir(dir: String) = new java.io.File(dir, "_log")
 
@@ -182,21 +199,6 @@ object TxLog {
     finally { java.nio.file.Files.deleteIfExists(tmp.toPath); () }
   }
 
-  /** Write `df` under `dataRel/`, derive per-file stats with one
-    * distributed pass, publish the log entry. Throws
-    * FileAlreadyExistsException if version `v` was committed by
-    * someone else between the caller's version check and here.
-    */
-  /** Per-file (relPath, rows, (min, max) per stat column) straight
-    * from the parquet footers under `dataAbs` (recursively — bucketed
-    * layouts write partition subdirectories) — exact for INT64 stats
-    * (parquet long min/max is never truncated, unlike binary). None
-    * when any footer can't answer exactly (column missing, non-INT64,
-    * stats absent, or a file whose every row is null in a stat
-    * column) — the caller falls back to the distributed scan.
-    * Zero-row part files are skipped, matching the scan form (a
-    * groupBy over an empty scan emits no stats row).
-    */
   /** Hadoop configuration for driver-side footer reads: the active
     * session's (so credentials/filesystem settings apply on remote
     * storage), falling back to defaults.
@@ -207,8 +209,11 @@ object TxLog {
       .getOrElse(new org.apache.hadoop.conf.Configuration())
 
   /** Recursive data-file listing + per-file footer stats under
-    * `dataAbs` — the shared core of [[footerStats]] and
-    * [[footerStatsPartitioned]]. Listing goes through the Hadoop
+    * `dataAbs` — the shared core of [[fileStats]] and
+    * [[footerStatsPartitioned]]; exact for INT64 stats (parquet long
+    * min/max is never truncated, unlike binary). Zero-row part files
+    * are skipped, matching the scan form (a groupBy over an empty
+    * scan emits no stats row). Listing goes through the Hadoop
     * FileSystem API (r16, VERDICT r15 item 4): the r15 walk used
     * `java.io.File`, which silently lists nothing on any non-local
     * filesystem — the actual 100 TB case — degrading every commit
@@ -219,7 +224,6 @@ object TxLog {
   private[sources] def footerFileStats(dataAbs: String,
       statCols: Seq[String])
       : IndexedSeq[(String, Long, IndexedSeq[(Long, Long)])] = {
-    import scala.jdk.CollectionConverters._
     val conf = hadoopConf()
     val root = new org.apache.hadoop.fs.Path(dataAbs)
     val fs = root.getFileSystem(conf)
@@ -294,16 +298,59 @@ object TxLog {
     }
   }
 
-  private def footerStats(dataAbs: String, dataRel: String,
-      statCols: Seq[String])
-      : Option[IndexedSeq[(String, Long, IndexedSeq[(Long, Long)])]] =
+  /** Per-file (relPath, rows, (min, max) per stat column) of the
+    * files a commit just wrote under `dataAbs`, sorted by path. The
+    * parquet FOOTERS answer first (optimization r15, guide §6): row
+    * counts and INT64 min/max are exact in the footer metadata, so
+    * deriving them is O(files) driver-side metadata I/O — the
+    * production-lakehouse move — instead of a SECOND distributed job
+    * re-scanning every row that was just written (measured ~0.3–0.5 s
+    * of fixed job cost per commit; the multi-commit gates pay it
+    * 2–6×). That re-scan remains as the fallback for anything a
+    * footer can't answer exactly (missing/non-INT64 stats, all-null
+    * blocks); it keeps the last `depth` URI segments of each file (1
+    * for a flat layout, 2 below [[commitClustered]]'s bucket
+    * directories).
+    */
+  private def fileStats(spark: SparkSession, dataAbs: String,
+      dataRel: String, statCols: Seq[String], depth: Int)
+      : IndexedSeq[(String, Long, Seq[(Long, Long)])] =
     try
-      Some(footerFileStats(dataAbs, statCols)
+      footerFileStats(dataAbs, statCols)
         .map { case (sub, n, rs) => (s"$dataRel/$sub", n, rs) }
-        .sortBy(_._1))
-    catch { case _: Exception => None }
+        .sortBy(_._1)
+    catch { case _: Exception =>
+      val sfx = statCols.indices.map(statSuffix)
+      val aggs = count(lit(1)).as("rows") +:
+        statCols.zip(sfx).flatMap { case (c, s) =>
+          Seq(min(col(c)).as(s"mn$s"), max(col(c)).as(s"mx$s")) }
+      spark.read.parquet(dataAbs)
+        .groupBy(input_file_name().as("uri"))
+        .agg(aggs.head, aggs.tail: _*)
+        .collect()
+        .map { r =>
+          val sub = r.getString(0).split('/').takeRight(depth).mkString("/")
+          (s"$dataRel/$sub", r.getAs[Long]("rows"),
+            sfx.map(s => (r.getAs[Long](s"mn$s"), r.getAs[Long](s"mx$s"))))
+        }
+        .sortBy(_._1).toIndexedSeq
+    }
 
-  /** [[footerStats]] for a `partitionBy` layout ([[commitPartitioned]],
+  /** One log line per file of `stats`: its rows and one (mn, mx),
+    * (mn2, mx2), … pair per stat column, then `extra` (pre-rendered
+    * JSON fields).
+    */
+  private def statLines(v: Long, mode: String,
+      stats: Seq[(String, Long, Seq[(Long, Long)])],
+      extra: String = ""): IndexedSeq[String] =
+    stats.map { case (p, n, ranges) =>
+      val st = ranges.zipWithIndex.map { case ((mn, mx), i) =>
+        s""""mn${statSuffix(i)}":$mn,"mx${statSuffix(i)}":$mx""" }
+      s"""{"version":$v,"mode":"$mode","path":"$p","rows":$n,""" +
+        s"""${st.mkString(",")}$extra}"""
+    }.toIndexedSeq
+
+  /** [[fileStats]]' footer form for a `partitionBy` layout ([[commitPartitioned]],
     * r16): partition VALUES come from the `name=value` directory
     * segments of each file's subpath — O(files) driver-side metadata,
     * no read-back scan. Values are unescaped with Spark's own
@@ -341,40 +388,20 @@ object TxLog {
       Some(rows.sortBy(_._1))
     } catch { case _: Exception => None }
 
+  /** Write `df` under `dataRel/`, derive per-file stats
+    * ([[fileStats]]), publish the log entry. Throws
+    * FileAlreadyExistsException if version `v` was committed by
+    * someone else between the caller's version check and here.
+    */
   private def writeDataAndPublish(df: DataFrame, dir: String, v: Long,
       dataRel: String, mode: String, statCol: String,
       txn: Option[String] = None): Unit = {
-    val spark = df.sparkSession
     val dataAbs = new java.io.File(dir, dataRel).toString
     df.write.parquet(dataAbs)
-    // per-file stats from the parquet FOOTERS the write just
-    // produced (optimization r15, guide §6): row counts and INT64
-    // min/max are exact in the footer metadata, so deriving them is
-    // O(files) driver-side metadata I/O — the production-lakehouse
-    // move — instead of a SECOND distributed job re-scanning every
-    // row that was just written (measured ~0.3–0.5 s of fixed job
-    // cost per commit; the multi-commit gates pay it 2–6×). The scan
-    // pass remains as the fallback for anything the footer can't
-    // answer exactly (missing/non-INT64 stats, all-null blocks).
-    val stats = footerStats(dataAbs, dataRel, Seq(statCol))
-      .map(_.map { case (p, n, rs) => (p, n, rs.head._1, rs.head._2) })
-      .getOrElse {
-        spark.read.parquet(dataAbs)
-          .groupBy(input_file_name().as("uri"))
-          .agg(count(lit(1)).as("rows"),
-            min(col(statCol)).as("mn"), max(col(statCol)).as("mx"))
-          .collect()
-          .map { r =>
-            val name = r.getString(0).split('/').last
-            (s"$dataRel/$name", r.getLong(1), r.getLong(2), r.getLong(3))
-          }
-          .sortBy(_._1).toIndexedSeq
-      }
-    val txnField = txn.fold("")(t => s""","txn":"$t"""")
-    val lines = stats.map { case (p, n, mn, mx) =>
-      s"""{"version":$v,"mode":"$mode","path":"$p","rows":$n,"mn":$mn,"mx":$mx$txnField}"""
-    }
-    publishLog(dir, v, lines.toIndexedSeq)
+    val stats = fileStats(df.sparkSession, dataAbs, dataRel, Seq(statCol),
+      depth = 1)
+    publishLog(dir, v,
+      statLines(v, mode, stats, txn.fold("")(t => s""","txn":"$t"""")))
   }
 
   /** IDEMPOTENT commit (Delta's txnAppId/txnVersion): the commit
@@ -471,83 +498,136 @@ object TxLog {
     asOf.fold(all)(v => all.filter(col("version") <= v))
   }
 
-  /** Last-overwrite watermark: live-set resolution starts there.
-    * One-row driver readout over commit-count-bounded metadata.
+  /** A resolved snapshot: the log rows of the live DATA files (stat
+    * columns included) and of the live deletion-vector files.
     */
-  private def overwriteBase(lg: DataFrame): Long =
-    lg.filter(col("mode") === "overwrite")
-      .agg(max(col("version"))).head().get(0) match {
-      case null => 0L
-      case v: Long => v
-    }
+  private final case class Live(files: IndexedSeq[Row],
+      dvs: IndexedSeq[Row]) {
+    def filePaths(dir: String): IndexedSeq[String] = pathsOf(dir, files)
+    def dvPaths(dir: String): IndexedSeq[String] = pathsOf(dir, dvs)
+  }
+
+  private def pathsOf(dir: String, rows: Seq[Row]): IndexedSeq[String] =
+    rows.map(r => resolve(dir, r.getAs[String]("path"))).toIndexedSeq
+
+  /** The one live-set resolver every reader goes through: one read of
+    * the log (commit-count-bounded metadata, collected to the driver),
+    * one last-overwrite watermark, one pass splitting what lies at or
+    * above it into data files and deletion vectors. DVs die at the
+    * watermark with the files they mask (an overwrite/compaction
+    * rewrites survivors and retires both).
+    */
+  private def liveOf(rows: Seq[Row]): Live = {
+    val base = rows.filter(_.getAs[String]("mode") == "overwrite")
+      .map(_.getAs[Long]("version")).maxOption.getOrElse(0L)
+    val (dvs, files) = rows.filter(_.getAs[Long]("version") >= base)
+      .partition(_.getAs[String]("mode") == "delete")
+    Live(files.toIndexedSeq, dvs.toIndexedSeq)
+  }
+
+  private def snapshot(spark: SparkSession, dir: String,
+      asOf: Option[Long]): Live =
+    liveOf(log(spark, dir, asOf).collect().toIndexedSeq)
 
   /** Log rows of the DATA files LIVE at `asOf` (or latest):
     * everything at or after the last overwrite in range, minus
     * deletion-vector entries (those mask rows, they hold none).
     */
   def liveFiles(spark: SparkSession, dir: String,
-      asOf: Option[Long] = None): DataFrame = {
-    val lg = log(spark, dir, asOf)
-    lg.filter(col("version") >= overwriteBase(lg) &&
-      col("mode") =!= "delete")
-  }
+      asOf: Option[Long] = None): DataFrame =
+    spark.createDataFrame(snapshot(spark, dir, asOf).files.asJava, logSchema)
 
-  /** Absolute paths of the deletion-vector files live at `asOf`.
-    * DVs die at the overwrite watermark with the files they mask
-    * (an overwrite/compaction rewrites survivors and retires both).
-    */
-  private def liveDvPaths(spark: SparkSession, dir: String,
-      asOf: Option[Long]): Seq[String] = {
-    val lg = log(spark, dir, asOf)
-    lg.filter(col("version") >= overwriteBase(lg) &&
-        col("mode") === "delete")
-      .select(col("path")).collect()
-      .map(r => resolve(dir, r.getString(0))).toIndexedSeq
-  }
+  private val dvSchema = StructType(Seq(StructField("path", StringType),
+    StructField("word_idx", LongType), StructField("bits", LongType)))
 
-  /** The live deletion vectors merged to one word per (path,
-    * word_idx) — successive deletes on the same block OR together,
-    * so readers apply ONE bitmap regardless of delete-commit count.
+  /** Deletion-vector files merged to one word per (path, word_idx) —
+    * successive deletes on the same block OR together, so readers
+    * apply ONE bitmap regardless of delete-commit count.
     */
-  def liveDeleteVectors(spark: SparkSession, dir: String,
-      asOf: Option[Long] = None): DataFrame = {
-    val paths = liveDvPaths(spark, dir, asOf)
-    if (paths.isEmpty)
-      spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        StructType(Seq(StructField("path", StringType),
-          StructField("word_idx", LongType), StructField("bits", LongType))))
-    else spark.read.parquet(paths: _*)
+  private def mergedDv(spark: SparkSession, dvPaths: Seq[String]): DataFrame =
+    spark.read.schema(dvSchema).parquet(dvPaths: _*)
       .groupBy(col("path"), col("word_idx"))
       .agg(expr("bit_or(bits)").as("bits"))
+
+  /** The live deletion vectors, merged (see [[mergedDv]]). */
+  def liveDeleteVectors(spark: SparkSession, dir: String,
+      asOf: Option[Long] = None): DataFrame = {
+    val paths = snapshot(spark, dir, asOf).dvPaths(dir)
+    if (paths.isEmpty) emptyOf(spark, dvSchema)
+    else mergedDv(spark, paths)
   }
 
-  /** Scan `paths` carrying each row's provenance: log-relative file
-    * path (last two URI segments — data files always live one
-    * directory below the table root) and within-file row position
-    * from the scan's `_metadata.row_index`. Positions are a property
-    * of the immutable file, so they are stable across reads — the
-    * invariant deletion vectors rely on.
+  private def emptyOf(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(new java.util.ArrayList[Row](), schema)
+
+  /** The result of a pruned read that nothing survived: the schema of
+    * the first live file (every live file carries the table's
+    * schema), no rows — one footer, no second resolution of the log.
     */
-  private def scanWithPos(spark: SparkSession, paths: Seq[String]): DataFrame =
-    spark.read.parquet(paths: _*)
-      .withColumn("__path", expr("concat_ws('/', " +
+  private def emptyResult(spark: SparkSession, dir: String,
+      live: Seq[Row]): DataFrame = {
+    require(live.nonEmpty, s"no live files in tx table $dir")
+    emptyOf(spark, spark.read.parquet(pathsOf(dir, live.take(1)): _*).schema)
+  }
+
+  /** Add each row's provenance: the file's key (its last two URI
+    * segments) and within-file row position from the scan's
+    * `_metadata.row_index`. The two segments are `data-vN/part-…` for
+    * flat layouts and `<col>=<v>/part-…` for [[commitClustered]]'s
+    * bucket directories and one-column [[commitPartitioned]] layouts.
+    * Either pair is unique within a table because Spark's part-file
+    * names carry the write job's UUID, and the directory segment
+    * separates the files one task writes into different partitions.
+    * The key survives a shallow clone's absolute borrowing. Positions
+    * are a property of the immutable file, so they are stable across
+    * reads — the invariant deletion vectors rely on.
+    *
+    * With two or more partition columns the pair is NOT unique: one
+    * task writes `a=1/b=x/part-0-U.c000` and `a=2/b=x/part-0-U.c000`,
+    * and a mask on one also hides the other's rows.
+    */
+  private def withPos(df: DataFrame): DataFrame =
+    df.withColumn("__path", expr("concat_ws('/', " +
         "element_at(split(_metadata.file_path, '/'), -2), " +
         "element_at(split(_metadata.file_path, '/'), -1))"))
       .withColumn("__pos", col("_metadata.row_index"))
 
-  /** Mask a [[scanWithPos]] frame with merged deletion vectors: block
-    * equi-join on (file, word), keep rows whose bit is unset. The DV
-    * side is bounded by deleted-rows/63 — for realistic delete rates
-    * it broadcasts; Spark picks that from its size, no hint needed.
+  /** Mask a [[withPos]] frame with the deletion vectors at `dvPaths`:
+    * block equi-join on (file, word), keep rows whose bit is unset.
+    * The DV side is bounded by deleted-rows/63 — for realistic delete
+    * rates it broadcasts; Spark picks that from its size, no hint
+    * needed.
     */
-  private def applyDv(scan: DataFrame, dv: DataFrame): DataFrame = {
-    val d = dv.select(col("path").as("__path"),
-      col("word_idx").as("__word"), col("bits").as("__bits"))
-    scan.withColumn("__word", expr("__pos div 63"))
-      .join(d, Seq("__path", "__word"), "left")
-      .filter(col("__bits").isNull ||
-        expr("(shiftright(__bits, int(__pos % 63)) & 1L) = 0"))
+  private def applyDv(spark: SparkSession, scan: DataFrame,
+      dvPaths: Seq[String]): DataFrame =
+    if (dvPaths.isEmpty) scan
+    else {
+      val d = mergedDv(spark, dvPaths).select(col("path").as("__path"),
+        col("word_idx").as("__word"), col("bits").as("__bits"))
+      scan.withColumn("__word", expr("__pos div 63"))
+        .join(d, Seq("__path", "__word"), "left")
+        .filter(col("__bits").isNull ||
+          expr("(shiftright(__bits, int(__pos % 63)) & 1L) = 0"))
+    }
+
+  /** The one deletion-vector-aware scan: read `files`, AND out the
+    * live vectors when there are any (merge-on-read). `mergeSchema`
+    * merges footers across file generations ([[readMerged]]).
+    */
+  private def scan(spark: SparkSession, files: Seq[String],
+      dvPaths: Seq[String], mergeSchema: Boolean): DataFrame = {
+    val data = spark.read.option("mergeSchema", mergeSchema.toString)
+      .parquet(files: _*)
+    if (dvPaths.isEmpty) data
+    else applyDv(spark, withPos(data), dvPaths)
+      .select(data.columns.toIndexedSeq.map(col): _*)
+  }
+
+  private def readLive(spark: SparkSession, dir: String,
+      asOf: Option[Long], mergeSchema: Boolean): DataFrame = {
+    val live = snapshot(spark, dir, asOf)
+    require(live.files.nonEmpty, s"no live files in tx table $dir at $asOf")
+    scan(spark, live.filePaths(dir), live.dvPaths(dir), mergeSchema)
   }
 
   /** Read the table (optionally time-traveled). The file list comes
@@ -555,20 +635,8 @@ object TxLog {
     * vectors are ANDed out at scan time (merge-on-read).
     */
   def read(spark: SparkSession, dir: String,
-      asOf: Option[Long] = None): DataFrame = {
-    val paths = liveFiles(spark, dir, asOf)
-      .select(col("path")).collect().map(r => resolve(dir, r.getString(0)))
-    require(paths.nonEmpty, s"no live files in tx table $dir at $asOf")
-    val dvPaths = liveDvPaths(spark, dir, asOf)
-    if (dvPaths.isEmpty) spark.read.parquet(paths.toIndexedSeq: _*)
-    else {
-      val dataCols = spark.read.parquet(paths.toIndexedSeq: _*)
-        .columns.toIndexedSeq
-      applyDv(scanWithPos(spark, paths.toIndexedSeq),
-          liveDeleteVectors(spark, dir, asOf))
-        .select(dataCols.map(col): _*)
-    }
-  }
+      asOf: Option[Long] = None): DataFrame =
+    readLive(spark, dir, asOf, mergeSchema = false)
 
   /** Constraint-gated commit (the Delta CHECK-constraint / DLT
     * expectations pattern, quarantine form): rows satisfying
@@ -621,26 +689,8 @@ object TxLog {
     * exist yet at that version.
     */
   def readMerged(spark: SparkSession, dir: String,
-      asOf: Option[Long] = None): DataFrame = {
-    val paths = liveFiles(spark, dir, asOf)
-      .select(col("path")).collect().map(r => resolve(dir, r.getString(0)))
-    require(paths.nonEmpty, s"no live files in tx table $dir at $asOf")
-    val merged = spark.read.option("mergeSchema", "true")
-      .parquet(paths.toIndexedSeq: _*)
-    val dvPaths = liveDvPaths(spark, dir, asOf)
-    if (dvPaths.isEmpty) merged
-    else {
-      val dataCols = merged.columns.toIndexedSeq
-      val withPos = spark.read.option("mergeSchema", "true")
-        .parquet(paths.toIndexedSeq: _*)
-        .withColumn("__path", expr("concat_ws('/', " +
-          "element_at(split(_metadata.file_path, '/'), -2), " +
-          "element_at(split(_metadata.file_path, '/'), -1))"))
-        .withColumn("__pos", col("_metadata.row_index"))
-      applyDv(withPos, liveDeleteVectors(spark, dir, asOf))
-        .select(dataCols.map(col): _*)
-    }
-  }
+      asOf: Option[Long] = None): DataFrame =
+    readLive(spark, dir, asOf, mergeSchema = true)
 
   /** Merge-on-read DELETE: commit a deletion-vector version masking
     * every CURRENT row (existing vectors already applied, so the
@@ -654,16 +704,12 @@ object TxLog {
     */
   def deleteWhere(spark: SparkSession, dir: String,
       pred: org.apache.spark.sql.Column): Long = {
-    val live = liveFiles(spark, dir, None)
-      .select(col("path")).collect()
-      .map(r => resolve(dir, r.getString(0))).toIndexedSeq
-    require(live.nonEmpty, s"delete on empty tx table $dir")
+    val live = snapshot(spark, dir, None)
+    require(live.files.nonEmpty, s"delete on empty tx table $dir")
     val v = versions(dir).last + 1
-    val dvOld = liveDvPaths(spark, dir, None)
-    val scan0 = scanWithPos(spark, live)
-    val scan = if (dvOld.isEmpty) scan0
-      else applyDv(scan0, liveDeleteVectors(spark, dir, None))
-    val bits = scan.filter(pred)
+    val current = applyDv(spark,
+      withPos(spark.read.parquet(live.filePaths(dir): _*)), live.dvPaths(dir))
+    val bits = current.filter(pred)
       .select(col("__path").as("path"),
         expr("__pos div 63").as("word_idx"),
         expr("shiftleft(1L, int(__pos % 63))").as("__b"))
@@ -765,19 +811,15 @@ object TxLog {
     */
   def incrementalRead(spark: SparkSession, dir: String,
       sinceVersion: Long, untilVersion: Long): DataFrame = {
-    val lg = log(spark, dir)
-      .filter(col("version") > sinceVersion &&
-        col("version") <= untilVersion)
-    require(lg.filter(col("mode").isin("overwrite", "delete")).isEmpty,
+    val lg = log(spark, dir).collect().toIndexedSeq
+    val added = lg.filter(r => r.getAs[Long]("version") > sinceVersion &&
+      r.getAs[Long]("version") <= untilVersion)
+    require(!added.exists(r =>
+        Set("overwrite", "delete").contains(r.getAs[String]("mode"))),
       s"incrementalRead range ($sinceVersion, $untilVersion] contains " +
         "an overwrite or delete — its delta is not added-rows-only")
-    val paths = lg.select(col("path")).collect()
-      .map(r => resolve(dir, r.getString(0)))
-    val empty = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      read(spark, dir).schema)
-    if (paths.isEmpty) empty
-    else spark.read.parquet(paths.toIndexedSeq: _*)
+    if (added.isEmpty) emptyResult(spark, dir, liveOf(lg).files)
+    else spark.read.parquet(pathsOf(dir, added): _*)
   }
 
   /** VACUUM — the listing-based janitor [[commitIf]]'s scaladoc
@@ -861,80 +903,75 @@ object TxLog {
         min(col("mn")).as("mn"), max(col("mx")).as("mx"))
   }
 
-  /** Range read with LOG-LEVEL file pruning: only files whose
-    * [mn, mx] overlaps [lo, hi] are opened at all; the residual
-    * filter still applies row-level inside survivors. Exactly the
+  /** Range read with LOG-LEVEL file pruning on up to three axes: only
+    * files whose stat range on every axis overlaps that axis's
+    * [lo, hi] are opened at all; a file without stats on an axis
+    * (its `mn{i}` is null — e.g. a single-stat commit read on axis 2)
+    * cannot be pruned on it and is read. The residual row filter
+    * applies on every axis inside survivors. Axis `i` of `ranges` is
+    * matched against the log's `i`-th stat range, so the columns must
+    * be named in the order they were committed. Exactly the
     * data-skipping contract of the q142 zonemap, hoisted into the
     * table format where a 100 TB reader needs it (skip before scan).
+    *
+    * Returns (frame, filesRead, filesPruned, rowsScanned) — the counts
+    * are the auditable claim that clustering improved skipping
+    * ([[readEvolved]]'s contract, on stats instead of partition
+    * values); rowsScanned (the log's row counts summed over kept
+    * files) is the honest cost metric when file sizes differ between
+    * layouts.
     */
-  def prunedRead(spark: SparkSession, dir: String, statCol: String,
-      lo: Long, hi: Long, asOf: Option[Long] = None): DataFrame = {
-    val kept = liveFiles(spark, dir, asOf)
-      .filter(col("mx") >= lo && col("mn") <= hi)
-      .select(col("path")).collect().map(r => resolve(dir, r.getString(0)))
-    val empty = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      read(spark, dir, asOf).schema)
-    if (kept.isEmpty) empty
-    else {
-      val dvPaths = liveDvPaths(spark, dir, asOf)
-      val base =
-        if (dvPaths.isEmpty) spark.read.parquet(kept.toIndexedSeq: _*)
-        else {
-          val dataCols = spark.read.parquet(kept.toIndexedSeq: _*)
-            .columns.toIndexedSeq
-          applyDv(scanWithPos(spark, kept.toIndexedSeq),
-              liveDeleteVectors(spark, dir, asOf))
-            .select(dataCols.map(col): _*)
-        }
-      base.filter(col(statCol) >= lo && col(statCol) <= hi)
+  def prunedRead(spark: SparkSession, dir: String,
+      ranges: Seq[(String, Long, Long)], asOf: Option[Long] = None)
+      : (DataFrame, Int, Int, Long) = {
+    checkAxes(ranges.size)
+    val live = snapshot(spark, dir, asOf)
+    val (kept, pruned) = live.files.partition { r =>
+      ranges.indices.forall { i =>
+        val (_, lo, hi) = ranges(i)
+        val s = statSuffix(i)
+        r.isNullAt(r.fieldIndex(s"mn$s")) ||
+          (r.getAs[Long](s"mx$s") >= lo && r.getAs[Long](s"mn$s") <= hi)
+      }
     }
+    val df =
+      if (kept.isEmpty) emptyResult(spark, dir, live.files)
+      else scan(spark, pathsOf(dir, kept), live.dvPaths(dir),
+          mergeSchema = false)
+        .filter(ranges.map { case (c, lo, hi) =>
+          col(c) >= lo && col(c) <= hi }.reduce(_ && _))
+    (df, kept.size, pruned.size, kept.map(_.getAs[Long]("rows")).sum)
   }
 
   /** Clustered commit (the write half of OPTIMIZE ZORDER): rows are
     * bucketed by `clusterCol` — any nonnegative long expression; pass
-    * [[graft.functions.ZOrder.zKey]] for multi-dimensional clustering
-    * or a plain column for linear range layout — into `buckets`
-    * equal-width ranges between the column's observed min/max, one
-    * data FILE per non-empty bucket (deterministic: bucket bounds are
-    * analytic, not sampled, so the file layout is a pure function of
-    * the data — what lets a layout gate hash cross-engine, where
-    * `repartitionByRange`'s sampled bounds could not). Each log entry
-    * records TWO stat ranges — (mn,mx) on `statCol`, (mn2,mx2) on
-    * `statCol2` — so [[prunedRead2]] skips files on either axis
-    * before the scan. Returns the new version.
+    * [[graft.functions.ZOrder.zKey]] (or its 3-axis forms) for
+    * multi-dimensional clustering or a plain column for linear range
+    * layout — into `buckets` equal-width ranges between the column's
+    * observed min/max, one data FILE per non-empty bucket
+    * (deterministic: bucket bounds are analytic, not sampled, so the
+    * file layout is a pure function of the data — what lets a layout
+    * gate hash cross-engine, where `repartitionByRange`'s sampled
+    * bounds could not). Each log entry records one stat range per
+    * column of `statCols` (1 to 3, in order: (mn,mx), (mn2,mx2),
+    * (mn3,mx3)) so [[prunedRead]] skips files on any axis before the
+    * scan; any other arity is rejected before anything is written.
+    * Returns the new version.
     *
     * Scale shape: one 2-value bounds readout, one shuffle on the
-    * bucket id, one distributed stats pass — the same cost as
-    * [[compact]] plus the bounds job. Equal-width buckets assume the
-    * cluster key is not pathologically skewed; Z-keys of uniform-ish
-    * axes are. (A skewed production table would quantile the key
-    * first — at which point sampled bounds re-enter by choice.)
+    * bucket id, one footer-stats pass — the same cost as [[compact]]
+    * plus the bounds job. Equal-width buckets assume the cluster key
+    * is not pathologically skewed; Z-keys of uniform-ish axes are. (A
+    * skewed production table would quantile the key first — at which
+    * point sampled bounds re-enter by choice.)
     */
   def commitClustered(df: DataFrame, dir: String, mode: String,
-      statCol: String, statCol2: String,
-      clusterCol: org.apache.spark.sql.Column, buckets: Int): Long =
-    commitClusteredCore(df, dir, mode, Seq(statCol, statCol2),
-      clusterCol, buckets)
-
-  /** [[commitClustered]] with THREE stat ranges — the 3-axis layout
-    * ([[graft.functions.ZOrder.hilbert3KeyNormalized]]/
-    * [[graft.functions.ZOrder.zKey3Normalized]] cluster keys, e.g.
-    * source × time × length). [[prunedRead3]] consumes all three.
-    */
-  def commitClustered3(df: DataFrame, dir: String, mode: String,
-      statCol: String, statCol2: String, statCol3: String,
-      clusterCol: org.apache.spark.sql.Column, buckets: Int): Long =
-    commitClusteredCore(df, dir, mode,
-      Seq(statCol, statCol2, statCol3), clusterCol, buckets)
-
-  private def commitClusteredCore(df: DataFrame, dir: String,
-      mode: String, statCols: Seq[String],
-      clusterCol: org.apache.spark.sql.Column, buckets: Int): Long = {
+      statCols: Seq[String], clusterCol: org.apache.spark.sql.Column,
+      buckets: Int): Long = {
     require(mode == "append" || mode == "overwrite",
       s"mode must be append|overwrite, got $mode")
+    checkAxes(statCols.size)
     require(buckets >= 1)
-    require(statCols.size == 2 || statCols.size == 3)
     val spark = df.sparkSession
     val bounds = df.agg(min(clusterCol), max(clusterCol)).head()
     require(!bounds.isNullAt(0), "clustered commit of an empty frame")
@@ -954,147 +991,21 @@ object TxLog {
     val dataAbs = new java.io.File(dir, dataRel).toString
     withB.repartition(col("__zb"))
       .write.partitionBy("__zb").parquet(dataAbs)
-    // stat fields named mn/mx, mn2/mx2, mn3/mx3 — the log-schema keys
-    val sfx = statCols.indices.map(i => if (i == 0) "" else (i + 1).toString)
-    // footer-derived stats (optimization r15, guide §6): same O(files)
-    // driver-side metadata read as [[writeDataAndPublish]]; the
-    // distributed re-scan stays as the fallback
-    val stats = footerStats(dataAbs, dataRel, statCols)
-      .map(_.map { case (p, n, rs) => (p, n, rs: Seq[(Long, Long)]) })
-      .getOrElse {
-        val back = spark.read.schema(withB.schema).parquet(dataAbs)
-        val aggs = count(lit(1)).as("rows") +:
-          statCols.zip(sfx).flatMap { case (c, s) =>
-            Seq(min(col(c)).as(s"mn$s"), max(col(c)).as(s"mx$s")) }
-        back
-          .groupBy(input_file_name().as("uri"))
-          .agg(aggs.head, aggs.tail: _*)
-          .collect()
-          .map { r =>
-            val uri = r.getString(0)
-            val rel = dataRel + uri.substring(
-              uri.indexOf(dataRel) + dataRel.length)
-            (rel, r.getAs[Long]("rows"),
-              sfx.map(s => (r.getAs[Long](s"mn$s"), r.getAs[Long](s"mx$s")))
-                : Seq[(Long, Long)])
-          }
-          .sortBy(_._1).toIndexedSeq
-      }
-    val lines = stats.map { case (p, n, ranges) =>
-      val statJson = ranges.zip(sfx).map { case ((mn, mx), s) =>
-        s""""mn$s":$mn,"mx$s":$mx""" }.mkString(",")
-      s"""{"version":$v,"mode":"$mode","path":"$p","rows":$n,$statJson}"""
-    }
-    publishLog(dir, v, lines.toIndexedSeq)
+    publishLog(dir, v, statLines(v, mode,
+      fileStats(spark, dataAbs, dataRel, statCols, depth = 2)))
     v
   }
 
   /** OPTIMIZE ZORDER: rewrite the live set clustered by `clusterCol`
-    * with two-axis stats ([[commitClustered]] overwrite). History is
-    * untouched — pre-compaction versions still time-travel. Returns
-    * the new version.
+    * with one stat range per column of `statCols` ([[commitClustered]]
+    * overwrite). History is untouched — pre-compaction versions still
+    * time-travel. Returns the new version.
     */
   def compactClustered(spark: SparkSession, dir: String,
-      statCol: String, statCol2: String,
-      clusterCol: org.apache.spark.sql.Column, buckets: Int): Long =
-    commitClustered(read(spark, dir), dir, "overwrite", statCol,
-      statCol2, clusterCol, buckets)
-
-  /** Two-axis range read with log-level file pruning: only files
-    * whose (mn,mx) overlaps [lo,hi] AND whose (mn2,mx2) overlaps
-    * [lo2,hi2] are opened; files committed without second-axis stats
-    * (mn2 null) cannot be pruned on that axis and are read. The
-    * residual row filter applies on both axes inside survivors.
-    * Returns (frame, filesRead, filesPruned, rowsScanned) — the
-    * counts are the auditable claim that clustering improved skipping
-    * ([[readEvolved]]'s contract, on stats instead of partition
-    * values); rowsScanned (the log's row counts summed over kept
-    * files) is the honest cost metric when file sizes differ between
-    * layouts.
-    */
-  def prunedRead2(spark: SparkSession, dir: String, statCol: String,
-      lo: Long, hi: Long, statCol2: String, lo2: Long, hi2: Long,
-      asOf: Option[Long] = None): (DataFrame, Int, Int, Long) = {
-    val live = liveFiles(spark, dir, asOf)
-    val total = live.count().toInt
-    val keptRows = live
-      .filter(col("mx") >= lo && col("mn") <= hi &&
-        (col("mn2").isNull || (col("mx2") >= lo2 && col("mn2") <= hi2)))
-      .select(col("path"), col("rows")).collect()
-    val rowsScanned = keptRows.map(_.getLong(1)).sum
-    val kept = keptRows.map(r => resolve(dir, r.getString(0)))
-    val empty = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      read(spark, dir, asOf).schema)
-    val residual = (df: DataFrame) =>
-      df.filter(col(statCol) >= lo && col(statCol) <= hi &&
-        col(statCol2) >= lo2 && col(statCol2) <= hi2)
-    if (kept.isEmpty) (empty, 0, total, 0L)
-    else {
-      val dvPaths = liveDvPaths(spark, dir, asOf)
-      val base =
-        if (dvPaths.isEmpty) spark.read.parquet(kept.toIndexedSeq: _*)
-        else {
-          val dataCols = spark.read.parquet(kept.toIndexedSeq: _*)
-            .columns.toIndexedSeq
-          applyDv(scanWithPos(spark, kept.toIndexedSeq),
-              liveDeleteVectors(spark, dir, asOf))
-            .select(dataCols.map(col): _*)
-        }
-      (residual(base), kept.length, total - kept.length, rowsScanned)
-    }
-  }
-
-  /** OPTIMIZE under a 3-axis key — [[compactClustered]] with the
-    * third stat range. History untouched; returns the new version.
-    */
-  def compactClustered3(spark: SparkSession, dir: String,
-      statCol: String, statCol2: String, statCol3: String,
-      clusterCol: org.apache.spark.sql.Column, buckets: Int): Long =
-    commitClustered3(read(spark, dir), dir, "overwrite", statCol,
-      statCol2, statCol3, clusterCol, buckets)
-
-  /** Three-axis range read with log-level file pruning — the
-    * [[prunedRead2]] contract one stat column up: files whose
-    * (mn,mx)/(mn2,mx2)/(mn3,mx3) all overlap their ranges are read;
-    * entries without third-axis stats (mn3 null) cannot be pruned on
-    * that axis. Returns (rows, filesRead, filesPruned, rowsScanned).
-    */
-  def prunedRead3(spark: SparkSession, dir: String, statCol: String,
-      lo: Long, hi: Long, statCol2: String, lo2: Long, hi2: Long,
-      statCol3: String, lo3: Long, hi3: Long,
-      asOf: Option[Long] = None): (DataFrame, Int, Int, Long) = {
-    val live = liveFiles(spark, dir, asOf)
-    val total = live.count().toInt
-    val keptRows = live
-      .filter(col("mx") >= lo && col("mn") <= hi &&
-        (col("mn2").isNull || (col("mx2") >= lo2 && col("mn2") <= hi2)) &&
-        (col("mn3").isNull || (col("mx3") >= lo3 && col("mn3") <= hi3)))
-      .select(col("path"), col("rows")).collect()
-    val rowsScanned = keptRows.map(_.getLong(1)).sum
-    val kept = keptRows.map(r => resolve(dir, r.getString(0)))
-    val empty = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      read(spark, dir, asOf).schema)
-    val residual = (df: DataFrame) =>
-      df.filter(col(statCol) >= lo && col(statCol) <= hi &&
-        col(statCol2) >= lo2 && col(statCol2) <= hi2 &&
-        col(statCol3) >= lo3 && col(statCol3) <= hi3)
-    if (kept.isEmpty) (empty, 0, total, 0L)
-    else {
-      val dvPaths = liveDvPaths(spark, dir, asOf)
-      val base =
-        if (dvPaths.isEmpty) spark.read.parquet(kept.toIndexedSeq: _*)
-        else {
-          val dataCols = spark.read.parquet(kept.toIndexedSeq: _*)
-            .columns.toIndexedSeq
-          applyDv(scanWithPos(spark, kept.toIndexedSeq),
-              liveDeleteVectors(spark, dir, asOf))
-            .select(dataCols.map(col): _*)
-        }
-      (residual(base), kept.length, total - kept.length, rowsScanned)
-    }
-  }
+      statCols: Seq[String], clusterCol: org.apache.spark.sql.Column,
+      buckets: Int): Long =
+    commitClustered(read(spark, dir), dir, "overwrite", statCols,
+      clusterCol, buckets)
 
   /** Commit with a DIRECTORY-PARTITIONED layout (the Hive/Iceberg
     * shape): data files land under `c1=v1/c2=v2/…` subdirectories
@@ -1198,39 +1109,34 @@ object TxLog {
   def readEvolved(spark: SparkSession, dir: String,
       filters: Map[String, String], asOf: Option[Long] = None)
       : (DataFrame, Int, Int) = {
-    val live = liveFiles(spark, dir, asOf)
-      .select(col("path"), col("pcols"), col("pvals"))
-      .collect()
-      .map(r => (r.getString(0), Option(r.getString(1)),
-        Option(r.getString(2))))
-    val (kept, pruned) = live.partition { case (_, pcolsOpt, pvalsOpt) =>
-      val spec = pcolsOpt.map(_.split(',').toSeq).getOrElse(Seq.empty)
-        .zip(pvalsOpt.map(_.split('|').toSeq).getOrElse(Seq.empty))
-        .toMap
+    val live = snapshot(spark, dir, asOf)
+    require(live.files.nonEmpty, s"no live files in tx table $dir at $asOf")
+    def key(r: Row) =
+      (Option(r.getAs[String]("pcols")), Option(r.getAs[String]("pvals")))
+    def specOf(k: (Option[String], Option[String])) =
+      k._1.map(_.split(',').toSeq).getOrElse(Seq.empty)
+        .zip(k._2.map(_.split('|').toSeq).getOrElse(Seq.empty))
+    val (kept, pruned) = live.files.partition { r =>
+      val spec = specOf(key(r)).toMap
       filters.forall { case (c, v) =>
         spec.get(c).forall(_ == v) // uncovered column: cannot prune
       }
     }
-    require(live.nonEmpty, s"no live files in tx table $dir at $asOf")
-    // all-pruned: scan one file group anyway (row filter makes it
-    // empty) so the caller still gets the right schema, not an error
-    val toScan = if (kept.isEmpty) live.take(1) else kept
-    val groups = toScan.groupBy { case (_, pc, pv) => (pc, pv) }
-    val frames = groups.toSeq.sortBy(_._1.toString).map {
-      case ((pcolsOpt, pvalsOpt), files) =>
-        val paths = files.map { case (p, _, _) => resolve(dir, p) }
-        val base = spark.read.parquet(paths.toIndexedSeq: _*)
-        val cols = pcolsOpt.map(_.split(',').toSeq).getOrElse(Seq.empty)
-        val vals = pvalsOpt.map(_.split('|').toSeq).getOrElse(Seq.empty)
-        cols.zip(vals).foldLeft(base) { case (f, (c, v)) =>
-          f.withColumn(c, lit(v))
-        }
-    }
-    val unioned = frames.reduce(_.unionByName(_))
-    val filtered = filters.foldLeft(unioned) { case (f, (c, v)) =>
-      f.filter(col(c) === v)
-    }
-    (filtered, kept.length, pruned.length)
+    // one scan per spec group, its partition values re-attached
+    def frame(files: Seq[Row]): DataFrame =
+      files.groupBy(key).toSeq.sortBy(_._1.toString).map {
+        case (k, group) =>
+          specOf(k).foldLeft(scan(spark, pathsOf(dir, group),
+              live.dvPaths(dir), mergeSchema = false)) {
+            case (f, (c, v)) => f.withColumn(c, lit(v))
+          }
+      }.reduce(_.unionByName(_))
+    val got =
+      if (kept.isEmpty) emptyOf(spark, frame(live.files.take(1)).schema)
+      else filters.foldLeft(frame(kept)) { case (f, (c, v)) =>
+        f.filter(col(c) === v)
+      }
+    (got, kept.length, pruned.length)
   }
 
   /** Driver-side mirror of [[graft.operators.TextAnalysis.hash60]]
@@ -1324,35 +1230,30 @@ object TxLog {
       statCol: String, key: Long, numBits: Int, numHashes: Int,
       asOf: Option[Long] = None): (DataFrame, Int, Int) = {
     val positions = bloomProbe(key.toString, numBits, numHashes)
-    val live = liveFiles(spark, dir, asOf)
-      .select(col("path"), col("mn"), col("mx"), col("bloom"))
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-        Option(r.getString(3)).filter(_.nonEmpty)))
-    require(live.nonEmpty, s"no live files in tx table $dir")
-    val (kept, pruned) = live.partition { case (_, mn, mx, bloomOpt) =>
-      val inRange = mn <= key && key <= mx
-      val mayContain = bloomOpt.forall { s =>
-        val words = s.split(';').map { kv =>
-          val Array(w, h) = kv.split(':')
-          w.toLong -> java.lang.Long.parseLong(h, 16)
-        }.toMap
-        positions.forall { p =>
-          val bit = p % graft.operators.Sketch.BloomWordBits
-          (words.getOrElse(
-            (p / graft.operators.Sketch.BloomWordBits).toLong, 0L)
-            >> bit & 1L) == 1L
+    val live = snapshot(spark, dir, asOf)
+    require(live.files.nonEmpty, s"no live files in tx table $dir")
+    val (kept, pruned) = live.files.partition { r =>
+      val inRange = r.getAs[Long]("mn") <= key && key <= r.getAs[Long]("mx")
+      val mayContain = Option(r.getAs[String]("bloom")).filter(_.nonEmpty)
+        .forall { s =>
+          val words = s.split(';').map { kv =>
+            val Array(w, h) = kv.split(':')
+            w.toLong -> java.lang.Long.parseLong(h, 16)
+          }.toMap
+          positions.forall { p =>
+            val bit = p % graft.operators.Sketch.BloomWordBits
+            (words.getOrElse(
+              (p / graft.operators.Sketch.BloomWordBits).toLong, 0L)
+              >> bit & 1L) == 1L
+          }
         }
-      }
       inRange && mayContain
     }
-    // all-pruned: scan one file anyway so the caller still gets the
-    // right schema (the row filter makes it empty), mirroring
-    // readEvolved's contract
-    val toScan = if (kept.isEmpty) live.take(1) else kept
-    val paths = toScan.map { case (p, _, _, _) => resolve(dir, p) }
-    val got = spark.read.parquet(paths.toIndexedSeq: _*)
-      .filter(col(statCol) === key)
+    val got =
+      if (kept.isEmpty) emptyResult(spark, dir, live.files)
+      else scan(spark, pathsOf(dir, kept), live.dvPaths(dir),
+          mergeSchema = false)
+        .filter(col(statCol) === key)
     (got, kept.length, pruned.length)
   }
 
@@ -1386,10 +1287,10 @@ object TxLog {
     // clone's readers would resolve it against dstDir. Canonicalize
     // so the promised absolute-path borrowing actually holds.
     val srcAbs = new java.io.File(srcDir).getCanonicalFile.getPath
-    val lg = log(spark, srcAbs, asOf)
-    val live = lg.filter(col("version") >= overwriteBase(lg)).collect()
+    val snap = snapshot(spark, srcAbs, asOf)
+    val live = snap.files ++ snap.dvs
     require(live.nonEmpty, s"no live files to clone in $srcAbs at $asOf")
-    val lines = live.toIndexedSeq
+    val lines = live
       .map { r =>
         val mode =
           if (r.getAs[String]("mode") == "delete") "delete"

@@ -37,11 +37,15 @@ class PowerBiPipelineSpec extends SparkSpec {
 
   // e-1: 3.x segmented stack whose Edge-Specific controlPlane has
   // gateway-routed B2B VPN → b2b_via_gw → Premium. e-3: no stack row.
+  // e-9 (the moved customer's edge) and e-absent (in no edge doc) have
+  // stacks that must reach no License row.
   private val stackFixture = Seq(
     """{"edgeId":"e-1","stack":[
        {"name":"Edge Specific Profile","schemaVersion":"3.0.0","modules":[
          {"name":"controlPlane","data":{"segments":[{"vpn":{"enabled":true,"edgeToEdge":true,"edgeToEdgeDetail":{"useCloudGateway":true}}}]}}]},
-       {"name":"Basic Profile","schemaVersion":"3.0.0","modules":[]}]}"""
+       {"name":"Basic Profile","schemaVersion":"3.0.0","modules":[]}]}""",
+    """{"edgeId":"e-9","stack":[{"name":"Basic Profile","schemaVersion":"3.0.0","modules":[]}]}""",
+    """{"edgeId":"e-absent","stack":[{"name":"Basic Profile","schemaVersion":"3.0.0","modules":[]}]}"""
   ).map(_.replaceAll("\n\\s*", ""))
 
   private def inputs = {
@@ -66,7 +70,9 @@ class PowerBiPipelineSpec extends SparkSpec {
     // usage percentages come out EXACT (1.0 % up, 0.5 % down)
     val linkMetrics = Seq(
       ("e-1", "l-1a", 9.0, 200000000L, 100000000L, 40000000000L, 5000000000L),
-      ("e-1", "l-1b", 7.0, 50000000L, 0L, 5000000000L, 4000000000L)
+      ("e-1", "l-1b", 7.0, 50000000L, 0L, 5000000000L, 4000000000L),
+      ("e-9", "l-9a", 3.0, 10000000L, 10000000L, 1000L, 1000L),
+      ("e-absent", "l-xa", 3.0, 10000000L, 10000000L, 1000L, 1000L)
     ).toDF("edgeId", "iid", "scoreTx", "bpsOfBestPathTx", "bpsOfBestPathRx",
       "bytesTx", "bytesRx")
       .withColumn("link", struct(col("iid").as("internalId")))
@@ -195,6 +201,9 @@ class PowerBiPipelineSpec extends SparkSpec {
     // (the reference fetches edges inside the per-customer loop,
     // AFTER the moved filter)
     assert(queryAll("SELECT EdgeID FROM Edge WHERE EdgeID = 'e-9'").isEmpty)
+    // nor do stacks or link metrics of an out-of-scope or unknown edge
+    assert(queryAll("SELECT EdgeID FROM License " +
+      "WHERE EdgeID IN ('e-9', 'e-absent')").isEmpty)
     assert(queryAll(
       "SELECT uuid FROM CustomerAttributes WHERE uuid = 'c-moved'").isEmpty)
 

@@ -76,6 +76,38 @@ class TxLogSpec extends SparkSpec {
     }
   }
 
+  test("commit stats: the re-scan fallback logs what the footers would") {
+    import spark.implicits._
+    val flat = (1L to 100L).toDF("k").repartitionByRange(4, col("k"))
+    val grid = (0L until 100L).map(k => (k, 99L - k)).toDF("k", "v")
+    def commitBoth(t: String): Unit = {
+      TxLog.commit(flat, t, "overwrite", "k")
+      TxLog.commitClustered(grid, t, "append", Seq("k", "v"), col("k"), 4)
+    }
+    def stats(t: String): Seq[String] = TxLog.log(spark, t).collect()
+      .map { r =>
+        (r.getAs[Long]("version"),
+          r.getAs[String]("path").replaceAll("part-.*", "part-*"),
+          Seq("rows", "mn", "mx", "mn2", "mx2")
+            .map(f => Option(r.get(r.fieldIndex(f))))).toString
+      }.toSeq.sorted
+    withTable { footer =>
+      withTable { scanned =>
+        commitBoth(footer)
+        // footers without statistics force the re-scan
+        val noStats = "parquet.column.statistics.enabled"
+        spark.conf.set(noStats, "false")
+        try commitBoth(scanned) finally spark.conf.unset(noStats)
+        intercept[IllegalStateException] {
+          TxLog.footerFileStats(s"$scanned/data-v0", Seq("k"))
+        }
+        assert(stats(scanned) === stats(footer))
+        assert(stats(scanned).count(_.contains("data-v1/__zb=")) === 4)
+        assert(TxLog.read(spark, scanned).count() === 200L)
+      }
+    }
+  }
+
   test("prunedRead skips non-overlapping files and loses nothing") {
     import spark.implicits._
     withTable { t =>
@@ -83,7 +115,7 @@ class TxLogSpec extends SparkSpec {
         t, "overwrite", "k")
       val total = TxLog.log(spark, t).count()
       assert(total >= 3) // range partitioning actually split files
-      val pruned = TxLog.prunedRead(spark, t, "k", 10L, 20L)
+      val (pruned, _, _, _) = TxLog.prunedRead(spark, t, Seq(("k", 10L, 20L)))
       // losslessness vs the plain filter
       assert(pruned.select("k").as[Long].collect().toSet ===
         (10L to 20L).toSet)
@@ -92,7 +124,8 @@ class TxLogSpec extends SparkSpec {
       val opened = pruned.select(input_file_name()).distinct().count()
       assert(opened < total)
       // empty range → empty frame with the table schema, no crash
-      val none = TxLog.prunedRead(spark, t, "k", 1000L, 2000L)
+      val (none, _, _, _) =
+        TxLog.prunedRead(spark, t, Seq(("k", 1000L, 2000L)))
       assert(none.count() === 0L && none.columns.toSeq === Seq("k"))
     }
   }
@@ -138,29 +171,29 @@ class TxLogSpec extends SparkSpec {
     }
   }
 
-  test("commitClustered3 writes three-axis stats; prunedRead3 skips on any; 2-stat files stay readable") {
+  test("3-axis commitClustered/prunedRead; 2-stat files stay readable") {
     import spark.implicits._
     // 4 buckets over k: v runs opposite, u = k mod 4 scrambles axis 3
     val df = (0L until 100L).map(k => (k, 99L - k, k % 4L))
       .toDF("k", "v", "u")
     withTable { t =>
-      TxLog.commitClustered3(df, t, "overwrite", "k", "v", "u",
+      TxLog.commitClustered(df, t, "overwrite", Seq("k", "v", "u"),
         col("k"), 4)
       // axis-1 prune
-      val (r1, kept1, pruned1, _) = TxLog.prunedRead3(spark, t,
-        "k", 0L, 24L, "v", 0L, 99L, "u", 0L, 3L)
+      val (r1, kept1, pruned1, _) = TxLog.prunedRead(spark, t,
+        Seq(("k", 0L, 24L), ("v", 0L, 99L), ("u", 0L, 3L)))
       assert((kept1, pruned1) === ((1, 3)) && r1.count() === 25L)
       // axis-3 prune alone: every k-bucket holds u∈{0..3}, so a u
       // range no bucket covers prunes everything
-      val (_, kept2, pruned2, _) = TxLog.prunedRead3(spark, t,
-        "k", 0L, 99L, "v", 0L, 99L, "u", 7L, 9L)
+      val (_, kept2, pruned2, _) = TxLog.prunedRead(spark, t,
+        Seq(("k", 0L, 99L), ("v", 0L, 99L), ("u", 7L, 9L)))
       assert((kept2, pruned2) === ((0, 4)))
-      // re-cluster by u (compactClustered3 = the OPTIMIZE path): 4
+      // re-cluster by u (compactClustered = the OPTIMIZE path): 4
       // buckets are exactly u=0..3; a one-value u range now keeps one
       // file, and the residual filter holds
-      TxLog.compactClustered3(spark, t, "k", "v", "u", col("u"), 4)
-      val (r3, kept3, _, _) = TxLog.prunedRead3(spark, t,
-        "k", 0L, 99L, "v", 0L, 99L, "u", 2L, 2L)
+      TxLog.compactClustered(spark, t, Seq("k", "v", "u"), col("u"), 4)
+      val (r3, kept3, _, _) = TxLog.prunedRead(spark, t,
+        Seq(("k", 0L, 99L), ("v", 0L, 99L), ("u", 2L, 2L)))
       assert(kept3 === 1)
       assert(r3.count() === 25L)
       assert(r3.select(min(col("u")), max(col("u"))).head()
@@ -168,49 +201,93 @@ class TxLogSpec extends SparkSpec {
       // a TWO-stat clustered append (no mn3) cannot be pruned on
       // axis 3 and must still be read
       TxLog.commitClustered(Seq((500L, 5L, 9L)).toDF("k", "v", "u"),
-        t, "append", "k", "v", col("k"), 1)
-      val (r4, kept4, _, _) = TxLog.prunedRead3(spark, t,
-        "k", 0L, 999L, "v", 0L, 99L, "u", 2L, 2L)
+        t, "append", Seq("k", "v"), col("k"), 1)
+      val (r4, kept4, _, _) = TxLog.prunedRead(spark, t,
+        Seq(("k", 0L, 999L), ("v", 0L, 99L), ("u", 2L, 2L)))
       assert(kept4 === 2) // the u=2 file + the mn3-less append
       assert(r4.count() === 25L) // residual filter drops the u=9 row
     }
   }
 
-  test("commitClustered writes two-axis stats; prunedRead2 skips on either") {
+  test("commitClustered with two stat columns; prunedRead skips on either axis") {
     import spark.implicits._
     // 4 buckets over k: files [0..24][25..49][50..74][75..99], with
     // v = 99 - k so the second axis ranges run opposite
     val df = (0L until 100L).map(k => (k, 99L - k)).toDF("k", "v")
     withTable { t =>
-      TxLog.commitClustered(df, t, "overwrite", "k", "v", col("k"), 4)
+      TxLog.commitClustered(df, t, "overwrite", Seq("k", "v"), col("k"), 4)
       // axis-1 prune: k in [0, 24] keeps exactly 1 of 4 files
-      val (r1, kept1, pruned1, scan1) = TxLog.prunedRead2(spark, t,
-        "k", 0L, 24L, "v", 0L, 99L)
+      val (r1, kept1, pruned1, scan1) = TxLog.prunedRead(spark, t,
+        Seq(("k", 0L, 24L), ("v", 0L, 99L)))
       assert((kept1, pruned1) === ((1, 3)))
       assert(scan1 === 25L)
       assert(r1.count() === 25L)
       // axis-2 prune alone: v in [0, 24] ⇔ k in [75, 99] — also 1 file,
       // even though the axis-1 range is unbounded
-      val (r2, kept2, pruned2, _) = TxLog.prunedRead2(spark, t,
-        "k", 0L, 99L, "v", 0L, 24L)
+      val (r2, kept2, pruned2, _) = TxLog.prunedRead(spark, t,
+        Seq(("k", 0L, 99L), ("v", 0L, 24L)))
       assert((kept2, pruned2) === ((1, 3)))
       assert(r2.select(min(col("k"))).head().getLong(0) === 75L)
       // a single-stat append (no mn2) cannot be pruned on axis 2 and
       // must still be READ (residual row filter applies)
       TxLog.commit(Seq((200L, 5L)).toDF("k", "v"), t, "append", "k")
-      val (r3, kept3, _, _) = TxLog.prunedRead2(spark, t,
-        "k", 0L, 999L, "v", 0L, 24L)
+      val (r3, kept3, _, _) = TxLog.prunedRead(spark, t,
+        Seq(("k", 0L, 999L), ("v", 0L, 24L)))
       assert(kept3 === 2) // the k∈[75..99] file + the stat-less append
       assert(r3.filter(col("k") === 200L).count() === 1L)
       // compactClustered on the second axis re-clusters; history intact
-      TxLog.compactClustered(spark, t, "k", "v", col("v"), 4)
-      val (r4, kept4, pruned4, _) = TxLog.prunedRead2(spark, t,
-        "k", 0L, 999L, "v", 0L, 24L)
+      TxLog.compactClustered(spark, t, Seq("k", "v"), col("v"), 4)
+      val (r4, kept4, pruned4, _) = TxLog.prunedRead(spark, t,
+        Seq(("k", 0L, 999L), ("v", 0L, 24L)))
       assert(kept4 === 1 && pruned4 === 3)
       assert(r4.count() === 26L)
-      val (_, kept0, _, _) = TxLog.prunedRead2(spark, t,
-        "k", 0L, 24L, "v", 0L, 99L, asOf = Some(0L))
+      val (_, kept0, _, _) = TxLog.prunedRead(spark, t,
+        Seq(("k", 0L, 24L), ("v", 0L, 99L)), asOf = Some(0L))
       assert(kept0 === 1)
+    }
+  }
+
+  test("prunedRead sees through deletion vectors on a clustered table") {
+    import spark.implicits._
+    val df = (0L until 100L).map(k => (k, 99L - k)).toDF("k", "v")
+    withTable { t =>
+      // clustered files sit at data-v0/__zb=<b>/part-…: the masks key
+      // on the last two of those segments
+      TxLog.commitClustered(df, t, "overwrite", Seq("k", "v"), col("k"), 4)
+      TxLog.deleteWhere(spark, t, col("k") % 5 === 0L)
+      val (got, kept, pruned, scanned) = TxLog.prunedRead(spark, t,
+        Seq(("k", 0L, 24L), ("v", 0L, 99L)))
+      assert((kept, pruned, scanned) === ((1, 3, 25L)))
+      assert(got.select("k").as[Long].collect().toSet
+        === (0L to 24L).filter(_ % 5 != 0).toSet)
+    }
+  }
+
+  test("clustered commits take 1 to 3 stat columns; others leave no trace") {
+    import spark.implicits._
+    val df = Seq((1L, 2L, 3L, 4L)).toDF("a", "b", "c", "d")
+    withTable { t =>
+      def dataDirs(): Set[String] = Option(new java.io.File(t).list())
+        .map(_.filter(_.startsWith("data-v")).toSet).getOrElse(Set.empty)
+      Seq(Seq.empty[String], Seq("a", "b", "c", "d")).foreach { cols =>
+        intercept[IllegalArgumentException] {
+          TxLog.commitClustered(df, t, "overwrite", cols, col("a"), 1)
+        }
+      }
+      assert(TxLog.versions(t).isEmpty && dataDirs().isEmpty)
+      TxLog.commitClustered(df, t, "overwrite", Seq("a"), col("a"), 1)
+      intercept[IllegalArgumentException] {
+        TxLog.compactClustered(spark, t, Seq("a", "b", "c", "d"), col("a"), 1)
+      }
+      Seq(Seq.empty[(String, Long, Long)],
+          Seq("a", "b", "c", "d").map(c => (c, 0L, 9L))).foreach { rs =>
+        intercept[IllegalArgumentException] {
+          TxLog.prunedRead(spark, t, rs)
+        }
+      }
+      assert(TxLog.versions(t) === Seq(0L) && dataDirs() === Set("data-v0"))
+      val (one, kept, _, _) = TxLog.prunedRead(spark, t, Seq(("a", 1L, 1L)))
+      assert(kept === 1 && one.count() === 1L)
     }
   }
 
@@ -426,7 +503,7 @@ class TxLogSpec extends SparkSpec {
         .agg(sum(col("rows"))).as[Long].head()
       assert(delRows === (1L to 40L).count(_ % 4 == 0).toLong)
       // prunedRead sees through the mask too
-      assert(TxLog.prunedRead(spark, t, "k", 10L, 20L)
+      assert(TxLog.prunedRead(spark, t, Seq(("k", 10L, 20L)))._1
         .select("k").as[Long].collect().toSet
         === (10L to 20L).filter(k => k % 4 != 0 && k % 6 != 0).toSet)
       // delete versions are not an added-rows-only delta
@@ -665,6 +742,36 @@ class TxLogSpec extends SparkSpec {
       val (_, read99, pruned99) =
         TxLog.pointLookupBloom(spark, t, "k", 99L, 630, 3)
       assert(read99 === 0 && pruned99 === 3)
+    }
+  }
+
+  test("pointLookupBloom does not return deleted rows") {
+    import spark.implicits._
+    withTable { t =>
+      TxLog.commitWithBloom((1L to 40L).toDF("k"), t, "overwrite", "k",
+        630, 3)
+      TxLog.deleteWhere(spark, t, col("k") === 7L)
+      assert(TxLog.read(spark, t).filter(col("k") === 7L).count() === 0L)
+      val (gone, _, _) = TxLog.pointLookupBloom(spark, t, "k", 7L, 630, 3)
+      assert(gone.count() === 0L)
+      val (kept, _, _) = TxLog.pointLookupBloom(spark, t, "k", 8L, 630, 3)
+      assert(kept.select("k").as[Long].collect().toSeq === Seq(8L))
+    }
+  }
+
+  test("readEvolved does not return deleted rows") {
+    import spark.implicits._
+    withTable { t =>
+      TxLog.commitPartitioned((1L to 40L).map(k => (k, (k % 2).toString))
+        .toDF("k", "c"), t, "overwrite", "k", Seq("c"))
+      TxLog.deleteWhere(spark, t, col("k") === 8L)
+      val (evens, _, _) = TxLog.readEvolved(spark, t, Map("c" -> "0"))
+      assert(evens.select("k").as[Long].collect().toSet
+        === (2L to 40L by 2L).filter(_ != 8L).toSet)
+      // the all-pruned result keeps the evolved schema
+      val (none, read, _) = TxLog.readEvolved(spark, t, Map("c" -> "9"))
+      assert(read === 0 && none.count() === 0L)
+      assert(none.columns.toSet === Set("k", "c"))
     }
   }
 
