@@ -64,16 +64,6 @@ object Melt {
         col("text"), col("filter_val"))
   }
 
-  /** Melt `numAttrs` (numeric) and `textAttrs` (string) columns of `df`
-    * into EAV rows keyed by `uuid`.
-    *
-    * `used` semantics follow the attribute contract
-    * (`Functions/sql_upserts.py:41-44`): it answers "is the
-    * functionality used", which callers pass explicitly; the melt
-    * derives it as value-presence, the dominant call pattern (e.g.
-    * `vnf_on`, `powerbi_main_fun.py:2426-2434`). Callers needing a
-    * different `used` per attribute can post-process before the sink.
-    */
   /** Zero attributes melt to zero rows (stack(0) would be an
     * AnalysisException) — the natural contract for dynamically
     * assembled attribute lists.
@@ -87,22 +77,23 @@ object Melt {
         lit(null).cast("string").as("filter_val"))
       .filter(lit(false))
 
+  /** Melt `numAttrs` (numeric) and `textAttrs` (string) columns of `df`
+    * into EAV rows keyed by `uuid` — [[toEavTyped]] with `used`
+    * derived.
+    *
+    * `used` semantics follow the attribute contract
+    * (`Functions/sql_upserts.py:41-44`): it answers "is the
+    * functionality used", which callers pass explicitly; the melt
+    * derives it as presence of the cast value, the dominant call
+    * pattern (e.g. `vnf_on`, `powerbi_main_fun.py:2426-2434`). Callers
+    * needing a different `used` per attribute use [[toEavTyped]].
+    */
   def toEav(df: DataFrame, uuid: String,
       numAttrs: Seq[String], textAttrs: Seq[String]): DataFrame = {
-    if (numAttrs.isEmpty && textAttrs.isEmpty) return emptyEav(df, uuid)
-    val n = numAttrs.size + textAttrs.size
-    val pairs: Seq[Column] =
-      numAttrs.flatMap(a => Seq(lit(a), col(a).cast("double"),
-                                lit(null).cast("string"))) ++
-      textAttrs.flatMap(a => Seq(lit(a), lit(null).cast("double"),
-                                 col(a).cast("string")))
-    val stacked = df.select(
-      col(uuid).as("uuid"),
-      stack((lit(n) +: pairs): _*).as(Seq("name", "num", "text")))
-    stacked
-      .withColumn("used", col("num").isNotNull || col("text").isNotNull)
-      .withColumn("filter_val", defaultFilterVal(col("name"), col("used")))
-      .select(col("uuid"), col("name"), col("used"), col("num"),
-              col("text"), col("filter_val"))
+    val num = numAttrs.map { a =>
+      val v = col(a).cast("double"); Attr(a, v.isNotNull, num = v) }
+    val text = textAttrs.map { a =>
+      val v = col(a).cast("string"); Attr(a, v.isNotNull, text = v) }
+    toEavTyped(df, uuid, num ++ text)
   }
 }

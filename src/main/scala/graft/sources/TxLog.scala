@@ -570,26 +570,24 @@ object TxLog {
     emptyOf(spark, spark.read.parquet(pathsOf(dir, live.take(1)): _*).schema)
   }
 
-  /** Add each row's provenance: the file's key (its last two URI
-    * segments) and within-file row position from the scan's
-    * `_metadata.row_index`. The two segments are `data-vN/part-…` for
-    * flat layouts and `<col>=<v>/part-…` for [[commitClustered]]'s
-    * bucket directories and one-column [[commitPartitioned]] layouts.
-    * Either pair is unique within a table because Spark's part-file
-    * names carry the write job's UUID, and the directory segment
-    * separates the files one task writes into different partitions.
-    * The key survives a shallow clone's absolute borrowing. Positions
-    * are a property of the immutable file, so they are stable across
-    * reads — the invariant deletion vectors rely on.
-    *
-    * With two or more partition columns the pair is NOT unique: one
-    * task writes `a=1/b=x/part-0-U.c000` and `a=2/b=x/part-0-U.c000`,
-    * and a mask on one also hides the other's rows.
+  /** Add each row's provenance: the file's key (its path from its
+    * `data-v<N>` directory down) and within-file row position from
+    * the scan's `_metadata.row_index`. Every writer puts its files
+    * under a `data-v<N>` directory ([[commitIf]]: `data-v<N>-<writer>`),
+    * so keys read `data-vN/part-…` flat and `data-vN/<col>=<v>/…/part-…`
+    * under [[commitClustered]] buckets and [[commitPartitioned]]
+    * layouts of any depth. That is unique within a table: the version
+    * directory separates commits, the partition directories the files
+    * one task writes into different partitions, and part-file names
+    * carry the write job's UUID. The LAST `data-v<N>` segment wins, so
+    * a shallow clone's absolute borrowing keeps the key (a partition
+    * column named `data-v<digit>…` would be mistaken for it).
+    * Positions are a property of the immutable file, so they are
+    * stable across reads — the invariant deletion vectors rely on.
     */
   private def withPos(df: DataFrame): DataFrame =
-    df.withColumn("__path", expr("concat_ws('/', " +
-        "element_at(split(_metadata.file_path, '/'), -2), " +
-        "element_at(split(_metadata.file_path, '/'), -1))"))
+    df.withColumn("__path", regexp_extract(col("_metadata.file_path"),
+        "^.*/(data-v[0-9]+[^/]*/.*)$", 1))
       .withColumn("__pos", col("_metadata.row_index"))
 
   /** Mask a [[withPos]] frame with the deletion vectors at `dvPaths`:
@@ -1267,10 +1265,10 @@ object TxLog {
     * independent — each appends its own (relative-path) files and
     * neither's commits appear in the other's log. Live deletion
     * vectors travel with the clone (their row masks key on the
-    * files' last-two path segments, which absolute borrowing
-    * preserves). Stats (rows/mn/mx), partition specs, and bloom
-    * filters ride along unchanged — every pruning path works on the
-    * borrowed files.
+    * files' paths from `data-v<N>` down, which absolute borrowing
+    * preserves). Stats (rows and every axis' mn/mx), partition
+    * specs, and bloom filters ride along unchanged — every pruning
+    * path works on the borrowed files.
     *
     * The borrow is the standard shallow-clone hazard: [[vacuum]] on
     * the SOURCE can delete files the clone still references (real
@@ -1296,9 +1294,11 @@ object TxLog {
           if (r.getAs[String]("mode") == "delete") "delete"
           else "overwrite"
         val abs = resolve(srcAbs, r.getAs[String]("path"))
-        val opt = Seq("pcols", "pvals", "bloom").flatMap { f =>
+        val opt = (Seq("pcols", "pvals", "bloom").flatMap { f =>
           Option(r.getAs[String](f)).map(v => s""","$f":"$v"""")
-        }.mkString
+        } ++ Seq("mn2", "mx2", "mn3", "mx3").flatMap { f =>
+          Option(r.getAs[java.lang.Long](f)).map(v => s""","$f":$v""")
+        }).mkString
         s"""{"version":0,"mode":"$mode","path":"$abs",""" +
           s""""rows":${r.getAs[Long]("rows")},"mn":${r.getAs[Long]("mn")},""" +
           s""""mx":${r.getAs[Long]("mx")}$opt}"""

@@ -3,12 +3,15 @@ package graft.sources
 import java.util
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JsonToStructs, Literal}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.expressions.{NamedReference, Transform}
+import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar, Max, Min}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, LessThan}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
 
 import scala.jdk.CollectionConverters._
 
@@ -23,7 +26,9 @@ import graft.model.Schemas
   *   .option("transport", classOf[...].getName).load()`
   * - one `InputPartition` per VCO; the executor-side reader
   *   instantiates the Transport (reflection: transports own sockets,
-  *   which never serialize) and fetches that VCO's edges;
+  *   which never serialize) and fetches that VCO's edges — the one
+  *   `getEnterpriseEdges` fetch of the code base, licenses fallback
+  *   included;
   * - `SupportsPushDownRequiredColumns`: Catalyst's column pruning is
   *   translated into the API's `with:[…]` expansion list — columns
   *   nobody selects are never serialized by the server
@@ -59,8 +64,7 @@ private class VcoTable(schema: StructType, props: Map[String, String])
 
 private class VcoScanBuilder(fullSchema: StructType, props: Map[String, String])
     extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters
-    with org.apache.spark.sql.connector.read.SupportsPushDownAggregates {
+    with SupportsPushDownFilters with SupportsPushDownAggregates {
 
   private var required: StructType = fullSchema
   private var pushed: Array[Filter] = Array.empty
@@ -82,15 +86,9 @@ private class VcoScanBuilder(fullSchema: StructType, props: Map[String, String])
     * automatically stays on the row-scan path (correctness is the
     * planner's invariant, not this source's).
     */
-  override def supportCompletePushDown(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
-      : Boolean = false
+  override def supportCompletePushDown(agg: Aggregation): Boolean = false
 
-  override def pushAggregation(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
-      : Boolean = {
-    import org.apache.spark.sql.connector.expressions.aggregate.{CountStar, Max, Min}
-    import org.apache.spark.sql.connector.expressions.NamedReference
+  override def pushAggregation(agg: Aggregation): Boolean = {
     // an empty fleet must stay on the row scan: zero count-partitions
     // would make Spark's final Sum-of-partials NULL where COUNT(*)
     // over zero rows is 0
@@ -133,97 +131,23 @@ private class VcoScanBuilder(fullSchema: StructType, props: Map[String, String])
 
   override def pushedFilters(): Array[Filter] = pushed
 
+  /** A pushed aggregation reads through the same scan, its parse
+    * schema pruned to `id` (an empty with-list: no expansions — the
+    * cheapest request the API serves).
+    */
   override def build(): Scan =
-    if (aggPushed.nonEmpty) new VcoAggScan(props, aggPushed)
-    else new VcoScan(required, props, pushed)
+    if (aggPushed.isEmpty) new VcoScan(required, props, pushed)
+    else new VcoScan(StructType(Seq(fullSchema("id"))), props, pushed,
+      aggPushed)
 }
 
-/** The aggregate shapes this source can answer from one cheap
-  * no-expansion request per VCO: fleet count, and min/max of the
-  * top-level edge `id`.
+/** The aggregate shapes this source answers with one partial row per
+  * VCO: fleet count, and min/max of the top-level edge `id`.
   */
 private sealed trait VcoAgg
 private case object VcoCountAgg extends VcoAgg
 private case object VcoMinIdAgg extends VcoAgg
 private case object VcoMaxIdAgg extends VcoAgg
-
-/** The aggregate-pushed scan: one row per VCO carrying that VCO's
-  * partials — count and/or min/max of the edge `id` — fetched with
-  * an EMPTY with-list (no expansions — the cheapest request the API
-  * serves; a server exposing true count/summary endpoints would swap
-  * in here without touching the contract). Spark merges the
-  * per-partition partials above this scan (sum of counts, min of
-  * mins, max of maxes), so a retried partition can never
-  * double-count. Columns are POSITIONAL against the pushed
-  * aggregation's expression order.
-  */
-private class VcoAggScan(props: Map[String, String], aggs: Seq[VcoAgg])
-    extends Scan with Batch {
-  override def readSchema(): StructType =
-    aggs.zipWithIndex.foldLeft(new StructType()) { case (st, (a, i)) =>
-      st.add(a match {
-        case VcoCountAgg  => s"count_$i"
-        case VcoMinIdAgg  => s"min_id_$i"
-        case VcoMaxIdAgg  => s"max_id_$i"
-      }, org.apache.spark.sql.types.LongType, nullable = a != VcoCountAgg)
-    }
-  override def toBatch: Batch = this
-  override def description(): String =
-    "graft_vco_agg_pushdown[" + aggs.mkString(",") + "]"
-
-  override def planInputPartitions(): Array[InputPartition] =
-    props.getOrElse("vcos", "")
-      .split(",").filter(_.nonEmpty)
-      .map(v => VcoPartition(v, Seq.empty): InputPartition)
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new VcoAggReaderFactory(
-      props.getOrElse("transport",
-        throw new IllegalArgumentException("option 'transport' is required")),
-      aggs)
-}
-
-private class VcoAggReaderFactory(transportClass: String,
-    aggs: Seq[VcoAgg]) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[VcoPartition]
-    new PartitionReader[InternalRow] {
-      private var emitted = false
-      private lazy val row: InternalRow = {
-        val transport = Class.forName(transportClass)
-          .getDeclaredConstructor().newInstance()
-          .asInstanceOf[TransportFactory].create()
-        val docs = VcoSource.callWithRetry(transport,
-            "enterprise/getEnterpriseEdges",
-            s"""{"vco":"${p.vco}","with":[]}""") match {
-          case Right(ls)  => ls
-          case Left(err)  => throw new RuntimeException(
-            s"VCO ${p.vco} aggregate fetch failed: $err")
-        }
-        val needIds = aggs.exists(a => a == VcoMinIdAgg || a == VcoMaxIdAgg)
-        val ids: Seq[Long] = if (!needIds) Seq.empty else {
-          val om = new com.fasterxml.jackson.databind.ObjectMapper()
-          docs.flatMap { d =>
-            val n = om.readTree(d).get("id")
-            if (n == null || !n.canConvertToLong) None else Some(n.asLong())
-          }
-        }
-        val values: Array[Any] = aggs.map {
-          case VcoCountAgg => docs.size.toLong
-          // empty per-VCO id set → NULL partial; Spark's merging
-          // min/max ignores nulls
-          case VcoMinIdAgg => if (ids.isEmpty) null else ids.min
-          case VcoMaxIdAgg => if (ids.isEmpty) null else ids.max
-        }.toArray
-        org.apache.spark.sql.catalyst.InternalRow(values: _*)
-      }
-      override def next(): Boolean =
-        if (emitted) false else { emitted = true; true }
-      override def get(): InternalRow = row
-      override def close(): Unit = ()
-    }
-  }
-}
 
 private object VcoScan {
   /** Top-level document fields that map to server-side `with`
@@ -246,7 +170,7 @@ private object VcoScan {
     * never arrives and no client-side filter can resurrect it), so
     * they stay residual-only.
     */
-  /** Only values that [[filterParams]] can render as VALID JSON are
+  /** Only values that [[json]] can render as VALID JSON are
     * pushable — a Timestamp/Date comparison value would fall through
     * String.valueOf into an unquoted token the server rejects, so such
     * predicates stay residual-only (correct, just unpushed).
@@ -268,23 +192,28 @@ private object VcoScan {
     case _ => false
   }
 
+  /** A request-param value as JSON — the VCO name, the with-list and
+    * the pushed filter values alike: strings quoted, with quotes,
+    * backslashes and control characters escaped.
+    */
+  def json(v: Any): String = v match {
+    case s: String => "\"" + s.flatMap {
+      case '"'          => "\\\""
+      case '\\'         => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x" // control chars: valid JSON
+      case c            => c.toString
+    } + "\""
+    case other => String.valueOf(other)
+  }
+
   /** Render the pushed filters as request-param JSON fragments. */
   def filterParams(pushed: Seq[Filter]): Seq[String] = {
-    def j(v: Any): String = v match {
-      case s: String => "\"" + s.flatMap {
-        case '"'          => "\\\""
-        case '\\'         => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x" // control chars: valid JSON
-        case c            => c.toString
-      } + "\""
-      case other => String.valueOf(other)
-    }
     val ent = pushed.collectFirst { case EqualTo("enterpriseId", v) =>
-      s""""enterpriseId":${j(v)}""" }
+      s""""enterpriseId":${json(v)}""" }
     val start = pushed.collectFirst {
-      case GreaterThan("lastContact", v) => s""""start":${j(v)}""" }
+      case GreaterThan("lastContact", v) => s""""start":${json(v)}""" }
     val end = pushed.collectFirst {
-      case LessThan("lastContact", v) => s""""end":${j(v)}""" }
+      case LessThan("lastContact", v) => s""""end":${json(v)}""" }
     val interval = (start.toSeq ++ end.toSeq) match {
       case Nil => None
       case parts => Some(s""""interval":{${parts.mkString(",")}}""")
@@ -293,11 +222,28 @@ private object VcoScan {
   }
 }
 
+/** The one scan: rows parsed with the (pruned) `schema`, or — with
+  * `aggs` pushed — one partial row per VCO folded over exactly those
+  * rows, whose columns are POSITIONAL against the pushed aggregation's
+  * expression order. Spark merges the partials above this scan (sum of
+  * counts, min of mins, max of maxes).
+  */
 private class VcoScan(schema: StructType, props: Map[String, String],
-    pushed: Array[Filter] = Array.empty)
+    pushed: Array[Filter] = Array.empty, aggs: Seq[VcoAgg] = Seq.empty)
     extends Scan with Batch {
-  override def readSchema(): StructType = schema
+  override def readSchema(): StructType =
+    if (aggs.isEmpty) schema
+    else StructType(aggs.zipWithIndex.map { case (a, i) =>
+      StructField(a match {
+        case VcoCountAgg  => s"count_$i"
+        case VcoMinIdAgg  => s"min_id_$i"
+        case VcoMaxIdAgg  => s"max_id_$i"
+      }, LongType, nullable = a != VcoCountAgg)
+    })
   override def toBatch: Batch = this
+  override def description(): String =
+    if (aggs.isEmpty) super.description()
+    else "graft_vco_agg_pushdown[" + aggs.mkString(",") + "]"
 
   /** The with-list the server sees: only the expansions the query
     * actually references.
@@ -314,60 +260,85 @@ private class VcoScan(schema: StructType, props: Map[String, String],
   override def createReaderFactory(): PartitionReaderFactory =
     new VcoReaderFactory(schema,
       props.getOrElse("transport",
-        throw new IllegalArgumentException("option 'transport' is required")))
+        throw new IllegalArgumentException("option 'transport' is required")),
+      aggs)
 }
 
 private case class VcoPartition(vco: String, withList: Seq[String],
     filterParams: Seq[String] = Seq.empty) extends InputPartition
 
-private class VcoReaderFactory(schema: StructType, transportClass: String)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[VcoPartition]
-    new VcoPartitionReader(schema, transportClass, p)
-  }
+private class VcoReaderFactory(schema: StructType, transportClass: String,
+    aggs: Seq[VcoAgg]) extends PartitionReaderFactory {
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    new VcoPartitionReader(schema, transportClass,
+      partition.asInstanceOf[VcoPartition], aggs)
 }
 
 private class VcoPartitionReader(schema: StructType, transportClass: String,
-    partition: VcoPartition) extends PartitionReader[InternalRow] {
+    partition: VcoPartition, aggs: Seq[VcoAgg])
+    extends PartitionReader[InternalRow] {
 
-  // Executor-side client construction: transports hold sockets/auth.
-  private lazy val rows: Iterator[InternalRow] = {
+  /** The one `getEnterpriseEdges` fetch (`VCOClient.py:75-98`), with
+    * the license-less degraded-projection fallback
+    * (`powerbi_main_fun.py:187-194`): a VCO that rejects the licenses
+    * expansion degrades instead of failing the whole scan. The
+    * transport is built here, executor-side: transports hold
+    * sockets/auth.
+    */
+  private def fetch(): Seq[String] = {
     val transport = Class.forName(transportClass)
       .getDeclaredConstructor().newInstance()
       .asInstanceOf[TransportFactory].create()
-    def params(withList: Seq[String]) = {
-      val withJson =
-        if (withList.isEmpty) "" else withList.mkString("\"", "\",\"", "\"")
-      val filters = partition.filterParams.map("," + _).mkString
-      s"""{"vco":"${partition.vco}","with":[$withJson]$filters}"""
+    def call(withList: Seq[String]) = VcoSource.callWithRetry(transport,
+      "enterprise/getEnterpriseEdges",
+      (s""""vco":${VcoScan.json(partition.vco)}""" +:
+        s""""with":[${withList.map(VcoScan.json).mkString(",")}]""" +:
+        partition.filterParams).mkString("{", ",", "}"))
+    call(partition.withList).left.flatMap { err =>
+      if (partition.withList.contains("licenses"))
+        call(partition.withList.filterNot(_ == "licenses"))
+      else Left(err)
+    }.fold(err => throw new RuntimeException(
+      s"VCO ${partition.vco} scan failed: $err"), identity)
+  }
+
+  /** One VCO's partials over the parsed rows (parse schema: `id`
+    * alone): the row count, and min/max over the non-null ids. No id ⇒
+    * NULL partial; Spark's merging min/max ignores nulls.
+    */
+  private def partials(rows: Iterator[InternalRow]): InternalRow = {
+    var n = 0L
+    var lo = Long.MaxValue
+    var hi = Long.MinValue
+    rows.foreach { r =>
+      n += 1
+      if (!r.isNullAt(0)) {
+        lo = math.min(lo, r.getLong(0))
+        hi = math.max(hi, r.getLong(0))
+      }
     }
-    // license-less degraded-projection fallback, same as the
-    // driver-side path (`powerbi_main_fun.py:187-194`): a VCO that
-    // rejects the licenses expansion degrades instead of failing the
-    // whole scan
-    val lines = VcoSource.callWithRetry(transport,
-        "enterprise/getEnterpriseEdges", params(partition.withList))
-      .left.flatMap { _ =>
-        if (partition.withList.contains("licenses"))
-          VcoSource.callWithRetry(transport, "enterprise/getEnterpriseEdges",
-            params(partition.withList.filterNot(_ == "licenses")))
-        else Left("no fallback available")
-      } match {
-      case Right(ls) => ls
-      case Left(err) => throw new RuntimeException(
-        s"VCO ${partition.vco} scan failed after fallback: $err")
-    }
+    val anyId = lo <= hi
+    InternalRow.fromSeq(aggs.map {
+      case VcoCountAgg => n
+      case VcoMinIdAgg => if (anyId) lo else null
+      case VcoMaxIdAgg => if (anyId) hi else null
+    })
+  }
+
+  private lazy val rows: Iterator[InternalRow] = {
     // JSON → InternalRow with the PRUNED schema (absent = null)
-    val parser = org.apache.spark.sql.catalyst.expressions.JsonToStructs(
-      schema, Map.empty[String, String],
-      org.apache.spark.sql.catalyst.expressions.Literal.create(null,
-        org.apache.spark.sql.types.StringType),
+    val parser = JsonToStructs(schema, Map.empty[String, String],
+      Literal.create(null, StringType),
       Some(java.util.TimeZone.getDefault.getID))
-    lines.iterator.map { line =>
-      parser.nullSafeEval(org.apache.spark.unsafe.types.UTF8String.fromString(line))
-        .asInstanceOf[InternalRow]
+    // a blank line parses to null, where every other line that is no
+    // JSON object parses to a row of typed nulls: read it as one too,
+    // so the row scan and the pushed partials count it alike
+    val parsed = fetch().iterator.map { line =>
+      Option(parser.nullSafeEval(UTF8String.fromString(line))
+          .asInstanceOf[InternalRow])
+        .getOrElse(new GenericInternalRow(schema.length))
     }
+    if (aggs.isEmpty) parsed else Iterator.single(partials(parsed))
   }
   private var current: InternalRow = _
 

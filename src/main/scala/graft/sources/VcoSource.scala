@@ -1,5 +1,8 @@
 package graft.sources
 
+import scala.util.Try
+
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -14,10 +17,11 @@ import graft.model.Schemas
   * 181-185`) — plus interval params, which are PREDICATE pushdown
   * (`465-481`).
   *
-  * Spark restatement: fetch happens driver-side (or in a future
-  * DataSource V2 partition reader, one partition per (VCO, tenant));
-  * the payload lands as JSON lines parsed with a DECLARED schema so
-  * the frame is columnar immediately and Catalyst prunes from there.
+  * Spark restatement: the edge fetch (S1/S3) is the `graft-vco`
+  * DataSource V2 reader ([[VcoDataSource]], one partition per VCO);
+  * the small endpoints below fetch driver-side. Either way the payload
+  * lands as JSON lines parsed with a DECLARED schema so the frame is
+  * columnar immediately and Catalyst prunes from there.
   * The transport is an interface: tests and offline runs inject fakes
   * (the reference's own UnitTests covered exactly this layer,
   * `requirements.txt:43`).
@@ -46,109 +50,60 @@ object VcoSource {
     last
   }
 
-  private def toDf(spark: SparkSession, schema: StructType,
-      lines: Seq[String]): DataFrame = {
-    import spark.implicits._
-    spark.read.schema(schema).json(lines.toDS())
-  }
-
-  /** S3 `getEnterpriseEdges` with the license-less degraded-projection
-    * fallback (`powerbi_main_fun.py:187-194`): if the full `with`
-    * expansion fails, retry WITHOUT `licenses` — the reference's
-    * hand-rolled projection fallback, kept as source semantics.
+  /** The one driver-side fetch: `method` with retries, the result
+    * lines parsed with the DECLARED `schema` (missing key = typed
+    * null).
     */
-  def enterpriseEdges(spark: SparkSession, t: Transport,
-      enterpriseId: Long): DataFrame = {
-    val full = Seq("site", "configuration", "recentLinks", "vnfs",
-      "licenses", "cloudServices")
-    def params(withList: Seq[String]) =
-      s"""{"enterpriseId":$enterpriseId,"with":[${withList.mkString("\"", "\",\"", "\"")}]}"""
-    val res = callWithRetry(t, "enterprise/getEnterpriseEdges", params(full))
-      .left.flatMap(_ =>
-        callWithRetry(t, "enterprise/getEnterpriseEdges",
-          params(full.filterNot(_ == "licenses"))))
-    res match {
-      case Right(lines) => toDf(spark, Schemas.edgeDoc, lines)
-      case Left(err) => throw new RuntimeException(
-        s"getEnterpriseEdges failed after fallback: $err")
+  private def fetch(spark: SparkSession, t: Transport, method: String,
+      params: String, schema: StructType): DataFrame =
+    callWithRetry(t, method, params) match {
+      case Right(lines) =>
+        import spark.implicits._
+        spark.read.schema(schema).json(lines.toDS())
+      case Left(err) => throw new RuntimeException(s"$method $params: $err")
     }
-  }
 
   /** S2 `getNetworkEnterprises` (tenant enumeration). */
-  def networkEnterprises(spark: SparkSession, t: Transport): DataFrame = {
-    val schema = StructType(Seq(
-      org.apache.spark.sql.types.StructField("id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("logicalId",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("name",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("created",
-        org.apache.spark.sql.types.StringType)))
-    callWithRetry(t, "network/getNetworkEnterprises",
-        """{"with":["edgeCount"]}""") match {
-      case Right(lines) => toDf(spark, schema, lines)
-      case Left(err) => throw new RuntimeException(s"getNetworkEnterprises: $err")
-    }
-  }
+  def networkEnterprises(spark: SparkSession, t: Transport): DataFrame =
+    fetch(spark, t, "network/getNetworkEnterprises",
+      """{"with":["edgeCount"]}""",
+      StructType.fromDDL("id BIGINT, logicalId STRING, name STRING, created STRING"))
 
   /** S14 `getSystemProperties` (`Functions/vco_calls.py:129-137`):
     * the full property list as a (name, value, isReadOnly) frame —
     * a tiny dim, broadcast-joined where consumed.
     */
-  def systemProperties(spark: SparkSession, t: Transport): DataFrame = {
-    val schema = StructType(Seq(
-      org.apache.spark.sql.types.StructField("name",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("value",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("isReadOnly",
-        org.apache.spark.sql.types.BooleanType)))
-    callWithRetry(t, "systemProperty/getSystemProperties", "{}") match {
-      case Right(lines) => toDf(spark, schema, lines)
-      case Left(err) => throw new RuntimeException(s"getSystemProperties: $err")
-    }
-  }
+  def systemProperties(spark: SparkSession, t: Transport): DataFrame =
+    fetch(spark, t, "systemProperty/getSystemProperties", "{}",
+      StructType.fromDDL("name STRING, value STRING, isReadOnly BOOLEAN"))
+
+  private lazy val mapper = new ObjectMapper()
 
   /** S14 `get_vco_version` (`Functions/vco_calls.py:117-126`): the
     * `product.version` system property's `value` — a driver-side
     * scalar (the reference upserts it as the VCO's software_version
-    * attribute, `powerbi_main_fun.py:106-112`). Absent value ⇒ None,
-    * transport failure ⇒ Left, exactly the reference's (data, msg)
-    * pair.
+    * attribute, `powerbi_main_fun.py:106-112`). Absent or non-string
+    * value ⇒ None, transport failure or an unparseable reply ⇒ Left,
+    * exactly the reference's (data, msg) pair.
     */
   def vcoVersion(t: Transport): Either[String, Option[String]] =
     callWithRetry(t, "systemProperty/getSystemProperty",
         """{"name":"product.version"}""")
-      .map { lines =>
-        lines.headOption.flatMap { line =>
-          "\"value\"\\s*:\\s*\"([^\"]*)\"".r
-            .findFirstMatchIn(line).map(_.group(1))
-        }
-      }
+      .flatMap(lines => Try(lines.headOption.flatMap(line =>
+          Option(mapper.readTree(line).get("value"))
+            .filter(_.isTextual).map(_.asText))).toEither
+        .left.map(e => s"product.version: ${e.getMessage}"))
 
   /** S7 `getEnterpriseEvents` with interval predicate pushdown: the
     * interval lands in the request params — rows outside it are never
     * fetched (the API-source analog of `PushedFilters`).
     */
   def enterpriseEvents(spark: SparkSession, t: Transport, enterpriseId: Long,
-      startIso: String, endIso: String): DataFrame = {
-    val schema = StructType(Seq(
-      org.apache.spark.sql.types.StructField("eventTime",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("event",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("edgeName",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("category",
-        org.apache.spark.sql.types.StringType)))
-    val params =
-      s"""{"enterpriseId":$enterpriseId,"interval":{"start":"$startIso","end":"$endIso"}}"""
-    callWithRetry(t, "event/getEnterpriseEvents", params) match {
-      case Right(lines) => toDf(spark, schema, lines)
-      case Left(err) => throw new RuntimeException(s"getEnterpriseEvents: $err")
-    }
-  }
+      startIso: String, endIso: String): DataFrame =
+    fetch(spark, t, "event/getEnterpriseEvents",
+      s"""{"enterpriseId":$enterpriseId,"interval":{"start":"$startIso","end":"$endIso"}}""",
+      StructType.fromDDL(
+        "eventTime STRING, event STRING, edgeName STRING, category STRING"))
 
   /** S11 `getEnterpriseRouteTable` (`powerbi_main_fun.py:383-391`):
     * per-enterprise route-table documents parsed with the declared
@@ -158,10 +113,6 @@ object VcoSource {
     */
   def enterpriseRoutes(spark: SparkSession, t: Transport,
       enterpriseId: Long): DataFrame =
-    callWithRetry(t, "enterprise/getEnterpriseRouteTable",
-        s"""{"enterpriseId":$enterpriseId}""") match {
-      case Right(lines) => toDf(spark, Schemas.routesDoc, lines)
-      case Left(err) => throw new RuntimeException(
-        s"getEnterpriseRouteTable($enterpriseId): $err")
-    }
+    fetch(spark, t, "enterprise/getEnterpriseRouteTable",
+      s"""{"enterpriseId":$enterpriseId}""", Schemas.routesDoc)
 }

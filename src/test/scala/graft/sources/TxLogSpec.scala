@@ -252,7 +252,7 @@ class TxLogSpec extends SparkSpec {
     val df = (0L until 100L).map(k => (k, 99L - k)).toDF("k", "v")
     withTable { t =>
       // clustered files sit at data-v0/__zb=<b>/part-…: the masks key
-      // on the last two of those segments
+      // on that whole path
       TxLog.commitClustered(df, t, "overwrite", Seq("k", "v"), col("k"), 4)
       TxLog.deleteWhere(spark, t, col("k") % 5 === 0L)
       val (got, kept, pruned, scanned) = TxLog.prunedRead(spark, t,
@@ -772,6 +772,39 @@ class TxLogSpec extends SparkSpec {
       val (none, read, _) = TxLog.readEvolved(spark, t, Map("c" -> "9"))
       assert(read === 0 && none.count() === 0L)
       assert(none.columns.toSet === Set("k", "c"))
+    }
+  }
+
+  test("deletion vectors key each file uniquely under two partition columns") {
+    import spark.implicits._
+    withTable { t =>
+      // one task writes day=d3/typ=a/part-0-U… and day=d4/typ=a/part-0-U…:
+      // the same file name under the same last directory
+      TxLog.commitPartitioned(Seq((4L, "d3", "a"), (5L, "d3", "b"),
+          (6L, "d4", "a")).toDF("k", "day", "typ").coalesce(1),
+        t, "overwrite", "k", Seq("day", "typ"))
+      TxLog.deleteWhere(spark, t, col("k") === 4L)
+      assert(TxLog.read(spark, t).select("k").as[Long].collect().toSet
+        === Set(5L, 6L))
+      val (all, _, _) = TxLog.readEvolved(spark, t, Map.empty)
+      assert(all.select("k").as[Long].collect().toSet === Set(5L, 6L))
+    }
+  }
+
+  test("shallowClone of a 2-axis clustered table prunes on both axes") {
+    import spark.implicits._
+    val df = (0L until 100L).map(k => (k, 99L - k)).toDF("k", "v")
+    withTable { src =>
+      withTable { dst =>
+        TxLog.commitClustered(df, src, "overwrite", Seq("k", "v"), col("k"), 4)
+        TxLog.shallowClone(spark, src, dst)
+        val ranges = Seq(("k", 0L, 99L), ("v", 0L, 24L))
+        val (_, keptSrc, prunedSrc, _) = TxLog.prunedRead(spark, src, ranges)
+        val (got, kept, pruned, _) = TxLog.prunedRead(spark, dst, ranges)
+        assert((keptSrc, prunedSrc) === ((1, 3)))
+        assert((kept, pruned) === ((keptSrc, prunedSrc)))
+        assert(got.select("k").as[Long].collect().toSet === (75L to 99L).toSet)
+      }
     }
   }
 

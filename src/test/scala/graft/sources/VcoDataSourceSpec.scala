@@ -25,6 +25,57 @@ class FakeFleetTransportFactory extends TransportFactory {
   }
 }
 
+/** Ids the declared `id BIGINT` cannot hold (a fraction, a string,
+  * one past Long.MaxValue) next to one it can.
+  */
+class HostileIdTransportFactory extends TransportFactory {
+  def create(): VcoSource.Transport = new VcoSource.Transport {
+    def call(method: String, params: String): Either[String, Seq[String]] =
+      Right(Seq("""{"id":5}""", """{"id":1.5}""", """{"id":"0"}""",
+        """{"id":9223372036854775808}"""))
+  }
+}
+
+/** A blank line and a JSON array between two edge objects. */
+class NonObjectLinesTransportFactory extends TransportFactory {
+  def create(): VcoSource.Transport = new VcoSource.Transport {
+    def call(method: String, params: String): Either[String, Seq[String]] =
+      Right(Seq("""{"id":1,"logicalId":"a"}""", "", "[1]", """{"id":2}"""))
+  }
+}
+
+/** Parses its params as JSON (a real server does) and echoes the VCO
+  * name back in the edge's `logicalId`.
+  */
+class ParsingTransportFactory extends TransportFactory {
+  def create(): VcoSource.Transport = new VcoSource.Transport {
+    def call(method: String, params: String): Either[String, Seq[String]] = {
+      val om = new com.fasterxml.jackson.databind.ObjectMapper()
+      val vco = om.readTree(params).get("vco").asText()
+      Right(Seq(s"""{"id":1,"logicalId":${om.writeValueAsString(vco + "-e1")}}"""))
+    }
+  }
+}
+
+/** A VCO that rejects the `licenses` expansion (any request naming it
+  * fails) and a VCO `down` that rejects every request.
+  */
+class LicenselessTransportFactory extends TransportFactory {
+  def create(): VcoSource.Transport = new VcoSource.Transport {
+    def call(method: String, params: String): Either[String, Seq[String]] = {
+      LicenselessTransportFactory.calls.add(params)
+      if (params.contains("\"licenses\""))
+        Left("license expansion not supported")
+      else if (params.contains("\"vco\":\"down\"")) Left("gateway timeout")
+      else Right(Seq("""{"id":2,"logicalId":"e-2","edgeState":"OFFLINE"}"""))
+    }
+  }
+}
+
+object LicenselessTransportFactory {
+  val calls = new ConcurrentLinkedQueue[String]()
+}
+
 class VcoDataSourceSpec extends SparkSpec {
 
   private def read = spark.read.format("graft-vco")
@@ -140,5 +191,79 @@ class VcoDataSourceSpec extends SparkSpec {
     assert(!other.queryExecution.executedPlan.toString
       .contains("graft_vco_agg_pushdown"))
     assert(other.collect()(0).getString(0) === "vco-a-e1")
+  }
+
+  private def drain(q: ConcurrentLinkedQueue[String]): Seq[String] =
+    Iterator.continually(q.poll()).takeWhile(_ != null).toSeq
+
+  private def fleet(vcos: String, factory: Class[_]) =
+    spark.read.format("graft-vco").option("vcos", vcos)
+      .option("transport", factory.getName).load()
+
+  test("pushed MIN/MAX(id) equals the row scan's over hostile ids") {
+    val df = fleet("vco-h1,vco-h2", classOf[HostileIdTransportFactory])
+    val pushed = df.agg(count(lit(1)), min(col("id")), max(col("id")))
+    assert(pushed.queryExecution.executedPlan.toString
+      .contains("graft_vco_agg_pushdown"))
+    val rows = df.select("id")
+    val truth = spark.createDataFrame(
+        java.util.Arrays.asList(rows.collect(): _*), rows.schema)
+      .agg(count(lit(1)), min(col("id")), max(col("id")))
+    assert(pushed.collect().toSeq === truth.collect().toSeq)
+  }
+
+  test("a blank or non-object line reads as a row of nulls, counted alike") {
+    val df = fleet("vco-n", classOf[NonObjectLinesTransportFactory])
+    val rows = df.select("id", "logicalId").collect()
+      .map(r => (Option(r.get(0)), Option(r.getString(1)))).toSeq
+    assert(rows.sortBy(_.toString) === Seq((None, None), (None, None),
+      (Some(1L), Some("a")), (Some(2L), None)).sortBy(_.toString))
+    val pushed = df.agg(count(lit(1)), min(col("id")), max(col("id")))
+    assert(pushed.queryExecution.executedPlan.toString
+      .contains("graft_vco_agg_pushdown"))
+    assert(pushed.collect().toSeq.map(_.toSeq) === Seq(Seq(4L, 1L, 2L)))
+  }
+
+  test("a VCO name that needs escaping reaches the server as valid JSON") {
+    val got = fleet("a\"b", classOf[ParsingTransportFactory])
+      .select("logicalId").collect().map(_.getString(0))
+    assert(got.toSeq === Seq("a\"b-e1"))
+  }
+
+  test("full projection succeeds, schema fills nulls") {
+    RecordedCalls.calls.clear()
+    val rows = fleet("vco-a", classOf[FakeFleetTransportFactory]).collect()
+    val row = rows.find(_.getAs[String]("logicalId") == "vco-a-e2").get
+    assert(row.getAs[String]("modelNumber") === null) // missing key = typed null
+    val calls = drain(RecordedCalls.calls)
+    assert(calls.length === 1)
+    assert(calls.head.contains("\"licenses\""))
+  }
+
+  test("license fetch failure falls back without licenses") {
+    LicenselessTransportFactory.calls.clear()
+    val row = fleet("vco-l", classOf[LicenselessTransportFactory])
+      .collect().head
+    assert(row.getAs[String]("logicalId") === "e-2")
+    assert(row.getAs[String]("name") === null) // missing key = typed null
+    assert(row.getAs[AnyRef]("licenses") === null)
+    val calls = drain(LicenselessTransportFactory.calls)
+    // 3 failing full attempts (1 + 2 retries), then degraded succeeds
+    assert(calls.count(_.contains("\"licenses\"")) === 3)
+    assert(calls.length === 4)
+    assert(calls.last.contains("recentLinks")) // degraded keeps the rest
+  }
+
+  test("a failing scan that never asked for licenses does not fall back") {
+    LicenselessTransportFactory.calls.clear()
+    val e = intercept[Exception] {
+      fleet("down", classOf[LicenselessTransportFactory])
+        .select("logicalId").collect()
+    }
+    val messages = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(_.getMessage).mkString("\n")
+    assert(messages.contains("VCO down"), messages)
+    val calls = drain(LicenselessTransportFactory.calls)
+    assert(calls.length === 3 && calls.forall(_.contains("\"with\":[]")), calls)
   }
 }

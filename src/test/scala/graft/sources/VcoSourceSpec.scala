@@ -2,8 +2,9 @@ package graft.sources
 
 import graft.SparkSpec
 
-/** Fake-transport tests for the API source layer: declared-schema
-  * parsing, retry, and the license-less degraded-projection fallback.
+/** Fake-transport tests for the driver-side API source layer:
+  * declared-schema parsing and retry. The edge fetch and its
+  * license-less fallback are `graft-vco`'s ([[VcoDataSourceSpec]]).
   */
 class VcoSourceSpec extends SparkSpec {
 
@@ -15,28 +16,6 @@ class VcoSourceSpec extends SparkSpec {
       calls ::= (method, params)
       script(method, params)
     }
-  }
-
-  test("enterpriseEdges: full projection succeeds, schema fills nulls") {
-    val t = new ScriptedTransport((_, _) => Right(Seq(
-      """{"id":1,"logicalId":"e-1","name":"Edge","edgeState":"CONNECTED"}""")))
-    val df = VcoSource.enterpriseEdges(spark, t, 7L)
-    val row = df.collect().head
-    assert(row.getAs[String]("logicalId") === "e-1")
-    assert(row.getAs[String]("modelNumber") === null) // missing key = typed null
-    assert(t.calls.length === 1)
-    assert(t.calls.head._2.contains("\"licenses\""))
-  }
-
-  test("enterpriseEdges: license fetch failure falls back without licenses") {
-    val t = new ScriptedTransport((_, params) =>
-      if (params.contains("\"licenses\"")) Left("license expansion not supported")
-      else Right(Seq("""{"id":2,"logicalId":"e-2","edgeState":"OFFLINE"}""")))
-    val df = VcoSource.enterpriseEdges(spark, t, 7L)
-    assert(df.collect().head.getAs[String]("logicalId") === "e-2")
-    // 3 failing full attempts (1 + 2 retries), then degraded succeeds
-    assert(t.calls.count(_._2.contains("\"licenses\"")) === 3)
-    assert(t.calls.head._2.contains("recentLinks")) // degraded keeps the rest
   }
 
   test("enterpriseEvents pushes the interval into request params") {
@@ -83,5 +62,11 @@ class VcoSourceSpec extends SparkSpec {
     assert(VcoSource.vcoVersion(noValue) === Right(None))
     val down = new ScriptedTransport((_, _) => Left("gateway timeout"))
     assert(VcoSource.vcoVersion(down) === Left("gateway timeout"))
+  }
+
+  test("vcoVersion reads an escaped quote inside the value") {
+    val t = new ScriptedTransport((_, _) =>
+      Right(Seq("""{"name":"product.version","value":"5.2 \"beta\""}""")))
+    assert(VcoSource.vcoVersion(t) === Right(Some("5.2 \"beta\"")))
   }
 }
