@@ -114,7 +114,7 @@ object Bench {
     fn(spark, sfDir).write.format("noop").mode("overwrite").save()
 
   /** Warm-up: one scan-agg and one window query cover codegen paths. */
-  private def warmUp(spark: SparkSession, sfDir: String): Unit =
+  private[graft] def warmUp(spark: SparkSession, sfDir: String): Unit =
     for (w <- Seq("q01_pricing_summary", "q12_topk_window"))
       SparkEntry.queries.get(w)
         .foreach(fn => try runOne(spark, sfDir, fn) catch { case _: Throwable => () })
@@ -161,7 +161,7 @@ object Bench {
     * queries (where a single bad run CAN misread by many seconds)
     * keep the full median.
     */
-  private def measure(spark: SparkSession, sfDir: String,
+  private[graft] def measure(spark: SparkSession, sfDir: String,
       selected: Map[String, Fn], iters: Int, useMin: Boolean)
       : (Seq[(String, Double)], collection.mutable.LinkedHashMap[String, String]) = {
     val errors = collection.mutable.LinkedHashMap.empty[String, String]
@@ -192,7 +192,7 @@ object Bench {
     (results, errors)
   }
 
-  private def benchIters: Int =
+  private[graft] def benchIters: Int =
     sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt.max(1)
 
   /** First-run threshold (seconds) under which a single measurement
@@ -316,7 +316,7 @@ object Bench {
     */
   private val NumPat = "[0-9]+(?:\\.[0-9]+)?(?:[eE][+-]?[0-9]+)?"
 
-  private def priorMedians: Map[String, Double] =
+  private[graft] def priorMedians: Map[String, Double] =
     try {
       val p = sys.env.getOrElse("SPARK_GRAFT_BENCH_PRIOR", "BENCH_DETAIL.json")
       val txt = new String(java.nio.file.Files.readAllBytes(

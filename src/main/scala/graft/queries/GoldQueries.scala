@@ -46,8 +46,7 @@ object GoldQueries extends QueryPack {
       |  FROM lineitem GROUP BY 1, 2""".stripMargin
 
   /** q47's operator body — the edge-gold projection over edge docs
-    * synthesized from (orders, lineitem). Factored out so ScaleProbe
-    * can run the identical plan over N×-unioned inputs.
+    * synthesized from (orders, lineitem).
     */
   def edgeGoldFrom(orders: DataFrame, lineitem: DataFrame): DataFrame = {
     val k = col("o_orderkey")

@@ -1016,7 +1016,8 @@ object TxLog {
     * must be STRING-typed in `df` (directory names are strings;
     * keeping the contract explicit beats silently round-tripping
     * types through paths) and value strings must be path/JSON-safe
-    * (no quotes/newlines — dates, enums, ids).
+    * (dates, enums, ids): null, empty, `| , = /`, `"`, `\` and control
+    * characters are rejected before the write.
     */
   def commitPartitioned(df: DataFrame, dir: String, mode: String,
       statCol: String, partCols: Seq[String]): Long = {
@@ -1032,19 +1033,23 @@ object TxLog {
     // value containing either (or '=' '/', which break the dir=val
     // path shape), or a null/empty value (Spark would rewrite it to
     // __HIVE_DEFAULT_PARTITION__), would mis-split in readEvolved's
-    // spec parsing and silently corrupt pruning. Validate BEFORE the
-    // write — one column-pruned limit-1 scan — so a bad batch leaves
-    // nothing on disk and the failure is deterministic.
+    // spec parsing and silently corrupt pruning. A quote, backslash
+    // or control character survives the path round trip into pvals
+    // and makes the log line invalid JSON, which the PERMISSIVE log
+    // read turns into an all-null row that breaks every later read of
+    // the table. Validate BEFORE the write — one column-pruned
+    // limit-1 scan — so a bad batch leaves nothing on disk and the
+    // failure is deterministic.
     val badCond = partCols
       .map(c => col(c).isNull || col(c) === "" ||
-        col(c).rlike("[|,=/]"))
+        col(c).rlike("""[|,=/"\\\p{Cntrl}]"""))
       .reduce(_ || _)
     val badSample = df.filter(badCond)
       .select(partCols.map(col): _*).limit(1).collect()
     require(badSample.isEmpty,
       "partition value(s) " + badSample.mkString(",") +
-        " are null/empty or contain a reserved delimiter (| , = /) " +
-        "— not representable in the log")
+        " are null/empty or contain a reserved character " +
+        "(| , = / \" \\ or a control character) — not representable in the log")
     val v = versions(dir).lastOption.map(_ + 1).getOrElse(0L)
     val dataRel = s"data-v$v"
     val dataAbs = new java.io.File(dir, dataRel).toString

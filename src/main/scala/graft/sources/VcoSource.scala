@@ -96,12 +96,14 @@ object VcoSource {
 
   /** S7 `getEnterpriseEvents` with interval predicate pushdown: the
     * interval lands in the request params — rows outside it are never
-    * fetched (the API-source analog of `PushedFilters`).
+    * fetched (the API-source analog of `PushedFilters`). Both bounds
+    * render as escaped JSON strings.
     */
   def enterpriseEvents(spark: SparkSession, t: Transport, enterpriseId: Long,
       startIso: String, endIso: String): DataFrame =
     fetch(spark, t, "event/getEnterpriseEvents",
-      s"""{"enterpriseId":$enterpriseId,"interval":{"start":"$startIso","end":"$endIso"}}""",
+      s"""{"enterpriseId":$enterpriseId,"interval":{"start":""" +
+        s"""${VcoScan.json(startIso)},"end":${VcoScan.json(endIso)}}}""",
       StructType.fromDDL(
         "eventTime STRING, event STRING, edgeName STRING, category STRING"))
 

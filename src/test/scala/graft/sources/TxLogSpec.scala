@@ -677,7 +677,7 @@ class TxLogSpec extends SparkSpec {
   test("partitioned commit: reserved-delimiter values rejected pre-publish") {
     import spark.implicits._
     withTable { t =>
-      Seq("a|b", "a,b", "", "a/b").foreach { bad =>
+      Seq("a|b", "a,b", "", "a/b", "a\"b", "a\\b", "a\nb").foreach { bad =>
         intercept[IllegalArgumentException] {
           TxLog.commitPartitioned(Seq((1L, bad)).toDF("k", "p"), t,
             "append", "k", Seq("p"))

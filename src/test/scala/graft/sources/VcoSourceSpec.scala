@@ -27,6 +27,20 @@ class VcoSourceSpec extends SparkSpec {
     assert(t.calls.head._2.contains("\"start\":\"2024-01-01T00:00:00Z\""))
   }
 
+  test("enterpriseEvents sends an interval holding quote and backslash as valid JSON") {
+    val start = "2024-01-01T00:00:00Z\" \\"
+    val t = new ScriptedTransport((_, params) => {
+      val interval = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(params).get("interval")
+      assert(interval.get("start").asText === start)
+      assert(interval.get("end").asText === "2024-01-16T00:00:00Z")
+      Right(Seq.empty)
+    })
+    assert(VcoSource.enterpriseEvents(spark, t, 7L, start,
+      "2024-01-16T00:00:00Z").count() === 0)
+    assert(t.calls.size === 1)
+  }
+
   test("callWithRetry surfaces the last error after exhausting retries") {
     val t = new ScriptedTransport((_, _) => Left("boom"))
     val res = VcoSource.callWithRetry(t, "m", "{}", retries = 2)
