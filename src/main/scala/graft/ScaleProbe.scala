@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path, Paths}
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Dev tool: scale linearity of registered queries over N× the input.
   *
@@ -13,11 +13,14 @@ import org.apache.spark.sql.types.LongType
   * regenerate the data at the scale factor, never rewrite a query).
   * For each N the probe writes N copies of every table in
   * [[Tables.names]] to a scratch directory, times the selected
-  * [[SparkEntry]] queries over it through [[Bench.measure]] (the same
-  * per-query state reset, iteration count and median as the bench),
-  * then deletes the directory. Copy rules:
-  *  - copy 0 is the source file, byte for byte, so ×1 measures what
-  *    the bench measures;
+  * [[SparkEntry]] queries over it through [[Bench.measure]] (the
+  * bench's per-query state reset and iteration count), then deletes
+  * the directory. Copy rules:
+  *  - copy 0 is the source file, byte for byte, so ×1 reads the
+  *    bench's input. It is not timed as the bench times it: here every
+  *    selected query and every N share one JVM and read the median of
+  *    the iterations, where the bench runs a query whose prior median
+  *    reaches `SoloSecs` alone in a fresh JVM as the min of two runs;
   *  - copy i adds i · 10^8 to every LongType column named `*key` or
   *    `*_id` (c_custkey, o_orderkey, o_custkey, l_orderkey, l_partkey,
   *    l_suppkey, p_partkey, s_suppkey, doc_id, vec_id, event_id,
@@ -35,7 +38,9 @@ import org.apache.spark.sql.types.LongType
   * only; embeddings copies are exact duplicates under new ids; a
   * word-list filter sees tagged tokens as out-of-vocabulary. The raw
   * files are read through [[Tables.load]], so `events.ts` keeps its
-  * on-disk layout and [[Tables.events]] still normalises it.
+  * on-disk layout and [[Tables.events]] still normalises it. Each
+  * table becomes a directory of part files, which the batch loaders
+  * and [[Tables.stream]] read as they read the single source file.
   *
   * Usage: tools/run.sh graft.ScaleProbe [sfDir] [copies...]
   * (default copies 1 2 5 10). The first N runs in a JVM warmed only
@@ -49,7 +54,13 @@ import org.apache.spark.sql.types.LongType
   */
 object ScaleProbe {
 
-  private val Offset = 100000000L
+  /** Copy i's shift of every [[keyColumns]] value. */
+  private[graft] val Offset = 100000000L
+
+  /** The columns a copy shifts: LongType, named `*key` or `*_id`. */
+  private[graft] def keyColumns(schema: StructType): Seq[String] =
+    schema.collect { case f if f.dataType == LongType &&
+      (f.name.endsWith("key") || f.name.endsWith("_id")) => f.name }
 
   /** Write `copies` copies of every table of `sfDir` under `out`, as
     * `<name>.parquet` directories (see [[ScaleProbe]] for the rules).
@@ -62,8 +73,7 @@ object ScaleProbe {
       val dst = Files.createDirectories(out.resolve(s"$name.parquet"))
       Files.copy(file, dst.resolve("copy-0.parquet"))
       val src = Tables.load(spark, sfDir, name)
-      val keys = src.schema.collect { case f if f.dataType == LongType &&
-        (f.name.endsWith("key") || f.name.endsWith("_id")) => f.name }
+      val keys = keyColumns(src.schema)
       if (keys.nonEmpty && copies > 1)
         (1 until copies).map { i =>
           val shifted = keys.foldLeft(src)((d, k) =>

@@ -61,4 +61,22 @@ object Tables {
   }
   def documents(spark: SparkSession, dir: String): DataFrame  = load(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "embeddings")
+
+  /** Streaming read of one table, schema from the batch loader (a file
+    * stream needs an explicit one). The file source lists a directory
+    * and matches `pathGlobFilter` against leaf file NAMES, so a table
+    * stored as a directory of part files (a partitioned layout, or
+    * [[ScaleProbe]]'s N× copies) streams as that directory, and a
+    * single `<name>.parquet` file streams from its parent narrowed to
+    * that one name. Raw columns: events still goes through
+    * [[normalizeTs]].
+    */
+  private[graft] def stream(spark: SparkSession, dir: String,
+      name: String): DataFrame = {
+    val path = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
+    val reader = spark.readStream.schema(load(spark, dir, name).schema)
+    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+    if (fs.getFileStatus(path).isDirectory) reader.parquet(path.toString)
+    else reader.option("pathGlobFilter", s"$name.parquet").parquet(dir)
+  }
 }

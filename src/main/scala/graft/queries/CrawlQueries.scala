@@ -405,10 +405,7 @@ object CrawlQueries extends QueryPack {
     "q328_stream_extract" -> Q(
       (s, dir) => {
         import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-        val docsStream = s.readStream
-          .schema(Tables.documents(s, dir).schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
+        val docsStream = Tables.stream(s, dir, "documents")
         val outSchema = StructType(Seq(
           StructField("doc_id", LongType),
           StructField("n_blocks", LongType),
@@ -1008,10 +1005,7 @@ object CrawlQueries extends QueryPack {
     "q343_stream_admission" -> Q(
       (s, dir) => {
         import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructField, StructType}
-        val docsStream = s.readStream
-          .schema(Tables.documents(s, dir).schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
+        val docsStream = Tables.stream(s, dir, "documents")
         val outSchema = StructType(Seq(
           StructField("doc_id", LongType),
           StructField("link_idx", LongType),

@@ -846,10 +846,7 @@ object CrawlQueriesB extends QueryPack {
     "q382_stream_spam" -> Q(
       (s, dir) => {
         import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
-        val docsStream = s.readStream
-          .schema(Tables.documents(s, dir).schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
+        val docsStream = Tables.stream(s, dir, "documents")
         val outSchema = StructType(Seq(
           StructField("doc_id", LongType),
           StructField("n_hidden_chars", LongType),

@@ -1611,10 +1611,7 @@ object SimilarityQueries extends QueryPack {
           .select(col("vec_id"), vec(col("embedding")).as("embedding"))
         val index = Similarity.ivfIndexFrame(
           e, "vec_id", "embedding", Centroids).localCheckpoint(true)
-        val qStream = s.readStream
-          .schema(Tables.embeddings(s, dir).schema)
-          .option("pathGlobFilter", "embeddings.parquet")
-          .parquet(dir)
+        val qStream = Tables.stream(s, dir, "embeddings")
           .filter(col("vec_id") % 100 === 0)
           .select(col("vec_id"), vec(col("embedding")).as("embedding"))
         val outSchema = StructType(Seq(
@@ -1672,10 +1669,7 @@ object SimilarityQueries extends QueryPack {
       (s, dir) => {
         import graft.streaming.Streams
         val dim = 64
-        val embStream = s.readStream
-          .schema(Tables.embeddings(s, dir).schema)
-          .option("pathGlobFilter", "embeddings.parquet")
-          .parquet(dir)
+        val embStream = Tables.stream(s, dir, "embeddings")
           .select(
             Similarity.kmAssign(vec(col("embedding")), KmInit).as("cell"),
             vec(col("embedding")).as("embedding"))

@@ -135,8 +135,7 @@ object SinkQueries extends QueryPack {
         }
         try {
           graft.streaming.Streams.transformEachBatch(
-            s.readStream.schema(Tables.documents(s, dir).schema)
-              .option("pathGlobFilter", "documents.parquet").parquet(dir)
+            Tables.stream(s, dir, "documents")
               .select(col("doc_id"), col("source"), col("lang")),
             identity,
             batch => { TxLog.commit(batch, t,

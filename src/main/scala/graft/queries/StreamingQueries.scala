@@ -27,30 +27,19 @@ import graft.streaming.Streams
   */
 object StreamingQueries extends QueryPack {
 
-  /** Streaming read of the events table. A streaming file source
-    * requires an explicit schema, so take it from a batch footer read
-    * of the SAME file (nanos-long, timestamp[us] or NTZ — whatever the
-    * current data generation uses) and normalize `ts` with the exact
-    * helper the batch loader uses ([[graft.Tables.normalizeTs]]), so
-    * the streaming path can never drift from the file or from batch.
+  /** Streaming read of the events table: [[graft.Tables.stream]]
+    * takes the schema from a batch footer read of the SAME table
+    * (nanos-long, timestamp[us] or NTZ — whatever the current data
+    * generation uses) and `ts` is normalized with the exact helper the
+    * batch loader uses ([[graft.Tables.normalizeTs]]), so the
+    * streaming path can never drift from the file or from batch.
     */
-  private def eventsStream(s: SparkSession, dir: String): DataFrame = {
-    val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
-    // the streaming file source wants a DIRECTORY; the glob filter
-    // narrows the listing to the single events file
-    graft.Tables.normalizeTs(
-      s.readStream.schema(rawSchema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(dir))
-  }
+  private def eventsStream(s: SparkSession, dir: String): DataFrame =
+    graft.Tables.normalizeTs(graft.Tables.stream(s, dir, "events"))
 
-  /** Streaming read of the documents table (same single-file/glob
-    * discipline as [[eventsStream]]; schema from the batch loader).
-    */
+  /** Streaming read of the documents table ([[graft.Tables.stream]]). */
   private def documentsStream(s: SparkSession, dir: String): DataFrame =
-    s.readStream.schema(graft.Tables.documents(s, dir).schema)
-      .option("pathGlobFilter", "documents.parquet")
-      .parquet(dir)
+    graft.Tables.stream(s, dir, "documents")
 
   /** Shared DuckDB session derivation for q62/q75 (one definition so
     * the two gates can never drift — the repo's interpolated-literal
@@ -1149,10 +1138,7 @@ object StreamingQueries extends QueryPack {
               t("1992-01-01 00:00:00").as("valid_from"),
               t("1995-06-15 00:00:00").as("valid_to")))
           .localCheckpoint(true)
-        val factsStream = s.readStream
-          .schema(Tables.orders(s, dir).schema)
-          .option("pathGlobFilter", "orders.parquet")
-          .parquet(dir)
+        val factsStream = Tables.stream(s, dir, "orders")
           .select(col("o_orderkey"), col("o_custkey"),
             col("o_orderdate").cast("timestamp").as("o_ts"))
         val outSchema = StructType(Seq(

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.streaming.OutputMode
 
 /** ScaleProbe's copy step: N copies of every table that keep each
   * copy's joins inside the copy, leave copy 0 as the source and keep
@@ -13,24 +13,22 @@ import org.apache.spark.sql.types.LongType
   */
 class ScaleProbeSpec extends SparkSpec {
   private val src = "/root/testdata/sf0.001"
+  private val root = Files.createTempDirectory("graft_scaleprobe_spec")
+  // written on first use, so a filtered run that selects no case
+  // writes nothing
   private lazy val dir = {
-    val d = Files.createTempDirectory("graft_scaleprobe_spec")
-    ScaleProbe.writeCopies(spark, src, 2, d)
-    d.toString
+    ScaleProbe.writeCopies(spark, src, 2, root)
+    root.toString
   }
 
   override def afterAll(): Unit =
-    try FileUtils.deleteDirectory(new java.io.File(dir)) finally super.afterAll()
+    try FileUtils.deleteDirectory(root.toFile) finally super.afterAll()
 
   private def both(name: String): (DataFrame, DataFrame) =
     (Tables.load(spark, src, name), Tables.load(spark, dir, name))
 
-  private def shiftedKeys(df: DataFrame): Seq[String] =
-    df.schema.collect { case f if f.dataType == LongType &&
-      (f.name.endsWith("key") || f.name.endsWith("_id")) => f.name }
-
   private def copy0(df: DataFrame): DataFrame =
-    shiftedKeys(df).map(k => col(k) < 100000000L)
+    ScaleProbe.keyColumns(df.schema).map(k => col(k) < ScaleProbe.Offset)
       .reduceOption(_ && _).fold(df)(df.filter)
 
   test("×2 doubles every keyed table; region and nation stay one copy") {
@@ -84,8 +82,8 @@ class ScaleProbeSpec extends SparkSpec {
       docs.filter(copy)
         .select(explode(split(col("text"), "\\s+")).as("tok"))
         .filter(length(col("tok")) > 0).distinct()
-    val (t0, t1) = (tokens(col("doc_id") < 100000000L),
-      tokens(col("doc_id") >= 100000000L))
+    val (t0, t1) = (tokens(col("doc_id") < ScaleProbe.Offset),
+      tokens(col("doc_id") >= ScaleProbe.Offset))
     assert(t0.count() > 0 && t1.count() === t0.count())
     assert(t0.intersect(t1).isEmpty)
   }
@@ -100,6 +98,22 @@ class ScaleProbeSpec extends SparkSpec {
 
   test("a registered query runs over the scaled directory") {
     val q = SparkEntry.queries("q47_edge_gold")
+    val n = q(spark, src).count()
+    assert(n > 0 && q(spark, dir).count() === 2 * n)
+  }
+
+  test("every table streams all of its copies, file or directory") {
+    def streamed(d: String, name: String): Long = graft.streaming.Streams
+      .runToTable(Tables.stream(spark, d, name), OutputMode.Append()).count()
+    for (name <- Tables.names) {
+      val factor = if (Set("region", "nation")(name)) 1 else 2
+      val n = streamed(src, name)
+      assert(n > 0 && streamed(dir, name) === factor * n, name)
+    }
+  }
+
+  test("a registered streaming query reads every copy") {
+    val q = SparkEntry.queries("q328_stream_extract")
     val n = q(spark, src).count()
     assert(n > 0 && q(spark, dir).count() === 2 * n)
   }
