@@ -18,12 +18,12 @@ import org.apache.spark.sql.types._
   * — log-level pruning on top of parquet's own row-group pruning.
   *
   * `commit` writes data under `data-v{N}/`, derives per-file stats
-  * with one Spark job (groupBy input_file_name — the stats
-  * computation is itself distributed), and finally hard-links the log
-  * entry into place. The link creation is the atomic commit point AND
-  * the concurrency arbiter: link(2) is atomic and fails with EEXIST
-  * if the version file already exists, so of two racing writers
-  * exactly one wins (rename(2) would silently replace — wrong tool).
+  * from the parquet footers ([[fileStats]]), and finally hard-links
+  * the log entry into place. The link creation is the atomic commit
+  * point AND the concurrency arbiter: link(2) is atomic and fails with
+  * EEXIST if the version file already exists, so of two racing
+  * writers exactly one wins (rename(2) would silently replace — wrong
+  * tool).
   * [[commit]] treats a lost race as a bug (single-writer pipelines);
   * [[commitIf]] is the optimistic-concurrency entry point — check the
   * expected version, attempt the commit, report the winner's version
@@ -45,8 +45,9 @@ import org.apache.spark.sql.types._
   * on purpose so `spark.read.json` consumes the whole `_log/`
   * directory as one DataFrame): {version, mode, path, rows, mn, mx,
   * pcols, pvals, bloom, mn2, mx2, mn3, mx3, txn} — see [[logSchema]]
-  * for what each optional field holds; writers omit the fields they
-  * do not fill, which read back as null.
+  * for what each optional field holds. Every writer hands its entries,
+  * rows of [[logSchema]], to [[publish]], the one log-line writer;
+  * null fields are omitted and read back as null.
   * An `overwrite` commit resets the live set to its own files;
   * `append` adds to it; `delete` adds deletion-vector files that mask
   * rows of the live set. Time travel = filter `version <= asOf`
@@ -182,13 +183,20 @@ object TxLog {
     victims.size.toLong
   }
 
-  /** Atomic-exclusive log publish: write the entry to a uniquely-named
-    * temp file, then hard-link it to `v{N}.json`. The link appears
-    * whole or not at all (atomicity) and creation fails if the target
-    * exists (exclusivity) — the one filesystem op that is both the
-    * commit point and the multi-writer arbiter.
+  /** The one log writer: each entry becomes one JSON line of its
+    * non-null fields in schema order (Longs bare, Strings through
+    * [[VcoScan.json]]), written to a uniquely-named temp file that is
+    * then hard-linked to `v{N}.json`. The link appears whole or not at
+    * all (atomicity) and creation fails if the target exists
+    * (exclusivity) — the one filesystem op that is both the commit
+    * point and the multi-writer arbiter.
     */
-  private def publishLog(dir: String, v: Long, lines: Seq[String]): Unit = {
+  private def publish(dir: String, v: Long, entries: Seq[Row]): Unit = {
+    val lines = entries.map { r =>
+      logSchema.fields.indices.filterNot(r.isNullAt).map { i =>
+        VcoScan.json(logSchema(i).name) + ":" + VcoScan.json(r.get(i))
+      }.mkString("{", ",", "}")
+    }
     val ld = logDir(dir)
     ld.mkdirs()
     val tmp = new java.io.File(ld, s".v$v-${java.util.UUID.randomUUID}.tmp")
@@ -198,6 +206,41 @@ object TxLog {
       new java.io.File(ld, s"v$v.json").toPath, tmp.toPath)
     finally { java.nio.file.Files.deleteIfExists(tmp.toPath); () }
   }
+
+  /** A log entry: a row of [[logSchema]] holding `fields` (a later
+    * duplicate name wins), null elsewhere.
+    */
+  private def entry(fields: (String, Any)*): Row = {
+    val m = fields.toMap
+    Row.fromSeq(logSchema.fieldNames.toSeq.map(m.getOrElse(_, null)))
+  }
+
+  /** Per-file (relPath, rows, (min, max) per stat column). */
+  private type FileStat = (String, Long, Seq[(Long, Long)])
+
+  /** The entry of one file: its rows and one (mn, mx), (mn2, mx2), …
+    * pair per stat column, then `more`.
+    */
+  private def fileEntry(v: Long, mode: String, stat: FileStat,
+      more: (String, Any)*): Row = {
+    val (path, rows, ranges) = stat
+    entry(Seq("version" -> v, "mode" -> mode, "path" -> path,
+      "rows" -> rows) ++ ranges.zipWithIndex.flatMap { case ((mn, mx), i) =>
+        Seq(s"mn${statSuffix(i)}" -> mn, s"mx${statSuffix(i)}" -> mx)
+      } ++ more: _*)
+  }
+
+  private def checkMode(mode: String): Unit =
+    require(mode == "append" || mode == "overwrite",
+      s"mode must be append|overwrite, got $mode")
+
+  /** The version the next commit to `dir` takes. */
+  private def nextVersion(dir: String): Long =
+    versions(dir).lastOption.map(_ + 1).getOrElse(0L)
+
+  /** Where the table-relative path `rel` lives. */
+  private def under(dir: String, rel: String): String =
+    new java.io.File(dir, rel).toString
 
   /** Hadoop configuration for driver-side footer reads: the active
     * session's (so credentials/filesystem settings apply on remote
@@ -314,7 +357,7 @@ object TxLog {
     */
   private def fileStats(spark: SparkSession, dataAbs: String,
       dataRel: String, statCols: Seq[String], depth: Int)
-      : IndexedSeq[(String, Long, Seq[(Long, Long)])] =
+      : IndexedSeq[FileStat] =
     try
       footerFileStats(dataAbs, statCols)
         .map { case (sub, n, rs) => (s"$dataRel/$sub", n, rs) }
@@ -336,33 +379,19 @@ object TxLog {
         .sortBy(_._1).toIndexedSeq
     }
 
-  /** One log line per file of `stats`: its rows and one (mn, mx),
-    * (mn2, mx2), … pair per stat column, then `extra` (pre-rendered
-    * JSON fields).
-    */
-  private def statLines(v: Long, mode: String,
-      stats: Seq[(String, Long, Seq[(Long, Long)])],
-      extra: String = ""): IndexedSeq[String] =
-    stats.map { case (p, n, ranges) =>
-      val st = ranges.zipWithIndex.map { case ((mn, mx), i) =>
-        s""""mn${statSuffix(i)}":$mn,"mx${statSuffix(i)}":$mx""" }
-      s"""{"version":$v,"mode":"$mode","path":"$p","rows":$n,""" +
-        s"""${st.mkString(",")}$extra}"""
-    }.toIndexedSeq
-
   /** [[fileStats]]' footer form for a `partitionBy` layout ([[commitPartitioned]],
     * r16): partition VALUES come from the `name=value` directory
     * segments of each file's subpath — O(files) driver-side metadata,
     * no read-back scan. Values are unescaped with Spark's own
     * partition-path unescaping; any value whose unescape→escape round
     * trip is not the identity (exotic encodings) throws, so the
-    * caller falls back to the exact read-back pass. Returns
-    * (relPath, rows, mn, mx, pvals-joined-by-'|') sorted by path, or
+    * caller falls back to the exact read-back pass. Returns each
+    * file's stats and its pvals joined by '|', sorted by path, or
     * None on any inexactness.
     */
   private def footerStatsPartitioned(dataAbs: String, dataRel: String,
       statCol: String, partCols: Seq[String])
-      : Option[IndexedSeq[(String, Long, Long, Long, String)]] =
+      : Option[IndexedSeq[(FileStat, String)]] =
     try {
       val rows = footerFileStats(dataAbs, Seq(statCol)).map {
         case (sub, n, rs) =>
@@ -382,10 +411,9 @@ object TxLog {
           }.toMap
           val pvals = partCols.map(c => kv.getOrElse(c,
             throw new IllegalStateException(s"no $c= segment in $sub")))
-          ((s"$dataRel/$sub", n, rs.head._1, rs.head._2,
-            pvals.mkString("|")))
+          ((s"$dataRel/$sub", n, rs), pvals.mkString("|"))
       }
-      Some(rows.sortBy(_._1))
+      Some(rows.sortBy(_._1._1))
     } catch { case _: Exception => None }
 
   /** Write `df` under `dataRel/`, derive per-file stats
@@ -396,12 +424,11 @@ object TxLog {
   private def writeDataAndPublish(df: DataFrame, dir: String, v: Long,
       dataRel: String, mode: String, statCol: String,
       txn: Option[String] = None): Unit = {
-    val dataAbs = new java.io.File(dir, dataRel).toString
+    val dataAbs = under(dir, dataRel)
     df.write.parquet(dataAbs)
     val stats = fileStats(df.sparkSession, dataAbs, dataRel, Seq(statCol),
       depth = 1)
-    publishLog(dir, v,
-      statLines(v, mode, stats, txn.fold("")(t => s""","txn":"$t"""")))
+    publish(dir, v, stats.map(fileEntry(v, mode, _, "txn" -> txn.orNull)))
   }
 
   /** IDEMPOTENT commit (Delta's txnAppId/txnVersion): the commit
@@ -411,22 +438,20 @@ object TxLog {
     * needs. The dedup probe is one filter over the log (metadata,
     * commit-count-bounded). Returns Some(version) when the commit
     * landed, None when the transaction had already been applied.
-    * appId must not contain '"' or ':' (it travels in the JSON log
-    * and the key joins with ':').
+    * appId must not contain ':' (the key joins appId and batchId with
+    * ':') or '"'.
     */
   def commitIdempotent(df: DataFrame, dir: String, mode: String,
       statCol: String, appId: String, batchId: Long): Option[Long] = {
-    require(mode == "append" || mode == "overwrite",
-      s"mode must be append|overwrite, got $mode")
+    checkMode(mode)
     require(!appId.contains("\"") && !appId.contains(":"),
-      s"appId must be JSON/key-safe, got $appId")
+      s"appId must not contain '\"' or ':', got $appId")
     val txn = s"$appId:$batchId"
-    val vs = versions(dir)
-    val applied = vs.nonEmpty &&
+    val v = nextVersion(dir)
+    val applied = v > 0 &&
       !log(df.sparkSession, dir).filter(col("txn") === txn).isEmpty
     if (applied) None
     else {
-      val v = vs.lastOption.map(_ + 1).getOrElse(0L)
       writeDataAndPublish(df, dir, v, s"data-v$v", mode, statCol,
         Some(txn))
       Some(v)
@@ -440,9 +465,8 @@ object TxLog {
     */
   def commit(df: DataFrame, dir: String, mode: String,
       statCol: String): Long = {
-    require(mode == "append" || mode == "overwrite",
-      s"mode must be append|overwrite, got $mode")
-    val v = versions(dir).lastOption.map(_ + 1).getOrElse(0L)
+    checkMode(mode)
+    val v = nextVersion(dir)
     writeDataAndPublish(df, dir, v, s"data-v$v", mode, statCol)
     v
   }
@@ -464,8 +488,7 @@ object TxLog {
     */
   def commitIf(df: DataFrame, dir: String, mode: String, statCol: String,
       expectedVersion: Long, writerId: String): Either[Long, Long] = {
-    require(mode == "append" || mode == "overwrite",
-      s"mode must be append|overwrite, got $mode")
+    checkMode(mode)
     val latest = versions(dir).lastOption.getOrElse(-1L)
     if (latest != expectedVersion) return Left(latest)
     val v = latest + 1
@@ -481,9 +504,11 @@ object TxLog {
   /** The log as a DataFrame, optionally as of a version. */
   def log(spark: SparkSession, dir: String,
       asOf: Option[Long] = None): DataFrame = {
+    // FAILFAST: a malformed line fails here, not as a later all-null entry
+    def json(paths: String*) = spark.read.schema(logSchema)
+      .option("mode", "FAILFAST").json(paths: _*)
     val all = checkpointVersion(dir) match {
-      case None =>
-        spark.read.schema(logSchema).json(logDir(dir).toString)
+      case None => json(logDir(dir).toString)
       case Some(n) =>
         // snapshot + the JSON tail above it: log-read cost is
         // O(commits since checkpoint), not O(all commits)
@@ -492,8 +517,7 @@ object TxLog {
         val tail = jsonVersions(dir).filter(_ > n)
           .map(v => new java.io.File(logDir(dir), s"v$v.json").toString)
         if (tail.isEmpty) snap
-        else snap.unionByName(
-          spark.read.schema(logSchema).json(tail: _*))
+        else snap.unionByName(json(tail: _*))
     }
     asOf.fold(all)(v => all.filter(col("version") <= v))
   }
@@ -704,7 +728,7 @@ object TxLog {
       pred: org.apache.spark.sql.Column): Long = {
     val live = snapshot(spark, dir, None)
     require(live.files.nonEmpty, s"delete on empty tx table $dir")
-    val v = versions(dir).last + 1
+    val v = nextVersion(dir)
     val current = applyDv(spark,
       withPos(spark.read.parquet(live.filePaths(dir): _*)), live.dvPaths(dir))
     val bits = current.filter(pred)
@@ -714,18 +738,16 @@ object TxLog {
       .groupBy(col("path"), col("word_idx"))
       .agg(expr("bit_or(__b)").as("bits"))
     val dvRel = s"dv-v$v"
-    val dvAbs = new java.io.File(dir, dvRel).toString
+    val dvAbs = under(dir, dvRel)
     bits.write.parquet(dvAbs)
     val stats = spark.read.parquet(dvAbs)
       .groupBy(input_file_name().as("uri"))
       .agg(expr("sum(bit_count(bits))").as("n"))
       .collect()
-      .map(r => (s"$dvRel/${r.getString(0).split('/').last}", r.getLong(1)))
+      .map(r => (s"$dvRel/${r.getString(0).split('/').last}", r.getLong(1),
+        Seq((0L, 0L))))
       .sortBy(_._1)
-    val lines = stats.map { case (p, n) =>
-      s"""{"version":$v,"mode":"delete","path":"$p","rows":$n,"mn":0,"mx":0}"""
-    }
-    publishLog(dir, v, lines.toIndexedSeq)
+    publish(dir, v, stats.toIndexedSeq.map(fileEntry(v, "delete", _)))
     v
   }
 
@@ -966,8 +988,7 @@ object TxLog {
   def commitClustered(df: DataFrame, dir: String, mode: String,
       statCols: Seq[String], clusterCol: org.apache.spark.sql.Column,
       buckets: Int): Long = {
-    require(mode == "append" || mode == "overwrite",
-      s"mode must be append|overwrite, got $mode")
+    checkMode(mode)
     checkAxes(statCols.size)
     require(buckets >= 1)
     val spark = df.sparkSession
@@ -984,13 +1005,13 @@ object TxLog {
     val withB = df.withColumn("__zb",
       graft.functions.FixedPoint.idiv(clusterCol - cmin, lit(width))
         .cast("string"))
-    val v = versions(dir).lastOption.map(_ + 1).getOrElse(0L)
+    val v = nextVersion(dir)
     val dataRel = s"data-v$v"
-    val dataAbs = new java.io.File(dir, dataRel).toString
+    val dataAbs = under(dir, dataRel)
     withB.repartition(col("__zb"))
       .write.partitionBy("__zb").parquet(dataAbs)
-    publishLog(dir, v, statLines(v, mode,
-      fileStats(spark, dataAbs, dataRel, statCols, depth = 2)))
+    publish(dir, v, fileStats(spark, dataAbs, dataRel, statCols, depth = 2)
+      .map(fileEntry(v, mode, _)))
     v
   }
 
@@ -1015,14 +1036,13 @@ object TxLog {
     * between an ALTER TABLE and a table rewrite. Partition columns
     * must be STRING-typed in `df` (directory names are strings;
     * keeping the contract explicit beats silently round-tripping
-    * types through paths) and value strings must be path/JSON-safe
-    * (dates, enums, ids): null, empty, `| , = /`, `"`, `\` and control
-    * characters are rejected before the write.
+    * types through paths) and value strings must be plain path
+    * segments (dates, enums, ids): null, empty, `| , = /`, `"`, `\` and
+    * control characters are rejected before the write.
     */
   def commitPartitioned(df: DataFrame, dir: String, mode: String,
       statCol: String, partCols: Seq[String]): Long = {
-    require(mode == "append" || mode == "overwrite",
-      s"mode must be append|overwrite, got $mode")
+    checkMode(mode)
     require(partCols.nonEmpty, "use commit() for unpartitioned writes")
     partCols.foreach { c =>
       require(df.schema(c).dataType == StringType,
@@ -1034,12 +1054,9 @@ object TxLog {
     // path shape), or a null/empty value (Spark would rewrite it to
     // __HIVE_DEFAULT_PARTITION__), would mis-split in readEvolved's
     // spec parsing and silently corrupt pruning. A quote, backslash
-    // or control character survives the path round trip into pvals
-    // and makes the log line invalid JSON, which the PERMISSIVE log
-    // read turns into an all-null row that breaks every later read of
-    // the table. Validate BEFORE the write — one column-pruned
-    // limit-1 scan — so a bad batch leaves nothing on disk and the
-    // failure is deterministic.
+    // or control character is rejected as well. Validate BEFORE the
+    // write — one column-pruned limit-1 scan — so a bad batch leaves
+    // nothing on disk and the failure is deterministic.
     val badCond = partCols
       .map(c => col(c).isNull || col(c) === "" ||
         col(c).rlike("""[|,=/"\\\p{Cntrl}]"""))
@@ -1050,9 +1067,9 @@ object TxLog {
       "partition value(s) " + badSample.mkString(",") +
         " are null/empty or contain a reserved character " +
         "(| , = / \" \\ or a control character) — not representable in the log")
-    val v = versions(dir).lastOption.map(_ + 1).getOrElse(0L)
+    val v = nextVersion(dir)
     val dataRel = s"data-v$v"
-    val dataAbs = new java.io.File(dir, dataRel).toString
+    val dataAbs = under(dir, dataRel)
     df.write.partitionBy(partCols: _*).parquet(dataAbs)
     // footer-derived stats incl. partition values from the directory
     // names (r16, VERDICT r15 item 4): O(files) driver-side metadata
@@ -1083,17 +1100,14 @@ object TxLog {
             // delimiter-safety was enforced on df before the write
             val pvals = partCols.indices
               .map(i => r.get(i + 1).toString).mkString("|")
-            (rel, r.getAs[Long]("rows"), r.getAs[Long]("mn"),
-              r.getAs[Long]("mx"), pvals)
+            ((rel, r.getAs[Long]("rows"),
+              Seq((r.getAs[Long]("mn"), r.getAs[Long]("mx")))), pvals)
           }
-          .sortBy(_._1).toIndexedSeq
+          .sortBy(_._1._1).toIndexedSeq
       }
     val pc = partCols.mkString(",")
-    val lines = stats.map { case (p, n, mn, mx, pv) =>
-      s"""{"version":$v,"mode":"$mode","path":"$p","rows":$n,""" +
-        s""""mn":$mn,"mx":$mx,"pcols":"$pc","pvals":"$pv"}"""
-    }
-    publishLog(dir, v, lines.toIndexedSeq)
+    publish(dir, v, stats.map { case (st, pv) =>
+      fileEntry(v, mode, st, "pcols" -> pc, "pvals" -> pv) })
     v
   }
 
@@ -1175,27 +1189,18 @@ object TxLog {
     */
   def commitWithBloom(df: DataFrame, dir: String, mode: String,
       statCol: String, numBits: Int, numHashes: Int): Long = {
-    require(mode == "append" || mode == "overwrite",
-      s"mode must be append|overwrite, got $mode")
+    checkMode(mode)
     val spark = df.sparkSession
-    val v = versions(dir).lastOption.map(_ + 1).getOrElse(0L)
+    val v = nextVersion(dir)
     val dataRel = s"data-v$v"
-    val dataAbs = new java.io.File(dir, dataRel).toString
+    val dataAbs = under(dir, dataRel)
     df.write.parquet(dataAbs)
-    val back = spark.read.parquet(dataAbs)
+    // per-file row/min/max stats exactly as commit() derives them
+    val stats = fileStats(spark, dataAbs, dataRel, Seq(statCol), depth = 1)
     def relOf(uri: String) = s"$dataRel/${uri.split('/').last}"
-    // pass 1: per-file row/min/max stats (same shape as commit())
-    val stats = back
-      .groupBy(input_file_name().as("uri"))
-      .agg(count(lit(1)).as("rows"),
-        min(col(statCol)).as("mn"), max(col(statCol)).as("mx"))
-      .collect()
-      .map(r => relOf(r.getString(0)) ->
-        (r.getLong(1), r.getLong(2), r.getLong(3)))
-      .toMap
-    // pass 2: per-(file, word) bloom bits — one explode + bit_or
-    // partial agg, ≤ files × numBits/63 rows to the driver
-    val wordRows = back
+    // per-(file, word) bloom bits — one explode + bit_or partial agg,
+    // ≤ files × numBits/63 rows to the driver
+    val wordRows = spark.read.parquet(dataAbs)
       .select(input_file_name().as("uri"),
         explode(graft.operators.Sketch.bloomPositions(
           col(statCol).cast("string"), numBits, numHashes)).as("p"))
@@ -1213,11 +1218,8 @@ object TxLog {
         .map { case (_, w, b) => s"$w:${java.lang.Long.toHexString(b)}" }
         .mkString(";")
     }
-    val lines = stats.toSeq.sortBy(_._1).map { case (p, (n, mn, mx)) =>
-      s"""{"version":$v,"mode":"$mode","path":"$p","rows":$n,""" +
-        s""""mn":$mn,"mx":$mx,"bloom":"${bloomOf.getOrElse(p, "")}"}"""
-    }
-    publishLog(dir, v, lines.toIndexedSeq)
+    publish(dir, v, stats.map(st =>
+      fileEntry(v, mode, st, "bloom" -> bloomOf.getOrElse(st._1, ""))))
     v
   }
 
@@ -1293,23 +1295,15 @@ object TxLog {
     val snap = snapshot(spark, srcAbs, asOf)
     val live = snap.files ++ snap.dvs
     require(live.nonEmpty, s"no live files to clone in $srcAbs at $asOf")
-    val lines = live
-      .map { r =>
-        val mode =
-          if (r.getAs[String]("mode") == "delete") "delete"
-          else "overwrite"
-        val abs = resolve(srcAbs, r.getAs[String]("path"))
-        val opt = (Seq("pcols", "pvals", "bloom").flatMap { f =>
-          Option(r.getAs[String](f)).map(v => s""","$f":"$v"""")
-        } ++ Seq("mn2", "mx2", "mn3", "mx3").flatMap { f =>
-          Option(r.getAs[java.lang.Long](f)).map(v => s""","$f":$v""")
-        }).mkString
-        s"""{"version":0,"mode":"$mode","path":"$abs",""" +
-          s""""rows":${r.getAs[Long]("rows")},"mn":${r.getAs[Long]("mn")},""" +
-          s""""mx":${r.getAs[Long]("mx")}$opt}"""
-      }
-      .sortBy(identity)
-    publishLog(dstDir, 0L, lines)
+    // the clone is a new table: its txn (dedup) history starts empty
+    val entries = live.map { r =>
+      val mode =
+        if (r.getAs[String]("mode") == "delete") "delete" else "overwrite"
+      entry(logSchema.fieldNames.toSeq.zip(r.toSeq) ++ Seq("version" -> 0L,
+        "mode" -> mode, "path" -> resolve(srcAbs, r.getAs[String]("path")),
+        "txn" -> null): _*)
+    }
+    publish(dstDir, 0L, entries.sortBy(e => (e.getString(1), e.getString(2))))
     0L
   }
 }

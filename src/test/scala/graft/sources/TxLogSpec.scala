@@ -889,4 +889,89 @@ class TxLogSpec extends SparkSpec {
       // the bar is deterministic green)
     }
   }
+
+  test("log format: each writer's _log lines, byte for byte") {
+    import spark.implicits._
+    withTable { root =>
+      val t = s"$root/all"
+      val dst = s"$root/clone"
+      // the one run-dependent part of a line: the write job's UUID in
+      // each part-file name, and the clone's absolute source prefix
+      def text(table: String, v: Long): String =
+        new String(java.nio.file.Files.readAllBytes(
+          java.nio.file.Paths.get(table, "_log", s"v$v.json")), "UTF-8")
+          .replace(new java.io.File(t).getCanonicalPath, "SRC")
+          .replaceAll(
+            "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}",
+            "UUID")
+      val one = (ks: Seq[Long]) => ks.toDF("k").repartition(1)
+      TxLog.commit(one(Seq(1L, 5L)), t, "overwrite", "k")
+      TxLog.commitIdempotent(one(Seq(7L)), t, "append", "k", "app", 3L)
+      TxLog.deleteWhere(spark, t, col("k") === 5L)
+      TxLog.commitClustered((0L until 4L).map(k => (k, 3L - k)).toDF("k", "v"),
+        t, "append", Seq("k", "v"), col("k"), 2)
+      TxLog.commitPartitioned(Seq((8L, "x"), (9L, "y")).toDF("k", "p")
+        .repartition(1), t, "append", "k", Seq("p"))
+      TxLog.commitWithBloom(one(Seq(10L, 11L)), t, "append", "k", 63, 2)
+      TxLog.commitWithBloom(one(Seq(12L)), t, "append", "k", 63, 0)
+      TxLog.shallowClone(spark, t, dst)
+      val got = (0L to 6L).map(text(t, _)) :+ text(dst, 0L)
+      // part-file names: flat writes, then partitionBy writes
+      val f = "part-00000-UUID-c000.snappy.parquet"
+      val d = "part-00000-UUID.c000.snappy.parquet"
+      val bloom = "0:422000000000004"
+      val expected = Seq(
+        Seq(s"""{"version":0,"mode":"overwrite","path":"data-v0/$f","rows":2,"mn":1,"mx":5}"""),
+        Seq(s"""{"version":1,"mode":"append","path":"data-v1/$f","rows":1,"mn":7,"mx":7,"txn":"app:3"}"""),
+        Seq(s"""{"version":2,"mode":"delete","path":"dv-v2/$f","rows":1,"mn":0,"mx":0}"""),
+        Seq(s"""{"version":3,"mode":"append","path":"data-v3/__zb=0/$d","rows":2,"mn":0,"mx":1,"mn2":2,"mx2":3}""",
+          s"""{"version":3,"mode":"append","path":"data-v3/__zb=1/$d","rows":2,"mn":2,"mx":3,"mn2":0,"mx2":1}"""),
+        Seq(s"""{"version":4,"mode":"append","path":"data-v4/p=x/$d","rows":1,"mn":8,"mx":8,"pcols":"p","pvals":"x"}""",
+          s"""{"version":4,"mode":"append","path":"data-v4/p=y/$d","rows":1,"mn":9,"mx":9,"pcols":"p","pvals":"y"}"""),
+        Seq(s"""{"version":5,"mode":"append","path":"data-v5/$f","rows":2,"mn":10,"mx":11,"bloom":"$bloom"}"""),
+        // an empty filter (no hash functions) is an empty string, not null
+        Seq(s"""{"version":6,"mode":"append","path":"data-v6/$f","rows":1,"mn":12,"mx":12,"bloom":""}"""),
+        // the clone: every live entry at version 0, data files as
+        // overwrite, absolute paths, no txn, sorted
+        Seq(s"""{"version":0,"mode":"delete","path":"SRC/dv-v2/$f","rows":1,"mn":0,"mx":0}""",
+          s"""{"version":0,"mode":"overwrite","path":"SRC/data-v0/$f","rows":2,"mn":1,"mx":5}""",
+          s"""{"version":0,"mode":"overwrite","path":"SRC/data-v1/$f","rows":1,"mn":7,"mx":7}""",
+          s"""{"version":0,"mode":"overwrite","path":"SRC/data-v3/__zb=0/$d","rows":2,"mn":0,"mx":1,"mn2":2,"mx2":3}""",
+          s"""{"version":0,"mode":"overwrite","path":"SRC/data-v3/__zb=1/$d","rows":2,"mn":2,"mx":3,"mn2":0,"mx2":1}""",
+          s"""{"version":0,"mode":"overwrite","path":"SRC/data-v4/p=x/$d","rows":1,"mn":8,"mx":8,"pcols":"p","pvals":"x"}""",
+          s"""{"version":0,"mode":"overwrite","path":"SRC/data-v4/p=y/$d","rows":1,"mn":9,"mx":9,"pcols":"p","pvals":"y"}""",
+          s"""{"version":0,"mode":"overwrite","path":"SRC/data-v5/$f","rows":2,"mn":10,"mx":11,"bloom":"$bloom"}""",
+          s"""{"version":0,"mode":"overwrite","path":"SRC/data-v6/$f","rows":1,"mn":12,"mx":12,"bloom":""}""")
+      ).map(_.mkString("", "\n", "\n"))
+      assert(got.size === expected.size)
+      got.zip(expected).foreach { case (g, e) => assert(g === e) }
+    }
+  }
+
+  test("shallowClone: a source path holding a quote reads back") {
+    import spark.implicits._
+    withTable { root =>
+      val src = s"$root/a\"b/tbl"
+      TxLog.commit(Seq(1L, 2L, 3L).toDF("k"), src, "overwrite", "k")
+      TxLog.shallowClone(spark, src, s"$root/dst")
+      assert(TxLog.read(spark, s"$root/dst").select("k").as[Long]
+        .collect().sorted.toSeq === Seq(1L, 2L, 3L))
+    }
+  }
+
+  test("a malformed log line fails the read that meets it") {
+    import spark.implicits._
+    withTable { t =>
+      TxLog.commit(Seq(1L).toDF("k"), t, "overwrite", "k")
+      java.nio.file.Files.write(java.nio.file.Paths.get(t, "_log", "v1.json"),
+        "garbage\n".getBytes("UTF-8"))
+      val e = intercept[org.apache.spark.SparkException] {
+        TxLog.read(spark, t)
+      }
+      // the failure names the file, and its cause the malformed record
+      assert(e.getMessage.contains("_log/v1.json"), e.getMessage)
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(c => String.valueOf(c.getMessage).contains("Malformed records")))
+    }
+  }
 }

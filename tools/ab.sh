@@ -1,6 +1,6 @@
 #!/bin/bash
 # Alternating parent/change A/B of the intake benchmark.
-# Usage: plans/pr9/ab.sh <parent-checkout> <change-checkout> <workload> <pairs> <out.jsonl> [first-seed]
+# Usage: tools/ab.sh <parent-checkout> <change-checkout> <workload> <pairs> <out.jsonl> [first-seed]
 # Pair i runs seed i (from first-seed, default 1) on both sides; odd pairs run the parent first,
 # even pairs the change first. Each line of <out.jsonl> is one run:
 # {"side":…,"seed":…,"r":<run.py's last stdout line>}.

@@ -4,7 +4,7 @@ each side, change/parent ratio, the parent's quartile spread, and how
 many pairs the change won. Also checks every run was correct with 0
 failed operations.
 
-Usage: plans/pr9/ab_summary.py <ab.jsonl>
+Usage: tools/ab_summary.py <ab.jsonl>
 """
 import json
 import statistics

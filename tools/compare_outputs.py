@@ -2,7 +2,7 @@
 """Compare two graft.Verify output directories table by table: same
 columns, same rows in the same order.
 
-Usage: plans/pr9/compare_outputs.py <parent-out> <change-out> q1,q2,...
+Usage: tools/compare_outputs.py <parent-out> <change-out> q1,q2,...
 """
 import sys
 
