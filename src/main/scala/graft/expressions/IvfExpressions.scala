@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
   * [[PqEncodeCodes]]/[[PqAdcDist]].
   *
   * The portable cell assignment
-  * (`Similarity.assignCell`/`assignCells`) builds an
+  * (`Similarity.assignCellPortable`/`assignCellsPortable`) builds an
   * `array_max(array(struct(cos, id) × nlist))` tree with the centroid
   * matrix inlined as literals. Correct at nlist = 8, already bulky at
   * the q501 policy's 22–44, and IMPOSSIBLE at the production nlist
@@ -188,7 +188,7 @@ case class NearestCells(child: Expression,
     table.nearest(input, isDoubleArr, probes)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("ivfAssigner", this,
+    val ref = ctx.addReferenceObj("nearestCells", this,
       classOf[NearestCells].getName)
     nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.doNearest($c);")
   }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 /** Similarity search over an embedding column (BASELINE north star:
   * ANN over `Array[Float]`).
   *
-  * Two paths:
+  * Three paths:
   *  - [[bruteForceTopK]] — the exact baseline: broadcast the (small)
   *    query set against the corpus scan, one cosine per (query, row),
   *    per-query top-k window. One corpus pass, no corpus shuffle; at
@@ -15,11 +15,16 @@ import org.apache.spark.sql.functions._
   *    search.
   *  - [[hyperplaneBucket]]/[[annTopK]] — the scale path: random
   *    hyperplane LSH. Each vector gets a `planes`-bit bucket id
-  *    (sign pattern of plane dot products); queries probe only their
-  *    own bucket, shrinking candidates ~2^planes-fold. Bucketing is a
+  *    (sign pattern of plane dot products); queries probe their own
+  *    bucket, shrinking candidates ~2^planes-fold. Bucketing is a
   *    projection (no shuffle); the probe is an equi-join on bucket —
   *    co-partitioned, AQE-balanced. Recall tuning = fewer planes or
-  *    multi-probe (flip one bit), both deterministic.
+  *    more probes (flip the least-confident bits), both
+  *    deterministic.
+  *  - [[insertIntoCells]]/[[annTopKIvf]] — IVF: [[kmAssign]] stores
+  *    each vector's nearest centroid cell in the index once; queries
+  *    probe their `probes` nearest cells. The probe count is a
+  *    parameter of the one serve, not a separate operator.
   *
   * Determinism: all float math is cast to DOUBLE and reduced strictly
   * left-to-right (`aggregate`), so scores are bit-identical across
@@ -134,19 +139,6 @@ object Similarity {
         col(vecCol).as("nvec")), Seq("neighbor_id")), k)
   }
 
-  /** IVF coarse quantizer: index of the nearest centroid by cosine
-    * (deterministic argmax over the centroid list — a when-chain over
-    * native dot products, no shuffle). Centroids come from the caller:
-    * a seeded sample of the corpus is the classic IVF-flat init.
-    */
-  def ivfAssign(vec: Column, centroids: Seq[Seq[Float]]): Column =
-    // float constants widen exactly to double — same scores, one code
-    // path with the k-means trainer below (the q57 oracle already
-    // proves the widened-double arithmetic)
-    assignCell(vec, centroids.zipWithIndex.map { case (c, i) =>
-      (i, c.map(_.toDouble))
-    })
-
   /** Nearest-centroid id over (id, centroid) pairs — native kernel
     * ([[graft.expressions.NearestCells]]): the centroid matrix rides
     * as an instance field and the argmax is a plain loop, so the
@@ -156,9 +148,11 @@ object Similarity {
     * being buildable at the nlist the q501 policy targets (⌊√n⌋ →
     * thousands of inlined literal structs; the q483 disease, one
     * layer down). Deterministic tiebreak: equal scores pick the
-    * higher cell id.
+    * higher cell id. The one nearest-cell assignment: the index
+    * build, the k-means trainer and the streaming cell statistics all
+    * call it.
     */
-  private def assignCell(vec: Column, cents: Seq[(Int, Seq[Double])]): Column =
+  def kmAssign(vec: Column, cents: Seq[(Int, Seq[Double])]): Column =
     graft.expressions.IvfExpressions.nearestCells(vec, cents, 1).getItem(0)
 
   /** DEFINITIONAL argmax tree (spec/oracle reference only). NULL
@@ -193,14 +187,11 @@ object Similarity {
     * quantized per-dimension sums are plain associative aggregates,
     * so a Complete-mode streaming groupBy(cell) maintains the exact
     * same cell statistics a batch pass computes — one trainer
-    * definition, two execution modes (q306). `kmAssign` is the
+    * definition, two execution modes (q306). [[kmAssign]] is the
     * cosine-argmax cell id; `kmCellAggs` the (n, s0..s{d-1}) sums;
     * `kmCentroidsFromGrid` the closing readout (cell, n_members,
     * centroid).
     */
-  def kmAssign(vec: Column, cents: Seq[(Int, Seq[Double])]): Column =
-    assignCell(vec, cents)
-
   def kmCellAggs(vecCol: String, dim: Int): Seq[Column] =
     kmAggs(vecCol, dim)
 
@@ -221,7 +212,7 @@ object Similarity {
     * rather than carrying dead cells), so `init` ids survive in the
     * result keys. Deterministic end-to-end: quantized long sums (see
     * [[KmQ]]), one double division per coordinate, and the
-    * higher-cell-id tiebreak in [[assignCell]].
+    * higher-cell-id tiebreak in [[kmAssign]].
     */
   def kmeansIterate(corpus: DataFrame, vecCol: String,
       init: Seq[(Int, Seq[Double])], iters: Int): Seq[(Int, Seq[Double])] = {
@@ -231,7 +222,7 @@ object Similarity {
     for (_ <- 1 to iters) {
       val aggs = kmAggs(vecCol, dim)
       val rows = corpus
-        .select(assignCell(col(vecCol), cents).as("cell"), col(vecCol))
+        .select(kmAssign(col(vecCol), cents).as("cell"), col(vecCol))
         .groupBy(col("cell")).agg(aggs.head, aggs.tail: _*)
         .collect()
       cents = rows.map { r =>
@@ -256,7 +247,7 @@ object Similarity {
     val cents = kmeansIterate(corpus, vecCol, init, iters - 1)
     val aggs = kmAggs(vecCol, dim)
     corpus
-      .select(assignCell(col(vecCol), cents).as("cell"), col(vecCol))
+      .select(kmAssign(col(vecCol), cents).as("cell"), col(vecCol))
       .groupBy(col("cell")).agg(aggs.head, aggs.tail: _*)
       .select(col("cell").cast("long").as("cell"),
         col("n").as("n_members"),
@@ -318,12 +309,15 @@ object Similarity {
       base.toLong).toInt
   }
 
-  /** Incremental IVF maintenance — the INSERT half of the
-    * q457/q458-style index lifecycle for the IVF family: new rows
-    * assign to their nearest EXISTING cell (one scan-speed argmax
-    * against the literal centroids, no join, no shuffle) and the
-    * quantizer does NOT retrain. Output: (id, vec, cell) rows ready
-    * to union with the stored index. At 100 TB this is the only
+  /** The IVF index build: each row keeps its id and vector and gains
+    * its nearest cell (one scan-speed [[kmAssign]] argmax against the
+    * literal centroids, no join, no shuffle). Output: (idCol, vecCol,
+    * cell), ready to persist (`write.partitionBy("cell")` prunes a
+    * serve to the probed cell directories) or to union with a stored
+    * index. Run over the whole corpus it builds the index; run over
+    * new rows it is the INSERT half of the q457/q458-style lifecycle
+    * for the IVF family — rows join their nearest EXISTING cell and
+    * the quantizer does NOT retrain. At 100 TB that is the only
     * affordable steady-state path — retraining is a corpus pass,
     * inserting is a batch pass; [[cellDriftAudit]] decides WHEN the
     * corpus pass is due.
@@ -331,24 +325,66 @@ object Similarity {
   def insertIntoCells(rows: DataFrame, idCol: String, vecCol: String,
       cents: Seq[(Int, Seq[Double])]): DataFrame =
     rows.select(col(idCol), col(vecCol),
-      assignCell(col(vecCol), cents).as("cell"))
+      kmAssign(col(vecCol), cents).as("cell"))
 
-  /** Multi-probe IVF serve over a PRE-ASSIGNED index — the production
-    * shape: corpus cells come from the stored `cellCol` (written at
-    * insert/build time by [[insertIntoCells]]/[[ivfAssign]]), never
-    * recomputed per query. Query side probes its `probes` nearest
-    * cells; the probe stays a cell equi-join against the stored
-    * index, ≈ probes/nlist of the corpus per query.
+  /** IVF ANN top-k over a cell-assigned index (`idCol`, `vecCol`,
+    * `cellCol` — [[insertIntoCells]] writes it at build/insert time;
+    * the serve never recomputes a corpus cell). Each query probes its
+    * `probes` nearest cells ([[assignCells]]: best first, probe 1 is
+    * the query's own [[kmAssign]] cell), so a query scans ≈
+    * probes/nlist of the corpus through one cell equi-join, never
+    * all-pairs. `probes = 1` is single-cell IVF and trades recall
+    * exactly like single-probe LSH; each extra probe recovers the
+    * true neighbors assigned to a runner-up cell at one more cell's
+    * candidate cost. Index rows hold one cell each, so every
+    * (query, neighbor) pair arises at most once — no dedup. Same
+    * output as [[bruteForceTopK]]; rows are missing where the probed
+    * cells hold fewer than k candidates.
     */
-  def annTopKIvfPreassignedD(queries: DataFrame, coded: DataFrame,
-      idCol: String, vecCol: String, cellCol: String,
-      cents: Seq[(Int, Seq[Double])], k: Int, probes: Int): DataFrame = {
+  def annTopKIvf(queries: DataFrame, index: DataFrame, idCol: String,
+      vecCol: String, cellCol: String, cents: Seq[(Int, Seq[Double])],
+      k: Int, probes: Int): DataFrame = {
     require(probes >= 1 && probes <= cents.size)
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
       explode(assignCells(col(vecCol), cents, probes)).as("cell"))
-    val c = coded.select(col(idCol).as("neighbor_id"),
+    val c = index.select(col(idCol).as("neighbor_id"),
       col(vecCol).as("nvec"), col(cellCol).as("cell"))
     cosineTopK(TopK.probe(c, q, "cell"), k)
+  }
+
+  /** LSH ANN top-k: each query probes its own bucket plus the
+    * `probes - 1` buckets obtained by flipping the LEAST-CONFIDENT
+    * plane bits — the planes whose |dot| is smallest are the ones most
+    * likely to have split a true neighbor pair (Lv et al.,
+    * "Multi-Probe LSH"). Flip order is deterministic: |dot| asc, then
+    * plane index asc. `probes = 1` probes only the own bucket. Corpus
+    * rows keep their single bucket and probe buckets are distinct
+    * (each flip changes exactly one bit), so no (query, neighbor)
+    * dedup is needed. Same output as [[bruteForceTopK]]; rows are
+    * missing where the probed buckets hold fewer than k candidates —
+    * the recall/latency trade.
+    */
+  def annTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
+      vecCol: String, planes: Seq[Seq[Double]], k: Int,
+      probes: Int): DataFrame = {
+    require(probes >= 1 && probes <= planes.size + 1)
+    import graft.expressions.VectorExpressions.dotF
+    val conf = array(planes.zipWithIndex.map { case (p, j) =>
+      struct(abs(dotF(col(vecCol), array(p.map(lit): _*))).as("a"),
+        lit(j).as("j"))
+    }: _*)
+    val qb = queries.select(col(idCol).as("query_id"),
+      col(vecCol).as("qvec"),
+      hyperplaneBucket(col(vecCol), planes).as("own"), conf.as("conf"))
+    val q = qb.select(col("query_id"), col("qvec"),
+      explode(concat(array(col("own")),
+        transform(slice(array_sort(col("conf")), 1, probes - 1),
+          s => col("own").bitwiseXOR(
+            call_function("shiftleft", lit(1L), s.getField("j"))))))
+        .as("bucket"))
+    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("nvec"),
+      hyperplaneBucket(col(vecCol), planes).as("bucket"))
+    cosineTopK(TopK.probe(c, q, "bucket"), k)
   }
 
   /** Quantizer-drift audit — the RETRAIN trigger of the incremental
@@ -380,7 +416,7 @@ object Similarity {
     */
   def cellFitStats(src: DataFrame, vecCol: String,
       cents: Seq[(Int, Seq[Double])]): DataFrame = src
-    .withColumn("cell", assignCell(col(vecCol), cents))
+    .withColumn("cell", kmAssign(col(vecCol), cents))
     .select(col("cell"),
       floor((cosineNative(col(vecCol), centOf(col("cell"), cents)) +
         1.0d) * 1000000.0d).cast("long").as("fit_ppm"))
@@ -452,11 +488,10 @@ object Similarity {
   }
 
   /** Top-`probes` nearest cells for a query vector, best first —
-    * the multi-probe assignment. Same scored-struct array as
-    * [[assignCell]]; array_sort orders (score asc, cell asc), so the
-    * reversed head-p is (score desc, cell desc) — probe 1 is exactly
-    * the [[assignCell]] cell, and the ordering is deterministic on
-    * ties.
+    * the multi-probe assignment, on the same native kernel as
+    * [[kmAssign]]. Order is (score desc, cell desc), the reversed
+    * array_sort of [[assignCellsPortable]] — probe 1 is exactly the
+    * [[kmAssign]] cell, and the ordering is deterministic on ties.
     */
   private def assignCells(vec: Column, cents: Seq[(Int, Seq[Double])],
       probes: Int): Column =
@@ -474,129 +509,6 @@ object Similarity {
     when(vec.isNull, lit(null).cast("array<int>"))
       .otherwise(transform(slice(reverse(array_sort(scored)), 1, probes),
         s => s.getField("i")))
-  }
-
-  /** Multi-probe IVF ANN top-k: each query probes its `probes`
-    * nearest cells instead of only the best one — the standard recall
-    * lift for IVF (recall loss comes from true neighbors assigned to
-    * the runner-up cell; probing p cells recovers them at p× the
-    * candidate cost, still ~p·corpus/nlist per query, never
-    * all-pairs). Corpus rows keep their single [[ivfAssign]] cell, so
-    * each (query, neighbor) pair arises at most once — no dedup
-    * needed. `probes = 1` degenerates to [[annTopKIvf]].
-    */
-  def annTopKIvfMultiProbe(queries: DataFrame, corpus: DataFrame,
-      idCol: String, vecCol: String, centroids: Seq[Seq[Float]], k: Int,
-      probes: Int): DataFrame =
-    annTopKIvfMultiProbeD(queries, corpus, idCol, vecCol,
-      centroids.zipWithIndex.map { case (c, i) => (i, c.map(_.toDouble)) },
-      k, probes)
-
-  /** [[annTopKIvfMultiProbe]] over (cell, centroid) pairs in DOUBLE
-    * precision — the form a TRAINED quantizer hands over
-    * ([[kmeansIterate]] emits double centroids; rounding them through
-    * Float would make the serve unreplayable against the trainer's
-    * own oracle).
-    */
-  def annTopKIvfMultiProbeD(queries: DataFrame, corpus: DataFrame,
-      idCol: String, vecCol: String, cents: Seq[(Int, Seq[Double])],
-      k: Int, probes: Int): DataFrame = {
-    require(probes >= 1 && probes <= cents.size)
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
-      explode(assignCells(col(vecCol), cents, probes)).as("cell"))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("nvec"),
-      assignCell(col(vecCol), cents).as("cell"))
-    cosineTopK(TopK.probe(c, q, "cell"), k)
-  }
-
-  /** Multi-probe LSH ANN top-k: each query probes its own bucket plus
-    * the `probes - 1` buckets obtained by flipping the LEAST-CONFIDENT
-    * plane bits — the planes whose |dot| is smallest are the ones most
-    * likely to have split a true neighbor pair (Lv et al.,
-    * "Multi-Probe LSH"). Flip order is deterministic: |dot| asc, then
-    * plane index asc. Corpus rows keep their single bucket, probe
-    * buckets are distinct (each flip changes exactly one bit), so no
-    * (query, neighbor) dedup is needed. `probes = 1` degenerates to
-    * [[annTopK]].
-    */
-  def annTopKMultiProbe(queries: DataFrame, corpus: DataFrame,
-      idCol: String, vecCol: String, planes: Seq[Seq[Double]], k: Int,
-      probes: Int): DataFrame = {
-    require(probes >= 1 && probes <= planes.size + 1)
-    import graft.expressions.VectorExpressions.dotF
-    val conf = array(planes.zipWithIndex.map { case (p, j) =>
-      struct(abs(dotF(col(vecCol), array(p.map(lit): _*))).as("a"),
-        lit(j).as("j"))
-    }: _*)
-    val qb = queries.select(col(idCol).as("query_id"),
-      col(vecCol).as("qvec"),
-      hyperplaneBucket(col(vecCol), planes).as("own"), conf.as("conf"))
-    val q = qb.select(col("query_id"), col("qvec"),
-      explode(concat(array(col("own")),
-        transform(slice(array_sort(col("conf")), 1, probes - 1),
-          s => col("own").bitwiseXOR(
-            call_function("shiftleft", lit(1L), s.getField("j"))))))
-        .as("bucket"))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("nvec"),
-      hyperplaneBucket(col(vecCol), planes).as("bucket"))
-    cosineTopK(TopK.probe(c, q, "bucket"), k)
-  }
-
-  /** IVF ANN top-k: probe only the query's own centroid cell. Same
-    * contract as [[annTopK]]; `nlist = centroids.size` controls the
-    * candidate shrink factor (~corpus/nlist per probe). The
-    * single-cell probe trades recall exactly like single-probe LSH;
-    * multi-probe = [[annTopKIvfMultiProbe]].
-    */
-  def annTopKIvf(queries: DataFrame, corpus: DataFrame, idCol: String,
-      vecCol: String, centroids: Seq[Seq[Float]], k: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
-      ivfAssign(col(vecCol), centroids).as("cell"))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("nvec"),
-      ivfAssign(col(vecCol), centroids).as("cell"))
-    cosineTopK(TopK.probe(c, q, "cell"), k)
-  }
-
-  /** IVF serving against a PERSISTED index: the [[annTopKIvf]] probe
-    * join over a pre-assigned (neighbor_id, nvec, cell) frame — the
-    * corpus half of the index build is NOT re-run. This is the
-    * production split the q214 scaladoc promises: build once (assign
-    * + write, cell-partitionable parquet), serve many (broadcast the
-    * query batch into the stored cells; with the index written
-    * `partitionBy("cell")` the probe prunes to the touched cell
-    * directories before any row is read). Queries still assign
-    * themselves against the centroid literals — centroids are
-    * k·dim-sized plan constants, not data.
-    */
-  def annTopKIvfServe(queries: DataFrame, index: DataFrame,
-      idCol: String, vecCol: String, centroids: Seq[Seq[Float]],
-      k: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
-      ivfAssign(col(vecCol), centroids).as("cell"))
-    cosineTopK(TopK.probe(index, q, "cell"), k)
-  }
-
-  /** The index frame [[annTopKIvfServe]] consumes: corpus vectors
-    * with their IVF cell assignment, ready to persist
-    * (`write.partitionBy("cell")` for directory pruning at serve
-    * time).
-    */
-  def ivfIndexFrame(corpus: DataFrame, idCol: String, vecCol: String,
-      centroids: Seq[Seq[Float]]): DataFrame =
-    corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("nvec"),
-      ivfAssign(col(vecCol), centroids).as("cell"))
-
-  /** ANN top-k: probe only the query's own bucket. Returns the same
-    * shape as [[bruteForceTopK]] (rows may be missing when a bucket
-    * has fewer than k candidates — the recall/latency trade).
-    */
-  def annTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
-      vecCol: String, planes: Seq[Seq[Double]], k: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
-      hyperplaneBucket(col(vecCol), planes).as("bucket"))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("nvec"),
-      hyperplaneBucket(col(vecCol), planes).as("bucket"))
-    cosineTopK(TopK.probe(c, q, "bucket"), k)
   }
 
   /** Top principal direction of the (uncentered) embedding
@@ -671,11 +583,11 @@ object Similarity {
     * just the rounded ranking.
     */
   def annTopKIvfInt8(queries: DataFrame, corpus: DataFrame, idCol: String,
-      vecCol: String, centroids: Seq[Seq[Float]], k: Int): DataFrame = {
+      vecCol: String, cents: Seq[(Int, Seq[Double])], k: Int): DataFrame = {
     def prep(df: DataFrame, id: String) = {
       val z = quantizeInt8(col(vecCol))
       df.select(col(idCol).as(id),
-        ivfAssign(col(vecCol), centroids).as("cell"),
+        kmAssign(col(vecCol), cents).as("cell"),
         z.getField("scale").as(s"${id}_scale"),
         z.getField("q").as(s"${id}_q"))
     }
@@ -830,9 +742,10 @@ object Similarity {
     * ([[graft.operators.Corpus.negativeSample]]) don't. Same broadcast
     * nested-loop shape as [[bruteForceTopK]] (the documented exact
     * baseline; the ANN variants are the scale route — swap the scored
-    * frame for an `annTopK*` probe with a label filter). The label
-    * rides with the vector through [[TopK.pairs]], and the
-    * different-label predicate filters the pairs before ranking.
+    * frame for an [[annTopK]]/[[annTopKIvf]] probe with a label
+    * filter). The label rides with the vector through [[TopK.pairs]],
+    * and the different-label predicate filters the pairs before
+    * ranking.
     */
   def hardNegatives(queries: DataFrame, corpus: DataFrame, idCol: String,
       vecCol: String, labelCol: String, k: Int): DataFrame = {
@@ -941,7 +854,7 @@ object Similarity {
     * The clustering here is the fixed-seed hyperplane LSH partition
     * ([[hyperplaneBucket]] — a scan-time projection, no training
     * pass); swapping in trained IVF cells ([[kmeansIterate]] +
-    * [[ivfAssign]]) changes only the bucket expression. Centroids use
+    * [[kmAssign]]) changes only the bucket expression. Centroids use
     * the same order-free quantized accumulation as the k-means
     * trainer ([[KmQ]]), so the whole pipeline is bit-reproducible and
     * SQL-oracle-able.
@@ -1204,7 +1117,7 @@ object Similarity {
     */
   def ivfResiduals(corpus: DataFrame, idCol: String, vecCol: String,
       cents: Seq[(Int, Seq[Double])]): DataFrame = {
-    val cell = assignCell(col(vecCol), cents)
+    val cell = kmAssign(col(vecCol), cents)
     corpus.select(col(idCol), cell.as("cell"),
       zip_with(col(vecCol), centOf(cell, cents), (a, b) => a - b)
         .as("res"))

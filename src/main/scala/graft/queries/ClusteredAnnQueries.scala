@@ -788,8 +788,9 @@ object ClusteredAnnQueries extends QueryPack {
           }.toSeq
         val cents = Similarity.kmeansIterate(vecs, "v", init, KmIters)
         val queries = vecs.filter(col("vec_id") % 25 === 0)
-        val served = Similarity.annTopKIvfMultiProbeD(queries, vecs,
-          "vec_id", "v", cents, TopK, Probes)
+        val served = Similarity.annTopKIvf(queries,
+          Similarity.insertIntoCells(vecs, "vec_id", "v", cents),
+          "vec_id", "v", "cell", cents, TopK, Probes)
         // exact top-k under the SAME metric the serve ranks by
         // (cosine): brute-force cosine, ties to the smaller id
         recallRow("ivf_multiprobe", queries, served,
@@ -1261,8 +1262,9 @@ object ClusteredAnnQueries extends QueryPack {
           seedInit(vecs, ncl), KmIters)
         val probes = clampedProbes(ncl, cents)
         val queries = vecs.filter(col("vec_id") % 25 === 0)
-        val served = Similarity.annTopKIvfMultiProbeD(queries, vecs,
-          "vec_id", "v", cents, TopK, probes)
+        val served = Similarity.annTopKIvf(queries,
+          Similarity.insertIntoCells(vecs, "vec_id", "v", cents),
+          "vec_id", "v", "cell", cents, TopK, probes)
         recallRow("ivf_nlist_policy", queries, served,
             bruteCosTopK(queries, vecs))
           .withColumn("nlist", lit(ncl.toLong))
@@ -1291,7 +1293,7 @@ object ClusteredAnnQueries extends QueryPack {
     // base 3/4 of the corpus (vec_id % 4 ≠ 1); the remaining quarter
     // arrives later via insertIntoCells — assign-to-nearest against
     // the FROZEN centroids, no retrain — and the serve runs over the
-    // PRE-ASSIGNED stored index (annTopKIvfPreassignedD, the
+    // PRE-ASSIGNED stored index (annTopKIvf over the stored cells, the
     // production shape: cells are index state, not per-serve
     // recomputation). Recall is audited against brute force over the
     // FULL corpus: the pin that no-retrain insertion keeps production
@@ -1310,7 +1312,7 @@ object ClusteredAnnQueries extends QueryPack {
           .unionByName(
             Similarity.insertIntoCells(ins, "vec_id", "v", cents))
         val queries = vecs.filter(col("vec_id") % 25 === 0)
-        val served = Similarity.annTopKIvfPreassignedD(queries, index,
+        val served = Similarity.annTopKIvf(queries, index,
           "vec_id", "v", "cell", cents, TopK, probes)
         recallRow("ivf_incremental_insert", queries, served,
             bruteCosTopK(queries, vecs))
@@ -1640,7 +1642,7 @@ object ClusteredAnnQueries extends QueryPack {
             .awaitTermination()
         } finally { rm(ckpt.toFile); rm(tmp.toFile) }
         val queries = vecs.filter(col("vec_id") % 25 === 0)
-        val served = Similarity.annTopKIvfPreassignedD(queries,
+        val served = Similarity.annTopKIvf(queries,
           index.get(), "vec_id", "v", "cell", cents, TopK, probes)
         recallRow("ivf_stream_ingest", queries, served,
             bruteCosTopK(queries, vecs))
@@ -1763,7 +1765,7 @@ object ClusteredAnnQueries extends QueryPack {
           .unionByName(
             Similarity.insertIntoCells(ins, "vec_id", "v", cents))
         val queries = ext.filter(col("vec_id") % 25 === 0)
-        val served = Similarity.annTopKIvfPreassignedD(queries, index,
+        val served = Similarity.annTopKIvf(queries, index,
           "vec_id", "v", "cell", cents, TopK, probes)
         val out = recallRow("ivf_external_embeddings", queries, served,
             bruteCosTopK(queries, ext))
@@ -2051,7 +2053,7 @@ object ClusteredAnnQueries extends QueryPack {
         val idxBack = graft.sources.TxLog.read(s, tmp.toString)
         val live = vecs.filter(col("vec_id") % 7 =!= 0)
         val queries = live.filter(col("vec_id") % 25 === 0)
-        val served = Similarity.annTopKIvfPreassignedD(queries, idxBack,
+        val served = Similarity.annTopKIvf(queries, idxBack,
           "vec_id", "v", "cell", cents, TopK, probes)
         val out = recallRow("ivf_delete_cold_serve", queries, served,
             bruteCosTopK(queries, live))
@@ -2112,7 +2114,7 @@ object ClusteredAnnQueries extends QueryPack {
         val queries = corpus.filter(col("vec_id") % 25 === 0)
         val exact = bruteCosTopK(queries, corpus).localCheckpoint(true)
         def serve(cents: Seq[(Int, Seq[Double])], probes: Int) =
-          Similarity.annTopKIvfPreassignedD(queries,
+          Similarity.annTopKIvf(queries,
             Similarity.insertIntoCells(corpus, "vec_id", "v", cents),
             "vec_id", "v", "cell", cents, TopK, probes)
         recallRow("ivf_retrained", queries,
@@ -2236,7 +2238,7 @@ object ClusteredAnnQueries extends QueryPack {
         val queries = vecs.filter(col("vec_id") % 25 === 0)
         val exact = bruteCosTopK(queries, vecs.filter(pred))
           .localCheckpoint(true)
-        def serve(p: Int) = Similarity.annTopKIvfPreassignedD(
+        def serve(p: Int) = Similarity.annTopKIvf(
           queries, index, "vec_id", "v", "cell", cents, TopK, p)
         recallRow("ivf_filtered_naive", queries, serve(probes), exact)
           .unionByName(recallRow("ivf_filtered_widened", queries,
@@ -2697,7 +2699,7 @@ object ClusteredAnnQueries extends QueryPack {
               val widened = Similarity.probesForSelectivity(probes,
                 cents.size, allowed, n)
               recallRow(name, qd,
-                Similarity.annTopKIvfPreassignedD(qd, index, "vec_id",
+                Similarity.annTopKIvf(qd, index, "vec_id",
                   "v", "cell", cents, TopK, widened),
                 bruteCosTopK(qd, vecs.filter(cond)))
             case IndexPolicy.IvfPq =>
@@ -2951,7 +2953,7 @@ object ClusteredAnnQueries extends QueryPack {
           cents.size
         widths.map { p =>
           recallRow("ivf_nprobe_curve", queries,
-              Similarity.annTopKIvfPreassignedD(queries, index,
+              Similarity.annTopKIvf(queries, index,
                 "vec_id", "v", "cell", cents, TopK, p),
               exact)
             .withColumn("nprobe", lit(p.toLong))

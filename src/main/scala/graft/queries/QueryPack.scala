@@ -18,10 +18,11 @@ trait QueryPack {
 
 /** Shared teardown for queries that stage data in an external medium
   * (embedded Derby, temp files): materialize the small read-back frame
-  * so the lazy plan can't outlive the medium, then destroy the medium.
-  * The returned frame is a LocalRelation — downstream orderBy/write
-  * plans stay valid after the database/directory is gone, and repeated
-  * Bench iterations don't accumulate live fixtures.
+  * so the lazy plan can't outlive the medium, then destroy the medium
+  * — also when the materialization throws. The returned frame is a
+  * LocalRelation — downstream orderBy/write plans stay valid after the
+  * database/directory is gone, and repeated Bench iterations don't
+  * accumulate live fixtures, failing ones included.
   */
 object Fixtures {
 
@@ -29,15 +30,13 @@ object Fixtures {
     * the in-memory Derby database. Derby signals a successful drop
     * with SQLException 08006, hence the swallow.
     */
-  def materializeAndDrop(df: DataFrame, url: String): DataFrame = {
-    val schema = df.schema
-    val rows = df.collect().toIndexedSeq
-    val dropUrl = url.split(";")(0) + ";drop=true"
-    try { java.sql.DriverManager.getConnection(dropUrl); () }
-    catch { case _: java.sql.SQLException => () }
-    import scala.jdk.CollectionConverters._
-    df.sparkSession.createDataFrame(rows.asJava, schema)
-  }
+  def materializeAndDrop(df: DataFrame, url: String): DataFrame =
+    try materialize(df)
+    finally {
+      val dropUrl = url.split(";")(0) + ";drop=true"
+      try { java.sql.DriverManager.getConnection(dropUrl); () }
+      catch { case _: java.sql.SQLException => () }
+    }
 
   /** Same idea for file round trips: materialize, then delete the
     * temp directory recursively.
@@ -48,26 +47,33 @@ object Fixtures {
     * materialized gates, so this is where their real plan shape is
     * observable (dev/judge tooling, not a hot path).
     */
-  def materializeAndDelete(df: DataFrame, dir: java.nio.file.Path): DataFrame = {
-    val schema = df.schema
-    if (sys.env.contains("SPARK_GRAFT_AUDIT_INNER")) {
-      val plan = df.queryExecution.executedPlan.toString
-      val lines = plan.linesIterator.toSeq
-      val sh = lines.count(_.contains("Exchange hashpartitioning")) +
-        lines.count(_.contains("Exchange rangepartitioning"))
-      val bc = lines.count(_.contains("BroadcastExchange"))
-      val ca = lines.count(_.contains("CartesianProduct")) +
-        lines.count(_.contains("BroadcastNestedLoopJoin"))
-      val cg = "\\*\\((\\d+)\\)".r.findAllMatchIn(plan)
-        .map(_.group(1)).toSet.size
-      System.err.println(s"[inner-audit] shuffles=$sh broadcasts=$bc " +
-        s"cartesians=$ca codegenSpans=$cg")
-    }
-    val rows = df.collect().toIndexedSeq
+  def materializeAndDelete(df: DataFrame, dir: java.nio.file.Path): DataFrame =
+    try {
+      if (sys.env.contains("SPARK_GRAFT_AUDIT_INNER")) audit(df)
+      materialize(df)
+    } finally
+      java.nio.file.Files.walk(dir).sorted(
+          java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
+
+  /** The collected rows of `df` as a LocalRelation. */
+  private def materialize(df: DataFrame): DataFrame = {
     import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(dir).sorted(
-        java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-    df.sparkSession.createDataFrame(rows.asJava, schema)
+    df.sparkSession.createDataFrame(df.collect().toIndexedSeq.asJava,
+      df.schema)
+  }
+
+  private def audit(df: DataFrame): Unit = {
+    val plan = df.queryExecution.executedPlan.toString
+    val lines = plan.linesIterator.toSeq
+    val sh = lines.count(_.contains("Exchange hashpartitioning")) +
+      lines.count(_.contains("Exchange rangepartitioning"))
+    val bc = lines.count(_.contains("BroadcastExchange"))
+    val ca = lines.count(_.contains("CartesianProduct")) +
+      lines.count(_.contains("BroadcastNestedLoopJoin"))
+    val cg = "\\*\\((\\d+)\\)".r.findAllMatchIn(plan)
+      .map(_.group(1)).toSet.size
+    System.err.println(s"[inner-audit] shuffles=$sh broadcasts=$bc " +
+      s"cartesians=$ca codegenSpans=$cg")
   }
 }

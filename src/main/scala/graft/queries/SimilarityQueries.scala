@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -65,6 +65,16 @@ object SimilarityQueries extends QueryPack {
     */
   private val KmInit: Seq[(Int, Seq[Double])] =
     Centroids.zipWithIndex.map { case (c, i) => (i, c.map(_.toDouble)) }
+
+  /** Top-3 IVF serve of `queries` over `e`, indexed against the seed
+    * centroids — the configuration q57 and q437 (one probe) and the
+    * q121 family (three probes) gate.
+    */
+  private def ivfTop3(queries: DataFrame, e: DataFrame,
+      probes: Int): DataFrame =
+    Similarity.annTopKIvf(queries,
+      Similarity.insertIntoCells(e, "vec_id", "embedding", KmInit),
+      "vec_id", "embedding", "cell", KmInit, 3, probes)
 
   /** SemDeDup proximity threshold (ppm): calibrated so the sf0.01
     * corpus lands on both sides — near-centroid members collapse,
@@ -160,7 +170,7 @@ object SimilarityQueries extends QueryPack {
     c.map(_.toDouble).mkString("([", ", ", "]::DOUBLE[])")
 
   /** Null-safe vectors. Spark side: a NO-OP — every consumer
-    * (cosineNative, hyperplaneBucket, ivfAssign) runs through
+    * (cosineNative, hyperplaneBucket, kmAssign) runs through
     * DotProductF, whose contract already scores a null ELEMENT as 0,
     * so a fillNullZero transform would be a redundant interpreted
     * array materialization per row per use (it was the last
@@ -172,8 +182,8 @@ object SimilarityQueries extends QueryPack {
     "list_transform(embedding, x -> coalesce(x, 0))::DOUBLE[]"
 
   /** ONE rendering of the IVF cell-assignment expression (argmax with
-    * ties to the HIGHER index, mirroring assignCell's array_max struct
-    * ordering) — shared by the q57/q84/q126 oracles.
+    * ties to the HIGHER index, mirroring assignCellPortable's array_max
+    * struct ordering) — shared by the q57/q84/q126 oracles.
     */
   private def cellSqlFor(v: String): String = {
     val cosPerCentroid = Centroids.map(c => cosSql(v, centroidLit(c)))
@@ -278,7 +288,7 @@ object SimilarityQueries extends QueryPack {
           .select(col("vec_id"), vec(col("embedding")).as("embedding"))
         Similarity.annTopK(
             e.filter(col("vec_id") % 100 === 0), e, "vec_id", "embedding",
-            Planes, 3)
+            Planes, 3, probes = 1)
           .orderBy(col("query_id"), col("rn"))
       },
       Some(s"""WITH e AS (
@@ -401,9 +411,7 @@ object SimilarityQueries extends QueryPack {
       (s, dir) => {
         val e = Tables.embeddings(s, dir)
           .select(col("vec_id"), vec(col("embedding")).as("embedding"))
-        Similarity.annTopKIvf(
-            e.filter(col("vec_id") % 100 === 0), e, "vec_id", "embedding",
-            Centroids, 3)
+        ivfTop3(e.filter(col("vec_id") % 100 === 0), e, probes = 1)
           .orderBy(col("query_id"), col("rn"))
       },
       {
@@ -430,14 +438,12 @@ object SimilarityQueries extends QueryPack {
     // The oracle replays cell ranking with a window over a
     // centroid-VALUES cross join: rn = 1 is the corpus assignment,
     // rn <= 3 are the query probes — both ordered (cos DESC, cell
-    // DESC), exactly assignCell/assignCells' tiebreak.
+    // DESC), exactly kmAssign/assignCells' tiebreak.
     "q121_ann_ivf_multiprobe" -> Q(
       (s, dir) => {
         val e = Tables.embeddings(s, dir)
           .select(col("vec_id"), vec(col("embedding")).as("embedding"))
-        Similarity.annTopKIvfMultiProbe(
-            e.filter(col("vec_id") % 100 === 0), e, "vec_id", "embedding",
-            Centroids, 3, probes = 3)
+        ivfTop3(e.filter(col("vec_id") % 100 === 0), e, probes = 3)
           .orderBy(col("query_id"), col("rn"))
       },
       {
@@ -475,7 +481,7 @@ object SimilarityQueries extends QueryPack {
       (s, dir) => {
         val e = Tables.embeddings(s, dir)
           .select(col("vec_id"), vec(col("embedding")).as("embedding"))
-        Similarity.annTopKMultiProbe(
+        Similarity.annTopK(
             e.filter(col("vec_id") % 100 === 0), e, "vec_id", "embedding",
             Planes, 3, probes = 3)
           .orderBy(col("query_id"), col("rn"))
@@ -574,7 +580,7 @@ object SimilarityQueries extends QueryPack {
           .select(col("vec_id"), vec(col("embedding")).as("embedding"))
         Similarity.annTopKIvfInt8(
             e.filter(col("vec_id") % 100 === 0), e, "vec_id", "embedding",
-            Centroids, 3)
+            KmInit, 3)
           .orderBy(col("query_id"), col("rn"))
       },
       {
@@ -799,8 +805,7 @@ object SimilarityQueries extends QueryPack {
         val e = Tables.embeddings(s, dir)
           .select(col("vec_id"), vec(col("embedding")).as("embedding"))
         val queries = e.filter(col("vec_id") % 100 === 0)
-        val ann = Similarity.annTopKIvfMultiProbe(
-          queries, e, "vec_id", "embedding", Centroids, 3, probes = 3)
+        val ann = ivfTop3(queries, e, probes = 3)
         val exact = Similarity.bruteForceTopK(
           queries, e, "vec_id", "embedding", 3)
         Similarity.overlapCurve(ann, exact, "query_id", "neighbor_id",
@@ -891,8 +896,7 @@ object SimilarityQueries extends QueryPack {
         val e = Tables.embeddings(s, dir)
           .select(col("vec_id"), vec(col("embedding")).as("embedding"))
         val queries = e.filter(col("vec_id") % 100 === 0)
-        val ann = Similarity.annTopKIvfMultiProbe(
-          queries, e, "vec_id", "embedding", Centroids, 3, probes = 3)
+        val ann = ivfTop3(queries, e, probes = 3)
         val exact = Similarity.bruteForceTopK(
           queries, e, "vec_id", "embedding", 3)
         Similarity.recallAtK(ann, exact, "query_id", "neighbor_id", 3)
@@ -1164,13 +1168,13 @@ object SimilarityQueries extends QueryPack {
         val e = Tables.embeddings(s, dir)
           .select(col("vec_id"), vec(col("embedding")).as("embedding"))
         val tmp = java.nio.file.Files.createTempDirectory("graft_ivf")
-        Similarity.ivfIndexFrame(e, "vec_id", "embedding", Centroids)
+        Similarity.insertIntoCells(e, "vec_id", "embedding", KmInit)
           .write.mode("overwrite").partitionBy("cell")
           .parquet(s"$tmp/index")
         val index = s.read.parquet(s"$tmp/index")
-        val served = Similarity.annTopKIvfServe(
+        val served = Similarity.annTopKIvf(
           e.filter(col("vec_id") % 100 === 0), index,
-          "vec_id", "embedding", Centroids, 3)
+          "vec_id", "embedding", "cell", KmInit, 3, probes = 1)
         materializeAndDelete(served, tmp)
           .orderBy(col("query_id"), col("rn"))
       },
@@ -1219,26 +1223,23 @@ object SimilarityQueries extends QueryPack {
           .select(col("vec_id"), vec(col("embedding")).as("embedding"))
         val tmp = java.nio.file.Files.createTempDirectory("graft_annivm")
         val t = s"$tmp/index"
-        TxLog.commit(Similarity.ivfIndexFrame(
+        TxLog.commit(Similarity.insertIntoCells(
             e.filter(col("vec_id") % 10 < 8), "vec_id", "embedding",
-            Centroids), t, "overwrite", "neighbor_id")
-        TxLog.deleteWhere(s, t, col("neighbor_id") % 7 === 0)
-        TxLog.commit(Similarity.ivfIndexFrame(
+            KmInit), t, "overwrite", "vec_id")
+        TxLog.deleteWhere(s, t, col("vec_id") % 7 === 0)
+        TxLog.commit(Similarity.insertIntoCells(
             e.filter(col("vec_id") % 10 === 8), "vec_id", "embedding",
-            Centroids), t, "append", "neighbor_id")
+            KmInit), t, "append", "vec_id")
         val live = e.filter(
           (col("vec_id") % 10 < 8 && col("vec_id") % 7 =!= 0) ||
             col("vec_id") % 10 === 8)
         val q = e.filter(col("vec_id") % 100 === 0)
-        val sInc = Similarity.annTopKIvfServe(q, TxLog.read(s, t),
-            "vec_id", "embedding", Centroids, 3)
+        val sInc = Similarity.annTopKIvf(q, TxLog.read(s, t),
+            "vec_id", "embedding", "cell", KmInit, 3, probes = 1)
           .select(col("query_id"), col("rn"),
             col("neighbor_id").as("neighbor_inc"),
             col("cosine").as("cos_inc"))
-        val sFull = Similarity.annTopKIvfServe(q,
-            Similarity.ivfIndexFrame(live, "vec_id", "embedding",
-              Centroids),
-            "vec_id", "embedding", Centroids, 3)
+        val sFull = ivfTop3(q, live, probes = 1)
           .select(col("query_id"), col("rn"),
             col("neighbor_id").as("neighbor_full"),
             col("cosine").as("cos_full"))
@@ -1414,7 +1415,7 @@ object SimilarityQueries extends QueryPack {
     // indexed corpus and the incoming delta — the signal that decides
     // when q437's O(delta) maintenance stops being enough and the
     // quantizer needs retraining (centroids drifted off the data).
-    // Composition: ivfAssign cell counts → the q309 integer L1/TV
+    // Composition: kmAssign cell counts → the q309 integer L1/TV
     // drift audit (shareDriftFromCounts — the streaming-shared
     // stage), plus the reindex trigger flag. All-integer, hash-gated.
     // SELF-GOVERNING index maintenance (VERDICT r9 item 8): q447's
@@ -1559,8 +1560,7 @@ object SimilarityQueries extends QueryPack {
         val e = Tables.embeddings(s, dir)
           .select(col("vec_id"), vec(col("embedding")).as("embedding"))
         def cells(d: org.apache.spark.sql.DataFrame) = d
-          .select(Similarity.ivfAssign(col("embedding"), Centroids)
-            .as("bin"))
+          .select(Similarity.kmAssign(col("embedding"), KmInit).as("bin"))
           .groupBy(col("bin")).agg(count(lit(1)).as("c"))
         graft.operators.QualityFilters.shareDriftFromCounts(
             cells(e.filter(col("vec_id") % 10 < 8)),
@@ -1609,8 +1609,8 @@ object SimilarityQueries extends QueryPack {
         import graft.streaming.Streams
         val e = Tables.embeddings(s, dir)
           .select(col("vec_id"), vec(col("embedding")).as("embedding"))
-        val index = Similarity.ivfIndexFrame(
-          e, "vec_id", "embedding", Centroids).localCheckpoint(true)
+        val index = Similarity.insertIntoCells(
+          e, "vec_id", "embedding", KmInit).localCheckpoint(true)
         val qStream = Tables.stream(s, dir, "embeddings")
           .filter(col("vec_id") % 100 === 0)
           .select(col("vec_id"), vec(col("embedding")).as("embedding"))
@@ -1628,8 +1628,8 @@ object SimilarityQueries extends QueryPack {
         try {
           Streams.transformEachBatch(
             qStream,
-            batch => Similarity.annTopKIvfServe(
-              batch, index, "vec_id", "embedding", Centroids, 3),
+            batch => Similarity.annTopKIvf(batch, index, "vec_id",
+              "embedding", "cell", KmInit, 3, probes = 1),
             res => out = out.unionByName(res).localCheckpoint(true),
             ckpt.toString,
             Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
@@ -1717,8 +1717,7 @@ object SimilarityQueries extends QueryPack {
         val e = Tables.embeddings(s, dir)
           .select(col("vec_id"), vec(col("embedding")).as("embedding"))
         val queries = e.filter(col("vec_id") % 100 === 0)
-        val ann = Similarity.annTopKIvfMultiProbe(
-          queries, e, "vec_id", "embedding", Centroids, 3, probes = 3)
+        val ann = ivfTop3(queries, e, probes = 3)
         val exact = Similarity.bruteForceTopK(
           queries, e, "vec_id", "embedding", 3)
         Similarity.mrrAtK(ann, exact)

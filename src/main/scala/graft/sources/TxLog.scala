@@ -740,7 +740,7 @@ object TxLog {
     val dvRel = s"dv-v$v"
     val dvAbs = under(dir, dvRel)
     bits.write.parquet(dvAbs)
-    val stats = spark.read.parquet(dvAbs)
+    val stats = spark.read.schema(dvSchema).parquet(dvAbs)
       .groupBy(input_file_name().as("uri"))
       .agg(expr("sum(bit_count(bits))").as("n"))
       .collect()
@@ -1200,7 +1200,7 @@ object TxLog {
     def relOf(uri: String) = s"$dataRel/${uri.split('/').last}"
     // per-(file, word) bloom bits — one explode + bit_or partial agg,
     // ≤ files × numBits/63 rows to the driver
-    val wordRows = spark.read.parquet(dataAbs)
+    val wordRows = spark.read.schema(df.schema).parquet(dataAbs)
       .select(input_file_name().as("uri"),
         explode(graft.operators.Sketch.bloomPositions(
           col(statCol).cast("string"), numBits, numHashes)).as("p"))

@@ -410,14 +410,6 @@ object Streams {
 
   private val runSeq = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Drive a streaming frame over its BOUNDED source to completion
-    * (`Trigger.AvailableNow`) and hand the materialized result back as
-    * a batch frame — the bridge that lets the driver's batch-only
-    * correctness gate hash-compare a genuinely streaming plan
-    * (watermark, state store, micro-batch planner and all) against a
-    * SQL oracle. Each call gets a fresh memory-sink table and a
-    * throwaway checkpoint, so Bench can re-run the same query.
-    */
   /** Throwaway checkpoint dir for one-shot gate runs, preferring
     * tmpfs (/dev/shm): these checkpoints are deleted right after the
     * run, and their per-batch WAL fsyncs against a disk-backed /tmp
@@ -434,14 +426,19 @@ object Streams {
     else java.nio.file.Files.createTempDirectory(prefix)
   }
 
+  /** Drive a streaming frame over its BOUNDED source to completion
+    * (`Trigger.AvailableNow`) and hand the materialized result back as
+    * a batch frame — the bridge that lets a batch-only correctness
+    * gate hash-compare a genuinely streaming plan
+    * (watermark, state store, micro-batch planner and all) against a
+    * SQL oracle. Each call gets a fresh memory-sink table and a
+    * throwaway checkpoint, so Bench can re-run the same query.
+    */
   def runToTable(df: DataFrame, mode: OutputMode,
       statePartitions: Int = 8): DataFrame = {
     val spark = df.sparkSession
     val name = s"graft_stream_${runSeq.incrementAndGet()}"
     val ckpt = scratchCheckpointDir("graft-ckpt-")
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-    }
     // State-store partition count is fixed by shuffle.partitions at
     // FIRST checkpoint creation; these one-shot gates carry tiny state,
     // so 32 partitions is pure per-batch provider overhead (~4× the
@@ -473,8 +470,13 @@ object Streams {
       spark.createDataFrame(rows.asJava, schema)
     } finally {
       spark.conf.set("spark.sql.shuffle.partitions", prev)
-      rm(ckpt.toFile) // one-shot run; no replay value
+      rmTree(ckpt.toFile) // one-shot run; no replay value
     }
+  }
+
+  /** Delete a directory tree (a one-shot run's checkpoint). */
+  private def rmTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
   }
 
   /** [[runToTable]] for high-partial-volume streams: each micro-batch
@@ -491,9 +493,6 @@ object Streams {
       outDir: String, statePartitions: Int = 8): DataFrame = {
     val spark = df.sparkSession
     val ckpt = scratchCheckpointDir("graft-ckpt-")
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-    }
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
     try {
@@ -517,7 +516,7 @@ object Streams {
           df.schema)).schema)
     } finally {
       spark.conf.set("spark.sql.shuffle.partitions", prev)
-      rm(ckpt.toFile) // one-shot run; no replay value
+      rmTree(ckpt.toFile) // one-shot run; no replay value
     }
   }
 

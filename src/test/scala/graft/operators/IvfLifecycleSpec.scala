@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** The incremental-IVF lifecycle pieces behind q501–q503: the nlist /
-  * nprobe policies, assign-to-nearest insertion, pre-assigned serve,
-  * and the drift audit's edge cases.
+  * nprobe policies, assign-to-nearest insertion, the serve over stored
+  * cells, and the drift audit's edge cases.
   */
 class IvfLifecycleSpec extends SparkSpec {
 
@@ -47,24 +47,36 @@ class IvfLifecycleSpec extends SparkSpec {
       .orderBy(col("id")).collect()
       .map(r => (r.getLong(0), r.getInt(2)))
     // tie row 4 (equal cosine to cells 0 and 1) → HIGHER cell id, the
-    // assignCell/array_max struct-order contract
+    // kmAssign/array_max struct-order contract
     assert(got.toSeq === Seq((1L, 0), (2L, 1), (3L, 2), (4L, 1)))
   }
 
-  test("pre-assigned serve == recomputing serve on a consistent index") {
+  test("IVF serve ranks the stored members of the probed cells") {
     import spark.implicits._
     val rnd = new scala.util.Random(77L)
-    val corpus = (0L until 120L).map(i =>
-      (i, Seq.fill(3)(rnd.nextDouble() * 2 - 1))).toDF("id", "v")
-      .localCheckpoint(true)
-    val queries = corpus.filter(col("id") % 10 === 0)
+    val rows = (0L until 120L).map(i =>
+      (i, Seq.fill(3)(rnd.nextDouble() * 2 - 1)))
+    val corpus = rows.toDF("id", "v").localCheckpoint(true)
+    // a stale index: every stored cell shifted by one, so a serve that
+    // recomputed corpus cells would probe different members
     val index = Similarity.insertIntoCells(corpus, "id", "v", cents)
-    val pre = Similarity.annTopKIvfPreassignedD(queries, index,
-      "id", "v", "cell", cents, k = 3, probes = 2)
-    val rec = Similarity.annTopKIvfMultiProbeD(queries, corpus,
-      "id", "v", cents, k = 3, probes = 2)
-    assert(pre.exceptAll(rec).count() === 0)
-    assert(rec.exceptAll(pre).count() === 0)
+      .withColumn("cell", (col("cell") + 1) % 3)
+    val got = Similarity.annTopKIvf(corpus.filter(col("id") % 10 === 0),
+        index, "id", "v", "cell", cents, k = 3, probes = 2)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    def dot(a: Seq[Double], b: Seq[Double]) =
+      a.zip(b).foldLeft(0.0) { case (acc, (x, y)) => acc + x * y }
+    def cos(a: Seq[Double], b: Seq[Double]) =
+      dot(a, b) / (math.sqrt(dot(a, a)) * math.sqrt(dot(b, b)))
+    val stored = index.collect().map(r => (r.getLong(0), r.getInt(2))).toMap
+    val want = rows.filter(_._1 % 10 == 0).flatMap { case (q, qv) =>
+      val probed = cents.sortBy { case (c, cv) => (-cos(qv, cv), -c) }
+        .take(2).map(_._1).toSet
+      rows.filter { case (n, _) => n != q && probed(stored(n)) }
+        .sortBy { case (n, nv) => (-cos(qv, nv), n) }.take(3)
+        .zipWithIndex.map { case ((n, _), i) => (q, i + 1L, n) }
+    }.toSet
+    assert(got === want)
   }
 
   test("cellDriftAudit: no-insert cells carry zero drift, never flag") {

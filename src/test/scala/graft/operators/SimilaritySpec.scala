@@ -1,9 +1,21 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 class SimilaritySpec extends SparkSpec {
+
+  /** IVF-flat init: the first 8 corpus vectors as cells 0..7
+    * (deterministic).
+    */
+  private def seedCells(e: DataFrame): Seq[(Int, Seq[Double])] =
+    e.orderBy("vec_id").limit(8).collect().toSeq
+      .map(_.getSeq[Float](1).map(_.toDouble)).zipWithIndex
+      .map { case (c, i) => (i, c) }
+
+  private def ivfIndex(e: DataFrame, cents: Seq[(Int, Seq[Double])]) =
+    Similarity.insertIntoCells(e, "vec_id", "embedding", cents)
 
   test("cosine: orthogonal 0, identical 1, opposite -1") {
     import spark.implicits._
@@ -35,16 +47,14 @@ class SimilaritySpec extends SparkSpec {
 
   test("IVF ANN: cells partition the corpus; probes find same-cell neighbors") {
     val e = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
-    // IVF-flat init: first 8 corpus vectors as centroids (deterministic)
-    val centroids = e.orderBy("vec_id").limit(8)
-      .collect().map(_.getSeq[Float](1).toSeq).toSeq
+    val cents = seedCells(e)
     val assigned = e.select(col("vec_id"),
-        Similarity.ivfAssign(col("embedding"), centroids).as("cell"))
+        Similarity.kmAssign(col("embedding"), cents).as("cell"))
     val cells = assigned.groupBy("cell").count().collect()
     assert(cells.length > 1 && cells.length <= 8) // non-degenerate partition
     val queries = e.filter(col("vec_id") % 50 === 0)
-    val got = Similarity.annTopKIvf(queries, e, "vec_id", "embedding",
-        centroids, 3)
+    val got = Similarity.annTopKIvf(queries, ivfIndex(e, cents), "vec_id",
+        "embedding", "cell", cents, 3, probes = 1)
       .collect()
     assert(got.nonEmpty)
     // every reported neighbor shares the query's cell
@@ -60,7 +70,7 @@ class SimilaritySpec extends SparkSpec {
     val exact = Similarity.bruteForceTopK(queries, e, "vec_id", "embedding", 3)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
     val single = Similarity.annTopK(queries, e, "vec_id", "embedding",
-        Similarity.hyperplanes(6, 64), 3)
+        Similarity.hyperplanes(6, 64), 3, probes = 1)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
     val multi = Similarity.annTopKMultiTable(queries, e, "vec_id", "embedding",
         Similarity.hyperplaneTables(8, 4, 64), 3)
@@ -74,20 +84,16 @@ class SimilaritySpec extends SparkSpec {
     assert(recall(multi) > recall(single))
   }
 
-  test("multi-probe IVF: p=1 equals annTopKIvf; recall grows with p") {
+  test("multi-probe IVF: recall grows with p") {
     val e = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val queries = e.filter(col("vec_id") % 50 === 0)
-    val centroids = e.orderBy("vec_id").limit(8)
-      .collect().map(_.getSeq[Float](1).toSeq).toSeq
+    val cents = seedCells(e)
+    val index = ivfIndex(e, cents)
     val exact = Similarity.bruteForceTopK(queries, e, "vec_id", "embedding", 3)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-    def got(p: Int) = Similarity.annTopKIvfMultiProbe(
-        queries, e, "vec_id", "embedding", centroids, 3, probes = p)
+    def got(p: Int) = Similarity.annTopKIvf(queries, index, "vec_id",
+        "embedding", "cell", cents, 3, probes = p)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-    val single = Similarity.annTopKIvf(queries, e, "vec_id", "embedding",
-        centroids, 3)
-      .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-    assert(got(1) === single) // p=1 degenerates to the single-probe op
     def recall(s: Set[(Long, Long)]) =
       (exact intersect s).size.toDouble / exact.size
     assert(recall(got(3)) > recall(got(1)),
@@ -95,19 +101,19 @@ class SimilaritySpec extends SparkSpec {
     assert(recall(got(8)) === 1.0) // probing every cell IS exact search
   }
 
-  test("multi-probe LSH: p=1 equals annTopK; recall grows with p") {
+  test("multi-probe LSH: p=1 stays in the own bucket; recall grows with p") {
     val e = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val queries = e.filter(col("vec_id") % 50 === 0)
     val planes = Similarity.hyperplanes(6, 64)
     val exact = Similarity.bruteForceTopK(queries, e, "vec_id", "embedding", 3)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-    def got(p: Int) = Similarity.annTopKMultiProbe(
+    def got(p: Int) = Similarity.annTopK(
         queries, e, "vec_id", "embedding", planes, 3, probes = p)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-    val single = Similarity.annTopK(queries, e, "vec_id", "embedding",
-        planes, 3)
-      .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-    assert(got(1) === single) // p=1 degenerates to the single-probe op
+    val bucketOf = e.select(col("vec_id"),
+        Similarity.hyperplaneBucket(col("embedding"), planes))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    got(1).foreach { case (q, n) => assert(bucketOf(q) === bucketOf(n)) }
     def recall(s: Set[(Long, Long)]) =
       (exact intersect s).size.toDouble / exact.size
     // Gaussian corpus is LSH's worst case; the flip probes must still
@@ -164,10 +170,10 @@ class SimilaritySpec extends SparkSpec {
       (3L, Seq(0.0f, 1.0f, 1.0f)),   // dot 0
       (4L, Seq(-1.0f, 0.0f, 1.0f))   // dot -1
     ).toDF("vec_id", "embedding")
-    val centroids = Seq(Seq(1.0f, 0.0f, 0.0f)) // one cell: all co-located
+    val cents = Seq(0 -> Seq(1.0, 0.0, 0.0)) // one cell: all co-located
     val got = Similarity.annTopKIvfInt8(
         corpus.filter(col("vec_id") === 1), corpus, "vec_id", "embedding",
-        centroids, 3)
+        cents, 3)
       .orderBy(col("rn")).collect()
       .map(r => (r.getLong(2), r.getLong(3), r.getDouble(4)))
     assert(got.map(_._1).toSeq === Seq(2L, 3L, 4L))
@@ -181,13 +187,12 @@ class SimilaritySpec extends SparkSpec {
   test("int8 IVF tracks the full-precision IVF ranking on real embeddings") {
     val e = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val queries = e.filter(col("vec_id") % 50 === 0)
-    val centroids = e.orderBy("vec_id").limit(8)
-      .collect().map(_.getSeq[Float](1).toSeq).toSeq
-    val full = Similarity.annTopKIvf(queries, e, "vec_id", "embedding",
-        centroids, 3)
+    val cents = seedCells(e)
+    val full = Similarity.annTopKIvf(queries, ivfIndex(e, cents), "vec_id",
+        "embedding", "cell", cents, 3, probes = 1)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
     val quant = Similarity.annTopKIvfInt8(queries, e, "vec_id", "embedding",
-        centroids, 3)
+        cents, 3)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
     // int8 scoring ranks by un-normalized dot, full by cosine — on a
     // same-cell candidate set the top-3 overlap should still dominate
