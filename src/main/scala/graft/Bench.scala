@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.sources.VcoScan.json
+
 import scala.jdk.CollectionConverters._
 
 /** Benchmark main: runs every registered query against
@@ -524,7 +526,7 @@ object Bench {
         // compact line is the guarantee that BENCH_r{N} never again
         // parses to null just because the run was cut short.
         Bench.synchronized {
-          println(s"""{"metric":"partial","done":$d,"n":$nTotal,"total_so_far":${fmt3(soFar)},"errors":${errors.size},"elapsed":${fmt3((System.nanoTime() - t0) / 1e9)},"sf":${jstr(sfDir)}}""")
+          println(s"""{"metric":"partial","done":$d,"n":$nTotal,"total_so_far":${fmt3(soFar)},"errors":${errors.size},"elapsed":${fmt3((System.nanoTime() - t0) / 1e9)},"sf":${json(sfDir)}}""")
           System.out.flush()
           System.err.println(
             f"[bench] $label%-22s ${names.size}%3d queries  " +
@@ -633,14 +635,14 @@ object Bench {
       }
     }
     val calLast = calibrate()
-    println(s"""{"metric":"calibration","query":${jstr(CalibrationQuery)},"first":${fmt3(calFirst)},"last":${fmt3(calLast)},"sf":${jstr(sfDir)}}""")
+    println(s"""{"metric":"calibration","query":${json(CalibrationQuery)},"first":${fmt3(calFirst)},"last":${fmt3(calLast)},"sf":${json(sfDir)}}""")
 
     val results = allResults.asScala.toSeq.sortBy(_._1)
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
-    val qs = results.map { case (k, v) => jstr(k) + ":" + fmtV(v) }
+    val qs = results.map { case (k, v) => json(k) + ":" + fmtV(v) }
       .mkString("{", ",", "}")
     val errs = errors.asScala.toSeq.sortBy(_._1)
-      .map { case (k, v) => jstr(k) + ":" + jstr(v) }
+      .map { case (k, v) => json(k) + ":" + json(v) }
       .mkString("{", ",", "}")
     // Recheck line: med is the COMMITTED stat (post-certification);
     // adjusted rows carry their pre-certification value as "raw";
@@ -652,12 +654,12 @@ object Bench {
         val raw = certified.get(name)
           .map(r => s""","raw":${fmt3(r)}""").getOrElse("")
         val fb = if (reViaFallback(name)) ""","fb":true""" else ""
-        jstr(name) + ":" +
+        json(name) + ":" +
           s"""{"med":${fmt3(med)},"re":${fmt3(reMap.getOrElse(name, -1.0))}$raw$fb}"""
       }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"recheck","slowest":$rcJson,"sf":${jstr(sfDir)}}""")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"sf":${jstr(sfDir)}}""")
+    println(s"""{"metric":"recheck","slowest":$rcJson,"sf":${json(sfDir)}}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"sf":${json(sfDir)}}""")
     // LAST stdout line Bench emits (VERDICT r15 item 1b): a SHORT
     // summary. The driver stores only the last ~2 KB of stdout and the
     // full "total" line above is tens of KB at 527 queries — whichever
@@ -666,9 +668,9 @@ object Bench {
     // always recoverable from the artifact (VERDICT r4 item 2).
     val slowest5 = results.filter(_._2 >= 0).sortBy(-_._2).take(5)
     val slowest = slowest5
-      .map { case (k, v) => jstr(k) + ":" + fmt3(v) }.mkString("{", ",", "}")
+      .map { case (k, v) => json(k) + ":" + fmt3(v) }.mkString("{", ",", "}")
     val summaryLine =
-      s"""{"metric":"summary","total":$total,"n":${results.size},"errors":${errors.size},"slowest":$slowest,"sf":${jstr(sfDir)}}"""
+      s"""{"metric":"summary","total":$total,"n":${results.size},"errors":${errors.size},"slowest":$slowest,"sf":${json(sfDir)}}"""
     println(summaryLine)
     System.out.flush()
     // ... and the same one-line summary as a FILE (VERDICT r15 item
@@ -691,12 +693,12 @@ object Bench {
     // depending on judge re-runs. Path overridable for dev runs.
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "BENCH_DETAIL.json")
     val certJson = certified
-      .map { case (n, raw) => jstr(n) + ":" + fmt3(raw) }
+      .map { case (n, raw) => json(n) + ":" + fmt3(raw) }
       .mkString("{", ",", "}")
     val detail =
-      s"""{"metric":"detail","total":$total,"n":${results.size},"iters":$benchIters,"sf":${jstr(sfDir)},"isolation":"fork-per-pack","par":$benchPar,"fast_cutoff":$fastCutoff,"solo_secs":$SoloSecs,"solo_stat":"min2","certify_ratio":$CertifyRatio,"inflate_ratio":$InflateRatio,"inflate_floor":$InflateFloor,
-         |"inflated":${inflated.map(i => jstr(i._1)).mkString("[", ",", "]")},
-         |"calibration":{"query":${jstr(CalibrationQuery)},"first":$calFirst,"last":$calLast},
+      s"""{"metric":"detail","total":$total,"n":${results.size},"iters":$benchIters,"sf":${json(sfDir)},"isolation":"fork-per-pack","par":$benchPar,"fast_cutoff":$fastCutoff,"solo_secs":$SoloSecs,"solo_stat":"min2","certify_ratio":$CertifyRatio,"inflate_ratio":$InflateRatio,"inflate_floor":$InflateFloor,
+         |"inflated":${inflated.map(i => json(i._1)).mkString("[", ",", "]")},
+         |"calibration":{"query":${json(CalibrationQuery)},"first":$calFirst,"last":$calLast},
          |"certified_raw":$certJson,"chunk_max":$ChunkMax,
          |"queries":$qs,
          |"errors":$errs,
@@ -722,10 +724,10 @@ object Bench {
     warmUp(spark, sfDir)
     val iters = benchIters
     val (results, errors) = measure(spark, sfDir, selected, iters, useMin = false)
-    val qs = results.map { case (k, v) => jstr(k) + ":" + fmtV(v) }.mkString("{", ",", "}")
-    val errs = errors.map { case (k, v) => jstr(k) + ":" + jstr(v) }.mkString("{", ",", "}")
+    val qs = results.map { case (k, v) => json(k) + ":" + fmtV(v) }.mkString("{", ",", "}")
+    val errs = errors.map { case (k, v) => json(k) + ":" + json(v) }.mkString("{", ",", "}")
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"sf":${jstr(sfDir)}}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"sf":${json(sfDir)}}""")
     // recheck in a fresh SparkSession (same JVM): transient-contention
     // detector for subset runs — `med ≈ re` reads as a genuinely
     // expensive plan, `med >> re` as noise
@@ -752,16 +754,16 @@ object Bench {
       }
     val rcJson = recheckPairs
       .map { case (name, med, re) =>
-        jstr(name) + ":" + s"""{"med":${fmt3(med)},"re":${fmt3(re)}}"""
+        json(name) + ":" + s"""{"med":${fmt3(med)},"re":${fmt3(re)}}"""
       }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"recheck","slowest":$rcJson,"sf":${jstr(sfDir)}}""")
+    println(s"""{"metric":"recheck","slowest":$rcJson,"sf":${json(sfDir)}}""")
     // compact summary LAST (VERDICT r15 item 1b), mirroring the
     // orchestrated path: the final Bench-printed stdout line is always
     // the short parseable one
     val slowest = results.filter(_._2 >= 0).sortBy(-_._2).take(5)
-      .map { case (k, v) => jstr(k) + ":" + fmt3(v) }.mkString("{", ",", "}")
-    println(s"""{"metric":"summary","total":$total,"n":${results.size},"errors":${errors.size},"slowest":$slowest,"sf":${jstr(sfDir)}}""")
+      .map { case (k, v) => json(k) + ":" + fmt3(v) }.mkString("{", ",", "}")
+    println(s"""{"metric":"summary","total":$total,"n":${results.size},"errors":${errors.size},"slowest":$slowest,"sf":${json(sfDir)}}""")
     System.out.flush()
     // subset runs default OFF the repo artifact: a BENCH_ONLY dev/
     // judge invocation must never clobber the committed full-run
@@ -769,7 +771,7 @@ object Bench {
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL",
       "/tmp/graft_bench_detail_subset.json")
     val detail =
-      s"""{"metric":"detail","total":$total,"n":${results.size},"iters":$iters,"sf":${jstr(sfDir)},"isolation":"single-jvm",
+      s"""{"metric":"detail","total":$total,"n":${results.size},"iters":$iters,"sf":${json(sfDir)},"isolation":"single-jvm",
          |"queries":$qs,
          |"errors":$errs,
          |"recheck":$rcJson}""".stripMargin
@@ -783,10 +785,4 @@ object Bench {
     }
     spark.stop()
   }
-
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
 }

@@ -47,12 +47,8 @@ object Sessions {
     */
   private lazy val warehouseDir: String = {
     val dir = java.nio.file.Files.createTempDirectory("graft-warehouse")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(dir.toFile)
-    }))
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)))
     dir.toString
   }
 }

@@ -1427,18 +1427,18 @@ object ClusteredAnnQueries extends QueryPack {
     "q504_graph_committed_serve" -> Q(
       (s, dir) => {
         val (codes, graph) = builtGraph(s, dir)
-        val tmp = java.nio.file.Files.createTempDirectory("graft_q504_")
-        graft.sources.TxLog.commit(graph, tmp.toString, "overwrite",
-          "src")
-        val edges = graft.sources.TxLog.read(s, tmp.toString)
-          .select(col("src"), col("dst"))
-        val queries = queriesOf(codes)
-        val served = GraphAnn.beamServe(queries, edges, codes,
-          "vec_id", "code", EntryK, Beam, Steps, TopK)
-        val out = recallRow("graph_committed_serve", queries, served,
-            bruteTopK(queries, codes))
-          .crossJoin(edges.agg(count(lit(1)).as("n_edges")))
-        Fixtures.materializeAndDelete(out, tmp)
+        Fixtures.scratchDir("graft_q504_") { tmp =>
+          graft.sources.TxLog.commit(graph, tmp.toString, "overwrite",
+            "src")
+          val edges = graft.sources.TxLog.read(s, tmp.toString)
+            .select(col("src"), col("dst"))
+          val queries = queriesOf(codes)
+          val served = GraphAnn.beamServe(queries, edges, codes,
+            "vec_id", "code", EntryK, Beam, Steps, TopK)
+          recallRow("graph_committed_serve", queries, served,
+              bruteTopK(queries, codes))
+            .crossJoin(edges.agg(count(lit(1)).as("n_edges")))
+        }
       },
       Some(s"""WITH $codesCte,
         |$graphCtes,
@@ -1464,18 +1464,18 @@ object ClusteredAnnQueries extends QueryPack {
           .localCheckpoint(true)
         val cb = Similarity.pqTrain(resid, "res", PqInit)
         val coded = Similarity.ivfPqEncode(vecs, "vec_id", "v", cents, cb)
-        val tmp = java.nio.file.Files.createTempDirectory("graft_q505_")
-        graft.sources.TxLog.commit(coded, tmp.toString, "overwrite",
-          "vec_id")
-        val codedBack = graft.sources.TxLog.read(s, tmp.toString)
-        val queries = vecs.filter(col("vec_id") % 25 === 0)
-        val shortlist = Similarity.ivfPqAdcTopK(queries, codedBack,
-          "vec_id", "v", cents, cb, Probes, ShortK)
-        val exact = bruteL2TopK(queries, vecs)
-        val out = recallRow("ivfpq_committed_adc", queries, shortlist,
-            exact)
-          .crossJoin(codedBack.agg(count(lit(1)).as("n_codes")))
-        Fixtures.materializeAndDelete(out, tmp)
+        Fixtures.scratchDir("graft_q505_") { tmp =>
+          graft.sources.TxLog.commit(coded, tmp.toString, "overwrite",
+            "vec_id")
+          val codedBack = graft.sources.TxLog.read(s, tmp.toString)
+          val queries = vecs.filter(col("vec_id") % 25 === 0)
+          val shortlist = Similarity.ivfPqAdcTopK(queries, codedBack,
+            "vec_id", "v", cents, cb, Probes, ShortK)
+          val exact = bruteL2TopK(queries, vecs)
+          recallRow("ivfpq_committed_adc", queries, shortlist,
+              exact)
+            .crossJoin(codedBack.agg(count(lit(1)).as("n_codes")))
+        }
       },
       Some(s"""WITH $ivfPqCtes,
         |bf AS MATERIALIZED (SELECT query_id, node FROM (
@@ -1598,19 +1598,6 @@ object ClusteredAnnQueries extends QueryPack {
         val cents = Similarity.kmeansIterate(base, "v",
           seedInit(base, ncl), KmIters)
         val probes = clampedProbes(ncl, cents)
-        val tmp = java.nio.file.Files.createTempDirectory("graft_q509_")
-        val streamDir = tmp.resolve("in")
-        java.nio.file.Files.createDirectories(streamDir)
-        Seq(1L, 5L).zipWithIndex.foreach { case (m, i) =>
-          val stage = tmp.resolve(s"stage$i")
-          vecs.filter(col("vec_id") % 8 === m).coalesce(1)
-            .write.parquet(stage.toString)
-          val part = stage.toFile.listFiles()
-            .filter(_.getName.endsWith(".parquet")).head
-          java.nio.file.Files.move(part.toPath,
-            streamDir.resolve(s"b$i.parquet"))
-          ()
-        }
         // atomics, not vars: transformEachBatch's callback runs on the
         // streaming micro-batch thread while the final reads happen on
         // the main thread after awaitTermination — the API guarantees
@@ -1619,11 +1606,10 @@ object ClusteredAnnQueries extends QueryPack {
           Similarity.insertIntoCells(base, "vec_id", "v", cents)
             .localCheckpoint(true))
         val nStreamed = new java.util.concurrent.atomic.AtomicLong(0L)
-        val ckpt = Streams.scratchCheckpointDir("graft-q509-ck")
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        try {
+        Streams.scratchCheckpointDir("graft-q509-") { tmp =>
+          val streamDir = tmp.resolve("in")
+          Fixtures.stageStreamInput(Seq(1L, 5L).map(m =>
+            vecs.filter(col("vec_id") % 8 === m)), streamDir)
           Streams.transformEachBatch(
             s.readStream.schema(vecs.schema)
               .option("maxFilesPerTrigger", 1)
@@ -1637,10 +1623,10 @@ object ClusteredAnnQueries extends QueryPack {
                     cents))
                 .localCheckpoint(true))
             },
-            ckpt.toString,
+            tmp.resolve("ck").toString,
             Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
             .awaitTermination()
-        } finally { rm(ckpt.toFile); rm(tmp.toFile) }
+        }
         val queries = vecs.filter(col("vec_id") % 25 === 0)
         val served = Similarity.annTopKIvf(queries,
           index.get(), "vec_id", "v", "cell", cents, TopK, probes)
@@ -1693,25 +1679,25 @@ object ClusteredAnnQueries extends QueryPack {
           .localCheckpoint(true)
         val cb = Similarity.pqTrain(resid, "res", PqInit)
         val coded = Similarity.ivfPqEncode(vecs, "vec_id", "v", cents, cb)
-        val tmp = java.nio.file.Files.createTempDirectory("graft_q510_")
-        graft.sources.TxLog.commit(coded, tmp.toString, "overwrite",
-          "vec_id")
-        val codedBack = graft.sources.TxLog.read(s, tmp.toString)
-        val queries = vecs.filter(col("vec_id") % 25 === 0)
-        val shortlist = Similarity.ivfPqAdcTopK(queries, codedBack,
-            "vec_id", "v", cents, cb, probes, ShortK)
-          .localCheckpoint(true)
-        val rerank = rerankL2(shortlist, queries, vecs)
-        val exact = bruteL2TopK(queries, vecs).localCheckpoint(true)
-        val out = recallRow("ivfpq_policy_committed_adc", queries,
-            shortlist, exact)
-          .unionByName(recallRow("ivfpq_policy_committed_rerank",
-            queries, rerank, exact))
-          .withColumn("nlist", lit(ncl.toLong))
-          .withColumn("nprobe", lit(probes.toLong))
-          .crossJoin(codedBack.agg(count(lit(1)).as("n_codes")))
-          .orderBy(col("family"))
-        Fixtures.materializeAndDelete(out, tmp)
+        Fixtures.scratchDir("graft_q510_") { tmp =>
+          graft.sources.TxLog.commit(coded, tmp.toString, "overwrite",
+            "vec_id")
+          val codedBack = graft.sources.TxLog.read(s, tmp.toString)
+          val queries = vecs.filter(col("vec_id") % 25 === 0)
+          val shortlist = Similarity.ivfPqAdcTopK(queries, codedBack,
+              "vec_id", "v", cents, cb, probes, ShortK)
+            .localCheckpoint(true)
+          val rerank = rerankL2(shortlist, queries, vecs)
+          val exact = bruteL2TopK(queries, vecs).localCheckpoint(true)
+          recallRow("ivfpq_policy_committed_adc", queries,
+              shortlist, exact)
+            .unionByName(recallRow("ivfpq_policy_committed_rerank",
+              queries, rerank, exact))
+            .withColumn("nlist", lit(ncl.toLong))
+            .withColumn("nprobe", lit(probes.toLong))
+            .crossJoin(codedBack.agg(count(lit(1)).as("n_codes")))
+            .orderBy(col("family"))
+        }
       },
       Some(s"""WITH ${ivfPqCtesOn(
           coarseCtesOn("TRUE", nlSql("vv")), npcSql("vv", "c2"))},
@@ -1750,28 +1736,28 @@ object ClusteredAnnQueries extends QueryPack {
     // projection stood (ExplainAudit counts in PLANS.md).
     "q511_ivf_external_embeddings" -> Q(
       (s, dir) => {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_q511_")
-        val extPath = tmp.resolve("embeddings_export").toString
-        doubleVecs(s, dir).write.mode("overwrite").parquet(extPath)
-        val ext = s.read.parquet(extPath)
-        val base = ext.filter(col("vec_id") % 4 =!= 1)
-        val ins = ext.filter(col("vec_id") % 4 === 1)
-        val nBase = base.count()
-        val ncl = Similarity.numCells(nBase)
-        val cents = Similarity.kmeansIterate(base, "v",
-          seedInit(base, ncl), KmIters)
-        val probes = clampedProbes(ncl, cents)
-        val index = Similarity.insertIntoCells(base, "vec_id", "v", cents)
-          .unionByName(
-            Similarity.insertIntoCells(ins, "vec_id", "v", cents))
-        val queries = ext.filter(col("vec_id") % 25 === 0)
-        val served = Similarity.annTopKIvf(queries, index,
-          "vec_id", "v", "cell", cents, TopK, probes)
-        val out = recallRow("ivf_external_embeddings", queries, served,
-            bruteCosTopK(queries, ext))
-          .withColumn("nlist", lit(ncl.toLong))
-          .withColumn("n_inserted", lit(ins.count()))
-        Fixtures.materializeAndDelete(out, tmp)
+        Fixtures.scratchDir("graft_q511_") { tmp =>
+          val extPath = tmp.resolve("embeddings_export").toString
+          doubleVecs(s, dir).write.mode("overwrite").parquet(extPath)
+          val ext = s.read.parquet(extPath)
+          val base = ext.filter(col("vec_id") % 4 =!= 1)
+          val ins = ext.filter(col("vec_id") % 4 === 1)
+          val nBase = base.count()
+          val ncl = Similarity.numCells(nBase)
+          val cents = Similarity.kmeansIterate(base, "v",
+            seedInit(base, ncl), KmIters)
+          val probes = clampedProbes(ncl, cents)
+          val index = Similarity.insertIntoCells(base, "vec_id", "v", cents)
+            .unionByName(
+              Similarity.insertIntoCells(ins, "vec_id", "v", cents))
+          val queries = ext.filter(col("vec_id") % 25 === 0)
+          val served = Similarity.annTopKIvf(queries, index,
+            "vec_id", "v", "cell", cents, TopK, probes)
+          recallRow("ivf_external_embeddings", queries, served,
+              bruteCosTopK(queries, ext))
+            .withColumn("nlist", lit(ncl.toLong))
+            .withColumn("n_inserted", lit(ins.count()))
+        }
       },
       Some(s"""WITH $codesCte,
         |${coarseCtesOn("vec_id % 4 <> 1", nlSql("vv"))},
@@ -1807,31 +1793,31 @@ object ClusteredAnnQueries extends QueryPack {
     "q512_graph_tombstone_cold_serve" -> Q(
       (s, dir) => {
         val (codes, graph) = builtGraphRanked(s, dir)
-        val tmp = java.nio.file.Files.createTempDirectory("graft_q512_")
-        val edgesDir = tmp.resolve("edges").toString
-        val tombDir = tmp.resolve("tombstones").toString
-        graft.sources.TxLog.commit(graph, edgesDir, "overwrite", "src")
-        graft.sources.TxLog.commit(
-          codes.filter(col("vec_id") % 7 === 0).select(col("vec_id")),
-          tombDir, "overwrite", "vec_id")
-        // read back the FULL ranked edge list (rn+idot survive the
-        // parquet round trip exactly — BIGINTs): deleteNodes then
-        // re-scores only the lists the tombstones touch (r16)
-        val edgesBack = graft.sources.TxLog.read(s, edgesDir)
-          .select(col("src"), col("rn"), col("dst"), col("idot"))
-        val tombBack = graft.sources.TxLog.read(s, tombDir)
-        val live = codes.filter(col("vec_id") % 7 =!= 0)
-        val repaired = GraphAnn.deleteNodes(edgesBack, codes, tombBack,
-          "vec_id", "code", K)
-        val queries = live.filter(col("vec_id") % 25 === 0)
-        val served = GraphAnn.beamServe(queries,
-          repaired.select(col("src"), col("dst")), live,
-          "vec_id", "code", EntryK, Beam, Steps, TopK)
-        val out = recallRow("graph_tombstone_cold_serve", queries,
-            served, bruteTopK(queries, live))
-          .crossJoin(edgesBack.agg(count(lit(1)).as("n_edges")))
-          .crossJoin(tombBack.agg(count(lit(1)).as("n_tombstones")))
-        Fixtures.materializeAndDelete(out, tmp)
+        Fixtures.scratchDir("graft_q512_") { tmp =>
+          val edgesDir = tmp.resolve("edges").toString
+          val tombDir = tmp.resolve("tombstones").toString
+          graft.sources.TxLog.commit(graph, edgesDir, "overwrite", "src")
+          graft.sources.TxLog.commit(
+            codes.filter(col("vec_id") % 7 === 0).select(col("vec_id")),
+            tombDir, "overwrite", "vec_id")
+          // read back the FULL ranked edge list (rn+idot survive the
+          // parquet round trip exactly — BIGINTs): deleteNodes then
+          // re-scores only the lists the tombstones touch (r16)
+          val edgesBack = graft.sources.TxLog.read(s, edgesDir)
+            .select(col("src"), col("rn"), col("dst"), col("idot"))
+          val tombBack = graft.sources.TxLog.read(s, tombDir)
+          val live = codes.filter(col("vec_id") % 7 =!= 0)
+          val repaired = GraphAnn.deleteNodes(edgesBack, codes, tombBack,
+            "vec_id", "code", K)
+          val queries = live.filter(col("vec_id") % 25 === 0)
+          val served = GraphAnn.beamServe(queries,
+            repaired.select(col("src"), col("dst")), live,
+            "vec_id", "code", EntryK, Beam, Steps, TopK)
+          recallRow("graph_tombstone_cold_serve", queries,
+              served, bruteTopK(queries, live))
+            .crossJoin(edgesBack.agg(count(lit(1)).as("n_edges")))
+            .crossJoin(tombBack.agg(count(lit(1)).as("n_tombstones")))
+        }
       },
       Some(s"""WITH $codesCte,
         |$graphCtes,
@@ -1876,27 +1862,13 @@ object ClusteredAnnQueries extends QueryPack {
         val base = vecs.filter(col("vec_id") % 4 =!= 1)
         val cents = Similarity.kmeansIterate(base, "v",
           seedInit(base, Similarity.numCells(base.count())), KmIters)
-        val tmp = java.nio.file.Files.createTempDirectory("graft_q513_")
-        val streamDir = tmp.resolve("in")
-        java.nio.file.Files.createDirectories(streamDir)
-        Seq(1L, 5L).zipWithIndex.foreach { case (m, i) =>
-          val stage = tmp.resolve(s"stage$i")
-          vecs.filter(col("vec_id") % 8 === m).coalesce(1)
-            .write.parquet(stage.toString)
-          val part = stage.toFile.listFiles()
-            .filter(_.getName.endsWith(".parquet")).head
-          java.nio.file.Files.move(part.toPath,
-            streamDir.resolve(s"b$i.parquet"))
-          ()
-        }
         val insertStats =
           new java.util.concurrent.atomic.AtomicReference[
             Option[org.apache.spark.sql.DataFrame]](None)
-        val ckpt = Streams.scratchCheckpointDir("graft-q513-ck")
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        try {
+        Streams.scratchCheckpointDir("graft-q513-") { tmp =>
+          val streamDir = tmp.resolve("in")
+          Fixtures.stageStreamInput(Seq(1L, 5L).map(m =>
+            vecs.filter(col("vec_id") % 8 === m)), streamDir)
           Streams.transformEachBatch(
             s.readStream.schema(vecs.schema)
               .option("maxFilesPerTrigger", 1)
@@ -1910,10 +1882,10 @@ object ClusteredAnnQueries extends QueryPack {
                 .getOrElse(part)
                 .localCheckpoint(true)))
             },
-            ckpt.toString,
+            tmp.resolve("ck").toString,
             Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
             .awaitTermination()
-        } finally { rm(ckpt.toFile); rm(tmp.toFile) }
+        }
         Similarity.cellDriftFromStats(
             Similarity.cellFitStats(base, "v", cents),
             insertStats.get().get, DriftPpm)
@@ -1967,38 +1939,38 @@ object ClusteredAnnQueries extends QueryPack {
     "q514_graph_compacted_serve" -> Q(
       (s, dir) => {
         val (codes, graph) = builtGraphRanked(s, dir)
-        val tmp = java.nio.file.Files.createTempDirectory("graft_q514_")
-        val edgesDir = tmp.resolve("edges").toString
-        val tombDir = tmp.resolve("tombstones").toString
-        val compactDir = tmp.resolve("edges_compacted").toString
-        graft.sources.TxLog.commit(graph, edgesDir, "overwrite", "src")
-        graft.sources.TxLog.commit(
-          codes.filter(col("vec_id") % 7 === 0).select(col("vec_id")),
-          tombDir, "overwrite", "vec_id")
-        // ranked read-back, as in q512: repair re-scores only the
-        // tombstone-touched lists (r16)
-        val edgesBack = graft.sources.TxLog.read(s, edgesDir)
-          .select(col("src"), col("rn"), col("dst"), col("idot"))
-        val tombBack = graft.sources.TxLog.read(s, tombDir)
-        val repaired = GraphAnn.deleteNodes(edgesBack, codes, tombBack,
-          "vec_id", "code", K).select(col("src"), col("dst"))
-        graft.sources.TxLog.commit(repaired, compactDir, "overwrite",
-          "src")
-        graft.sources.TxLog.deleteWhere(s, tombDir, lit(true))
-        val compacted = graft.sources.TxLog.read(s, compactDir)
-          .select(col("src"), col("dst"))
-        val tombLive = graft.sources.TxLog.read(s, tombDir)
-        val live = codes.filter(col("vec_id") % 7 =!= 0)
-        val queries = live.filter(col("vec_id") % 25 === 0)
-        val served = GraphAnn.beamServe(queries, compacted, live,
-          "vec_id", "code", EntryK, Beam, Steps, TopK)
-        val out = recallRow("graph_compacted_serve", queries, served,
-            bruteTopK(queries, live))
-          .crossJoin(compacted.agg(
-            count(lit(1)).as("n_edges_compacted")))
-          .crossJoin(tombLive.agg(
-            count(lit(1)).as("n_tombstones_live")))
-        Fixtures.materializeAndDelete(out, tmp)
+        Fixtures.scratchDir("graft_q514_") { tmp =>
+          val edgesDir = tmp.resolve("edges").toString
+          val tombDir = tmp.resolve("tombstones").toString
+          val compactDir = tmp.resolve("edges_compacted").toString
+          graft.sources.TxLog.commit(graph, edgesDir, "overwrite", "src")
+          graft.sources.TxLog.commit(
+            codes.filter(col("vec_id") % 7 === 0).select(col("vec_id")),
+            tombDir, "overwrite", "vec_id")
+          // ranked read-back, as in q512: repair re-scores only the
+          // tombstone-touched lists (r16)
+          val edgesBack = graft.sources.TxLog.read(s, edgesDir)
+            .select(col("src"), col("rn"), col("dst"), col("idot"))
+          val tombBack = graft.sources.TxLog.read(s, tombDir)
+          val repaired = GraphAnn.deleteNodes(edgesBack, codes, tombBack,
+            "vec_id", "code", K).select(col("src"), col("dst"))
+          graft.sources.TxLog.commit(repaired, compactDir, "overwrite",
+            "src")
+          graft.sources.TxLog.deleteWhere(s, tombDir, lit(true))
+          val compacted = graft.sources.TxLog.read(s, compactDir)
+            .select(col("src"), col("dst"))
+          val tombLive = graft.sources.TxLog.read(s, tombDir)
+          val live = codes.filter(col("vec_id") % 7 =!= 0)
+          val queries = live.filter(col("vec_id") % 25 === 0)
+          val served = GraphAnn.beamServe(queries, compacted, live,
+            "vec_id", "code", EntryK, Beam, Steps, TopK)
+          recallRow("graph_compacted_serve", queries, served,
+              bruteTopK(queries, live))
+            .crossJoin(compacted.agg(
+              count(lit(1)).as("n_edges_compacted")))
+            .crossJoin(tombLive.agg(
+              count(lit(1)).as("n_tombstones_live")))
+        }
       },
       Some(s"""WITH $codesCte,
         |$graphCtes,
@@ -2044,22 +2016,22 @@ object ClusteredAnnQueries extends QueryPack {
         val cents = Similarity.kmeansIterate(vecs, "v",
           seedInit(vecs, ncl), KmIters)
         val probes = clampedProbes(ncl, cents)
-        val tmp = java.nio.file.Files.createTempDirectory("graft_q515_")
-        graft.sources.TxLog.commit(
-          Similarity.insertIntoCells(vecs, "vec_id", "v", cents),
-          tmp.toString, "overwrite", "vec_id")
-        graft.sources.TxLog.deleteWhere(s, tmp.toString,
-          col("vec_id") % 7 === 0)
-        val idxBack = graft.sources.TxLog.read(s, tmp.toString)
-        val live = vecs.filter(col("vec_id") % 7 =!= 0)
-        val queries = live.filter(col("vec_id") % 25 === 0)
-        val served = Similarity.annTopKIvf(queries, idxBack,
-          "vec_id", "v", "cell", cents, TopK, probes)
-        val out = recallRow("ivf_delete_cold_serve", queries, served,
-            bruteCosTopK(queries, live))
-          .withColumn("nlist", lit(ncl.toLong))
-          .crossJoin(idxBack.agg(count(lit(1)).as("n_live")))
-        Fixtures.materializeAndDelete(out, tmp)
+        Fixtures.scratchDir("graft_q515_") { tmp =>
+          graft.sources.TxLog.commit(
+            Similarity.insertIntoCells(vecs, "vec_id", "v", cents),
+            tmp.toString, "overwrite", "vec_id")
+          graft.sources.TxLog.deleteWhere(s, tmp.toString,
+            col("vec_id") % 7 === 0)
+          val idxBack = graft.sources.TxLog.read(s, tmp.toString)
+          val live = vecs.filter(col("vec_id") % 7 =!= 0)
+          val queries = live.filter(col("vec_id") % 25 === 0)
+          val served = Similarity.annTopKIvf(queries, idxBack,
+            "vec_id", "v", "cell", cents, TopK, probes)
+          recallRow("ivf_delete_cold_serve", queries, served,
+              bruteCosTopK(queries, live))
+            .withColumn("nlist", lit(ncl.toLong))
+            .crossJoin(idxBack.agg(count(lit(1)).as("n_live")))
+        }
       },
       Some(s"""WITH $codesCte,
         |${coarseCtesOn("TRUE", nlSql("vv"))},
@@ -2185,19 +2157,19 @@ object ClusteredAnnQueries extends QueryPack {
     // swaps one write job; build/serve plans are unchanged.
     "q517_graph_external_embeddings" -> Q(
       (s, dir) => {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_q517_")
-        val extPath = tmp.resolve("codes_export").toString
-        clusteredCodes(s, dir).write.mode("overwrite").parquet(extPath)
-        val ext = s.read.parquet(extPath)
-        val graph = GraphAnn.nnDescent(ext, "vec_id", "code", K,
-            Rounds, Buckets)
-          .select(col("src"), col("dst")).localCheckpoint(true)
-        val queries = ext.filter(col("vec_id") % 25 === 0)
-        val served = GraphAnn.beamServe(queries, graph, ext,
-          "vec_id", "code", EntryK, Beam, Steps, TopK)
-        val out = recallRow("graph_external_embeddings", queries,
-          served, bruteTopK(queries, ext))
-        Fixtures.materializeAndDelete(out, tmp)
+        Fixtures.scratchDir("graft_q517_") { tmp =>
+          val extPath = tmp.resolve("codes_export").toString
+          clusteredCodes(s, dir).write.mode("overwrite").parquet(extPath)
+          val ext = s.read.parquet(extPath)
+          val graph = GraphAnn.nnDescent(ext, "vec_id", "code", K,
+              Rounds, Buckets)
+            .select(col("src"), col("dst")).localCheckpoint(true)
+          val queries = ext.filter(col("vec_id") % 25 === 0)
+          val served = GraphAnn.beamServe(queries, graph, ext,
+            "vec_id", "code", EntryK, Beam, Steps, TopK)
+          recallRow("graph_external_embeddings", queries,
+            served, bruteTopK(queries, ext))
+        }
       },
       Some(s"""WITH $codesCte,
         |$graphCtes,
@@ -2316,68 +2288,55 @@ object ClusteredAnnQueries extends QueryPack {
         val residBase = Similarity.ivfResiduals(base, "vec_id", "v",
           cents).localCheckpoint(true)
         val cb = Similarity.pqTrain(residBase, "res", PqInit)
-        val tmp = java.nio.file.Files.createTempDirectory("graft_q519_")
-        val idxDir = tmp.resolve("codes").toString
-        graft.sources.TxLog.commit(
-          Similarity.ivfPqEncode(base, "vec_id", "v", cents, cb),
-          idxDir, "overwrite", "vec_id")
-        val streamDir = tmp.resolve("in")
-        java.nio.file.Files.createDirectories(streamDir)
-        Seq(1L, 5L).zipWithIndex.foreach { case (m, i) =>
-          val stage = tmp.resolve(s"stage$i")
-          vecs.filter(col("vec_id") % 8 === m).coalesce(1)
-            .write.parquet(stage.toString)
-          val part = stage.toFile.listFiles()
-            .filter(_.getName.endsWith(".parquet")).head
-          java.nio.file.Files.move(part.toPath,
-            streamDir.resolve(s"b$i.parquet"))
-          ()
+        Fixtures.scratchDir("graft_q519_") { tmp =>
+          val idxDir = tmp.resolve("codes").toString
+          graft.sources.TxLog.commit(
+            Similarity.ivfPqEncode(base, "vec_id", "v", cents, cb),
+            idxDir, "overwrite", "vec_id")
+          val streamDir = tmp.resolve("in")
+          Fixtures.stageStreamInput(Seq(1L, 5L).map(m =>
+            vecs.filter(col("vec_id") % 8 === m)), streamDir)
+          val nStreamed = new java.util.concurrent.atomic.AtomicLong(0L)
+          Streams.scratchCheckpointDir("graft-q519-ck") { ckpt =>
+            Streams.transformEachBatchWithId(
+              s.readStream.schema(vecs.schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(streamDir.toString),
+              batch => batch,
+              (batch, batchId) => {
+                val delta = batch.localCheckpoint(true)
+                nStreamed.addAndGet(delta.count())
+                // encode-on-arrival against the FROZEN codebooks; one
+                // immutable log version per micro-batch, keyed on
+                // (appId, batchId) so an engine REPLAY of a failed
+                // batch is a no-op — at-least-once delivery becomes
+                // exactly-once table state (the Delta txnAppId shape;
+                // TxLog publish itself is an atomic rename)
+                graft.sources.TxLog.commitIdempotent(
+                  Similarity.ivfPqEncode(delta, "vec_id", "v", cents, cb),
+                  idxDir, "append", "vec_id", "q519ingest", batchId)
+                ()
+              },
+              ckpt.toString,
+              Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
+              .awaitTermination()
+          }
+          val codedBack = graft.sources.TxLog.read(s, idxDir)
+          val queries = vecs.filter(col("vec_id") % 25 === 0)
+          val shortlist = Similarity.ivfPqAdcTopK(queries, codedBack,
+              "vec_id", "v", cents, cb, probes, ShortK)
+            .localCheckpoint(true)
+          val rerank = rerankL2(shortlist, queries, vecs)
+          val exact = bruteL2TopK(queries, vecs).localCheckpoint(true)
+          recallRow("ivfpq_stream_ingest_adc", queries,
+              shortlist, exact)
+            .unionByName(recallRow("ivfpq_stream_ingest_rerank",
+              queries, rerank, exact))
+            .withColumn("nlist", lit(ncl.toLong))
+            .withColumn("n_streamed", lit(nStreamed.get()))
+            .crossJoin(codedBack.agg(count(lit(1)).as("n_codes")))
+            .orderBy(col("family"))
         }
-        val nStreamed = new java.util.concurrent.atomic.AtomicLong(0L)
-        val ckpt = Streams.scratchCheckpointDir("graft-q519-ck")
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        try {
-          Streams.transformEachBatchWithId(
-            s.readStream.schema(vecs.schema)
-              .option("maxFilesPerTrigger", 1)
-              .parquet(streamDir.toString),
-            batch => batch,
-            (batch, batchId) => {
-              val delta = batch.localCheckpoint(true)
-              nStreamed.addAndGet(delta.count())
-              // encode-on-arrival against the FROZEN codebooks; one
-              // immutable log version per micro-batch, keyed on
-              // (appId, batchId) so an engine REPLAY of a failed
-              // batch is a no-op — at-least-once delivery becomes
-              // exactly-once table state (the Delta txnAppId shape;
-              // TxLog publish itself is an atomic rename)
-              graft.sources.TxLog.commitIdempotent(
-                Similarity.ivfPqEncode(delta, "vec_id", "v", cents, cb),
-                idxDir, "append", "vec_id", "q519ingest", batchId)
-              ()
-            },
-            ckpt.toString,
-            Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-            .awaitTermination()
-        } finally rm(ckpt.toFile)
-        val codedBack = graft.sources.TxLog.read(s, idxDir)
-        val queries = vecs.filter(col("vec_id") % 25 === 0)
-        val shortlist = Similarity.ivfPqAdcTopK(queries, codedBack,
-            "vec_id", "v", cents, cb, probes, ShortK)
-          .localCheckpoint(true)
-        val rerank = rerankL2(shortlist, queries, vecs)
-        val exact = bruteL2TopK(queries, vecs).localCheckpoint(true)
-        val out = recallRow("ivfpq_stream_ingest_adc", queries,
-            shortlist, exact)
-          .unionByName(recallRow("ivfpq_stream_ingest_rerank",
-            queries, rerank, exact))
-          .withColumn("nlist", lit(ncl.toLong))
-          .withColumn("n_streamed", lit(nStreamed.get()))
-          .crossJoin(codedBack.agg(count(lit(1)).as("n_codes")))
-          .orderBy(col("family"))
-        Fixtures.materializeAndDelete(out, tmp)
       },
       Some(s"""WITH ${ivfPqCtesSplit(
           coarseCtesOn("vec_id % 4 <> 1", nlSql("vv")),
@@ -2428,39 +2387,39 @@ object ClusteredAnnQueries extends QueryPack {
         val resid = Similarity.ivfResiduals(vecs, "vec_id", "v", cents)
           .localCheckpoint(true)
         val cb = Similarity.pqTrain(resid, "res", PqInit)
-        val tmp = java.nio.file.Files.createTempDirectory("graft_q520_")
-        graft.sources.TxLog.commit(
-          Similarity.ivfPqEncode(vecs, "vec_id", "v", cents, cb),
-          tmp.toString, "overwrite", "vec_id")
-        graft.sources.TxLog.deleteWhere(s, tmp.toString,
-          col("vec_id") % 7 === 0)
-        val codedBack = graft.sources.TxLog.read(s, tmp.toString)
-        val nLive = codedBack.count()
-        val pred = col("vec_id") % FilterMod === FilterRem
-        val allowedCodes = codedBack.filter(pred).localCheckpoint(true)
-        val nAllowed = allowedCodes.count()
-        val widened = Similarity.probesForSelectivity(probes,
-          cents.size, nAllowed, nLive)
-        val live = vecs.filter(col("vec_id") % 7 =!= 0)
-        val queries = live.filter(col("vec_id") % 25 === 0)
-        def rerankAt(p: Int) = rerankL2(
-          Similarity.ivfPqAdcTopK(queries, allowedCodes,
-              "vec_id", "v", cents, cb, p, ShortK)
-            .localCheckpoint(true),
-          queries, vecs)
-        val allowedLive = live.filter(pred)
-        val exact = bruteL2TopK(queries, allowedLive)
-          .localCheckpoint(true)
-        val out = recallRow("ivfpq_dv_filtered_naive", queries,
-            rerankAt(probes), exact)
-          .unionByName(recallRow("ivfpq_dv_filtered_widened", queries,
-            rerankAt(widened), exact))
-          .withColumn("nprobe_naive", lit(probes.toLong))
-          .withColumn("nprobe_widened", lit(widened.toLong))
-          .withColumn("n_allowed", lit(nAllowed))
-          .withColumn("n_live", lit(nLive))
-          .orderBy(col("family"))
-        Fixtures.materializeAndDelete(out, tmp)
+        Fixtures.scratchDir("graft_q520_") { tmp =>
+          graft.sources.TxLog.commit(
+            Similarity.ivfPqEncode(vecs, "vec_id", "v", cents, cb),
+            tmp.toString, "overwrite", "vec_id")
+          graft.sources.TxLog.deleteWhere(s, tmp.toString,
+            col("vec_id") % 7 === 0)
+          val codedBack = graft.sources.TxLog.read(s, tmp.toString)
+          val nLive = codedBack.count()
+          val pred = col("vec_id") % FilterMod === FilterRem
+          val allowedCodes = codedBack.filter(pred).localCheckpoint(true)
+          val nAllowed = allowedCodes.count()
+          val widened = Similarity.probesForSelectivity(probes,
+            cents.size, nAllowed, nLive)
+          val live = vecs.filter(col("vec_id") % 7 =!= 0)
+          val queries = live.filter(col("vec_id") % 25 === 0)
+          def rerankAt(p: Int) = rerankL2(
+            Similarity.ivfPqAdcTopK(queries, allowedCodes,
+                "vec_id", "v", cents, cb, p, ShortK)
+              .localCheckpoint(true),
+            queries, vecs)
+          val allowedLive = live.filter(pred)
+          val exact = bruteL2TopK(queries, allowedLive)
+            .localCheckpoint(true)
+          recallRow("ivfpq_dv_filtered_naive", queries,
+              rerankAt(probes), exact)
+            .unionByName(recallRow("ivfpq_dv_filtered_widened", queries,
+              rerankAt(widened), exact))
+            .withColumn("nprobe_naive", lit(probes.toLong))
+            .withColumn("nprobe_widened", lit(widened.toLong))
+            .withColumn("n_allowed", lit(nAllowed))
+            .withColumn("n_live", lit(nLive))
+            .orderBy(col("family"))
+        }
       },
       {
         val live = "vec_id % 7 <> 0"

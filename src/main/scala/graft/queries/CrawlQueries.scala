@@ -413,11 +413,7 @@ object CrawlQueries extends QueryPack {
           StructField("content", StringType)))
         var out = s.createDataFrame(
           new java.util.ArrayList[org.apache.spark.sql.Row](), outSchema)
-        val ckpt = graft.streaming.Streams.scratchCheckpointDir("graft-ext-ck")
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        try {
+        graft.streaming.Streams.scratchCheckpointDir("graft-ext-ck") { ckpt =>
           graft.streaming.Streams.transformEachBatch(
             docsStream,
             batch => HtmlExtract.extractContent(
@@ -426,7 +422,7 @@ object CrawlQueries extends QueryPack {
             ckpt.toString,
             Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
             .awaitTermination()
-        } finally rm(ckpt.toFile)
+        }
         out.orderBy(col("doc_id"))
       },
       Some(s"""WITH $htmlCte,
@@ -1016,11 +1012,7 @@ object CrawlQueries extends QueryPack {
           StructField("allowed", BooleanType)))
         var out = s.createDataFrame(
           new java.util.ArrayList[org.apache.spark.sql.Row](), outSchema)
-        val ckpt = graft.streaming.Streams.scratchCheckpointDir("graft-adm-ck")
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        try {
+        graft.streaming.Streams.scratchCheckpointDir("graft-adm-ck") { ckpt =>
           graft.streaming.Streams.transformEachBatch(
             docsStream,
             batch => {
@@ -1039,7 +1031,7 @@ object CrawlQueries extends QueryPack {
             ckpt.toString,
             Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
             .awaitTermination()
-        } finally rm(ckpt.toFile)
+        }
         out.orderBy(col("doc_id"), col("link_idx"))
       },
       Some(s"""WITH l AS (

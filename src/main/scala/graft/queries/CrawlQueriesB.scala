@@ -857,11 +857,7 @@ object CrawlQueriesB extends QueryPack {
           StructField("stuffed", BooleanType)))
         var out = s.createDataFrame(
           new java.util.ArrayList[org.apache.spark.sql.Row](), outSchema)
-        val ckpt = graft.streaming.Streams.scratchCheckpointDir("graft-spam-ck")
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        try {
+        graft.streaming.Streams.scratchCheckpointDir("graft-spam-ck") { ckpt =>
           graft.streaming.Streams.transformEachBatch(
             docsStream,
             batch => HtmlExtract.spamSignals(
@@ -870,7 +866,7 @@ object CrawlQueriesB extends QueryPack {
             ckpt.toString,
             Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
             .awaitTermination()
-        } finally rm(ckpt.toFile)
+        }
         out.orderBy(col("doc_id"))
       },
       Some(spamOracleSql))

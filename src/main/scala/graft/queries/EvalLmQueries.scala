@@ -954,21 +954,21 @@ object EvalLmQueries extends QueryPack {
           (2L, "fast"), (2L, "hash"), (2L, "table"))
           .toDF("qid", "token")
         val docs = Tables.documents(s, dir)
-        val tmp = java.nio.file.Files.createTempDirectory("graft_q506_")
-        val vecPath = tmp.resolve("token_vecs").toString
-        // the "learned" table: deterministic hash embeddings so the
-        // gate hash-gates — a real deployment swaps this write for the
-        // encoder's export job, nothing downstream changes
-        docs.select(explode(
-            TextAnalysis.tokens(lower(col("text")))).as("token"))
-          .distinct()
-          .withColumn("tv", Search.hashTokenVector(col("token"), 8, ":ms"))
-          .write.mode("overwrite").parquet(vecPath)
-        val external = s.read.parquet(vecPath)
-        val out = Search.maxSimTopKExternal(docs, "doc_id", "text",
-            queries, external, k = 10)
-          .orderBy(col("qid"), col("rn"))
-        Fixtures.materializeAndDelete(out, tmp)
+        Fixtures.scratchDir("graft_q506_") { tmp =>
+          val vecPath = tmp.resolve("token_vecs").toString
+          // the "learned" table: deterministic hash embeddings so the
+          // gate hash-gates — a real deployment swaps this write for the
+          // encoder's export job, nothing downstream changes
+          docs.select(explode(
+              TextAnalysis.tokens(lower(col("text")))).as("token"))
+            .distinct()
+            .withColumn("tv", Search.hashTokenVector(col("token"), 8, ":ms"))
+            .write.mode("overwrite").parquet(vecPath)
+          val external = s.read.parquet(vecPath)
+          Search.maxSimTopKExternal(docs, "doc_id", "text",
+              queries, external, k = 10)
+            .orderBy(col("qid"), col("rn"))
+        }
       },
       maxSimOracle))
 }

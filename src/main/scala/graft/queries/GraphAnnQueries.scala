@@ -413,29 +413,15 @@ object GraphAnnQueries extends QueryPack {
         import graft.streaming.Streams
         val (base, graph0) = builtGraph(s, dir, _ % 10 < 8)
         val all = allCodes(s, dir)
-        val tmp = java.nio.file.Files.createTempDirectory("graft_gis")
-        val streamDir = tmp.resolve("in")
-        java.nio.file.Files.createDirectories(streamDir)
-        Seq(8L, 9L).zipWithIndex.foreach { case (m, i) =>
-          val stage = tmp.resolve(s"stage$i")
-          all.filter(col("vec_id") % 10 === m).coalesce(1)
-            .write.parquet(stage.toString)
-          val part = stage.toFile.listFiles()
-            .filter(_.getName.endsWith(".parquet")).head
-          java.nio.file.Files.move(part.toPath,
-            streamDir.resolve(s"b$i.parquet"))
-          ()
-        }
         // the loop state keeps the RANKED edge list (src, rn, dst,
         // idot): each batch's insertNodes then re-scores only the
         // adjacency lists that batch touches (r16)
         var graph = graph0.localCheckpoint(true)
         var codes = base.localCheckpoint(true)
-        val ckpt = Streams.scratchCheckpointDir("graft-gis-ck")
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        try {
+        Streams.scratchCheckpointDir("graft-gis-") { tmp =>
+          val streamDir = tmp.resolve("in")
+          Fixtures.stageStreamInput(Seq(8L, 9L).map(m =>
+            all.filter(col("vec_id") % 10 === m)), streamDir)
           Streams.transformEachBatch(
             s.readStream.schema(all.schema)
               .option("maxFilesPerTrigger", 1)
@@ -448,10 +434,10 @@ object GraphAnnQueries extends QueryPack {
                 .localCheckpoint(true)
               codes = codes.unionByName(delta).localCheckpoint(true)
             },
-            ckpt.toString,
+            tmp.resolve("ck").toString,
             Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
             .awaitTermination()
-        } finally { rm(ckpt.toFile); rm(tmp.toFile) }
+        }
         val queries = all.filter(col("vec_id") % 100 === 0)
         val served = GraphAnn.beamServe(queries, graph, all,
           "vec_id", "code", EntryK, Beam, Steps, TopK)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.operators.{Similarity, TopK}
-import graft.queries.Fixtures.materializeAndDelete
+import graft.queries.Fixtures.scratchDir
 
 /** q31–q32, q39: similarity search over the embeddings table — exact
   * brute-force cosine top-k, the LSH-bucketed ANN variant, and
@@ -1167,16 +1167,16 @@ object SimilarityQueries extends QueryPack {
       (s, dir) => {
         val e = Tables.embeddings(s, dir)
           .select(col("vec_id"), vec(col("embedding")).as("embedding"))
-        val tmp = java.nio.file.Files.createTempDirectory("graft_ivf")
-        Similarity.insertIntoCells(e, "vec_id", "embedding", KmInit)
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(s"$tmp/index")
-        val index = s.read.parquet(s"$tmp/index")
-        val served = Similarity.annTopKIvf(
-          e.filter(col("vec_id") % 100 === 0), index,
-          "vec_id", "embedding", "cell", KmInit, 3, probes = 1)
-        materializeAndDelete(served, tmp)
-          .orderBy(col("query_id"), col("rn"))
+        scratchDir("graft_ivf") { tmp =>
+          Similarity.insertIntoCells(e, "vec_id", "embedding", KmInit)
+            .write.mode("overwrite").partitionBy("cell")
+            .parquet(s"$tmp/index")
+          val index = s.read.parquet(s"$tmp/index")
+          val served = Similarity.annTopKIvf(
+            e.filter(col("vec_id") % 100 === 0), index,
+            "vec_id", "embedding", "cell", KmInit, 3, probes = 1)
+          served
+        }.orderBy(col("query_id"), col("rn"))
       },
       {
         val cellSql = cellSqlFor("v")
@@ -1221,31 +1221,30 @@ object SimilarityQueries extends QueryPack {
         import graft.sources.TxLog
         val e = Tables.embeddings(s, dir)
           .select(col("vec_id"), vec(col("embedding")).as("embedding"))
-        val tmp = java.nio.file.Files.createTempDirectory("graft_annivm")
-        val t = s"$tmp/index"
-        TxLog.commit(Similarity.insertIntoCells(
-            e.filter(col("vec_id") % 10 < 8), "vec_id", "embedding",
-            KmInit), t, "overwrite", "vec_id")
-        TxLog.deleteWhere(s, t, col("vec_id") % 7 === 0)
-        TxLog.commit(Similarity.insertIntoCells(
-            e.filter(col("vec_id") % 10 === 8), "vec_id", "embedding",
-            KmInit), t, "append", "vec_id")
-        val live = e.filter(
-          (col("vec_id") % 10 < 8 && col("vec_id") % 7 =!= 0) ||
-            col("vec_id") % 10 === 8)
-        val q = e.filter(col("vec_id") % 100 === 0)
-        val sInc = Similarity.annTopKIvf(q, TxLog.read(s, t),
-            "vec_id", "embedding", "cell", KmInit, 3, probes = 1)
-          .select(col("query_id"), col("rn"),
-            col("neighbor_id").as("neighbor_inc"),
-            col("cosine").as("cos_inc"))
-        val sFull = ivfTop3(q, live, probes = 1)
-          .select(col("query_id"), col("rn"),
-            col("neighbor_id").as("neighbor_full"),
-            col("cosine").as("cos_full"))
-        materializeAndDelete(
-          sInc.join(sFull, Seq("query_id", "rn"), "full_outer"), tmp)
-          .orderBy(col("query_id"), col("rn"))
+        scratchDir("graft_annivm") { tmp =>
+          val t = s"$tmp/index"
+          TxLog.commit(Similarity.insertIntoCells(
+              e.filter(col("vec_id") % 10 < 8), "vec_id", "embedding",
+              KmInit), t, "overwrite", "vec_id")
+          TxLog.deleteWhere(s, t, col("vec_id") % 7 === 0)
+          TxLog.commit(Similarity.insertIntoCells(
+              e.filter(col("vec_id") % 10 === 8), "vec_id", "embedding",
+              KmInit), t, "append", "vec_id")
+          val live = e.filter(
+            (col("vec_id") % 10 < 8 && col("vec_id") % 7 =!= 0) ||
+              col("vec_id") % 10 === 8)
+          val q = e.filter(col("vec_id") % 100 === 0)
+          val sInc = Similarity.annTopKIvf(q, TxLog.read(s, t),
+              "vec_id", "embedding", "cell", KmInit, 3, probes = 1)
+            .select(col("query_id"), col("rn"),
+              col("neighbor_id").as("neighbor_inc"),
+              col("cosine").as("cos_inc"))
+          val sFull = ivfTop3(q, live, probes = 1)
+            .select(col("query_id"), col("rn"),
+              col("neighbor_id").as("neighbor_full"),
+              col("cosine").as("cos_full"))
+          sInc.join(sFull, Seq("query_id", "rn"), "full_outer")
+        }.orderBy(col("query_id"), col("rn"))
       },
       {
         val cellSql = cellSqlFor("v")
@@ -1621,11 +1620,7 @@ object SimilarityQueries extends QueryPack {
           StructField("cosine", DoubleType)))
         var out = s.createDataFrame(
           new java.util.ArrayList[org.apache.spark.sql.Row](), outSchema)
-        val ckpt = Streams.scratchCheckpointDir("graft-annserve-ck")
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        try {
+        Streams.scratchCheckpointDir("graft-annserve-ck") { ckpt =>
           Streams.transformEachBatch(
             qStream,
             batch => Similarity.annTopKIvf(batch, index, "vec_id",
@@ -1634,7 +1629,7 @@ object SimilarityQueries extends QueryPack {
             ckpt.toString,
             Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
             .awaitTermination()
-        } finally rm(ckpt.toFile)
+        }
         out.orderBy(col("query_id"), col("rn"))
       },
       {

@@ -23,7 +23,7 @@ import graft.sinks.{Alerts, CsvSink, JdbcUpsertSink}
   */
 object SinkQueries extends QueryPack {
 
-  import Fixtures.{materializeAndDrop, materializeAndDelete}
+  import Fixtures.{derby, scratchDir}
 
   def defs: Map[String, Q] = Map(
 
@@ -38,19 +38,19 @@ object SinkQueries extends QueryPack {
         import graft.sources.TxLog
         val docs = Tables.documents(s, dir)
           .select(col("doc_id"), col("source"), col("lang"))
-        val tmp = java.nio.file.Files.createTempDirectory("graft_txlog")
-        val t = s"$tmp/tbl"
-        TxLog.commit(docs.filter(col("doc_id") % 3 === 0), t,
-          "overwrite", "doc_id")
-        TxLog.commit(docs.filter(col("doc_id") % 3 === 1), t,
-          "append", "doc_id")
-        TxLog.commit(docs.filter(col("doc_id") % 3 === 2), t,
-          "overwrite", "doc_id")
-        val asOf1 = TxLog.read(s, t, Some(1L))
-          .withColumn("snap", lit("v1"))
-        val cur = TxLog.read(s, t).withColumn("snap", lit("current"))
-        materializeAndDelete(
-          asOf1.unionByName(cur).orderBy(col("snap"), col("doc_id")), tmp)
+        scratchDir("graft_txlog") { tmp =>
+          val t = s"$tmp/tbl"
+          TxLog.commit(docs.filter(col("doc_id") % 3 === 0), t,
+            "overwrite", "doc_id")
+          TxLog.commit(docs.filter(col("doc_id") % 3 === 1), t,
+            "append", "doc_id")
+          TxLog.commit(docs.filter(col("doc_id") % 3 === 2), t,
+            "overwrite", "doc_id")
+          val asOf1 = TxLog.read(s, t, Some(1L))
+            .withColumn("snap", lit("v1"))
+          val cur = TxLog.read(s, t).withColumn("snap", lit("current"))
+          asOf1.unionByName(cur).orderBy(col("snap"), col("doc_id"))
+        }
       },
       Some("""SELECT doc_id, source, lang, snap FROM (
         |  SELECT doc_id, source, lang, 'v1' AS snap
@@ -71,13 +71,13 @@ object SinkQueries extends QueryPack {
         import graft.sources.TxLog
         val docs = Tables.documents(s, dir)
           .select(col("doc_id"), col("source"), col("lang"))
-        val tmp = java.nio.file.Files.createTempDirectory("graft_txprune")
-        val t = s"$tmp/tbl"
-        TxLog.commit(docs.repartitionByRange(4, col("doc_id")), t,
-          "overwrite", "doc_id")
-        materializeAndDelete(
+        scratchDir("graft_txprune") { tmp =>
+          val t = s"$tmp/tbl"
+          TxLog.commit(docs.repartitionByRange(4, col("doc_id")), t,
+            "overwrite", "doc_id")
           TxLog.prunedRead(s, t, Seq(("doc_id", 100L, 300L)))._1
-            .orderBy(col("doc_id")), tmp)
+            .orderBy(col("doc_id"))
+        }
       },
       Some("""SELECT doc_id, source, lang FROM documents
         |WHERE doc_id BETWEEN 100 AND 300
@@ -95,20 +95,20 @@ object SinkQueries extends QueryPack {
         import graft.sources.TxLog
         val docs = Tables.documents(s, dir)
           .select(col("doc_id"), col("source"), col("lang"))
-        val tmp = java.nio.file.Files.createTempDirectory("graft_txcomp")
-        val t = s"$tmp/tbl"
-        (0 until 10).foreach { i =>
-          TxLog.commit(docs.filter(col("doc_id") % 10 === i), t,
-            if (i == 0) "overwrite" else "append", "doc_id")
-        }
-        val v = TxLog.compact(s, t, "doc_id", targetFiles = 2)
-        val compacted = TxLog.read(s, t, Some(v))
-          .withColumn("snap", lit("compacted"))
-        val before = TxLog.read(s, t, Some(v - 1))
-          .withColumn("snap", lit("before"))
-        materializeAndDelete(
+        scratchDir("graft_txcomp") { tmp =>
+          val t = s"$tmp/tbl"
+          (0 until 10).foreach { i =>
+            TxLog.commit(docs.filter(col("doc_id") % 10 === i), t,
+              if (i == 0) "overwrite" else "append", "doc_id")
+          }
+          val v = TxLog.compact(s, t, "doc_id", targetFiles = 2)
+          val compacted = TxLog.read(s, t, Some(v))
+            .withColumn("snap", lit("compacted"))
+          val before = TxLog.read(s, t, Some(v - 1))
+            .withColumn("snap", lit("before"))
           compacted.unionByName(before)
-            .orderBy(col("snap"), col("doc_id")), tmp)
+            .orderBy(col("snap"), col("doc_id"))
+        }
       },
       Some("""SELECT doc_id, source, lang, snap FROM (
         |  SELECT doc_id, source, lang, 'compacted' AS snap FROM documents
@@ -126,27 +126,22 @@ object SinkQueries extends QueryPack {
     "q233_txlog_stream_ingest" -> Q(
       (s, dir) => {
         import graft.sources.TxLog
-        val tmp = java.nio.file.Files.createTempDirectory("graft_txstream")
-        val t = s"$tmp/tbl"
-        val ckpt = graft.streaming.Streams
-          .scratchCheckpointDir("graft-txingest-ck")
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
+        scratchDir("graft_txstream") { tmp =>
+          val t = s"$tmp/tbl"
+          graft.streaming.Streams.scratchCheckpointDir("graft-txingest-ck") { ckpt =>
+            graft.streaming.Streams.transformEachBatch(
+              Tables.stream(s, dir, "documents")
+                .select(col("doc_id"), col("source"), col("lang")),
+              identity,
+              batch => { TxLog.commit(batch, t,
+                if (TxLog.versions(t).isEmpty) "overwrite" else "append",
+                "doc_id"); () },
+              ckpt.toString,
+              Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
+              .awaitTermination()
+          }
+          TxLog.read(s, t).orderBy(col("doc_id"))
         }
-        try {
-          graft.streaming.Streams.transformEachBatch(
-            Tables.stream(s, dir, "documents")
-              .select(col("doc_id"), col("source"), col("lang")),
-            identity,
-            batch => { TxLog.commit(batch, t,
-              if (TxLog.versions(t).isEmpty) "overwrite" else "append",
-              "doc_id"); () },
-            ckpt.toString,
-            Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-            .awaitTermination()
-        } finally rm(ckpt.toFile)
-        materializeAndDelete(
-          TxLog.read(s, t).orderBy(col("doc_id")), tmp)
       },
       Some("""SELECT doc_id, source, lang FROM documents
         |ORDER BY doc_id""".stripMargin)),
@@ -160,15 +155,15 @@ object SinkQueries extends QueryPack {
         import graft.sources.TxLog
         val docs = Tables.documents(s, dir)
           .select(col("doc_id"), col("source"), col("lang"))
-        val tmp = java.nio.file.Files.createTempDirectory("graft_txinc")
-        val t = s"$tmp/tbl"
-        (0 until 3).foreach { i =>
-          TxLog.commit(docs.filter(col("doc_id") % 3 === i), t,
-            if (i == 0) "overwrite" else "append", "doc_id")
-        }
-        materializeAndDelete(
+        scratchDir("graft_txinc") { tmp =>
+          val t = s"$tmp/tbl"
+          (0 until 3).foreach { i =>
+            TxLog.commit(docs.filter(col("doc_id") % 3 === i), t,
+              if (i == 0) "overwrite" else "append", "doc_id")
+          }
           TxLog.incrementalRead(s, t, sinceVersion = 0L,
-            untilVersion = 2L).orderBy(col("doc_id")), tmp)
+            untilVersion = 2L).orderBy(col("doc_id"))
+        }
       },
       Some("""SELECT doc_id, source, lang FROM documents
         |WHERE doc_id % 3 IN (1, 2)
@@ -184,31 +179,31 @@ object SinkQueries extends QueryPack {
       (s, dir) => {
         import graft.sources.TxLog
         val c = Tables.customer(s, dir)
-        val tmp = java.nio.file.Files.createTempDirectory("graft_txmerge")
-        val t = s"$tmp/tbl"
-        TxLog.commit(
-          c.filter(col("c_custkey") % 7 =!= 0)
-            .select(col("c_custkey"), col("c_name"), col("c_acctbal")),
-          t, "overwrite", "c_custkey")
-        val deletes = c.filter(col("c_custkey") % 7 =!= 0)
-          .filter(col("c_custkey") % 5 === 0)
-          .select(col("c_custkey"), col("c_name"), col("c_acctbal"),
-            lit("D").as("op"))
-        val updates = c.filter(col("c_custkey") % 7 =!= 0)
-          .filter(col("c_custkey") % 11 === 0 && col("c_custkey") % 5 =!= 0)
-          .select(col("c_custkey"), col("c_name"),
-            (col("c_acctbal") + 10.0).as("c_acctbal"), lit("U").as("op"))
-        val inserts = c.filter(col("c_custkey") % 7 === 0)
-          .filter(col("c_custkey") % 5 =!= 0)
-          .select(col("c_custkey"), col("c_name"),
-            when(col("c_custkey") % 11 === 0, col("c_acctbal") + 10.0)
-              .otherwise(col("c_acctbal")).as("c_acctbal"),
-            lit("I").as("op"))
-        TxLog.merge(s, t, deletes.union(updates).union(inserts),
-          Seq("c_custkey"), Seq("c_name", "c_acctbal"), "op",
-          "c_custkey")
-        materializeAndDelete(
-          TxLog.read(s, t).orderBy(col("c_custkey")), tmp)
+        scratchDir("graft_txmerge") { tmp =>
+          val t = s"$tmp/tbl"
+          TxLog.commit(
+            c.filter(col("c_custkey") % 7 =!= 0)
+              .select(col("c_custkey"), col("c_name"), col("c_acctbal")),
+            t, "overwrite", "c_custkey")
+          val deletes = c.filter(col("c_custkey") % 7 =!= 0)
+            .filter(col("c_custkey") % 5 === 0)
+            .select(col("c_custkey"), col("c_name"), col("c_acctbal"),
+              lit("D").as("op"))
+          val updates = c.filter(col("c_custkey") % 7 =!= 0)
+            .filter(col("c_custkey") % 11 === 0 && col("c_custkey") % 5 =!= 0)
+            .select(col("c_custkey"), col("c_name"),
+              (col("c_acctbal") + 10.0).as("c_acctbal"), lit("U").as("op"))
+          val inserts = c.filter(col("c_custkey") % 7 === 0)
+            .filter(col("c_custkey") % 5 =!= 0)
+            .select(col("c_custkey"), col("c_name"),
+              when(col("c_custkey") % 11 === 0, col("c_acctbal") + 10.0)
+                .otherwise(col("c_acctbal")).as("c_acctbal"),
+              lit("I").as("op"))
+          TxLog.merge(s, t, deletes.union(updates).union(inserts),
+            Seq("c_custkey"), Seq("c_name", "c_acctbal"), "op",
+            "c_custkey")
+          TxLog.read(s, t).orderBy(col("c_custkey"))
+        }
       },
       Some("""SELECT c_custkey, c_name,
         |  CASE WHEN c_custkey % 11 = 0 THEN c_acctbal + 10.0
@@ -232,18 +227,18 @@ object SinkQueries extends QueryPack {
         import graft.sources.TxLog
         val docs = Tables.documents(s, dir)
           .select(col("doc_id"), col("source"), col("lang"))
-        val tmp = java.nio.file.Files.createTempDirectory("graft_dv")
-        val t = s"$tmp/tbl"
-        TxLog.commit(docs.repartitionByRange(4, col("doc_id")), t,
-          "overwrite", "doc_id")
-        TxLog.deleteWhere(s, t,
-          col("lang") === "en" && col("doc_id") % 7 === 0)
-        TxLog.deleteWhere(s, t, col("doc_id") % 5 === 1)
-        val v1 = TxLog.read(s, t, Some(1L))
-          .withColumn("snap", lit("after_first"))
-        val cur = TxLog.read(s, t).withColumn("snap", lit("current"))
-        materializeAndDelete(
-          v1.unionByName(cur).orderBy(col("snap"), col("doc_id")), tmp)
+        scratchDir("graft_dv") { tmp =>
+          val t = s"$tmp/tbl"
+          TxLog.commit(docs.repartitionByRange(4, col("doc_id")), t,
+            "overwrite", "doc_id")
+          TxLog.deleteWhere(s, t,
+            col("lang") === "en" && col("doc_id") % 7 === 0)
+          TxLog.deleteWhere(s, t, col("doc_id") % 5 === 1)
+          val v1 = TxLog.read(s, t, Some(1L))
+            .withColumn("snap", lit("after_first"))
+          val cur = TxLog.read(s, t).withColumn("snap", lit("current"))
+          v1.unionByName(cur).orderBy(col("snap"), col("doc_id"))
+        }
       },
       Some("""SELECT doc_id, source, lang, 'after_first' AS snap
         |FROM documents
@@ -268,24 +263,24 @@ object SinkQueries extends QueryPack {
         import graft.sources.TxLog
         val docs = Tables.documents(s, dir)
           .select(col("doc_id"), col("source"), col("lang"))
-        val tmp = java.nio.file.Files.createTempDirectory("graft_occ")
-        val t = s"$tmp/tbl"
-        TxLog.commit(docs.filter(col("doc_id") % 3 === 0), t,
-          "overwrite", "doc_id")
-        val a = docs.filter(col("doc_id") % 3 === 1)
-        val b = docs.filter(col("doc_id") % 3 === 2)
-        val bRes = TxLog.commitIf(b, t, "append", "doc_id", 0L, "writerB")
-        val aStale = TxLog.commitIf(a, t, "append", "doc_id", 0L, "writerA")
-        val aRetry = aStale match {
-          case Left(latest) =>
-            TxLog.commitIf(a, t, "append", "doc_id", latest, "writerA")
-          case r => r
+        scratchDir("graft_occ") { tmp =>
+          val t = s"$tmp/tbl"
+          TxLog.commit(docs.filter(col("doc_id") % 3 === 0), t,
+            "overwrite", "doc_id")
+          val a = docs.filter(col("doc_id") % 3 === 1)
+          val b = docs.filter(col("doc_id") % 3 === 2)
+          val bRes = TxLog.commitIf(b, t, "append", "doc_id", 0L, "writerB")
+          val aStale = TxLog.commitIf(a, t, "append", "doc_id", 0L, "writerA")
+          val aRetry = aStale match {
+            case Left(latest) =>
+              TxLog.commitIf(a, t, "append", "doc_id", latest, "writerA")
+            case r => r
+          }
+          require(bRes == Right(1L) && aStale == Left(1L) &&
+            aRetry == Right(2L),
+            s"OCC protocol violated: b=$bRes aStale=$aStale aRetry=$aRetry")
+          TxLog.read(s, t).orderBy(col("doc_id"))
         }
-        require(bRes == Right(1L) && aStale == Left(1L) &&
-          aRetry == Right(2L),
-          s"OCC protocol violated: b=$bRes aStale=$aStale aRetry=$aRetry")
-        materializeAndDelete(
-          TxLog.read(s, t).orderBy(col("doc_id")), tmp)
       },
       Some("""SELECT doc_id, source, lang FROM documents
         |ORDER BY doc_id""".stripMargin)),
@@ -297,25 +292,24 @@ object SinkQueries extends QueryPack {
           .agg(count(lit(1)).as("n_cust"),
             sum(col("c_acctbal").cast(DecimalType(18, 2)))
               .cast(DecimalType(28, 2)).as("total_bal"))
-        val url = s"jdbc:derby:memory:roundtrip${System.nanoTime()};create=true"
-        val conn = DriverManager.getConnection(url)
-        try conn.createStatement().executeUpdate(
-          "CREATE TABLE nation_stats (nk INT PRIMARY KEY, n_cust BIGINT, " +
-            "total_bal DECIMAL(28,2))")
-        finally conn.close()
-        // coalesce(1): a 25-row frame needs one connection, not one
-        // per shuffle partition (the sink's own guidance)
-        val once = derived.coalesce(1)
-        JdbcUpsertSink.write(once, url, "nation_stats", Seq("nk"),
-          JdbcUpsertSink.DerbyMerge)
-        JdbcUpsertSink.write(once, url, "nation_stats", Seq("nk"),
-          JdbcUpsertSink.DerbyMerge) // replay: merge must be a no-op
-        materializeAndDrop(
+        derby("roundtrip") { url =>
+          val conn = DriverManager.getConnection(url)
+          try conn.createStatement().executeUpdate(
+            "CREATE TABLE nation_stats (nk INT PRIMARY KEY, n_cust BIGINT, " +
+              "total_bal DECIMAL(28,2))")
+          finally conn.close()
+          // coalesce(1): a 25-row frame needs one connection, not one
+          // per shuffle partition (the sink's own guidance)
+          val once = derived.coalesce(1)
+          JdbcUpsertSink.write(once, url, "nation_stats", Seq("nk"),
+            JdbcUpsertSink.DerbyMerge)
+          JdbcUpsertSink.write(once, url, "nation_stats", Seq("nk"),
+            JdbcUpsertSink.DerbyMerge) // replay: merge must be a no-op
           s.read.format("jdbc").option("url", url)
             .option("dbtable", "nation_stats").load()
             .select(col("NK").as("nk"), col("N_CUST").as("n_cust"),
-              col("TOTAL_BAL").cast("double").as("total_bal")), url)
-          .orderBy(col("nk"))
+              col("TOTAL_BAL").cast("double").as("total_bal"))
+        }.orderBy(col("nk"))
       },
       Some("""SELECT CAST(c_nationkey AS INT) AS nk, count(*) AS n_cust,
         |  CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_bal
@@ -335,14 +329,13 @@ object SinkQueries extends QueryPack {
           .groupBy(col("r_name"))
           .agg(count(lit(1)).as("n_nations"),
             min(col("n_name")).as("first_nation"))
-        val tmp = java.nio.file.Files.createTempDirectory("graft_csv")
-        CsvSink.write(derived, s"$tmp/out", header = true,
-          singleFile = true)
-        materializeAndDelete(
+        scratchDir("graft_csv") { tmp =>
+          CsvSink.write(derived, s"$tmp/out", header = true,
+            singleFile = true)
           s.read.option("header", "true")
             .schema("r_name STRING, n_nations BIGINT, first_nation STRING")
-            .csv(s"$tmp/out"), tmp)
-          .orderBy(col("r_name"))
+            .csv(s"$tmp/out")
+        }.orderBy(col("r_name"))
       },
       Some("""SELECT r_name, count(*) AS n_nations, min(n_name) AS first_nation
         |FROM nation JOIN region ON n_regionkey = r_regionkey
@@ -365,22 +358,21 @@ object SinkQueries extends QueryPack {
     "q310_partition_evolution" -> Q(
       (s, dir) => {
         import graft.sources.TxLog
-        val tmp = java.nio.file.Files.createTempDirectory("graft_pevo")
-        val base = Tables.events(s, dir).select(col("event_id"),
-          to_date(col("ts")).cast("string").as("day"),
-          col("event_type"), col("value"))
-        TxLog.commitPartitioned(
-          base.filter(col("day") < "2024-01-16").repartition(2),
-          tmp.toString, "append", "event_id", Seq("day"))
-        TxLog.commitPartitioned(
-          base.filter(col("day") >= "2024-01-16").repartition(2),
-          tmp.toString, "append", "event_id", Seq("day", "event_type"))
-        val (got, _, _) = TxLog.readEvolved(s, tmp.toString,
-          Map("day" -> "2024-01-20", "event_type" -> "click"))
-        materializeAndDelete(
+        scratchDir("graft_pevo") { tmp =>
+          val base = Tables.events(s, dir).select(col("event_id"),
+            to_date(col("ts")).cast("string").as("day"),
+            col("event_type"), col("value"))
+          TxLog.commitPartitioned(
+            base.filter(col("day") < "2024-01-16").repartition(2),
+            tmp.toString, "append", "event_id", Seq("day"))
+          TxLog.commitPartitioned(
+            base.filter(col("day") >= "2024-01-16").repartition(2),
+            tmp.toString, "append", "event_id", Seq("day", "event_type"))
+          val (got, _, _) = TxLog.readEvolved(s, tmp.toString,
+            Map("day" -> "2024-01-20", "event_type" -> "click"))
           got.select(col("event_id"), col("day"), col("event_type"),
-            col("value")),
-          tmp).orderBy(col("event_id"))
+            col("value"))
+        }.orderBy(col("event_id"))
       },
       Some("""SELECT event_id,
         |  CAST(CAST(ts AS DATE) AS VARCHAR) AS day,
@@ -400,30 +392,29 @@ object SinkQueries extends QueryPack {
     "q312_bloom_point_lookup" -> Q(
       (s, dir) => {
         import graft.sources.TxLog
-        val tmp = java.nio.file.Files.createTempDirectory("graft_bloom")
-        val ev = Tables.events(s, dir)
-          .filter(col("event_id") % 5 === 0)
-          .select(col("event_id"), col("event_type"), col("value"))
-        val (bits, hashes) = (16128, 3) // 63·256 bits ≈ 64 bits/key here
-        TxLog.commitWithBloom(
-          ev.filter(col("event_id") % 2 === 0)
-            .repartition(4, col("event_id")),
-          tmp.toString, "append", "event_id", bits, hashes)
-        TxLog.commitWithBloom(
-          ev.filter(col("event_id") % 2 === 1)
-            .repartition(4, col("event_id")),
-          tmp.toString, "append", "event_id", bits, hashes)
-        val probes = Seq(100L, 205L, 1010L, 2005L, 7L)
-        val frames = probes.map { k =>
-          val (got, _, _) = TxLog.pointLookupBloom(
-            s, tmp.toString, "event_id", k, bits, hashes)
-          got.withColumn("probe_key", lit(k))
-        }
-        materializeAndDelete(
+        scratchDir("graft_bloom") { tmp =>
+          val ev = Tables.events(s, dir)
+            .filter(col("event_id") % 5 === 0)
+            .select(col("event_id"), col("event_type"), col("value"))
+          val (bits, hashes) = (16128, 3) // 63·256 bits ≈ 64 bits/key here
+          TxLog.commitWithBloom(
+            ev.filter(col("event_id") % 2 === 0)
+              .repartition(4, col("event_id")),
+            tmp.toString, "append", "event_id", bits, hashes)
+          TxLog.commitWithBloom(
+            ev.filter(col("event_id") % 2 === 1)
+              .repartition(4, col("event_id")),
+            tmp.toString, "append", "event_id", bits, hashes)
+          val probes = Seq(100L, 205L, 1010L, 2005L, 7L)
+          val frames = probes.map { k =>
+            val (got, _, _) = TxLog.pointLookupBloom(
+              s, tmp.toString, "event_id", k, bits, hashes)
+            got.withColumn("probe_key", lit(k))
+          }
           frames.reduce(_.unionByName(_))
             .select(col("probe_key"), col("event_id"),
-              col("event_type"), col("value")),
-          tmp).orderBy(col("probe_key"))
+              col("event_type"), col("value"))
+        }.orderBy(col("probe_key"))
       },
       Some("""SELECT CAST(p.k AS BIGINT) AS probe_key,
         |  event_id, event_type, value
@@ -443,21 +434,21 @@ object SinkQueries extends QueryPack {
         import graft.sources.TxLog
         val docs = Tables.documents(s, dir)
           .select(col("doc_id"), col("source"), col("lang"))
-        val tmp = java.nio.file.Files.createTempDirectory("graft_clone")
-        val src = s"$tmp/src"
-        val dst = s"$tmp/fork"
-        TxLog.commit(docs.filter(col("doc_id") % 3 === 0), src,
-          "overwrite", "doc_id")
-        TxLog.commit(docs.filter(col("doc_id") % 3 === 1), src,
-          "append", "doc_id")
-        TxLog.shallowClone(s, src, dst, asOf = Some(0L))
-        TxLog.commit(docs.filter(col("doc_id") % 3 === 2), dst,
-          "append", "doc_id")
-        val fork = TxLog.read(s, dst).withColumn("snap", lit("fork"))
-        val source = TxLog.read(s, src).withColumn("snap", lit("src"))
-        materializeAndDelete(
+        scratchDir("graft_clone") { tmp =>
+          val src = s"$tmp/src"
+          val dst = s"$tmp/fork"
+          TxLog.commit(docs.filter(col("doc_id") % 3 === 0), src,
+            "overwrite", "doc_id")
+          TxLog.commit(docs.filter(col("doc_id") % 3 === 1), src,
+            "append", "doc_id")
+          TxLog.shallowClone(s, src, dst, asOf = Some(0L))
+          TxLog.commit(docs.filter(col("doc_id") % 3 === 2), dst,
+            "append", "doc_id")
+          val fork = TxLog.read(s, dst).withColumn("snap", lit("fork"))
+          val source = TxLog.read(s, src).withColumn("snap", lit("src"))
           fork.unionByName(source)
-            .orderBy(col("snap"), col("doc_id")), tmp)
+            .orderBy(col("snap"), col("doc_id"))
+        }
       },
       Some("""SELECT doc_id, source, lang, snap FROM (
         |  SELECT doc_id, source, lang, 'fork' AS snap
@@ -474,11 +465,11 @@ object SinkQueries extends QueryPack {
             col("o_orderstatus"), col("o_totalprice"),
             col("o_orderpriority"),
             to_date(col("o_orderdate")).as("o_day"))
-        val tmp = java.nio.file.Files.createTempDirectory("graft_orc")
-        src.write.mode("overwrite").option("compression", "zstd")
-          .orc(s"$tmp/out")
-        materializeAndDelete(s.read.orc(s"$tmp/out"), tmp)
-          .orderBy(col("o_orderkey"))
+        scratchDir("graft_orc") { tmp =>
+          src.write.mode("overwrite").option("compression", "zstd")
+            .orc(s"$tmp/out")
+          s.read.orc(s"$tmp/out")
+        }.orderBy(col("o_orderkey"))
       },
       Some("""SELECT o_orderkey, o_custkey, o_orderstatus,
         |  o_totalprice, o_orderpriority,
@@ -499,13 +490,12 @@ object SinkQueries extends QueryPack {
             Tables.documents(s, dir).select(col("doc_id"), col("source")),
             "doc_id", "v1", Seq(("train", 8), ("val", 1), ("test", 1)))
           .select(col("doc_id"), col("source"), col("split"))
-        val tmp = java.nio.file.Files.createTempDirectory("graft_part")
-        docs.write.mode("overwrite").partitionBy("split")
-          .parquet(s"$tmp/corpus")
-        materializeAndDelete(
+        scratchDir("graft_part") { tmp =>
+          docs.write.mode("overwrite").partitionBy("split")
+            .parquet(s"$tmp/corpus")
           s.read.parquet(s"$tmp/corpus")
-            .select(col("doc_id"), col("source"), col("split")), tmp)
-          .orderBy(col("doc_id"))
+            .select(col("doc_id"), col("source"), col("split"))
+        }.orderBy(col("doc_id"))
       },
       Some("""SELECT doc_id, source,
         |  CASE WHEN bucket < 8 THEN 'train' WHEN bucket < 9 THEN 'val'
@@ -524,18 +514,17 @@ object SinkQueries extends QueryPack {
     "q178_schema_evolution" -> Q(
       (s, dir) => {
         val docs = Tables.documents(s, dir)
-        val tmp = java.nio.file.Files.createTempDirectory("graft_se")
-        docs.filter(col("doc_id") % 2 === 0)
-          .select(col("doc_id"), col("n_chars"))
-          .write.parquet(s"$tmp/gen/v1")
-        docs.filter(col("doc_id") % 2 === 1)
-          .select(col("doc_id"), col("n_chars"), col("lang"))
-          .write.parquet(s"$tmp/gen/v2")
-        materializeAndDelete(
+        scratchDir("graft_se") { tmp =>
+          docs.filter(col("doc_id") % 2 === 0)
+            .select(col("doc_id"), col("n_chars"))
+            .write.parquet(s"$tmp/gen/v1")
+          docs.filter(col("doc_id") % 2 === 1)
+            .select(col("doc_id"), col("n_chars"), col("lang"))
+            .write.parquet(s"$tmp/gen/v2")
           s.read.option("mergeSchema", "true")
             .parquet(s"$tmp/gen/v1", s"$tmp/gen/v2")
-            .select(col("doc_id"), col("n_chars"), col("lang")), tmp)
-          .orderBy(col("doc_id"))
+            .select(col("doc_id"), col("n_chars"), col("lang"))
+        }.orderBy(col("doc_id"))
       },
       Some("""SELECT doc_id, n_chars, CAST(NULL AS VARCHAR) AS lang
         |FROM documents WHERE doc_id % 2 = 0
@@ -552,13 +541,12 @@ object SinkQueries extends QueryPack {
       (s, dir) => {
         val docs = Tables.documents(s, dir)
           .select(col("doc_id"), col("n_chars"), col("lang"))
-        val tmp = java.nio.file.Files.createTempDirectory("graft_prune")
-        docs.write.partitionBy("lang").parquet(s"$tmp/corpus")
-        materializeAndDelete(
+        scratchDir("graft_prune") { tmp =>
+          docs.write.partitionBy("lang").parquet(s"$tmp/corpus")
           s.read.parquet(s"$tmp/corpus")
             .filter(col("lang") === "en")
-            .select(col("doc_id"), col("n_chars")), tmp)
-          .orderBy(col("doc_id"))
+            .select(col("doc_id"), col("n_chars"))
+        }.orderBy(col("doc_id"))
       },
       Some("""SELECT doc_id, n_chars FROM documents
         |WHERE lang = 'en'
@@ -574,13 +562,12 @@ object SinkQueries extends QueryPack {
       (s, dir) => {
         val docs = Tables.documents(s, dir)
           .select(col("doc_id"), col("source"), col("n_chars"))
-        val tmp = java.nio.file.Files.createTempDirectory("graft_mrpf")
-        docs.repartition(1).write.option("maxRecordsPerFile", 100)
-          .parquet(s"$tmp/c")
-        materializeAndDelete(
+        scratchDir("graft_mrpf") { tmp =>
+          docs.repartition(1).write.option("maxRecordsPerFile", 100)
+            .parquet(s"$tmp/c")
           s.read.parquet(s"$tmp/c")
-            .select(col("doc_id"), col("source"), col("n_chars")), tmp)
-          .orderBy(col("doc_id"))
+            .select(col("doc_id"), col("source"), col("n_chars"))
+        }.orderBy(col("doc_id"))
       },
       Some("""SELECT doc_id, source, n_chars FROM documents
         |ORDER BY doc_id""".stripMargin)),
@@ -595,14 +582,13 @@ object SinkQueries extends QueryPack {
       (s, dir) => {
         val docs = Tables.documents(s, dir)
           .select(col("doc_id"), col("n_chars"))
-        val tmp = java.nio.file.Files.createTempDirectory("graft_range")
-        docs.repartitionByRange(4, col("n_chars"), col("doc_id"))
-          .sortWithinPartitions(col("n_chars"), col("doc_id"))
-          .write.parquet(s"$tmp/c")
-        materializeAndDelete(
+        scratchDir("graft_range") { tmp =>
+          docs.repartitionByRange(4, col("n_chars"), col("doc_id"))
+            .sortWithinPartitions(col("n_chars"), col("doc_id"))
+            .write.parquet(s"$tmp/c")
           s.read.parquet(s"$tmp/c")
-            .select(col("doc_id"), col("n_chars")), tmp)
-          .orderBy(col("doc_id"))
+            .select(col("doc_id"), col("n_chars"))
+        }.orderBy(col("doc_id"))
       },
       Some("""SELECT doc_id, n_chars FROM documents
         |ORDER BY doc_id""".stripMargin)),
@@ -617,27 +603,26 @@ object SinkQueries extends QueryPack {
         val base = Tables.customer(s, dir)
           .groupBy((col("c_custkey") % 100).cast("int").as("nk"))
           .agg(count(lit(1)).as("cnt"))
-        val url = s"jdbc:derby:memory:k2rt${System.nanoTime()};create=true"
-        val conn = DriverManager.getConnection(url)
-        try conn.createStatement().executeUpdate(
-          "CREATE TABLE seen (nk INT PRIMARY KEY, n BIGINT, src VARCHAR(10))")
-        finally conn.close()
-        val batch1 = base.filter(col("nk") % 3 === 0)
-          .select(col("nk"), col("cnt").as("n"), lit("first").as("src"))
-          .coalesce(1)
-        val batch2 = base
-          .select(col("nk"), (col("cnt") * 2).as("n"), lit("second").as("src"))
-          .coalesce(1)
-        JdbcUpsertSink.write(batch1, url, "seen", Seq("nk"),
-          JdbcUpsertSink.DerbyMerge, updateColsOpt = Some(Seq.empty))
-        JdbcUpsertSink.write(batch2, url, "seen", Seq("nk"),
-          JdbcUpsertSink.DerbyMerge, updateColsOpt = Some(Seq.empty))
-        materializeAndDrop(
+        derby("k2rt") { url =>
+          val conn = DriverManager.getConnection(url)
+          try conn.createStatement().executeUpdate(
+            "CREATE TABLE seen (nk INT PRIMARY KEY, n BIGINT, src VARCHAR(10))")
+          finally conn.close()
+          val batch1 = base.filter(col("nk") % 3 === 0)
+            .select(col("nk"), col("cnt").as("n"), lit("first").as("src"))
+            .coalesce(1)
+          val batch2 = base
+            .select(col("nk"), (col("cnt") * 2).as("n"), lit("second").as("src"))
+            .coalesce(1)
+          JdbcUpsertSink.write(batch1, url, "seen", Seq("nk"),
+            JdbcUpsertSink.DerbyMerge, updateColsOpt = Some(Seq.empty))
+          JdbcUpsertSink.write(batch2, url, "seen", Seq("nk"),
+            JdbcUpsertSink.DerbyMerge, updateColsOpt = Some(Seq.empty))
           s.read.format("jdbc").option("url", url)
             .option("dbtable", "seen").load()
             .select(col("NK").as("nk"), col("N").as("n"),
-              col("SRC").as("src")), url)
-          .orderBy(col("nk"))
+              col("SRC").as("src"))
+        }.orderBy(col("nk"))
       },
       Some("""WITH base AS (
         |  SELECT CAST(c_custkey % 100 AS INT) AS nk, count(*) AS cnt
@@ -656,28 +641,27 @@ object SinkQueries extends QueryPack {
         val base = Tables.customer(s, dir)
           .groupBy((col("c_custkey") % 100).cast("int").as("nk"))
           .agg(count(lit(1)).as("cnt"))
-        val url = s"jdbc:derby:memory:k4rt${System.nanoTime()};create=true"
-        val conn = DriverManager.getConnection(url)
-        try conn.createStatement().executeUpdate(
-          "CREATE TABLE tgt (nk INT PRIMARY KEY, v BIGINT, w VARCHAR(20))")
-        finally conn.close()
-        val batch1 = base
-          .select(col("nk"), col("cnt").as("v"), lit("orig").as("w"))
-          .coalesce(1)
-        val batch2 = base
-          .select(col("nk"), (col("cnt") * 10).as("v"),
-            lit("MUST_NOT_LAND").as("w"))
-          .coalesce(1)
-        JdbcUpsertSink.write(batch1, url, "tgt", Seq("nk"),
-          JdbcUpsertSink.DerbyMerge)
-        JdbcUpsertSink.write(batch2, url, "tgt", Seq("nk"),
-          JdbcUpsertSink.DerbyMerge, updateColsOpt = Some(Seq("v")))
-        materializeAndDrop(
+        derby("k4rt") { url =>
+          val conn = DriverManager.getConnection(url)
+          try conn.createStatement().executeUpdate(
+            "CREATE TABLE tgt (nk INT PRIMARY KEY, v BIGINT, w VARCHAR(20))")
+          finally conn.close()
+          val batch1 = base
+            .select(col("nk"), col("cnt").as("v"), lit("orig").as("w"))
+            .coalesce(1)
+          val batch2 = base
+            .select(col("nk"), (col("cnt") * 10).as("v"),
+              lit("MUST_NOT_LAND").as("w"))
+            .coalesce(1)
+          JdbcUpsertSink.write(batch1, url, "tgt", Seq("nk"),
+            JdbcUpsertSink.DerbyMerge)
+          JdbcUpsertSink.write(batch2, url, "tgt", Seq("nk"),
+            JdbcUpsertSink.DerbyMerge, updateColsOpt = Some(Seq("v")))
           s.read.format("jdbc").option("url", url)
             .option("dbtable", "tgt").load()
             .select(col("NK").as("nk"), col("V").as("v"),
-              col("W").as("w")), url)
-          .orderBy(col("nk"))
+              col("W").as("w"))
+        }.orderBy(col("nk"))
       },
       Some("""WITH base AS (
         |  SELECT CAST(c_custkey % 100 AS INT) AS nk, count(*) AS cnt
@@ -697,28 +681,27 @@ object SinkQueries extends QueryPack {
         val base = Tables.customer(s, dir)
           .groupBy((col("c_custkey") % 100).cast("int").as("nk"))
           .agg(count(lit(1)).as("cnt"))
-        val url = s"jdbc:derby:memory:k3rt${System.nanoTime()};create=true"
-        val conn = DriverManager.getConnection(url)
-        try conn.createStatement().executeUpdate(
-          "CREATE TABLE fleet (nk INT PRIMARY KEY, v BIGINT, first_seen VARCHAR(10))")
-        finally conn.close()
-        val run1 = base.filter(col("nk") % 3 === 0)
-          .select(col("nk"), col("cnt").as("v"), lit("run-1").as("first_seen"))
-          .coalesce(1)
-        val run2 = base
-          .select(col("nk"), (col("cnt") * 5).as("v"),
-            lit("run-2").as("first_seen"))
-          .coalesce(1)
-        JdbcUpsertSink.write(run1, url, "fleet", Seq("nk"),
-          JdbcUpsertSink.DerbyMerge)
-        JdbcUpsertSink.write(run2, url, "fleet", Seq("nk"),
-          JdbcUpsertSink.DerbyMerge, updateColsOpt = Some(Seq("v")))
-        materializeAndDrop(
+        derby("k3rt") { url =>
+          val conn = DriverManager.getConnection(url)
+          try conn.createStatement().executeUpdate(
+            "CREATE TABLE fleet (nk INT PRIMARY KEY, v BIGINT, first_seen VARCHAR(10))")
+          finally conn.close()
+          val run1 = base.filter(col("nk") % 3 === 0)
+            .select(col("nk"), col("cnt").as("v"), lit("run-1").as("first_seen"))
+            .coalesce(1)
+          val run2 = base
+            .select(col("nk"), (col("cnt") * 5).as("v"),
+              lit("run-2").as("first_seen"))
+            .coalesce(1)
+          JdbcUpsertSink.write(run1, url, "fleet", Seq("nk"),
+            JdbcUpsertSink.DerbyMerge)
+          JdbcUpsertSink.write(run2, url, "fleet", Seq("nk"),
+            JdbcUpsertSink.DerbyMerge, updateColsOpt = Some(Seq("v")))
           s.read.format("jdbc").option("url", url)
             .option("dbtable", "fleet").load()
             .select(col("NK").as("nk"), col("V").as("v"),
-              col("FIRST_SEEN").as("first_seen")), url)
-          .orderBy(col("nk"))
+              col("FIRST_SEEN").as("first_seen"))
+        }.orderBy(col("nk"))
       },
       Some("""WITH base AS (
         |  SELECT CAST(c_custkey % 100 AS INT) AS nk, count(*) AS cnt
@@ -797,15 +780,14 @@ object SinkQueries extends QueryPack {
           .groupBy((col("o_custkey") % 50).cast("int").as("ck"))
           .agg(count(lit(1)).as("n_orders"),
             max(to_date(col("o_orderdate"))).as("last_date"))
-        val url = s"jdbc:derby:memory:s19rt${System.nanoTime()};create=true"
-        base.coalesce(1).write.mode("overwrite")
-          .jdbc(url, "snap", new java.util.Properties())
-        materializeAndDrop(
+        derby("s19rt") { url =>
+          base.coalesce(1).write.mode("overwrite")
+            .jdbc(url, "snap", new java.util.Properties())
           graft.sources.GoldSnapshot
             .readPartitioned(s, url, "snap", "CK", 0L, 49L, 4)
             .select(col("CK").as("ck"), col("N_ORDERS").as("n_orders"),
-              col("LAST_DATE").as("last_date")), url)
-          .orderBy(col("ck"))
+              col("LAST_DATE").as("last_date"))
+        }.orderBy(col("ck"))
       },
       Some("""SELECT CAST(o_custkey % 50 AS INT) AS ck,
         |  count(*) AS n_orders,
@@ -822,12 +804,11 @@ object SinkQueries extends QueryPack {
       (s, dir) => {
         val docs = Tables.documents(s, dir)
           .select(col("doc_id"), col("lang"), col("source"), col("text"))
-        val tmp = java.nio.file.Files.createTempDirectory("graft_jsonl")
-        docs.coalesce(1).write.mode("overwrite").json(s"$tmp/out")
-        materializeAndDelete(
+        scratchDir("graft_jsonl") { tmp =>
+          docs.coalesce(1).write.mode("overwrite").json(s"$tmp/out")
           s.read.schema("doc_id BIGINT, lang STRING, source STRING, text STRING")
-            .json(s"$tmp/out"), tmp)
-          .orderBy(col("doc_id"))
+            .json(s"$tmp/out")
+        }.orderBy(col("doc_id"))
       },
       Some("""SELECT doc_id, lang, source, text
         |FROM documents
@@ -880,19 +861,18 @@ object SinkQueries extends QueryPack {
       (s, dir) => {
         val ev = Tables.events(s, dir)
           .select(col("event_id"), col("event_type"), col("value"))
-        val tmp = java.nio.file.Files.createTempDirectory("graft_dpp")
-        ev.write.partitionBy("event_type").parquet(s"$tmp/facts")
-        val facts = s.read.parquet(s"$tmp/facts")
-        val dim = Tables.events(s, dir)
-          .groupBy(col("event_type")).agg(count(lit(1)).as("n_type"))
-          .filter(col("n_type") > 2000)
-        materializeAndDelete(
+        scratchDir("graft_dpp") { tmp =>
+          ev.write.partitionBy("event_type").parquet(s"$tmp/facts")
+          val facts = s.read.parquet(s"$tmp/facts")
+          val dim = Tables.events(s, dir)
+            .groupBy(col("event_type")).agg(count(lit(1)).as("n_type"))
+            .filter(col("n_type") > 2000)
           facts.join(dim, Seq("event_type"))
             .groupBy(col("event_type"), col("n_type"))
             .agg(count(lit(1)).as("n"),
               sum(col("value").cast("decimal(18,6)")).cast("double")
-                .as("sum_value")), tmp)
-          .orderBy(col("event_type"))
+                .as("sum_value"))
+        }.orderBy(col("event_type"))
       },
       Some("""WITH dim AS (
         |  SELECT event_type, count(*) AS n_type
@@ -915,25 +895,25 @@ object SinkQueries extends QueryPack {
     "q351_corpus_maintenance" -> Q(
       (s, dir) => {
         import graft.sources.TxLog
-        val tmp = java.nio.file.Files.createTempDirectory("graft_cm")
-        val t = s"$tmp/tbl"
-        val f = Tables.documents(s, dir).select(col("doc_id"),
-          md5(trim(lower(coalesce(col("text"), lit(""))))).as("fp"))
-        TxLog.commit(f.filter(col("doc_id") % 3 =!= 0), t,
-          "overwrite", "doc_id")
-        val batch = f.filter(col("doc_id") % 3 === 0)
-        val accepted = batch
-          .join(TxLog.read(s, t).select(col("fp")), Seq("fp"),
-            "left_anti")
-          .groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id"))
-          .select(col("doc_id"), col("fp"))
-        TxLog.commit(accepted, t, "append", "doc_id")
-        val nAfter = TxLog.read(s, t).count()
-        materializeAndDelete(
+        scratchDir("graft_cm") { tmp =>
+          val t = s"$tmp/tbl"
+          val f = Tables.documents(s, dir).select(col("doc_id"),
+            md5(trim(lower(coalesce(col("text"), lit(""))))).as("fp"))
+          TxLog.commit(f.filter(col("doc_id") % 3 =!= 0), t,
+            "overwrite", "doc_id")
+          val batch = f.filter(col("doc_id") % 3 === 0)
+          val accepted = batch
+            .join(TxLog.read(s, t).select(col("fp")), Seq("fp"),
+              "left_anti")
+            .groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id"))
+            .select(col("doc_id"), col("fp"))
+          TxLog.commit(accepted, t, "append", "doc_id")
+          val nAfter = TxLog.read(s, t).count()
           TxLog.incrementalRead(s, t, 0L, 1L)
             .select(col("doc_id"), col("fp"))
             .withColumn("corpus_n_after", lit(nAfter))
-            .orderBy(col("doc_id")), tmp)
+            .orderBy(col("doc_id"))
+        }
       },
       Some("""WITH f AS (
         |  SELECT doc_id, md5(trim(lower(coalesce(text, '')))) AS fp
@@ -957,21 +937,21 @@ object SinkQueries extends QueryPack {
       (s, dir) => {
         import graft.sources.TxLog
         import graft.operators.Search
-        val tmp = java.nio.file.Files.createTempDirectory("graft_ii")
-        val t = s"$tmp/idx"
-        val docs = Tables.documents(s, dir)
-        val tfAll = (d: org.apache.spark.sql.DataFrame) =>
-          Search.termFrequencies(d, "doc_id", "text")
-        TxLog.commit(tfAll(docs.filter(col("doc_id") % 3 =!= 0)), t,
-          "overwrite", "doc_id")
-        TxLog.commit(tfAll(docs.filter(col("doc_id") % 3 === 0)), t,
-          "append", "doc_id")
-        materializeAndDelete(
+        scratchDir("graft_ii") { tmp =>
+          val t = s"$tmp/idx"
+          val docs = Tables.documents(s, dir)
+          val tfAll = (d: org.apache.spark.sql.DataFrame) =>
+            Search.termFrequencies(d, "doc_id", "text")
+          TxLog.commit(tfAll(docs.filter(col("doc_id") % 3 =!= 0)), t,
+            "overwrite", "doc_id")
+          TxLog.commit(tfAll(docs.filter(col("doc_id") % 3 === 0)), t,
+            "append", "doc_id")
           TxLog.read(s, t)
             .groupBy(col("token"))
             .agg(count(lit(1)).as("df"),
               sum(col("tf")).as("total_tf"))
-            .orderBy(col("token")), tmp)
+            .orderBy(col("token"))
+        }
       },
       Some("""WITH t AS (
         |  SELECT doc_id,
@@ -1001,29 +981,29 @@ object SinkQueries extends QueryPack {
         def rollup(df: org.apache.spark.sql.DataFrame) =
           df.groupBy(col("source"))
             .agg(count(lit(1)).as("cnt"), sum(col("n_chars")).as("chars"))
-        val tmp = java.nio.file.Files.createTempDirectory("graft_ivm")
-        val t = s"$tmp/tbl"
-        val vBase = TxLog.commit(docs.filter(col("doc_id") % 10 < 5), t,
-          "overwrite", "doc_id")
-        val base = rollup(TxLog.read(s, t))
-        (5 until 10).foreach { i =>
-          TxLog.commit(docs.filter(col("doc_id") % 10 === i), t,
-            "append", "doc_id")
-        }
-        val latest = TxLog.versions(t).max
-        val delta = TxLog.incrementalRead(s, t, sinceVersion = vBase,
-          untilVersion = latest)
-        // the IVM step: additive merge of old state + delta rollup
-        val inc = base.unionByName(rollup(delta))
-          .groupBy(col("source"))
-          .agg(sum(col("cnt")).as("cnt_inc"),
-            sum(col("chars")).as("chars_inc"))
-        val full = rollup(TxLog.read(s, t, Some(latest)))
-          .select(col("source"), col("cnt").as("cnt_full"),
-            col("chars").as("chars_full"))
-        materializeAndDelete(
+        scratchDir("graft_ivm") { tmp =>
+          val t = s"$tmp/tbl"
+          val vBase = TxLog.commit(docs.filter(col("doc_id") % 10 < 5), t,
+            "overwrite", "doc_id")
+          val base = rollup(TxLog.read(s, t))
+          (5 until 10).foreach { i =>
+            TxLog.commit(docs.filter(col("doc_id") % 10 === i), t,
+              "append", "doc_id")
+          }
+          val latest = TxLog.versions(t).max
+          val delta = TxLog.incrementalRead(s, t, sinceVersion = vBase,
+            untilVersion = latest)
+          // the IVM step: additive merge of old state + delta rollup
+          val inc = base.unionByName(rollup(delta))
+            .groupBy(col("source"))
+            .agg(sum(col("cnt")).as("cnt_inc"),
+              sum(col("chars")).as("chars_inc"))
+          val full = rollup(TxLog.read(s, t, Some(latest)))
+            .select(col("source"), col("cnt").as("cnt_full"),
+              col("chars").as("chars_full"))
           inc.join(full, Seq("source"), "full_outer")
-            .orderBy(col("source")), tmp)
+            .orderBy(col("source"))
+        }
       },
       Some("""WITH r AS (SELECT source, count(*) AS cnt,
         |    CAST(sum(n_chars) AS BIGINT) AS chars
@@ -1053,27 +1033,26 @@ object SinkQueries extends QueryPack {
           Dedup.lshBuckets(
             Dedup.minhashSignaturesRow(d, "doc_id", "text", n = 1, k = 8),
             "doc_id", bands = 4, rowsPerBand = 2)
-        val tmp = java.nio.file.Files.createTempDirectory("graft_bandivm")
-        val t = s"$tmp/index"
-        TxLog.commit(bandsOf(docs.filter(col("doc_id") % 3 =!= 0)), t,
-          "overwrite", "doc_id")
-        TxLog.deleteWhere(s, t, col("doc_id") % 7 === 0)
-        TxLog.commit(bandsOf(docs.filter(col("doc_id") % 3 === 0)), t,
-          "append", "doc_id")
-        val inc = TxLog.read(s, t)
-          .groupBy(col("band"), col("sig"))
-          .agg(count(lit(1)).as("n_docs_inc"),
-            min(col("doc_id")).as("min_doc_inc"))
-        val live = docs.filter(
-          (col("doc_id") % 3 =!= 0 && col("doc_id") % 7 =!= 0) ||
-            col("doc_id") % 3 === 0)
-        val full = bandsOf(live)
-          .groupBy(col("band"), col("sig"))
-          .agg(count(lit(1)).as("n_docs_full"),
-            min(col("doc_id")).as("min_doc_full"))
-        materializeAndDelete(
-          inc.join(full, Seq("band", "sig"), "full_outer"), tmp)
-          .orderBy(col("band"), col("sig"))
+        scratchDir("graft_bandivm") { tmp =>
+          val t = s"$tmp/index"
+          TxLog.commit(bandsOf(docs.filter(col("doc_id") % 3 =!= 0)), t,
+            "overwrite", "doc_id")
+          TxLog.deleteWhere(s, t, col("doc_id") % 7 === 0)
+          TxLog.commit(bandsOf(docs.filter(col("doc_id") % 3 === 0)), t,
+            "append", "doc_id")
+          val inc = TxLog.read(s, t)
+            .groupBy(col("band"), col("sig"))
+            .agg(count(lit(1)).as("n_docs_inc"),
+              min(col("doc_id")).as("min_doc_inc"))
+          val live = docs.filter(
+            (col("doc_id") % 3 =!= 0 && col("doc_id") % 7 =!= 0) ||
+              col("doc_id") % 3 === 0)
+          val full = bandsOf(live)
+            .groupBy(col("band"), col("sig"))
+            .agg(count(lit(1)).as("n_docs_full"),
+              min(col("doc_id")).as("min_doc_full"))
+          inc.join(full, Seq("band", "sig"), "full_outer")
+        }.orderBy(col("band"), col("sig"))
       },
       {
         import graft.operators.Dedup
@@ -1122,26 +1101,25 @@ object SinkQueries extends QueryPack {
         val docs = Tables.documents(s, dir)
           .select(col("doc_id"), col("source"))
         val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-        val tmp = java.nio.file.Files.createTempDirectory("graft_bfp")
-        val t = s"$tmp/tbl"
-        (0 to 4).foreach { c =>
-          TxLog.commit(
-            docs.filter(graft.functions.FixedPoint.idiv(
-              col("doc_id") * 5L, lit(maxId + 1L)) === c.toLong),
-            t, if (c == 0) "overwrite" else "append", "doc_id")
-        }
-        val ranges = TxLog.changedKeyRanges(s, t, sinceVersion = 2L,
-          untilVersion = 4L)
-        val inRange = TxLog.read(s, t).select(col("doc_id"))
-          .join(broadcast(ranges),
-            col("doc_id").between(col("mn"), col("mx")))
-          .groupBy(col("version"))
-          .agg(count(lit(1)).as("rows_in_range"))
-        materializeAndDelete(
+        scratchDir("graft_bfp") { tmp =>
+          val t = s"$tmp/tbl"
+          (0 to 4).foreach { c =>
+            TxLog.commit(
+              docs.filter(graft.functions.FixedPoint.idiv(
+                col("doc_id") * 5L, lit(maxId + 1L)) === c.toLong),
+              t, if (c == 0) "overwrite" else "append", "doc_id")
+          }
+          val ranges = TxLog.changedKeyRanges(s, t, sinceVersion = 2L,
+            untilVersion = 4L)
+          val inRange = TxLog.read(s, t).select(col("doc_id"))
+            .join(broadcast(ranges),
+              col("doc_id").between(col("mn"), col("mx")))
+            .groupBy(col("version"))
+            .agg(count(lit(1)).as("rows_in_range"))
           ranges.join(inRange, Seq("version"))
             .select(col("version"), col("rows").as("n_rows"),
-              col("mn"), col("mx"), col("rows_in_range")), tmp)
-          .orderBy(col("version"))
+              col("mn"), col("mx"), col("rows_in_range"))
+        }.orderBy(col("version"))
       },
       Some("""WITH m AS (SELECT max(doc_id) AS top FROM documents),
         |c AS (SELECT doc_id, (doc_id * 5) // (top + 1) AS chunk
@@ -1166,44 +1144,43 @@ object SinkQueries extends QueryPack {
         import graft.sources.TxLog
         val docs = Tables.documents(s, dir)
           .select(col("doc_id"), col("source"), col("n_chars"))
-        val tmp = java.nio.file.Files.createTempDirectory("graft_vac")
-        val t = s"$tmp/tbl"
-        TxLog.commit(docs.filter(col("doc_id") % 2 === 0), t,
-          "overwrite", "doc_id")
-        TxLog.commit(docs.filter(col("doc_id") % 2 === 1), t,
-          "append", "doc_id")
-        // the lost optimistic commit: data written, log never
-        // published — invisible to readers, reclaimable by vacuum
-        // ONCE it has aged past the retention grace window (the
-        // Delta VACUUM pattern): age its files 8 days back so the
-        // default 7-day window classifies it as a true orphan.
-        docs.filter(col("doc_id") % 5 === 0).repartition(1)
-          .write.parquet(s"$t/data-v1-lostwriter")
-        val aged = System.currentTimeMillis() - 8L * 24 * 3600 * 1000
-        java.nio.file.Files.walk(java.nio.file.Paths.get(s"$t/data-v1-lostwriter"))
-          .forEach(p => { p.toFile.setLastModified(aged); () })
-        // an IN-FLIGHT writer: data written seconds ago, log publish
-        // pending — the retention window must SKIP it, or a racing
-        // vacuum corrupts the about-to-succeed commit.
-        docs.filter(col("doc_id") % 7 === 0).repartition(1)
-          .write.parquet(s"$t/data-v9-inflight")
-        val removed = TxLog.vacuum(s, t)
-        val rerun = TxLog.vacuum(s, t)
-        val inflightSurvived = java.nio.file.Files
-          .walk(java.nio.file.Paths.get(s"$t/data-v9-inflight"))
-          .filter(p => p.toString.endsWith(".parquet")).count()
-        val latest = TxLog.read(s, t)
-          .groupBy(col("source"))
-          .agg(count(lit(1)).as("cnt"), sum(col("n_chars")).as("chars"))
-        val v0 = TxLog.read(s, t, Some(0L))
-          .groupBy(col("source"))
-          .agg(count(lit(1)).as("cnt_v0"))
-        materializeAndDelete(
+        scratchDir("graft_vac") { tmp =>
+          val t = s"$tmp/tbl"
+          TxLog.commit(docs.filter(col("doc_id") % 2 === 0), t,
+            "overwrite", "doc_id")
+          TxLog.commit(docs.filter(col("doc_id") % 2 === 1), t,
+            "append", "doc_id")
+          // the lost optimistic commit: data written, log never
+          // published — invisible to readers, reclaimable by vacuum
+          // ONCE it has aged past the retention grace window (the
+          // Delta VACUUM pattern): age its files 8 days back so the
+          // default 7-day window classifies it as a true orphan.
+          docs.filter(col("doc_id") % 5 === 0).repartition(1)
+            .write.parquet(s"$t/data-v1-lostwriter")
+          val aged = System.currentTimeMillis() - 8L * 24 * 3600 * 1000
+          java.nio.file.Files.walk(java.nio.file.Paths.get(s"$t/data-v1-lostwriter"))
+            .forEach(p => { p.toFile.setLastModified(aged); () })
+          // an IN-FLIGHT writer: data written seconds ago, log publish
+          // pending — the retention window must SKIP it, or a racing
+          // vacuum corrupts the about-to-succeed commit.
+          docs.filter(col("doc_id") % 7 === 0).repartition(1)
+            .write.parquet(s"$t/data-v9-inflight")
+          val removed = TxLog.vacuum(s, t)
+          val rerun = TxLog.vacuum(s, t)
+          val inflightSurvived = java.nio.file.Files
+            .walk(java.nio.file.Paths.get(s"$t/data-v9-inflight"))
+            .filter(p => p.toString.endsWith(".parquet")).count()
+          val latest = TxLog.read(s, t)
+            .groupBy(col("source"))
+            .agg(count(lit(1)).as("cnt"), sum(col("n_chars")).as("chars"))
+          val v0 = TxLog.read(s, t, Some(0L))
+            .groupBy(col("source"))
+            .agg(count(lit(1)).as("cnt_v0"))
           latest.join(v0, Seq("source"), "full_outer")
             .withColumn("orphans_removed", lit(removed))
             .withColumn("orphans_rerun", lit(rerun))
-            .withColumn("inflight_survived", lit(inflightSurvived)), tmp)
-          .orderBy(col("source"))
+            .withColumn("inflight_survived", lit(inflightSurvived))
+        }.orderBy(col("source"))
       },
       Some("""WITH r AS (SELECT source, CAST(count(*) AS BIGINT) AS cnt,
         |    CAST(sum(n_chars) AS BIGINT) AS chars
@@ -1245,38 +1222,38 @@ object SinkQueries extends QueryPack {
         // quartile of each range) — the case clustering exists for
         val hi1 = hi1b / 4
         val hi2 = lo2b + (hi2b - lo2b) / 4
-        val tmp = java.nio.file.Files.createTempDirectory("graft_zord")
-        val t = s"$tmp/tbl"
-        val axes = Seq("doc_id", "n_chars")
-        val box = Seq(("doc_id", 0L, hi1), ("n_chars", 0L, hi2))
-        TxLog.commitClustered(docs, t, "overwrite", axes, col("doc_id"),
-          buckets = 16)
-        val (dfB, readB, prunedB, scanB) = TxLog.prunedRead(s, t, box)
-        def snap(df: org.apache.spark.sql.DataFrame) =
-          df.groupBy(col("source"))
-            .agg(count(lit(1)).as("cnt"), sum(col("n_chars")).as("chars"))
-        val aggB = snap(dfB).collect()
-          .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-        TxLog.compactClustered(s, t, axes,
-          ZOrder.zKeyNormalized(col("doc_id"), lo1b, hi1b,
-            col("n_chars"), lo2b, hi2b, 8), buckets = 16)
-        val (dfA, readA, prunedA, scanA) = TxLog.prunedRead(s, t, box)
-        val (_, read0, pruned0, _) = TxLog.prunedRead(s, t, box,
-          asOf = Some(0L))
-        val aggA = snap(dfA).collect()
-          .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-        val out = snap(dfA)
-          .withColumn("files_read_before", lit(readB.toLong))
-          .withColumn("files_pruned_before", lit(prunedB.toLong))
-          .withColumn("files_read_after", lit(readA.toLong))
-          .withColumn("files_pruned_after", lit(prunedA.toLong))
-          .withColumn("rows_scanned_before", lit(scanB))
-          .withColumn("rows_scanned_after", lit(scanA))
-          .withColumn("v0_counts_match",
-            lit(if (read0 == readB && pruned0 == prunedB) 1L else 0L))
-          .withColumn("before_eq_after",
-            lit(if (aggB == aggA) 1L else 0L))
-        materializeAndDelete(out, tmp).orderBy(col("source"))
+        scratchDir("graft_zord") { tmp =>
+          val t = s"$tmp/tbl"
+          val axes = Seq("doc_id", "n_chars")
+          val box = Seq(("doc_id", 0L, hi1), ("n_chars", 0L, hi2))
+          TxLog.commitClustered(docs, t, "overwrite", axes, col("doc_id"),
+            buckets = 16)
+          val (dfB, readB, prunedB, scanB) = TxLog.prunedRead(s, t, box)
+          def snap(df: org.apache.spark.sql.DataFrame) =
+            df.groupBy(col("source"))
+              .agg(count(lit(1)).as("cnt"), sum(col("n_chars")).as("chars"))
+          val aggB = snap(dfB).collect()
+            .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+          TxLog.compactClustered(s, t, axes,
+            ZOrder.zKeyNormalized(col("doc_id"), lo1b, hi1b,
+              col("n_chars"), lo2b, hi2b, 8), buckets = 16)
+          val (dfA, readA, prunedA, scanA) = TxLog.prunedRead(s, t, box)
+          val (_, read0, pruned0, _) = TxLog.prunedRead(s, t, box,
+            asOf = Some(0L))
+          val aggA = snap(dfA).collect()
+            .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+          snap(dfA)
+            .withColumn("files_read_before", lit(readB.toLong))
+            .withColumn("files_pruned_before", lit(prunedB.toLong))
+            .withColumn("files_read_after", lit(readA.toLong))
+            .withColumn("files_pruned_after", lit(prunedA.toLong))
+            .withColumn("rows_scanned_before", lit(scanB))
+            .withColumn("rows_scanned_after", lit(scanA))
+            .withColumn("v0_counts_match",
+              lit(if (read0 == readB && pruned0 == prunedB) 1L else 0L))
+            .withColumn("before_eq_after",
+              lit(if (aggB == aggA) 1L else 0L))
+        }.orderBy(col("source"))
       },
       {
         val zSql = (0 until 8).map { i =>
@@ -1379,36 +1356,36 @@ object SinkQueries extends QueryPack {
         val hi1 = lo1b + (hi1b - lo1b) * 6 / 8
         val lo2 = lo2b + (hi2b - lo2b) * 3 / 8
         val hi2 = lo2b + (hi2b - lo2b) * 6 / 8
-        val tmp = java.nio.file.Files.createTempDirectory("graft_hilb")
-        val (tz, th) = (s"$tmp/z", s"$tmp/h")
-        val axes = Seq("doc_id", "n_chars")
-        val box = Seq(("doc_id", lo1, hi1), ("n_chars", lo2, hi2))
-        TxLog.commitClustered(docs, tz, "overwrite", axes,
-          ZOrder.zKeyNormalized(col("doc_id"), lo1b, hi1b,
-            col("n_chars"), lo2b, hi2b, 8), buckets = 16)
-        TxLog.commitClustered(docs, th, "overwrite", axes,
-          ZOrder.hilbertKeyNormalized(col("doc_id"), lo1b, hi1b,
-            col("n_chars"), lo2b, hi2b, 8), buckets = 16)
-        val (dfZ, readZ, prunedZ, scanZ) = TxLog.prunedRead(s, tz, box)
-        val (dfH, readH, prunedH, scanH) = TxLog.prunedRead(s, th, box)
-        def snap(df: org.apache.spark.sql.DataFrame) =
-          df.groupBy(col("source"))
-            .agg(count(lit(1)).as("cnt"), sum(col("n_chars")).as("chars"))
-        val aggZ = snap(dfZ).collect()
-          .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-        val aggH = snap(dfH).collect()
-          .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-        val out = snap(dfH)
-          .withColumn("files_read_zorder", lit(readZ.toLong))
-          .withColumn("files_pruned_zorder", lit(prunedZ.toLong))
-          .withColumn("files_read_hilbert", lit(readH.toLong))
-          .withColumn("files_pruned_hilbert", lit(prunedH.toLong))
-          .withColumn("rows_scanned_zorder", lit(scanZ))
-          .withColumn("rows_scanned_hilbert", lit(scanH))
-          .withColumn("hilbert_le_zorder",
-            lit(if (readH <= readZ) 1L else 0L))
-          .withColumn("content_match", lit(if (aggZ == aggH) 1L else 0L))
-        materializeAndDelete(out, tmp).orderBy(col("source"))
+        scratchDir("graft_hilb") { tmp =>
+          val (tz, th) = (s"$tmp/z", s"$tmp/h")
+          val axes = Seq("doc_id", "n_chars")
+          val box = Seq(("doc_id", lo1, hi1), ("n_chars", lo2, hi2))
+          TxLog.commitClustered(docs, tz, "overwrite", axes,
+            ZOrder.zKeyNormalized(col("doc_id"), lo1b, hi1b,
+              col("n_chars"), lo2b, hi2b, 8), buckets = 16)
+          TxLog.commitClustered(docs, th, "overwrite", axes,
+            ZOrder.hilbertKeyNormalized(col("doc_id"), lo1b, hi1b,
+              col("n_chars"), lo2b, hi2b, 8), buckets = 16)
+          val (dfZ, readZ, prunedZ, scanZ) = TxLog.prunedRead(s, tz, box)
+          val (dfH, readH, prunedH, scanH) = TxLog.prunedRead(s, th, box)
+          def snap(df: org.apache.spark.sql.DataFrame) =
+            df.groupBy(col("source"))
+              .agg(count(lit(1)).as("cnt"), sum(col("n_chars")).as("chars"))
+          val aggZ = snap(dfZ).collect()
+            .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+          val aggH = snap(dfH).collect()
+            .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+          snap(dfH)
+            .withColumn("files_read_zorder", lit(readZ.toLong))
+            .withColumn("files_pruned_zorder", lit(prunedZ.toLong))
+            .withColumn("files_read_hilbert", lit(readH.toLong))
+            .withColumn("files_pruned_hilbert", lit(prunedH.toLong))
+            .withColumn("rows_scanned_zorder", lit(scanZ))
+            .withColumn("rows_scanned_hilbert", lit(scanH))
+            .withColumn("hilbert_le_zorder",
+              lit(if (readH <= readZ) 1L else 0L))
+            .withColumn("content_match", lit(if (aggZ == aggH) 1L else 0L))
+        }.orderBy(col("source"))
       },
       {
         import graft.functions.ZOrder
@@ -1514,39 +1491,39 @@ object SinkQueries extends QueryPack {
         val hi2 = lo2b + (hi2b - lo2b) * 6 / 8
         val lo3 = lo3b + (hi3b - lo3b) * 3 / 8
         val hi3 = lo3b + (hi3b - lo3b) * 6 / 8
-        val tmp = java.nio.file.Files.createTempDirectory("graft_hil3")
-        val (tz, th) = (s"$tmp/z", s"$tmp/h")
-        val axes = Seq("doc_id", "n_chars", "aux")
-        val box = Seq(("doc_id", lo1, hi1), ("n_chars", lo2, hi2),
-          ("aux", lo3, hi3))
-        TxLog.commitClustered(docs, tz, "overwrite", axes,
-          ZOrder.zKey3Normalized(col("doc_id"), lo1b, hi1b,
-            col("n_chars"), lo2b, hi2b, col("aux"), lo3b, hi3b, 6),
-          buckets = 16)
-        TxLog.commitClustered(docs, th, "overwrite", axes,
-          ZOrder.hilbert3KeyNormalized(col("doc_id"), lo1b, hi1b,
-            col("n_chars"), lo2b, hi2b, col("aux"), lo3b, hi3b, 6),
-          buckets = 16)
-        val (dfZ, readZ, prunedZ, scanZ) = TxLog.prunedRead(s, tz, box)
-        val (dfH, readH, prunedH, scanH) = TxLog.prunedRead(s, th, box)
-        def snap(df: org.apache.spark.sql.DataFrame) =
-          df.groupBy(col("source"))
-            .agg(count(lit(1)).as("cnt"), sum(col("n_chars")).as("chars"))
-        val aggZ = snap(dfZ).collect()
-          .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-        val aggH = snap(dfH).collect()
-          .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-        val out = snap(dfH)
-          .withColumn("files_read_zorder", lit(readZ.toLong))
-          .withColumn("files_pruned_zorder", lit(prunedZ.toLong))
-          .withColumn("files_read_hilbert", lit(readH.toLong))
-          .withColumn("files_pruned_hilbert", lit(prunedH.toLong))
-          .withColumn("rows_scanned_zorder", lit(scanZ))
-          .withColumn("rows_scanned_hilbert", lit(scanH))
-          .withColumn("hilbert_le_zorder",
-            lit(if (readH <= readZ) 1L else 0L))
-          .withColumn("content_match", lit(if (aggZ == aggH) 1L else 0L))
-        materializeAndDelete(out, tmp).orderBy(col("source"))
+        scratchDir("graft_hil3") { tmp =>
+          val (tz, th) = (s"$tmp/z", s"$tmp/h")
+          val axes = Seq("doc_id", "n_chars", "aux")
+          val box = Seq(("doc_id", lo1, hi1), ("n_chars", lo2, hi2),
+            ("aux", lo3, hi3))
+          TxLog.commitClustered(docs, tz, "overwrite", axes,
+            ZOrder.zKey3Normalized(col("doc_id"), lo1b, hi1b,
+              col("n_chars"), lo2b, hi2b, col("aux"), lo3b, hi3b, 6),
+            buckets = 16)
+          TxLog.commitClustered(docs, th, "overwrite", axes,
+            ZOrder.hilbert3KeyNormalized(col("doc_id"), lo1b, hi1b,
+              col("n_chars"), lo2b, hi2b, col("aux"), lo3b, hi3b, 6),
+            buckets = 16)
+          val (dfZ, readZ, prunedZ, scanZ) = TxLog.prunedRead(s, tz, box)
+          val (dfH, readH, prunedH, scanH) = TxLog.prunedRead(s, th, box)
+          def snap(df: org.apache.spark.sql.DataFrame) =
+            df.groupBy(col("source"))
+              .agg(count(lit(1)).as("cnt"), sum(col("n_chars")).as("chars"))
+          val aggZ = snap(dfZ).collect()
+            .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+          val aggH = snap(dfH).collect()
+            .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+          snap(dfH)
+            .withColumn("files_read_zorder", lit(readZ.toLong))
+            .withColumn("files_pruned_zorder", lit(prunedZ.toLong))
+            .withColumn("files_read_hilbert", lit(readH.toLong))
+            .withColumn("files_pruned_hilbert", lit(prunedH.toLong))
+            .withColumn("rows_scanned_zorder", lit(scanZ))
+            .withColumn("rows_scanned_hilbert", lit(scanH))
+            .withColumn("hilbert_le_zorder",
+              lit(if (readH <= readZ) 1L else 0L))
+            .withColumn("content_match", lit(if (aggZ == aggH) 1L else 0L))
+        }.orderBy(col("source"))
       },
       {
         import graft.functions.ZOrder
@@ -1644,41 +1621,40 @@ object SinkQueries extends QueryPack {
         val docs = Tables.documents(s, dir)
           .select(col("doc_id"), col("source"), col("n_chars"))
         val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-        val tmp = java.nio.file.Files.createTempDirectory("graft_ckpt")
-        val t = s"$tmp/tbl"
-        (0 to 4).foreach { c =>
+        scratchDir("graft_ckpt") { tmp =>
+          val t = s"$tmp/tbl"
+          (0 to 4).foreach { c =>
+            TxLog.commit(
+              docs.filter(graft.functions.FixedPoint.idiv(
+                col("doc_id") * 5L, lit(maxId + 1L)) === c.toLong),
+              t, if (c == 0) "overwrite" else "append", "doc_id")
+          }
+          TxLog.deleteWhere(s, t, col("doc_id") % 9 === 0) // v5
+          val ck = TxLog.checkpointLog(s, t)
+          val truncated = TxLog.truncateLog(t)
+          // the log keeps working after truncation: v6 re-appends
+          // chunk 0 (new physical rows, not masked by the v5 vectors)
           TxLog.commit(
             docs.filter(graft.functions.FixedPoint.idiv(
-              col("doc_id") * 5L, lit(maxId + 1L)) === c.toLong),
-            t, if (c == 0) "overwrite" else "append", "doc_id")
-        }
-        TxLog.deleteWhere(s, t, col("doc_id") % 9 === 0) // v5
-        val ck = TxLog.checkpointLog(s, t)
-        val truncated = TxLog.truncateLog(t)
-        // the log keeps working after truncation: v6 re-appends
-        // chunk 0 (new physical rows, not masked by the v5 vectors)
-        TxLog.commit(
-          docs.filter(graft.functions.FixedPoint.idiv(
-            col("doc_id") * 5L, lit(maxId + 1L)) === 0L),
-          t, "append", "doc_id")
-        val latest = TxLog.read(s, t)
-          .groupBy(col("source"))
-          .agg(count(lit(1)).as("cnt_latest"),
-            sum(col("n_chars")).as("chars_latest"))
-        val v1 = TxLog.read(s, t, Some(1L))
-          .groupBy(col("source"))
-          .agg(count(lit(1)).as("cnt_v1"))
-        val jsonLeft = new java.io.File(s"$t/_log").listFiles()
-          .count(f => f.getName.startsWith("v") &&
-            f.getName.endsWith(".json")).toLong
-        materializeAndDelete(
+              col("doc_id") * 5L, lit(maxId + 1L)) === 0L),
+            t, "append", "doc_id")
+          val latest = TxLog.read(s, t)
+            .groupBy(col("source"))
+            .agg(count(lit(1)).as("cnt_latest"),
+              sum(col("n_chars")).as("chars_latest"))
+          val v1 = TxLog.read(s, t, Some(1L))
+            .groupBy(col("source"))
+            .agg(count(lit(1)).as("cnt_v1"))
+          val jsonLeft = new java.io.File(s"$t/_log").listFiles()
+            .count(f => f.getName.startsWith("v") &&
+              f.getName.endsWith(".json")).toLong
           latest.join(v1, Seq("source"), "full_outer")
             .withColumn("n_versions",
               lit(TxLog.versions(t).size.toLong))
             .withColumn("ckpt_version", lit(ck))
             .withColumn("n_truncated", lit(truncated))
-            .withColumn("json_left", lit(jsonLeft)), tmp)
-          .orderBy(col("source"))
+            .withColumn("json_left", lit(jsonLeft))
+        }.orderBy(col("source"))
       },
       Some("""WITH m AS (SELECT max(doc_id) AS top FROM documents),
         |c AS (SELECT doc_id, source, n_chars,
@@ -1710,27 +1686,26 @@ object SinkQueries extends QueryPack {
       (s, dir) => {
         import graft.sources.TxLog
         val docs = Tables.documents(s, dir)
-        val tmp = java.nio.file.Files.createTempDirectory("graft_sev")
-        val t = s"$tmp/tbl"
-        TxLog.commit(docs.filter(col("doc_id") % 2 === 0)
-          .select(col("doc_id"), col("n_chars")), t, "overwrite", "doc_id")
-        TxLog.commit(docs.filter(col("doc_id") % 2 === 1)
-          .select(col("doc_id"), col("n_chars"), col("lang")),
-          t, "append", "doc_id")
-        val v0ncols = TxLog.read(s, t, Some(0L)).columns.length.toLong
-        val v0rows = TxLog.read(s, t, Some(0L)).count()
-        val before = TxLog.readMerged(s, t)
-          .groupBy(coalesce(col("lang"), lit("__pre")).as("bucket"))
-          .agg(count(lit(1)).as("cnt"), sum(col("n_chars")).as("chars"))
-        TxLog.deleteWhere(s, t, col("doc_id") % 10 === 0)
-        val after = TxLog.readMerged(s, t)
-          .groupBy(coalesce(col("lang"), lit("__pre")).as("bucket"))
-          .agg(count(lit(1)).as("cnt_after_delete"))
-        materializeAndDelete(
+        scratchDir("graft_sev") { tmp =>
+          val t = s"$tmp/tbl"
+          TxLog.commit(docs.filter(col("doc_id") % 2 === 0)
+            .select(col("doc_id"), col("n_chars")), t, "overwrite", "doc_id")
+          TxLog.commit(docs.filter(col("doc_id") % 2 === 1)
+            .select(col("doc_id"), col("n_chars"), col("lang")),
+            t, "append", "doc_id")
+          val v0ncols = TxLog.read(s, t, Some(0L)).columns.length.toLong
+          val v0rows = TxLog.read(s, t, Some(0L)).count()
+          val before = TxLog.readMerged(s, t)
+            .groupBy(coalesce(col("lang"), lit("__pre")).as("bucket"))
+            .agg(count(lit(1)).as("cnt"), sum(col("n_chars")).as("chars"))
+          TxLog.deleteWhere(s, t, col("doc_id") % 10 === 0)
+          val after = TxLog.readMerged(s, t)
+            .groupBy(coalesce(col("lang"), lit("__pre")).as("bucket"))
+            .agg(count(lit(1)).as("cnt_after_delete"))
           before.join(after, Seq("bucket"), "full_outer")
             .withColumn("v0_ncols", lit(v0ncols))
-            .withColumn("v0_rows", lit(v0rows)), tmp)
-          .orderBy(col("bucket"))
+            .withColumn("v0_rows", lit(v0rows))
+        }.orderBy(col("bucket"))
       },
       Some("""WITH b AS (SELECT
         |    CASE WHEN doc_id % 2 = 0 THEN '__pre' ELSE lang END AS bucket,
@@ -1758,24 +1733,23 @@ object SinkQueries extends QueryPack {
         import graft.sources.TxLog
         val docs = Tables.documents(s, dir)
           .select(col("doc_id"), col("source"), col("n_chars"))
-        val tmp = java.nio.file.Files.createTempDirectory("graft_rst")
-        val t = s"$tmp/tbl"
-        TxLog.commit(docs.filter(col("doc_id") % 2 === 0), t,
-          "overwrite", "doc_id") // v0
-        TxLog.commit(docs.filter(col("doc_id") % 2 === 1), t,
-          "append", "doc_id") // v1: full corpus
-        TxLog.deleteWhere(s, t, col("doc_id") % 3 === 0) // v2: mistake
-        val v = TxLog.restore(s, t, toVersion = 1L, "doc_id") // v3
-        val latest = TxLog.read(s, t)
-          .groupBy(col("source"))
-          .agg(count(lit(1)).as("cnt"), sum(col("n_chars")).as("chars"))
-        val atMistake = TxLog.read(s, t, Some(2L))
-          .groupBy(col("source"))
-          .agg(count(lit(1)).as("cnt_v2"))
-        materializeAndDelete(
+        scratchDir("graft_rst") { tmp =>
+          val t = s"$tmp/tbl"
+          TxLog.commit(docs.filter(col("doc_id") % 2 === 0), t,
+            "overwrite", "doc_id") // v0
+          TxLog.commit(docs.filter(col("doc_id") % 2 === 1), t,
+            "append", "doc_id") // v1: full corpus
+          TxLog.deleteWhere(s, t, col("doc_id") % 3 === 0) // v2: mistake
+          val v = TxLog.restore(s, t, toVersion = 1L, "doc_id") // v3
+          val latest = TxLog.read(s, t)
+            .groupBy(col("source"))
+            .agg(count(lit(1)).as("cnt"), sum(col("n_chars")).as("chars"))
+          val atMistake = TxLog.read(s, t, Some(2L))
+            .groupBy(col("source"))
+            .agg(count(lit(1)).as("cnt_v2"))
           latest.join(atMistake, Seq("source"), "full_outer")
-            .withColumn("restored_version", lit(v)), tmp)
-          .orderBy(col("source"))
+            .withColumn("restored_version", lit(v))
+        }.orderBy(col("source"))
       },
       Some("""WITH l AS (SELECT source, CAST(count(*) AS BIGINT) AS cnt,
         |    CAST(sum(n_chars) AS BIGINT) AS chars
@@ -1798,20 +1772,19 @@ object SinkQueries extends QueryPack {
         import graft.sources.TxLog
         val docs = Tables.documents(s, dir)
           .select(col("doc_id"), col("source"), col("n_chars"))
-        val tmp = java.nio.file.Files.createTempDirectory("graft_expq")
-        val t = s"$tmp/tbl"
-        val qd = s"$tmp/quarantine"
-        val (v, qv) = TxLog.commitWithExpectations(docs, t, qd,
-          "overwrite", "doc_id", col("n_chars") >= 100L)
-        val good = TxLog.read(s, t).groupBy(col("source"))
-          .agg(count(lit(1)).as("n_ok"), sum(col("n_chars")).as("chars_ok"))
-        val badT = TxLog.read(s, qd).groupBy(col("source"))
-          .agg(count(lit(1)).as("n_quarantined"))
-        materializeAndDelete(
+        scratchDir("graft_expq") { tmp =>
+          val t = s"$tmp/tbl"
+          val qd = s"$tmp/quarantine"
+          val (v, qv) = TxLog.commitWithExpectations(docs, t, qd,
+            "overwrite", "doc_id", col("n_chars") >= 100L)
+          val good = TxLog.read(s, t).groupBy(col("source"))
+            .agg(count(lit(1)).as("n_ok"), sum(col("n_chars")).as("chars_ok"))
+          val badT = TxLog.read(s, qd).groupBy(col("source"))
+            .agg(count(lit(1)).as("n_quarantined"))
           good.join(badT, Seq("source"), "full_outer")
             .withColumn("table_version", lit(v))
-            .withColumn("quarantine_version", lit(qv)), tmp)
-          .orderBy(col("source"))
+            .withColumn("quarantine_version", lit(qv))
+        }.orderBy(col("source"))
       },
       Some("""WITH g AS (SELECT source, CAST(count(*) AS BIGINT) AS n_ok,
         |    CAST(sum(n_chars) AS BIGINT) AS chars_ok
@@ -1836,23 +1809,23 @@ object SinkQueries extends QueryPack {
         import graft.sources.TxLog
         val docs = Tables.documents(s, dir)
           .select(col("doc_id"), col("source"), col("n_chars"))
-        val tmp = java.nio.file.Files.createTempDirectory("graft_idem")
-        val t = s"$tmp/tbl"
-        val b1 = docs.filter(col("doc_id") % 2 === 0)
-        val b2 = docs.filter(col("doc_id") % 2 === 1)
-        val first = TxLog.commitIdempotent(b1, t, "overwrite",
-          "doc_id", "ingest", batchId = 1L)
-        val replay = TxLog.commitIdempotent(b1, t, "append",
-          "doc_id", "ingest", batchId = 1L)
-        val second = TxLog.commitIdempotent(b2, t, "append",
-          "doc_id", "ingest", batchId = 2L)
-        val out = TxLog.read(s, t).groupBy(col("source"))
-          .agg(count(lit(1)).as("cnt"), sum(col("n_chars")).as("chars"))
-          .withColumn("first_v", lit(first.getOrElse(-1L)))
-          .withColumn("replay_skipped", lit(replay.isEmpty))
-          .withColumn("second_v", lit(second.getOrElse(-1L)))
-          .withColumn("n_versions", lit(TxLog.versions(t).size.toLong))
-        materializeAndDelete(out, tmp).orderBy(col("source"))
+        scratchDir("graft_idem") { tmp =>
+          val t = s"$tmp/tbl"
+          val b1 = docs.filter(col("doc_id") % 2 === 0)
+          val b2 = docs.filter(col("doc_id") % 2 === 1)
+          val first = TxLog.commitIdempotent(b1, t, "overwrite",
+            "doc_id", "ingest", batchId = 1L)
+          val replay = TxLog.commitIdempotent(b1, t, "append",
+            "doc_id", "ingest", batchId = 1L)
+          val second = TxLog.commitIdempotent(b2, t, "append",
+            "doc_id", "ingest", batchId = 2L)
+          TxLog.read(s, t).groupBy(col("source"))
+            .agg(count(lit(1)).as("cnt"), sum(col("n_chars")).as("chars"))
+            .withColumn("first_v", lit(first.getOrElse(-1L)))
+            .withColumn("replay_skipped", lit(replay.isEmpty))
+            .withColumn("second_v", lit(second.getOrElse(-1L)))
+            .withColumn("n_versions", lit(TxLog.versions(t).size.toLong))
+        }.orderBy(col("source"))
       },
       Some("""SELECT source, CAST(count(*) AS BIGINT) AS cnt,
         |  CAST(sum(n_chars) AS BIGINT) AS chars,

@@ -406,22 +406,21 @@ object SourceQueries extends QueryPack {
         val json = dimRows.map { case (iso, name, reg) =>
           s"""  {"ISO": "$iso", "Country": "$name", "REG": "$reg"}"""
         }.mkString("[\n", ",\n", "\n]")
-        val tmp = java.nio.file.Files.createTempDirectory("graft_country")
-        java.nio.file.Files.write(tmp.resolve("country.json"),
-          json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        val dim = graft.sources.CountryDim.read(s,
-          tmp.resolve("country.json").toString)
-        val fact = Tables.customer(s, dir)
-          .join(broadcast(Tables.nation(s, dir)),
-            col("c_nationkey") === col("n_nationkey"))
-          .select(col("c_custkey"),
-            when(col("c_custkey") % 2 === 0,
-                concat(lit("is"), col("c_nationkey")))
-              .otherwise(lower(col("n_name"))).as("code"))
-        Fixtures.materializeAndDelete(
+        Fixtures.scratchDir("graft_country") { tmp =>
+          java.nio.file.Files.write(tmp.resolve("country.json"),
+            json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          val dim = graft.sources.CountryDim.read(s,
+            tmp.resolve("country.json").toString)
+          val fact = Tables.customer(s, dir)
+            .join(broadcast(Tables.nation(s, dir)),
+              col("c_nationkey") === col("n_nationkey"))
+            .select(col("c_custkey"),
+              when(col("c_custkey") % 2 === 0,
+                  concat(lit("is"), col("c_nationkey")))
+                .otherwise(lower(col("n_name"))).as("code"))
           graft.sources.CountryDim.enrich(fact, dim, "code")
-            .select(col("c_custkey"), col("code"), col("Geospecific")), tmp)
-          .orderBy(col("c_custkey"))
+            .select(col("c_custkey"), col("code"), col("Geospecific"))
+        }.orderBy(col("c_custkey"))
       },
       Some("""SELECT c_custkey,
         |  CASE WHEN c_custkey % 2 = 0 THEN 'is' || c_nationkey
@@ -609,24 +608,24 @@ object SourceQueries extends QueryPack {
           .filter(col("doc_id") % 25 === 0)
           .select(col("doc_id"))
           .collect().map(_.getLong(0)).sorted // slice-bounded fixture
-        val tmp = java.nio.file.Files.createTempDirectory("graft_blob")
-        ids.foreach { id =>
-          java.nio.file.Files.write(tmp.resolve(f"img_$id%06d.png"),
-            Multimodal.syntheticPng(id))
-        }
-        val media = s.read.format("binaryFile")
-          .option("pathGlobFilter", "*.png").load(tmp.toString)
-          .select(
-            regexp_extract(col("path"), "img_(\\d+)\\.png$", 1)
-              .cast("long").as("media_id"),
-            lit("png").as("kind"), col("content").as("bytes"))
-        val decoded = Multimodal.decodeFeatures(media)
-          .select(col("media_id"),
-            posexplode(col("features")).as(Seq("bucket", "share")))
-          .select(col("media_id"), col("bucket"),
-            col("share").cast("double").as("share"))
-        Fixtures.materializeAndDelete(decoded, tmp)
-          .orderBy(col("media_id"), col("bucket"))
+        Fixtures.scratchDir("graft_blob") { tmp =>
+          ids.foreach { id =>
+            java.nio.file.Files.write(tmp.resolve(f"img_$id%06d.png"),
+              Multimodal.syntheticPng(id))
+          }
+          val media = s.read.format("binaryFile")
+            .option("pathGlobFilter", "*.png").load(tmp.toString)
+            .select(
+              regexp_extract(col("path"), "img_(\\d+)\\.png$", 1)
+                .cast("long").as("media_id"),
+              lit("png").as("kind"), col("content").as("bytes"))
+          val decoded = Multimodal.decodeFeatures(media)
+            .select(col("media_id"),
+              posexplode(col("features")).as(Seq("bucket", "share")))
+            .select(col("media_id"), col("bucket"),
+              col("share").cast("double").as("share"))
+          decoded
+        }.orderBy(col("media_id"), col("bucket"))
       },
       Some("""WITH ids AS (
         |  SELECT doc_id FROM documents WHERE doc_id % 25 = 0),

@@ -247,20 +247,19 @@ object StreamingQueries extends QueryPack {
         // gate measures the operator, not MemorySink row shipping.
         // n partials per key ride along so the cross-batch n_shared
         // stays a sum, not a count of batches.
-        val tmp = java.nio.file.Files.createTempDirectory("graft_q438")
-        val parts = Streams.runBatchedToParquet(
-          Streams.sparsePostingStream(posts, maxDf = 500).toDF(),
-          b => b.groupBy(col("kind"), col("a"), col("b"))
-            .agg(sum(col("v")).as("v"), count(lit(1)).as("n")),
-          s"$tmp/parts")
-        val pairs = parts.filter(col("kind") === "p")
-          .groupBy(col("a"), col("b"))
-          .agg(sum(col("v")).as("dot"), sum(col("n")).as("n_shared"))
-          .select(col("a").as("id_a"), col("b").as("id_b"),
-            col("dot"), col("n_shared"))
-        val norms = parts.filter(col("kind") === "n")
-          .groupBy(col("a")).agg(sum(col("v")).as("norm2"))
-        graft.queries.Fixtures.materializeAndDelete(
+        Fixtures.scratchDir("graft_q438") { tmp =>
+          val parts = Streams.runBatchedToParquet(
+            Streams.sparsePostingStream(posts, maxDf = 500).toDF(),
+            b => b.groupBy(col("kind"), col("a"), col("b"))
+              .agg(sum(col("v")).as("v"), count(lit(1)).as("n")),
+            s"$tmp/parts")
+          val pairs = parts.filter(col("kind") === "p")
+            .groupBy(col("a"), col("b"))
+            .agg(sum(col("v")).as("dot"), sum(col("n")).as("n_shared"))
+            .select(col("a").as("id_a"), col("b").as("id_b"),
+              col("dot"), col("n_shared"))
+          val norms = parts.filter(col("kind") === "n")
+            .groupBy(col("a")).agg(sum(col("v")).as("norm2"))
           pairs
             .join(norms.select(col("a").as("id_a"),
               col("norm2").as("norm2_a")), "id_a")
@@ -270,8 +269,8 @@ object StreamingQueries extends QueryPack {
               col("norm2_a") * col("norm2_b")))
             .filter(col("cos2_ppm") >= 640000L)
             .select(col("id_a"), col("id_b"), col("n_shared"), col("dot"),
-              col("norm2_a"), col("norm2_b"), col("cos2_ppm")), tmp)
-          .orderBy(col("id_a"), col("id_b"))
+              col("norm2_a"), col("norm2_b"), col("cos2_ppm"))
+        }.orderBy(col("id_a"), col("id_b"))
       },
       Some(s"""WITH tfs AS (
         |  SELECT token, doc_id, count(*) AS tf FROM (
@@ -690,11 +689,7 @@ object StreamingQueries extends QueryPack {
           StructField("valid_to", TimestampType)))
         var gold = s.createDataFrame(
           new java.util.ArrayList[Row](), histSchema)
-        val ckpt = Streams.scratchCheckpointDir("graft-scd2-ck")
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        try {
+        Streams.scratchCheckpointDir("graft-scd2-ck") { ckpt =>
           Streams.scd2Stream(eventsStream(s, dir),
             Seq("user_id"), Seq("event_type"), "ts", "event_id",
             latest => gold = graft.operators.Scd2.merge(gold, latest,
@@ -706,7 +701,7 @@ object StreamingQueries extends QueryPack {
             ckpt.toString,
             Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
             .awaitTermination()
-        } finally rm(ckpt.toFile)
+        }
         gold.withColumn("is_current", col("valid_to").isNull)
           .orderBy(col("user_id"), col("valid_from"))
       },
@@ -743,11 +738,7 @@ object StreamingQueries extends QueryPack {
           StructField("is_novel", BooleanType, nullable = false)))
         var out = s.createDataFrame(
           new java.util.ArrayList[org.apache.spark.sql.Row](), outSchema)
-        val ckpt = Streams.scratchCheckpointDir("graft-imgdedup-ck")
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        try {
+        Streams.scratchCheckpointDir("graft-imgdedup-ck") { ckpt =>
           Streams.transformEachBatch(
             documentsStream(s, dir).filter(col("doc_id") % 10 === 0)
               .select(col("doc_id")),
@@ -759,7 +750,7 @@ object StreamingQueries extends QueryPack {
             ckpt.toString,
             Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
             .awaitTermination()
-        } finally rm(ckpt.toFile)
+        }
         out.orderBy(col("doc_id"))
       },
       Some("""WITH px AS (
@@ -881,11 +872,7 @@ object StreamingQueries extends QueryPack {
           .filter(col("event_id") % 7 =!= 0)
         var gold = TimeSeries.dailyPartials(base, "event_type", "ts",
           "value").localCheckpoint(true)
-        val ckpt = Streams.scratchCheckpointDir("graft-goldup-ck")
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        try {
+        Streams.scratchCheckpointDir("graft-goldup-ck") { ckpt =>
           Streams.transformEachBatch(
             eventsStream(s, dir).filter(col("event_id") % 7 === 0),
             batch => batch,
@@ -894,7 +881,7 @@ object StreamingQueries extends QueryPack {
             ckpt.toString,
             Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
             .awaitTermination()
-        } finally rm(ckpt.toFile)
+        }
         gold
           .select(col("event_type"), col("day"), col("n"), col("tmin"),
             col("tmax"), col("v").cast("double").as("sum_value"))
@@ -977,33 +964,18 @@ object StreamingQueries extends QueryPack {
           lit(null).cast("long").as("o_orderkey"),
           lit(null).cast(priceT).as("o_totalprice"),
           col("c_mktsegment"))
-        val tmp = java.nio.file.Files.createTempDirectory("graft_sivm")
-        val streamDir = tmp.resolve("in")
-        java.nio.file.Files.createDirectories(streamDir)
-        val deltas = Seq(
-          oTag.filter(col("o_orderkey") % 10 === 8),
-          cTag.filter(col("c_custkey") % 20 === 0),
-          oTag.filter(col("o_orderkey") % 10 === 9))
-        deltas.zipWithIndex.foreach { case (d, i) =>
-          val stage = tmp.resolve(s"stage$i")
-          d.coalesce(1).write.parquet(stage.toString)
-          val part = stage.toFile.listFiles()
-            .filter(_.getName.endsWith(".parquet")).head
-          java.nio.file.Files.move(part.toPath,
-            streamDir.resolve(s"b$i.parquet"))
-          ()
-        }
         var baseL = o.filter(col("o_orderkey") % 10 < 8)
           .localCheckpoint(true)
         var baseR = c.filter(col("c_custkey") % 20 =!= 0)
           .localCheckpoint(true)
         var view = baseL.join(baseR, Seq("c_custkey"), "inner")
           .localCheckpoint(true)
-        val ckpt = Streams.scratchCheckpointDir("graft-sivm-ck")
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        try {
+        Streams.scratchCheckpointDir("graft-sivm-") { tmp =>
+          val streamDir = tmp.resolve("in")
+          Fixtures.stageStreamInput(Seq(
+            oTag.filter(col("o_orderkey") % 10 === 8),
+            cTag.filter(col("c_custkey") % 20 === 0),
+            oTag.filter(col("o_orderkey") % 10 === 9)), streamDir)
           Streams.transformEachBatch(
             s.readStream.schema(oTag.schema)
               .option("maxFilesPerTrigger", 1)
@@ -1021,10 +993,10 @@ object StreamingQueries extends QueryPack {
               baseL = baseL.unionByName(dL).localCheckpoint(true)
               baseR = baseR.unionByName(dR).localCheckpoint(true)
             },
-            ckpt.toString,
+            tmp.resolve("ck").toString,
             Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
             .awaitTermination()
-        } finally { rm(ckpt.toFile); rm(tmp.toFile) }
+        }
         view.orderBy(col("o_orderkey"))
       },
       Some("""SELECT o_custkey AS c_custkey, o_orderkey, o_totalprice,
@@ -1147,11 +1119,7 @@ object StreamingQueries extends QueryPack {
           StructField("seg", StringType)))
         var out = s.createDataFrame(
           new java.util.ArrayList[org.apache.spark.sql.Row](), outSchema)
-        val ckpt = Streams.scratchCheckpointDir("graft-pit-ck")
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        try {
+        Streams.scratchCheckpointDir("graft-pit-ck") { ckpt =>
           Streams.transformEachBatch(
             factsStream,
             batch => graft.operators.Scd2.pitLookup(batch, history,
@@ -1161,7 +1129,7 @@ object StreamingQueries extends QueryPack {
             ckpt.toString,
             Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
             .awaitTermination()
-        } finally rm(ckpt.toFile)
+        }
         out.orderBy(col("o_orderkey"))
       },
       Some("""SELECT o_orderkey, o_custkey,

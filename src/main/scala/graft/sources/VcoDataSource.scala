@@ -144,12 +144,12 @@ private class VcoScanBuilder(fullSchema: StructType, props: Map[String, String])
 /** The aggregate shapes this source answers with one partial row per
   * VCO: fleet count, and min/max of the top-level edge `id`.
   */
-private sealed trait VcoAgg
+private[graft] sealed trait VcoAgg
 private case object VcoCountAgg extends VcoAgg
 private case object VcoMinIdAgg extends VcoAgg
 private case object VcoMaxIdAgg extends VcoAgg
 
-private object VcoScan {
+private[graft] object VcoScan {
   /** Top-level document fields that map to server-side `with`
     * expansions (`powerbi_main_fun.py:181-185`); scalar fields always
     * come back.
@@ -192,9 +192,11 @@ private object VcoScan {
     case _ => false
   }
 
-  /** A request-param value as JSON — the VCO name, the with-list and
-    * the pushed filter values alike: strings quoted, with quotes,
-    * backslashes and control characters escaped.
+  /** A value as JSON — the repo's one escaper: request params (the
+    * VCO name, the with-list, the pushed filter values), TxLog log
+    * lines, `graft.Verify`'s oracle_sql.json and `graft.Bench`'s JSON
+    * lines alike. Strings are quoted, with quotes, backslashes and
+    * control characters escaped.
     */
   def json(v: Any): String = v match {
     case s: String => "\"" + s.flatMap {

@@ -1,6 +1,11 @@
 package graft.streaming
 
+import java.nio.file.{Files, Path, Paths}
 import java.sql.Timestamp
+
+import scala.util.Using
+
+import org.apache.commons.io.FileUtils
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
@@ -410,20 +415,23 @@ object Streams {
 
   private val runSeq = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Throwaway checkpoint dir for one-shot gate runs, preferring
-    * tmpfs (/dev/shm): these checkpoints are deleted right after the
-    * run, and their per-batch WAL fsyncs against a disk-backed /tmp
-    * inject I/O latency noise that has nothing to do with the plan
-    * under measurement. A production job would of course point its
-    * checkpoint at durable storage — that is a deployment choice, not
-    * an operator property.
+  /** Run `body` with a throwaway directory for a one-shot stream run
+    * (its checkpoint, and any input the run stages), then delete the
+    * directory recursively — also when `body` throws; a failed delete
+    * is then attached to the body's exception as suppressed. Prefers
+    * tmpfs (/dev/shm): the per-batch WAL fsyncs of a checkpoint on a
+    * disk-backed /tmp inject I/O latency noise that has nothing to do
+    * with the plan under measurement. A production job would of course
+    * point its checkpoint at durable storage — that is a deployment
+    * choice, not an operator property.
     */
-  def scratchCheckpointDir(prefix: String): java.nio.file.Path = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    if (java.nio.file.Files.isDirectory(shm) &&
-        java.nio.file.Files.isWritable(shm))
-      java.nio.file.Files.createTempDirectory(shm, prefix)
-    else java.nio.file.Files.createTempDirectory(prefix)
+  def scratchCheckpointDir[T](prefix: String)(body: Path => T): T = {
+    val shm = Paths.get("/dev/shm")
+    val dir =
+      if (Files.isDirectory(shm) && Files.isWritable(shm))
+        Files.createTempDirectory(shm, prefix)
+      else Files.createTempDirectory(prefix)
+    Using.resource(dir)(body)(d => FileUtils.deleteDirectory(d.toFile))
   }
 
   /** Drive a streaming frame over its BOUNDED source to completion
@@ -438,45 +446,38 @@ object Streams {
       statePartitions: Int = 8): DataFrame = {
     val spark = df.sparkSession
     val name = s"graft_stream_${runSeq.incrementAndGet()}"
-    val ckpt = scratchCheckpointDir("graft-ckpt-")
-    // State-store partition count is fixed by shuffle.partitions at
-    // FIRST checkpoint creation; these one-shot gates carry tiny state,
-    // so 32 partitions is pure per-batch provider overhead (~4× the
-    // useful work). Scope the smaller value to the stream start and
-    // restore — at production scale a long-lived job would instead
-    // RAISE it to match state volume, set once at its own checkpoint
-    // birth. Sequential Verify/Bench execution makes the scoping safe.
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    try {
-      df.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-        .awaitTermination()
-      // Materialize the sink's rows and DROP the temp view — without
-      // this every run (Bench iterates each query 3×) leaves a live
-      // MemorySink holding the full result on the driver for the JVM
-      // lifetime. The result is the query's FINAL frame (small by
-      // contract), so a LocalRelation is the right residue.
-      val out = spark.table(name)
-      val rows = out.collect().toIndexedSeq
-      val schema = out.schema
-      spark.catalog.dropTempView(name)
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(rows.asJava, schema)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      rmTree(ckpt.toFile) // one-shot run; no replay value
+    scratchCheckpointDir("graft-ckpt-") { ckpt =>
+      // State-store partition count is fixed by shuffle.partitions at
+      // FIRST checkpoint creation; these one-shot gates carry tiny state,
+      // so 32 partitions is pure per-batch provider overhead (~4× the
+      // useful work). Scope the smaller value to the stream start and
+      // restore — at production scale a long-lived job would instead
+      // RAISE it to match state volume, set once at its own checkpoint
+      // birth. Sequential Verify/Bench execution makes the scoping safe.
+      val prev = spark.conf.get("spark.sql.shuffle.partitions")
+      spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
+      try {
+        df.writeStream
+          .format("memory")
+          .queryName(name)
+          .outputMode(mode)
+          .option("checkpointLocation", ckpt.toString)
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+          .awaitTermination()
+        // Materialize the sink's rows and DROP the temp view — without
+        // this every run (Bench iterates each query 3×) leaves a live
+        // MemorySink holding the full result on the driver for the JVM
+        // lifetime. The result is the query's FINAL frame (small by
+        // contract), so a LocalRelation is the right residue.
+        val out = spark.table(name)
+        val rows = out.collect().toIndexedSeq
+        val schema = out.schema
+        spark.catalog.dropTempView(name)
+        import scala.jdk.CollectionConverters._
+        spark.createDataFrame(rows.asJava, schema)
+      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
     }
-  }
-
-  /** Delete a directory tree (a one-shot run's checkpoint). */
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
   }
 
   /** [[runToTable]] for high-partial-volume streams: each micro-batch
@@ -492,31 +493,29 @@ object Streams {
   def runBatchedToParquet(df: DataFrame, batchAgg: DataFrame => DataFrame,
       outDir: String, statePartitions: Int = 8): DataFrame = {
     val spark = df.sparkSession
-    val ckpt = scratchCheckpointDir("graft-ckpt-")
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    try {
-      df.writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          batchAgg(batch.toDF()).write.mode("append").parquet(outDir)
-        }
-        .start()
-        .awaitTermination()
-      // zero micro-batches (empty input) → foreachBatch never ran and
-      // outDir was never created; return an empty frame of the
-      // aggregated schema instead of a path-not-found from the read
-      if (new java.io.File(outDir).exists()) spark.read.parquet(outDir)
-      else spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        batchAgg(spark.createDataFrame(
+    scratchCheckpointDir("graft-ckpt-") { ckpt =>
+      val prev = spark.conf.get("spark.sql.shuffle.partitions")
+      spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
+      try {
+        df.writeStream
+          .outputMode(OutputMode.Append())
+          .option("checkpointLocation", ckpt.toString)
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
+            batchAgg(batch.toDF()).write.mode("append").parquet(outDir)
+          }
+          .start()
+          .awaitTermination()
+        // zero micro-batches (empty input) → foreachBatch never ran and
+        // outDir was never created; return an empty frame of the
+        // aggregated schema instead of a path-not-found from the read
+        if (new java.io.File(outDir).exists()) spark.read.parquet(outDir)
+        else spark.createDataFrame(
           java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          df.schema)).schema)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      rmTree(ckpt.toFile) // one-shot run; no replay value
+          batchAgg(spark.createDataFrame(
+            java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+            df.schema)).schema)
+      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
     }
   }
 

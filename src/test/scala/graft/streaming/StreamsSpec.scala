@@ -453,4 +453,17 @@ class StreamsSpec extends SparkSpec {
     assert(oneShot === expected)
     assert(split === expected)
   }
+
+  test("scratchCheckpointDir deletes its directory when the body throws") {
+    var dir: java.nio.file.Path = null
+    val e = intercept[IllegalStateException](
+      Streams.scratchCheckpointDir("graft-spec-ck") { d =>
+        dir = d
+        java.nio.file.Files.createDirectories(d.resolve("offsets"))
+        java.nio.file.Files.writeString(d.resolve("offsets/0"), "v1")
+        throw new IllegalStateException("stream failed")
+      })
+    assert(e.getMessage == "stream failed")
+    assert(!java.nio.file.Files.exists(dir))
+  }
 }

@@ -1,7 +1,7 @@
 #!/bin/bash
 # Print every registered query's oracle SQL (see OracleDump.scala).
 # Usage, from a checkout whose classes are built (sbt compile):
-#   oracle_dump.sh <checkout> > <out.jsonl>
+#   tools/oracle_dump.sh <checkout> > <out.jsonl>
 set -e
 here="$(cd "$(dirname "$0")" && pwd)"
 repo="$(cd "$1" && pwd)"
@@ -11,5 +11,5 @@ jars="${SPARK_HOME:+$SPARK_HOME/jars}"
 cp="$repo/target/scala-2.13/classes:$jars/*"
 java -cp "$jars/*" scala.tools.nsc.Main -usejavacp \
   -cp "$cp" -d "$out" "$here/OracleDump.scala"
-java -Xmx1g -cp "$out:$cp" OracleDump
+java -Xmx1g -cp "$out:$cp" graft.sources.OracleDump
 rm -rf "$out"
