@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Dev tool: profile queries one at a time in THIS JVM — wall
   * seconds plus scheduler-level counters (jobs, stages, tasks,
@@ -77,9 +78,7 @@ object ProfileRun {
       try {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         val secs = (System.nanoTime() - t0) / 1e9
-        // listener bus is async — give it a moment to drain before
-        // reading counters (no public waitUntilEmpty)
-        Thread.sleep(300)
+        Bridge.drain(spark.sparkContext)
         println(f"PROFILE $name $secs%.3f s  ${c.line}")
         if (sys.env.contains("SPARK_GRAFT_PROFILE_STAGES")) {
           import scala.jdk.CollectionConverters._

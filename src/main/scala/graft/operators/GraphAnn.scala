@@ -31,6 +31,18 @@ import graft.expressions.VectorExpressions.dotI
   * per-query BEAM along graph edges: state is queries×beam rows,
   * each step one edge join + one code join + one rank window —
   * corpus-size-independent once the graph is built.
+  *
+  * One walk serves every shape (flat, layered, filtered,
+  * filtered-layered): [[beamServe]] over one private core whose state
+  * carries the query code. The other width — a slim state that
+  * re-joins the query code every step, which an earlier unfiltered
+  * core kept — was A/B'd against the two-core layout this replaced:
+  * sf0.1, 4-core VM, 5 alternating fresh-JVM runs per side. Change /
+  * parent medians on q452, q457, q468, q475 and q479 were 0.99, 1.06,
+  * 1.00, 1.01 and 1.02 for the carried code and 1.05, 0.99, 0.98,
+  * 1.08 and 1.01 for the slim state, every one inside the parent's
+  * IQR, so the core keeps the one width that needs no per-step query
+  * join.
   */
 object GraphAnn {
 
@@ -155,8 +167,8 @@ object GraphAnn {
     // delta·k rows, consumed 2–3 times below (candidates, reverse
     // candidates, touched set) — truncate so each reference reads the
     // bounded frame instead of re-running the serve's final window
-    val attached = beamServe(newCodes, graph, codes, idCol, codeCol,
-        entryK, beam, steps, k)
+    val attached = beamServe(newCodes, Seq((graph, steps)), codes, codes,
+        idCol, codeCol, entryK, beam, k)
       .select(col("query_id").as("src"), col("neighbor_id").as("dst"))
       .localCheckpoint(false)
     val allC = codes.unionByName(newCodes)
@@ -257,46 +269,6 @@ object GraphAnn {
     repaired.localCheckpoint(false)
   }
 
-  /** Beam-search serve over a built neighbor graph: start every query
-    * at the `entryK` fixed entry nodes (smallest salted hash — a
-    * corpus-independent, deterministic pick read via one top-k), then
-    * `steps` rounds of expand-along-edges → score → keep-beam. The
-    * query's own row is excluded only at the END (it may legitimately
-    * anchor the walk). Returns (query_id, rn, neighbor_id, idot),
-    * rn ≤ topK.
-    */
-  def beamServe(queries: DataFrame, graph: DataFrame, codes: DataFrame,
-      idCol: String, codeCol: String, entryK: Int, beam: Int,
-      steps: Int, topK: Int): DataFrame = {
-    require(steps >= 0)
-    beamCore(queries, codes, codes, Seq((graph, steps)), idCol,
-      codeCol, entryK, beam, topK)
-  }
-
-  /** HNSW-style LAYERED serve: descend a stack of graphs from
-    * sparsest to densest — a few beam steps over a hash-sampled
-    * upper layer route the beam into the right region of the full
-    * graph, so the expensive bottom-layer expansion needs fewer
-    * steps for the same recall (Malkov & Yashunin 2016, reduced to
-    * deterministic layers: level membership is a salted-hash
-    * sample, not an RNG draw, so the whole descent replays in SQL).
-    *
-    * `layers` runs top→bottom as (edges, steps); entry points are
-    * the `entryK` smallest `:entry`-hash nodes of `topNodes` (the
-    * top layer's membership set). The beam state carries over from
-    * each layer into the next — exactly the HNSW ef-search handoff.
-    * At 100 TB: the upper layers are corpus-fraction-sized (fanout^-L
-    * of the corpus), so their expansion joins touch a sliver of the
-    * edge table; the state stays queries×beam rows throughout.
-    */
-  def beamServeLayered(queries: DataFrame, layers: Seq[(DataFrame, Int)],
-      topNodes: DataFrame, codes: DataFrame, idCol: String,
-      codeCol: String, entryK: Int, beam: Int, topK: Int): DataFrame = {
-    require(layers.nonEmpty && layers.forall(_._2 >= 0))
-    beamCore(queries, codes, topNodes, layers, idCol, codeCol, entryK,
-      beam, topK)
-  }
-
   /** Geometric level count for [[buildLayerStack]] — the HNSW level
     * policy with the RNG draw replaced by corpus size: level l keeps
     * ~n·fanout^-l nodes, so the stack stops when a level would fall
@@ -323,7 +295,7 @@ object GraphAnn {
     codes.filter(saltedHash60(col(idCol), ":lvl") % f === 0)
   }
 
-  /** Auto-built multi-level layer stack for [[beamServeLayered]]
+  /** Auto-built multi-level layer stack for [[beamServe]]
     * (VERDICT r11 item 3): `levels` upper layers, level l = ring
     * graphs over the fanout^-l hash sample ([[levelNodes]]), top
     * first. Returns (edges, memberNodes) per layer top→bottom-1;
@@ -348,64 +320,109 @@ object GraphAnn {
     }
   }
 
-  /** PREDICATE-CONSTRAINED beam serve (the DiskANN/Qdrant filtered-
-    * search pattern, VERDICT r11 item 4): the beam routes through
-    * EVERY node — restricting the walk itself to matching nodes
-    * disconnects the graph at selective predicates — but only nodes
-    * present in `allowed` are collected into the result. A separate
-    * per-query accumulator keeps the best `topK` matching nodes seen
-    * at ANY scoring step (matches scored during expansion count even
-    * when the unfiltered beam cut drops them), which is exactly why
-    * post-filtering a fixed top-k under-returns: the global top-k is
-    * dominated by non-matching nodes at a 5% predicate, so filtering
-    * it afterwards yields ≪ k rows, while the route-through walk
-    * keeps collecting matches all the way down.
+  /** Beam-search serve over a built neighbor graph — the one entry
+    * point of every walk (flat, layered, filtered, filtered-layered).
+    * Every query starts at the `entryK` smallest `:entry`-hash nodes
+    * of `entryPool` (a corpus-independent, deterministic pick read via
+    * one top-k), then each layer runs its `steps` rounds of
+    * expand-along-edges → score → keep-beam. Returns (query_id, rn,
+    * neighbor_id, idot), rn ≤ topK. The query's own row is excluded
+    * only at the END (it may legitimately anchor the walk).
     *
-    * Recall at selective predicates is COVERAGE-bound (measured, q475:
-    * the routing beam's scored set is its out-neighborhoods, and a
-    * better-navigable graph converges faster and explores LESS), so
-    * pass `graph` STITCHED with a kNN overlay built over the allowed
-    * subset (`nnDescent` on the filtered codes — |allowed|·k edges,
-    * selectivity-bounded): matched nodes then chain through
-    * allowed-only edges, the FilteredDiskANN/FilteredVamana per-label
-    * subgraph idea — audited recall 1.0 at 5% selectivity vs 0.48
-    * unstitched. At very low selectivity the production plan is the
-    * cardinality switch: exact-score the allowed set outright when
-    * |allowed| is small enough that a scan beats walk bookkeeping.
+    * Layers (HNSW, Malkov & Yashunin 2016, reduced to deterministic
+    * levels): `layers` runs top→bottom as (edges, steps). A flat serve
+    * is one layer whose entry pool is `codes`; a [[buildLayerStack]]
+    * descent passes the TOP layer's membership set. A few beam steps
+    * over a hash-sampled upper layer route the beam into the right
+    * region of the full graph, so the expensive bottom-layer expansion
+    * needs fewer steps for the same recall, and the beam state carries
+    * over from each layer into the next — the HNSW ef-search handoff.
+    * Level membership is a salted-hash sample, not an RNG draw, so the
+    * whole descent replays in SQL. At 100 TB the upper layers are
+    * corpus-fraction-sized (fanout^-L of the corpus), so their
+    * expansion joins touch a sliver of the edge table.
+    *
+    * `allowed` (the DiskANN/Qdrant filtered-search pattern): the beam
+    * still routes through EVERY node — restricting the walk itself to
+    * matching nodes disconnects the graph at selective predicates —
+    * but only nodes in `allowed` are collected. A second, matched
+    * frontier keeps the best `beam` matching nodes seen at ANY scoring
+    * step (matches scored during expansion count even when the routing
+    * cut drops them) and EXPANDS too, and `entryK` extra seeds come
+    * from the allowed set itself. That is why post-filtering a fixed
+    * top-k under-returns: at a 5% predicate the global top-k is
+    * dominated by non-matching nodes, while the route-through walk
+    * keeps collecting matches all the way down. Recall at selective
+    * predicates is COVERAGE-bound (measured, q475: the routing beam's
+    * scored set is its out-neighborhoods, and a better-navigable graph
+    * converges faster and explores LESS), so pass each layer STITCHED
+    * with a kNN overlay built over the allowed subset (`nnDescent` on
+    * the filtered codes — |allowed|·k edges): matched nodes then chain
+    * through allowed-only edges, the FilteredDiskANN/FilteredVamana
+    * per-label subgraph idea — audited recall 1.0 at 5% selectivity vs
+    * 0.48 unstitched. At very low selectivity [[filteredServeAuto]]
+    * exact-scores the allowed set instead.
+    *
+    * Bound: the walk state is queries×beam rows per frontier, and
+    * every join broadcasts it (or the expansion pairs it spawns, ≤
+    * queries · 2·beam · k rows) against streamed scans of the
+    * corpus-sized graph and codes — no corpus-sized exchange anywhere,
+    * and the state stays queries×beam rows through every layer.
     */
-  def beamServeFiltered(queries: DataFrame, graph: DataFrame,
-      codes: DataFrame, allowed: DataFrame, idCol: String,
-      codeCol: String, entryK: Int, beam: Int, steps: Int,
-      topK: Int): DataFrame = {
-    require(steps >= 0)
-    beamCoreFiltered(queries, codes, codes, Seq((graph, steps)),
-      allowed.select(col(idCol).as("node")), idCol, codeCol,
-      entryK, beam, topK)
-  }
-
-  /** [[beamServeFiltered]] descending a LAYER STACK — filtered HNSW,
-    * the shape vector stores actually ship: the beam routes down the
-    * [[buildLayerStack]] levels while the matched frontier collects
-    * (and expands) `allowed` nodes at every step. Stitch the allowed-
-    * subset kNN overlay into each layer's edge set for the same
-    * coverage reason as the flat case (the q475 lesson: recall is
-    * coverage-bound, and the overlay is |allowed|·k edges).
-    */
-  def beamServeFilteredLayered(queries: DataFrame,
-      layers: Seq[(DataFrame, Int)], topNodes: DataFrame,
-      codes: DataFrame, allowed: DataFrame, idCol: String,
-      codeCol: String, entryK: Int, beam: Int, topK: Int): DataFrame = {
+  def beamServe(queries: DataFrame, layers: Seq[(DataFrame, Int)],
+      entryPool: DataFrame, codes: DataFrame, idCol: String,
+      codeCol: String, entryK: Int, beam: Int, topK: Int,
+      allowed: Option[DataFrame] = None): DataFrame = {
     require(layers.nonEmpty && layers.forall(_._2 >= 0))
-    beamCoreFiltered(queries, codes, topNodes, layers,
-      allowed.select(col(idCol).as("node")), idCol, codeCol,
-      entryK, beam, topK)
+    require(entryK >= 1 && beam >= 1 && topK >= 1)
+    val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    // lazily persisted: a step would otherwise re-run the quantize-scan
+    // subtree per broadcast rebuild
+    val q = queries.select(col(idCol).as("query_id"),
+        col(codeCol).as("__qc"))
+      .persist(mem)
+    val nodes = allowed.map(_.select(col(idCol).as("node")))
+    val corpus = codes.select(col(idCol).as("node"), col(codeCol).as("__nc"))
+    // `allowed` membership rides the corpus codes as `__m`, attached
+    // ONCE by one left join instead of one semi-join per step; `allowed`
+    // may repeat a node, so deduplicate first or every repeat duplicates
+    // that node's corpus row
+    val cs = nodes.fold(corpus) { m =>
+      corpus.join(m.distinct().withColumn("__m", lit(true)), Seq("node"),
+          "left")
+        .select(col("node"), col("__nc"),
+          coalesce(col("__m"), lit(false)).as("__m"))
+    }.persist(mem)
+    def seeds(pool: DataFrame): DataFrame = pool
+      .select(col("node"), saltedHash60(col("node"), ":entry").as("__h"))
+      .orderBy(col("__h"), col("node")).limit(entryK)
+      .select(col("node"))
+    val global = seeds(entryPool.select(col(idCol).as("node")))
+    // with a selective predicate the matching nodes cluster away from
+    // the unfiltered walk's path; a fixed O(entryK) seed set from the
+    // filter's own population keeps every region of it reachable
+    val entry = nodes.fold(global)(m => global.union(seeds(m)).distinct())
+    // lazily persist each layer's edge frame: a layer is scanned once
+    // per step, and an UN-materialized graph plan (e.g. nnDescent's
+    // final top-k) would otherwise re-execute per step
+    val layersP = layers.map { case (g, n) =>
+      (g.select(col("src"), col("dst")).persist(mem), n)
+    }
+    // materialise the served top-k, then unpersist what the walk
+    // persisted: the result reads only its own checkpoint, and a
+    // long-lived session does not accumulate one cached
+    // query/codes/graph copy per serve
+    val out = beamCore(q, cs, entry, layersP, beam, topK,
+      allowed.isDefined).localCheckpoint()
+    (q +: cs +: layersP.map(_._1)).foreach(_.unpersist())
+    out
   }
 
   /** Filtered serve with the CARDINALITY SWITCH (the Qdrant planner
     * rule): when the predicate keeps ≤ `switchBelow` rows, exact-score
     * the allowed set outright — at that size a scan beats graph-walk
     * bookkeeping AND is exactly correct — otherwise run the stitched
-    * [[beamServeFiltered]] walk. The count is one bounded agg action;
+    * filtered [[beamServe]] walk. The count is one bounded agg action;
     * the emitted `plan` column records the choice so a caller (and
     * the gate) can pin it. Both branches return the same shape
     * (query_id, rn, neighbor_id, idot, plan).
@@ -423,226 +440,99 @@ object GraphAnn {
       val overlay = nnDescent(allowed, idCol, codeCol,
         k = 4, rounds = 1, buckets = math.max(1,
           (nAllowed / 256L).toInt)).select(col("src"), col("dst"))
-      beamServeFiltered(queries,
-          graph.select(col("src"), col("dst")).unionByName(overlay)
-            .distinct(),
-          codes, allowed, idCol, codeCol, entryK, beam, steps, topK)
+      beamServe(queries,
+          Seq((graph.select(col("src"), col("dst")).unionByName(overlay)
+            .distinct(), steps)),
+          codes, codes, idCol, codeCol, entryK, beam, topK, Some(allowed))
         .withColumn("plan", lit("stitched_walk"))
     }
   }
 
-  /** Unfiltered beam core — the r15 shape, kept verbatim: state is
-    * (query_id, node, idot); each step broadcasts the post-cut state
-    * and the expansion pairs against streamed scans of the persisted
-    * graph/codes frames, the query code joins per step from the
-    * persisted 1-row-per-query frame, and union+dedup+rank fuse into
-    * one window pass. An r16 variant that carried the query code in
-    * the state (saving the per-step q-join broadcast) measured
-    * uniformly WORSE here (q452 7.66→8.26 s, q457 9.55→10.42 s,
-    * q468 9.85→10.74 s, identical single-JVM A/B at sf0.1) — the
-    * widened state through every per-step broadcast and window
-    * outweighed the removed join — so the unfiltered path keeps the
-    * slim state; the filtered path (below) keeps the code because its
-    * fusion wins depend on it and measured better (q475 7.57→6.06,
-    * q479 8.57→7.44).
+  /** The one beam walk under [[beamServe]]. State rows are (tag,
+    * query_id, node, idot, __qc): tag "b" is the routing beam, and a
+    * filtered walk adds tag "r", the matched accumulator. An
+    * unfiltered walk is the one-tag case — its result is tag "b"
+    * minus the query's own row.
+    *
+    * Plan shape (optimization r15 §3.1/§2.3/§2.4, r16 §2.4): the state
+    * is the by-design-SMALL side of every join, so each step
+    * BROADCASTS it against streamed scans of the persisted graph and
+    * codes. The state CARRIES the query code, so no step re-joins the
+    * query frame — the init pays that join once. Both tags ride ONE
+    * frame cut by ONE window pass per step, partitioned by (query_id,
+    * tag) — per tag exactly a per-frame dedup+rank — so a step
+    * materializes ONE checkpoint. Per step the remaining actions are
+    * two broadcast builds (state projection; expansion pairs) and the
+    * fused cut, whose lazy localCheckpoint folds into the next step's
+    * broadcast build.
     */
-  private def beamCore(queries: DataFrame, codes: DataFrame,
-      entryPool: DataFrame, layers: Seq[(DataFrame, Int)], idCol: String,
-      codeCol: String, entryK: Int, beam: Int, topK: Int): DataFrame = {
-    require(entryK >= 1 && beam >= 1 && topK >= 1)
-    val q = queries.select(col(idCol).as("query_id"),
-        col(codeCol).as("__qc"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val cs = codes.select(col(idCol).as("node"), col(codeCol).as("__nc"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val entry = entryPool
-      .select(col(idCol).as("node"),
-        saltedHash60(col(idCol), ":entry").as("__h"))
-      .orderBy(col("__h"), col("node")).limit(entryK)
-      .select(col("node"))
-    val wBeam = Window.partitionBy(col("query_id"))
-      .orderBy(col("idot").desc, col("node"))
-    def dedupKeep(state: DataFrame, n: Int): DataFrame = state
-      .withColumn("__dup",
-        lag(col("node"), 1).over(wBeam) === col("node"))
-      .filter(!coalesce(col("__dup"), lit(false)))
-      .withColumn("__rn", row_number().over(wBeam))
-      .filter(col("__rn") <= n)
-      .select(col("query_id"), col("node"), col("idot"))
-    def scored(pairsQN: DataFrame): DataFrame =
-      cs.join(broadcast(pairsQN), "node").join(broadcast(q), "query_id")
-        .withColumn("idot", dotI(col("__qc"), col("__nc")))
-        .select(col("query_id"), col("node"), col("idot"))
-    var st = scored(q.select(col("query_id")).crossJoin(broadcast(entry)))
-    val layersP = layers.map { case (g, n) =>
-      (g.select(col("src"), col("dst"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK), n)
-    }
-    for ((graph, steps) <- layersP; _ <- 1 to steps) {
-      val exp = scored(
-        graph.join(broadcast(st
-            .select(col("query_id"), col("node").as("src"))), "src")
-          .select(col("query_id"), col("dst").as("node")))
-      st = dedupKeep(st.union(exp), beam).localCheckpoint(false)
-    }
-    released(TopK.rank(st.filter(col("node") =!= col("query_id")),
-        "query_id", col("idot").desc, "node", topK)
-      .select(col("query_id"), col("rn"), col("node").as("neighbor_id"),
-        col("idot")), q +: cs +: layersP.map(_._1))
-  }
-
-  /** Materialise a beam core's served top-k, then unpersist the frames
-    * the walk persisted: the returned frame reads only its own
-    * checkpoint, and a long-lived session does not accumulate one
-    * cached query/codes/graph copy per serve call.
-    */
-  private def released(served: DataFrame,
-      persisted: Seq[DataFrame]): DataFrame = {
-    val out = served.localCheckpoint()
-    persisted.foreach(_.unpersist())
-    out
-  }
-
-  private def beamCoreFiltered(queries: DataFrame, codes: DataFrame,
-      entryPool: DataFrame, layers: Seq[(DataFrame, Int)],
-      allowed: DataFrame, idCol: String,
-      codeCol: String, entryK: Int, beam: Int, topK: Int): DataFrame = {
-    require(entryK >= 1 && beam >= 1 && topK >= 1)
-    // Plan shape (optimization r15 §3.1/§2.3/§2.4; tightened r16
-    // §2.4): the walk state (queries×beam rows) is the by-design-
-    // SMALL side of every join here, while graph and codes are
-    // corpus-sized — so each step BROADCASTS the state against
-    // streamed scans of the big frames (no corpus-sized exchange
-    // anywhere). r16 cuts the per-step action cadence further:
-    //  - the state CARRIES the query code (__qc), so the per-step
-    //    re-join against the query frame (one broadcast build + one
-    //    join per step in r15) is gone — the init pays it once. The
-    //    state exchange widens by dim longs per row, but the state is
-    //    queries×beam rows by construction (the documented bound).
-    //    (The UNFILTERED core measured worse with this trade and
-    //    keeps the slim r15 state — see [[beamCore]]; here the tag
-    //    fusion below needs the code in-row and measured better.);
-    //  - the filtered serve's TWO state frames (routing beam +
-    //    matched accumulator) ride ONE tagged frame cut by ONE window
-    //    pass per step (partitioned by (query_id, tag) — per tag this
-    //    is exactly the r15 per-frame dedup+rank), so a filtered step
-    //    materializes ONE checkpoint instead of three (exp/res/st);
-    //  - `allowed` membership is attached to the corpus codes ONCE
-    //    (one left join at serve start, persisted with cs) instead of
-    //    one semi-join per step.
-    // Per step the remaining actions are exactly two broadcast builds
-    // (state projection; expansion pairs) and the fused cut, whose
-    // lazy localCheckpoint folds into the next step's broadcast
-    // build. The broadcast stays provably bounded (ADVICE r15): the
-    // frontier is the POST-CUT state, ≤ 2·beam rows per query, so
-    // expansion pairs are ≤ queries · 2·beam · k rows — never
-    // corpus-scale. cs and q are lazily persisted: a step would
-    // otherwise re-run the quantize-scan subtree per broadcast
-    // rebuild.
-    val q = queries.select(col(idCol).as("query_id"),
-        col(codeCol).as("__qc"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // `allowed` may repeat a node; deduplicate before the left join or
-    // every repeat duplicates that node's corpus row
-    val cs = codes.select(col(idCol).as("node"), col(codeCol).as("__nc"))
-      .join(allowed.select(col("node")).distinct().withColumn("__m", lit(true)),
-        Seq("node"), "left")
-      .select(col("node"), col("__nc"),
-        coalesce(col("__m"), lit(false)).as("__m"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val entryGlobal = entryPool
-      .select(col(idCol).as("node"),
-        saltedHash60(col(idCol), ":entry").as("__h"))
-      .orderBy(col("__h"), col("node")).limit(entryK)
-      .select(col("node"))
-    // filtered serve additionally seeds `entryK` MATCHING start
-    // points (the DiskANN filtered-search pattern): with a selective
-    // predicate the matching nodes cluster away from the unfiltered
-    // walk's path, and a fixed O(entryK) seed set from the filter's
-    // own population keeps every region of it reachable — still
-    // corpus-size-independent state
-    val entry = entryGlobal.union(
-        allowed.select(col("node"),
-            saltedHash60(col("node"), ":entry").as("__h"))
-          .orderBy(col("__h"), col("node")).limit(entryK)
-          .select(col("node")))
-      .distinct()
-    // the per-step cut window: partitioned by (query_id, tag) — for
-    // each tag's row set this is the SAME dedup+rank as a window
-    // partitioned by query_id alone over that set
+  private def beamCore(q: DataFrame, cs: DataFrame, entry: DataFrame,
+      layers: Seq[(DataFrame, Int)], beam: Int, topK: Int,
+      filtered: Boolean): DataFrame = {
     val wTag = Window.partitionBy(col("query_id"), col("__t"))
       .orderBy(col("idot").desc, col("node"))
     val stateCols = Seq(col("__t"), col("query_id"), col("node"),
       col("idot"), col("__qc"))
-    // dedup by (query_id, tag, node) + keep-best-`n` per tag in ONE
-    // window pass: duplicates carry identical idot (a pure function
-    // of the pair), so they sort adjacent and a lag() comparison
-    // drops them; row_number over the SAME spec then ranks without a
-    // second exchange (filter preserves partitioning and ordering).
+    // dedup by (query_id, tag, node) + keep-best-`beam` per tag in ONE
+    // window pass: duplicates carry identical idot (a pure function of
+    // the pair), so they sort adjacent and a lag() comparison drops
+    // them; row_number over the SAME spec then ranks without a second
+    // exchange (filter preserves partitioning and ordering).
     // Set-identical to per-frame union().distinct() + rank.
-    def dedupKeep(state: DataFrame, n: Int): DataFrame = state
+    def dedupKeep(state: DataFrame): DataFrame = state
       .withColumn("__dup",
         lag(col("node"), 1).over(wTag) === col("node"))
       .filter(!coalesce(col("__dup"), lit(false)))
       .withColumn("__rn", row_number().over(wTag))
-      .filter(col("__rn") <= n)
+      .filter(col("__rn") <= beam)
       .select(stateCols: _*)
     // state is the broadcast build side; corpus codes stream past it.
     // `pairs` columns: (query_id, __qc, node).
     def scored(pairs: DataFrame): DataFrame =
       cs.join(broadcast(pairs), "node")
         .withColumn("idot", dotI(col("__qc"), col("__nc")))
-        .select(col("query_id"), col("node"), col("idot"),
-          col("__qc"), col("__m"))
-    // tag scored rows: every row joins the routing beam ("b"); rows
-    // whose node matches the predicate ALSO join the matched
-    // accumulator ("r") — the r15 `matches()` semi-join + self-filter
-    // as a free map-side explode. The matched frontier is beam-sized,
-    // not topK-sized, because it also EXPANDS (the FilteredDiskANN
-    // traversal: matching nodes chain to the other matching nodes
-    // near them, which the query-routing beam alone never visits at a
-    // selective predicate). Self excluded at accumulation time so a
-    // cut can never lose the k-th real answer to the query's own row.
-    def tagged(sc: DataFrame): DataFrame = sc.select(
-      explode(when(col("__m") && col("node") =!= col("query_id"),
-          array(lit("b"), lit("r")))
-        .otherwise(array(lit("b")))).as("__t"),
+    // every scored row joins the routing beam ("b"); in a filtered walk
+    // rows whose node matches ALSO join the matched accumulator ("r") —
+    // a free map-side explode. The matched frontier is beam-sized, not
+    // topK-sized, because it also EXPANDS (the FilteredDiskANN
+    // traversal: matching nodes chain to the matching nodes near them,
+    // which the query-routing beam alone never visits at a selective
+    // predicate). Self is excluded at accumulation time so a cut can
+    // never lose the k-th real answer to the query's own row.
+    val tag =
+      if (filtered)
+        explode(when(col("__m") && col("node") =!= col("query_id"),
+            array(lit("b"), lit("r")))
+          .otherwise(array(lit("b"))))
+      else lit("b")
+    def tagged(sc: DataFrame): DataFrame = sc.select(tag.as("__t"),
       col("query_id"), col("node"), col("idot"), col("__qc"))
     // init state is referenced twice by the first step (frontier
     // projection + union) — truncate so the entry subtree (a corpus
     // orderBy+limit) runs once
-    var st = tagged(scored(
-        q.select(col("query_id"), col("__qc"))
-          .crossJoin(broadcast(entry))))
+    var st = tagged(scored(q.crossJoin(broadcast(entry))))
       .localCheckpoint(false)
-    // lazily persist each layer's edge frame: a layer is scanned once
-    // per step, and an UN-materialized graph plan (e.g. nnDescent's
-    // final top-k) would otherwise re-execute per step
-    val layersP = layers.map { case (g, n) =>
-      (g.select(col("src"), col("dst"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK), n)
-    }
-    for ((graph, steps) <- layersP; _ <- 1 to steps) {
-      // filtered serve expands from BOTH frontiers — routing beam and
-      // matched beam, i.e. every tag of the state — in one edge join;
-      // duplicate frontier rows (a node in both tags) and duplicate
-      // expansion targets are NOT pre-deduped: they only multiply a
-      // bounded broadcast frame, and the dedupKeep window removes
-      // them before the next step
+    for ((graph, steps) <- layers; _ <- 1 to steps) {
+      // expand from every frontier row — both tags of a filtered walk
+      // — in one edge join. Duplicate frontier rows (a node in both
+      // tags) and duplicate targets are NOT pre-deduped: they only
+      // multiply a bounded broadcast frame (the frontier is the
+      // POST-CUT state, ≤ 2·beam rows per query), and dedupKeep
+      // removes them before the next step
       val pairs = graph.join(broadcast(st
           .select(col("query_id"), col("__qc"), col("node").as("src"))),
           "src")
         .select(col("query_id"), col("__qc"), col("dst").as("node"))
-      // truncate lineage each step: the state frame is queries×beam
-      // rows, but each round references the previous one TWICE
-      // (union + expansion), so an unbroken chain makes plan
+      // truncate lineage each step: each round references the previous
+      // one TWICE (union + expansion), so an unbroken chain makes plan
       // analysis O(2^steps) — the Bpe.train checkpoint discipline
-      st = dedupKeep(st.unionByName(tagged(scored(pairs))), beam)
+      st = dedupKeep(st.unionByName(tagged(scored(pairs))))
         .localCheckpoint(false)
     }
-    released(TopK.rank(st.filter(col("__t") === "r"), "query_id",
-        col("idot").desc, "node", topK)
+    TopK.rank(st.filter(col("__t") === (if (filtered) "r" else "b") &&
+          col("node") =!= col("query_id")),
+        "query_id", col("idot").desc, "node", topK)
       .select(col("query_id"), col("rn"), col("node").as("neighbor_id"),
-        col("idot")), q +: cs +: layersP.map(_._1))
+        col("idot"))
   }
 }

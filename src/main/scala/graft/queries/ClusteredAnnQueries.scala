@@ -263,7 +263,7 @@ object ClusteredAnnQueries extends QueryPack {
        |  FROM ${p}st$nSteps WHERE node <> query_id)""".stripMargin
   }
 
-  /** Dual-frontier filtered descent (the [[GraphAnn.beamCoreFiltered]]
+  /** Dual-frontier filtered descent (the filtered [[GraphAnn.beamServe]]
     * recurrence): routing beam `${p}st$r` + matched beam `${p}fr$r`,
     * both expanding, both cut to Beam per step, per-step edge tables
     * (the layered q479 passes a different table per level). Assumes
@@ -756,8 +756,8 @@ object ClusteredAnnQueries extends QueryPack {
       (s, dir) => {
         val (codes, graph) = builtGraph(s, dir)
         val queries = queriesOf(codes)
-        val served = GraphAnn.beamServe(queries, graph, codes,
-          "vec_id", "code", EntryK, Beam, Steps, TopK)
+        val served = GraphAnn.beamServe(queries, Seq((graph, Steps)), codes,
+          codes, "vec_id", "code", EntryK, Beam, TopK)
         recallRow("graph_beam", queries, served,
           bruteTopK(queries, codes))
       },
@@ -838,13 +838,13 @@ object ClusteredAnnQueries extends QueryPack {
           Fanout, lv, Buckets)
         val layers = stack.map { case (e, _) => (e, 1) } :+
           ((graph, Steps - lv))
-        val servedAuto = GraphAnn.beamServeLayered(queries, layers,
+        val servedAuto = GraphAnn.beamServe(queries, layers,
           stack.head._2, codes, "vec_id", "code", EntryK, Beam, TopK)
         val handNodes = codes.filter(
           GraphAnn.saltedHash60(col("vec_id"), ":layer") % HandUpper === 0)
         val handUpper = GraphAnn.ringInitEdges(handNodes, "vec_id", K,
           HandUpper)
-        val servedHand = GraphAnn.beamServeLayered(queries,
+        val servedHand = GraphAnn.beamServe(queries,
           Seq((handUpper, 2), (graph, Steps - 2)), handNodes, codes,
           "vec_id", "code", EntryK, Beam, TopK)
         recallRow("auto_stack", queries, servedAuto, exact)
@@ -898,9 +898,9 @@ object ClusteredAnnQueries extends QueryPack {
           col("vec_id") % FilterMod === FilterRem)
         val overlay = GraphAnn.nnDescent(allowed, "vec_id", "code",
           K, Rounds, buckets = 2).select(col("src"), col("dst"))
-        val served = GraphAnn.beamServeFiltered(queries,
-          graph.unionByName(overlay).distinct(), codes,
-          allowed, "vec_id", "code", EntryK, Beam, Steps, TopK)
+        val served = GraphAnn.beamServe(queries,
+          Seq((graph.unionByName(overlay).distinct(), Steps)), codes,
+          codes, "vec_id", "code", EntryK, Beam, TopK, Some(allowed))
         val exact = bruteTopK(queries, allowed)
           .withColumn("__hit", lit(true))
         served.join(exact, Seq("query_id", "neighbor_id"), "left")
@@ -987,9 +987,9 @@ object ClusteredAnnQueries extends QueryPack {
         val layers = stack.map { case (e, _) =>
           (e.unionByName(overlay).distinct(), 1) } :+
           ((graph.unionByName(overlay).distinct(), Steps - LevelCap))
-        val served = GraphAnn.beamServeFilteredLayered(queries, layers,
-          stack.head._2, codes, allowed, "vec_id", "code", EntryK,
-          Beam, TopK)
+        val served = GraphAnn.beamServe(queries, layers,
+          stack.head._2, codes, "vec_id", "code", EntryK, Beam, TopK,
+          Some(allowed))
         val exact = bruteTopK(queries, allowed)
           .withColumn("__hit", lit(true))
         served.join(exact, Seq("query_id", "neighbor_id"), "left")
@@ -1433,8 +1433,8 @@ object ClusteredAnnQueries extends QueryPack {
           val edges = graft.sources.TxLog.read(s, tmp.toString)
             .select(col("src"), col("dst"))
           val queries = queriesOf(codes)
-          val served = GraphAnn.beamServe(queries, edges, codes,
-            "vec_id", "code", EntryK, Beam, Steps, TopK)
+          val served = GraphAnn.beamServe(queries, Seq((edges, Steps)),
+            codes, codes, "vec_id", "code", EntryK, Beam, TopK)
           recallRow("graph_committed_serve", queries, served,
               bruteTopK(queries, codes))
             .crossJoin(edges.agg(count(lit(1)).as("n_edges")))
@@ -1553,8 +1553,8 @@ object ClusteredAnnQueries extends QueryPack {
       (s, dir) => {
         val (codes, graph) = builtGraph(s, dir)
         val queries = queriesOf(codes)
-        val served = GraphAnn.beamServe(queries, graph, codes,
-          "vec_id", "code", EntryK, Beam, Steps, topK = 10)
+        val served = GraphAnn.beamServe(queries, Seq((graph, Steps)), codes,
+          codes, "vec_id", "code", EntryK, Beam, topK = 10)
         val positives = exactPairs(queries, codes, "code", dotI, _.desc, 1)
         Similarity.hardNegatives(served, positives, "idot", m = 5)
           .orderBy(col("query_id"), col("negative_rank"))
@@ -1811,8 +1811,8 @@ object ClusteredAnnQueries extends QueryPack {
             "vec_id", "code", K)
           val queries = live.filter(col("vec_id") % 25 === 0)
           val served = GraphAnn.beamServe(queries,
-            repaired.select(col("src"), col("dst")), live,
-            "vec_id", "code", EntryK, Beam, Steps, TopK)
+            Seq((repaired.select(col("src"), col("dst")), Steps)), live,
+            live, "vec_id", "code", EntryK, Beam, TopK)
           recallRow("graph_tombstone_cold_serve", queries,
               served, bruteTopK(queries, live))
             .crossJoin(edgesBack.agg(count(lit(1)).as("n_edges")))
@@ -1962,8 +1962,8 @@ object ClusteredAnnQueries extends QueryPack {
           val tombLive = graft.sources.TxLog.read(s, tombDir)
           val live = codes.filter(col("vec_id") % 7 =!= 0)
           val queries = live.filter(col("vec_id") % 25 === 0)
-          val served = GraphAnn.beamServe(queries, compacted, live,
-            "vec_id", "code", EntryK, Beam, Steps, TopK)
+          val served = GraphAnn.beamServe(queries, Seq((compacted, Steps)),
+            live, live, "vec_id", "code", EntryK, Beam, TopK)
           recallRow("graph_compacted_serve", queries, served,
               bruteTopK(queries, live))
             .crossJoin(compacted.agg(
@@ -2165,8 +2165,8 @@ object ClusteredAnnQueries extends QueryPack {
               Rounds, Buckets)
             .select(col("src"), col("dst")).localCheckpoint(true)
           val queries = ext.filter(col("vec_id") % 25 === 0)
-          val served = GraphAnn.beamServe(queries, graph, ext,
-            "vec_id", "code", EntryK, Beam, Steps, TopK)
+          val served = GraphAnn.beamServe(queries, Seq((graph, Steps)),
+            ext, ext, "vec_id", "code", EntryK, Beam, TopK)
           recallRow("graph_external_embeddings", queries,
             served, bruteTopK(queries, ext))
         }
@@ -2532,7 +2532,8 @@ object ClusteredAnnQueries extends QueryPack {
         val queries = mutated.filter(col("vec_id") % 25 === 0)
         val exact = bruteTopK(queries, mutated).localCheckpoint(true)
         def serve(graph: DataFrame) = GraphAnn.beamServe(queries,
-          graph, mutated, "vec_id", "code", EntryK, Beam, Steps, TopK)
+          Seq((graph, Steps)), mutated, mutated, "vec_id", "code", EntryK,
+          Beam, TopK)
         recallRow("graph_rebuilt", queries, serve(rebuilt), exact)
           .unionByName(recallRow("graph_stale_after_shift", queries,
             serve(staleGraph), exact))
@@ -2649,8 +2650,8 @@ object ClusteredAnnQueries extends QueryPack {
               recallRow(name, qi, served, bruteTopK(qi, ac))
             case IndexPolicy.Graph =>
               recallRow(name, qi,
-                GraphAnn.beamServe(qi, graph, codes, "vec_id", "code",
-                  EntryK, Beam, Steps, TopK),
+                GraphAnn.beamServe(qi, Seq((graph, Steps)), codes, codes,
+                  "vec_id", "code", EntryK, Beam, TopK),
                 bruteTopK(qi, codes))
             case IndexPolicy.Ivf =>
               val index = Similarity.insertIntoCells(vecs, "vec_id",
@@ -2978,8 +2979,8 @@ object ClusteredAnnQueries extends QueryPack {
         val exact = bruteTopK(queries, codes).localCheckpoint(true)
         Seq(1, 2, 4, 12).map { b =>
           recallRow("graph_beam_curve", queries,
-              GraphAnn.beamServe(queries, graph, codes, "vec_id",
-                "code", curveEntryK, b, curveSteps, TopK),
+              GraphAnn.beamServe(queries, Seq((graph, curveSteps)),
+                codes, codes, "vec_id", "code", curveEntryK, b, TopK),
               exact)
             .withColumn("beam", lit(b.toLong))
         }.reduce(_.unionByName(_)).orderBy(col("beam"))

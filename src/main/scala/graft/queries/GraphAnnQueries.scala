@@ -294,8 +294,8 @@ object GraphAnnQueries extends QueryPack {
       (s, dir) => {
         val (codes, graph) = builtGraph(s, dir)
         val queries = codes.filter(col("vec_id") % 100 === 0)
-        val served = GraphAnn.beamServe(queries, graph, codes,
-          "vec_id", "code", EntryK, Beam, Steps, TopK)
+        val served = GraphAnn.beamServe(queries, Seq((graph, Steps)), codes,
+          codes, "vec_id", "code", EntryK, Beam, TopK)
         auditExact(served, queries, codes)
       },
       Some(s"""WITH ${graphCtes("TRUE")},
@@ -324,8 +324,8 @@ object GraphAnnQueries extends QueryPack {
           "vec_id", "code", K, EntryK, Beam, Steps)
         val queries = all.filter(col("vec_id") % 100 === 0)
         val served = GraphAnn.beamServe(queries,
-          updated.select(col("src"), col("dst")), all,
-          "vec_id", "code", EntryK, Beam, Steps, TopK)
+          Seq((updated.select(col("src"), col("dst")), Steps)), all,
+          all, "vec_id", "code", EntryK, Beam, TopK)
         auditExact(served, queries, all)
       },
       Some(s"""WITH ${graphCtes("vec_id % 10 < 9")},
@@ -370,8 +370,8 @@ object GraphAnnQueries extends QueryPack {
           "vec_id", "code", K)
         val queries = live.filter(col("vec_id") % 100 === 0)
         val served = GraphAnn.beamServe(queries,
-          repaired.select(col("src"), col("dst")), live,
-          "vec_id", "code", EntryK, Beam, Steps, TopK)
+          Seq((repaired.select(col("src"), col("dst")), Steps)), live,
+          live, "vec_id", "code", EntryK, Beam, TopK)
         auditExact(served, queries, live)
       },
       Some(s"""WITH ${graphCtes("TRUE")},
@@ -439,8 +439,8 @@ object GraphAnnQueries extends QueryPack {
             .awaitTermination()
         }
         val queries = all.filter(col("vec_id") % 100 === 0)
-        val served = GraphAnn.beamServe(queries, graph, all,
-          "vec_id", "code", EntryK, Beam, Steps, TopK)
+        val served = GraphAnn.beamServe(queries, Seq((graph, Steps)), all,
+          all, "vec_id", "code", EntryK, Beam, TopK)
         auditExact(served, queries, all)
       },
       Some(s"""WITH ${graphCtes("vec_id % 10 < 8")},
@@ -472,7 +472,7 @@ object GraphAnnQueries extends QueryPack {
         val upper = GraphAnn.ringInitEdges(upperNodes, "vec_id", K,
           UpperBuckets)
         val queries = codes.filter(col("vec_id") % 100 === 0)
-        val served = GraphAnn.beamServeLayered(queries,
+        val served = GraphAnn.beamServe(queries,
           Seq((upper, UpperSteps),
             (graph.select(col("src"), col("dst")), LowerSteps)),
           upperNodes, codes, "vec_id", "code", EntryK, Beam, TopK)

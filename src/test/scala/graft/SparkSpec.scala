@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -25,12 +28,27 @@ object SparkSpec {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
+      .config("spark.sql.warehouse.dir", warehouseDir)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  // deleted when the test JVM exits, as Sessions does for its own
+  private lazy val warehouseDir: String = {
+    val dir = Files.createTempDirectory("graft-wh")
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      FileUtils.deleteDirectory(dir.toFile)))
+    dir.toString
+  }
+
+  /** Run `body` in a fresh temp directory named `prefix…`, deleted
+    * afterwards whether or not `body` throws.
+    */
+  def withTempDir[T](prefix: String)(body: Path => T): T = {
+    val dir = Files.createTempDirectory(prefix)
+    try body(dir) finally FileUtils.deleteDirectory(dir.toFile)
   }
 
   /** Expression nodes of `df`'s analysed plan, summed over every

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
@@ -61,13 +60,15 @@ class TablesSpec extends SparkSpec {
   test("events loader adapts to a nanos-as-long file written on the fly") {
     // write a µs file, then rewrite the column as raw nanos longs — the
     // loader sees LongType and must divide back to the same instants
-    val dir = Files.createTempDirectory("graft-events-nanos").toString
-    micros.map(_ * 1000L).toDF("ts")
-      .withColumn("event_id", monotonically_increasing_id())
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = Tables.events(spark, dir)
-    assert(out.schema("ts").dataType === TimestampType)
-    assert(out.select(unix_micros(col("ts"))).as[Long].collect().sorted
-      === micros.toArray)
+    SparkSpec.withTempDir("graft-events-nanos") { tmp =>
+      val dir = tmp.toString
+      micros.map(_ * 1000L).toDF("ts")
+        .withColumn("event_id", monotonically_increasing_id())
+        .write.mode("overwrite").parquet(s"$dir/events.parquet")
+      val out = Tables.events(spark, dir)
+      assert(out.schema("ts").dataType === TimestampType)
+      assert(out.select(unix_micros(col("ts"))).as[Long].collect().sorted
+        === micros.toArray)
+    }
   }
 }

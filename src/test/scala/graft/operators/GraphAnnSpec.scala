@@ -87,8 +87,9 @@ class GraphAnnSpec extends SparkSpec {
     val graph = GraphAnn.nnDescent(codesDf, "vec_id", "code",
       k = 4, rounds = 3, buckets = 2)
     val served = GraphAnn.beamServe(
-        codesDf.filter(col("vec_id").isin(1L, 6L)), graph, codesDf,
-        "vec_id", "code", entryK = 2, beam = 6, steps = 3, topK = 3)
+        codesDf.filter(col("vec_id").isin(1L, 6L)), Seq((graph, 3)),
+        codesDf, codesDf, "vec_id", "code", entryK = 2, beam = 6,
+        topK = 3)
       .select("query_id", "rn", "neighbor_id")
       .as[(Long, Long, Long)].collect()
       .groupBy(_._1).view
@@ -111,30 +112,14 @@ class GraphAnnSpec extends SparkSpec {
       k = 4, rounds = 3, buckets = 2).localCheckpoint()
     val queries = codesDf.filter(col("vec_id").isin(1L, 6L))
     val before = persisted()
-    val plain = GraphAnn.beamServe(queries, graph, codesDf, "vec_id",
-      "code", entryK = 2, beam = 6, steps = 3, topK = 3)
-    val filtered = GraphAnn.beamServeFiltered(queries, graph, codesDf,
-      codesDf.filter(col("vec_id").isin(6L, 8L)), "vec_id", "code",
-      entryK = 2, beam = 6, steps = 3, topK = 3)
+    val plain = GraphAnn.beamServe(queries, Seq((graph, 3)), codesDf,
+      codesDf, "vec_id", "code", entryK = 2, beam = 6, topK = 3)
+    val filtered = GraphAnn.beamServe(queries, Seq((graph, 3)), codesDf,
+      codesDf, "vec_id", "code", entryK = 2, beam = 6, topK = 3,
+      allowed = Some(codesDf.filter(col("vec_id").isin(6L, 8L))))
     assert(plain.count() === 6L)
     assert(filtered.count() === 3L) // allowed {6, 8}, self excluded
     assert((persisted() -- before).isEmpty)
-  }
-
-  test("beamServeLayered with one full layer IS beamServe") {
-    import spark.implicits._
-    val graph = GraphAnn.nnDescent(codesDf, "vec_id", "code",
-      k = 4, rounds = 3, buckets = 2)
-    val q = codesDf.filter(col("vec_id").isin(1L, 6L))
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("query_id", "rn", "neighbor_id", "idot")
-        .as[(Long, Long, Long, Long)].collect().toSet
-    val flat = rows(GraphAnn.beamServe(q, graph, codesDf,
-      "vec_id", "code", entryK = 2, beam = 6, steps = 3, topK = 3))
-    val layered = rows(GraphAnn.beamServeLayered(q,
-      Seq((graph.select(col("src"), col("dst")), 3)), codesDf, codesDf,
-      "vec_id", "code", entryK = 2, beam = 6, topK = 3))
-    assert(layered === flat)
   }
 
   test("layered descent through a sparse upper layer still finds the exact top-k") {
@@ -147,7 +132,7 @@ class GraphAnnSpec extends SparkSpec {
     val upperNodes = codesDf.filter(col("vec_id") % 2 === 0)
     val upper = GraphAnn.ringInitEdges(upperNodes, "vec_id",
       k = 2, buckets = 1)
-    val served = GraphAnn.beamServeLayered(
+    val served = GraphAnn.beamServe(
         codesDf.filter(col("vec_id").isin(1L, 6L)),
         Seq((upper, 1), (graph.select(col("src"), col("dst")), 2)),
         upperNodes, codesDf, "vec_id", "code", entryK = 2, beam = 6,
@@ -231,9 +216,10 @@ class GraphAnnSpec extends SparkSpec {
     // ROUTE THROUGH its own cluster and unallowed B nodes to collect
     // them — a pre-filtered walk could never leave cluster A
     val allowed = codesDf.filter(col("vec_id").isin(6L, 8L))
-    val served = GraphAnn.beamServeFiltered(
-        codesDf.filter(col("vec_id") === 1L), graph, codesDf, allowed,
-        "vec_id", "code", entryK = 2, beam = 6, steps = 3, topK = 3)
+    val served = GraphAnn.beamServe(
+        codesDf.filter(col("vec_id") === 1L), Seq((graph, 3)), codesDf,
+        codesDf, "vec_id", "code", entryK = 2, beam = 6, topK = 3,
+        allowed = Some(allowed))
       .select("query_id", "rn", "neighbor_id")
       .as[(Long, Long, Long)].collect()
     assert(served.map(_._3).toSet.subsetOf(Set(6L, 8L)))
@@ -251,10 +237,10 @@ class GraphAnnSpec extends SparkSpec {
     val allowed = codesDf.filter(col("vec_id").isin(6L, 8L))
     // steps = 0: the served list is the entry set's matched rows, so a
     // repeated allowed node shows up as a repeated neighbour
-    val served = GraphAnn.beamServeFiltered(
-        codesDf.filter(col("vec_id") === 1L), graph, codesDf,
-        allowed.union(allowed), "vec_id", "code", entryK = 8, beam = 6,
-        steps = 0, topK = 4)
+    val served = GraphAnn.beamServe(
+        codesDf.filter(col("vec_id") === 1L), Seq((graph, 0)), codesDf,
+        codesDf, "vec_id", "code", entryK = 8, beam = 6, topK = 4,
+        allowed = Some(allowed.union(allowed)))
       .select("query_id", "neighbor_id").as[(Long, Long)].collect()
     assert(served.length === served.distinct.length)
     assert(served.map(_._2).toSet === Set(6L, 8L))
@@ -268,10 +254,11 @@ class GraphAnnSpec extends SparkSpec {
     val upper = GraphAnn.ringInitEdges(upperNodes, "vec_id",
       k = 2, buckets = 1)
     val allowed = codesDf.filter(col("vec_id").isin(6L, 8L))
-    val served = GraphAnn.beamServeFilteredLayered(
+    val served = GraphAnn.beamServe(
         codesDf.filter(col("vec_id") === 1L),
-        Seq((upper, 1), (graph, 2)), upperNodes, codesDf, allowed,
-        "vec_id", "code", entryK = 2, beam = 6, topK = 3)
+        Seq((upper, 1), (graph, 2)), upperNodes, codesDf,
+        "vec_id", "code", entryK = 2, beam = 6, topK = 3,
+        allowed = Some(allowed))
       .select("rn", "neighbor_id").as[(Long, Long)].collect()
     val exact = Seq(6L, 8L).sortBy { id =>
       (-fixture(1L).zip(fixture(id)).map { case (a, b) => a.toLong * b }.sum, id)
@@ -338,5 +325,43 @@ class GraphAnnSpec extends SparkSpec {
       ranked.select(col("src"), col("dst")), codesDf, del,
       "vec_id", "code", k = 3))
     assert(fast === full)
+  }
+
+  test("golden rows of every serve shape on the spec fixture") {
+    import spark.implicits._
+    // a deliberately rough build (k = 3, one round) and a narrow beam,
+    // so the walks stop short of the exact answer and the pinned rows
+    // record the walk itself, not just the exact top-k
+    val graph = GraphAnn.nnDescent(codesDf, "vec_id", "code",
+      k = 3, rounds = 1, buckets = 2).select(col("src"), col("dst"))
+    val upperNodes = codesDf.filter(col("vec_id") % 2 === 0)
+    val upper = GraphAnn.ringInitEdges(upperNodes, "vec_id",
+      k = 2, buckets = 1)
+    val allowed = codesDf.filter(col("vec_id").isin(2L, 6L, 7L))
+    val q = codesDf.filter(col("vec_id").isin(1L, 4L, 6L, 7L))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("query_id", "rn", "neighbor_id", "idot")
+        .as[(Long, Long, Long, Long)].collect().sorted.toSeq
+    val layers = Seq((upper, 1), (graph, 1))
+    val flat = rows(GraphAnn.beamServe(q, Seq((graph, 2)), codesDf,
+      codesDf, "vec_id", "code", entryK = 1, beam = 2, topK = 3))
+    val layered = rows(GraphAnn.beamServe(q, layers, upperNodes,
+      codesDf, "vec_id", "code", entryK = 1, beam = 2, topK = 3))
+    val filtered = rows(GraphAnn.beamServe(q, Seq((graph, 2)), codesDf,
+      codesDf, "vec_id", "code", entryK = 1, beam = 2, topK = 2,
+      allowed = Some(allowed)))
+    val filteredLayered = rows(GraphAnn.beamServe(q, layers, upperNodes,
+      codesDf, "vec_id", "code", entryK = 1, beam = 2, topK = 2,
+      allowed = Some(allowed)))
+    assert(flat === Seq((1, 1, 3, 120), (1, 2, 2, 110), (4, 1, 3, 108),
+      (4, 2, 2, 99), (6, 1, 4, 11), (6, 2, 1, 0), (7, 1, 4, 18),
+      (7, 2, 3, 12)))
+    assert(layered === Seq((1, 1, 3, 120), (1, 2, 2, 110), (4, 1, 3, 108),
+      (4, 2, 2, 99), (6, 1, 8, 132), (7, 1, 8, 108), (7, 2, 6, 99)))
+    assert(filtered === Seq((1, 1, 2, 110), (4, 1, 2, 99), (6, 1, 2, 0),
+      (7, 1, 2, 11)))
+    assert(filteredLayered === Seq((1, 1, 2, 110), (1, 2, 7, 10),
+      (4, 1, 2, 99), (4, 2, 7, 18), (6, 1, 7, 99), (6, 2, 2, 0),
+      (7, 1, 6, 99), (7, 2, 2, 11)))
   }
 }

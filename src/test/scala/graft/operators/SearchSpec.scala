@@ -240,8 +240,7 @@ class SearchSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val queries = Seq((1L, "alpha"), (1L, "beta"), (2L, "gamma"))
       .toDF("qid", "token")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_msx_")
-    try {
+    SparkSpec.withTempDir("graft_msx_") { tmp =>
       docs.select(explode(TextAnalysis.tokens(lower(col("text"))))
           .as("token")).distinct()
         .withColumn("tv", Search.hashTokenVector(col("token"), 4, ":t"))
@@ -266,10 +265,6 @@ class SearchSpec extends SparkSpec {
         .filter(col("qid") === 1L).collect()
       assert(viaPartial.nonEmpty)
       assert(viaPartial.forall(!_.isNullAt(3)))
-    } finally {
-      java.nio.file.Files.walk(tmp).sorted(
-          java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
     }
   }
 }

@@ -10,22 +10,23 @@ class CsvSinkSpec extends SparkSpec {
 
   test("writes a single headered csv when asked") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("csvsink").toString + "/out"
-    CsvSink.write(Seq((1, "a"), (2, "b")).toDF("id", "v"), dir,
-      singleFile = true)
-    val files = Files.list(Paths.get(dir)).toArray.map(_.toString)
-      .filter(_.endsWith(".csv"))
-    assert(files.length === 1)
-    val lines = scala.util.Using(scala.io.Source.fromFile(files.head))(
-      _.getLines().toSeq).get
-    assert(lines.head === "id,v")
-    assert(lines.tail.sorted === Seq("1,a", "2,b"))
+    SparkSpec.withTempDir("csvsink") { tmp =>
+      val dir = s"$tmp/out"
+      CsvSink.write(Seq((1, "a"), (2, "b")).toDF("id", "v"), dir,
+        singleFile = true)
+      val files = Files.list(Paths.get(dir)).toArray.map(_.toString)
+        .filter(_.endsWith(".csv"))
+      assert(files.length === 1)
+      val lines = scala.util.Using(scala.io.Source.fromFile(files.head))(
+        _.getLines().toSeq).get
+      assert(lines.head === "id,v")
+      assert(lines.tail.sorted === Seq("1,a", "2,b"))
+    }
   }
 
   test("partitioned layout: a partition-column filter prunes the scan (q179)") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_prune_spec")
-    try {
+    SparkSpec.withTempDir("graft_prune_spec") { tmp =>
       Seq((1L, "en"), (2L, "de"), (3L, "en"))
         .toDF("id", "lang")
         .write.partitionBy("lang").parquet(s"$tmp/c")
@@ -38,17 +39,12 @@ class CsvSinkSpec extends SparkSpec {
         s"partition filter not pushed:\n$plan")
       assert(read.select("id").collect().map(_.getLong(0)).sorted
         === Array(1L, 3L))
-    } finally {
-      java.nio.file.Files.walk(tmp)
-        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
     }
   }
 
   test("data-dependent dim join plants a dynamic partition filter (q259)") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_dpp_spec")
-    try {
+    SparkSpec.withTempDir("graft_dpp_spec") { tmp =>
       // facts partitioned by k; dim keys are DATA-DEPENDENT (an agg
       // over another frame), so only runtime pruning can skip dirs
       (1 to 100).map(i => (i.toLong, s"t${i % 4}"))
@@ -63,17 +59,12 @@ class CsvSinkSpec extends SparkSpec {
         s"no dynamic partition pruning in plan:\n$plan")
       // and the pruned join still returns exactly t0/t1 facts
       assert(joined.count() === 50L)
-    } finally {
-      java.nio.file.Files.walk(tmp)
-        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
     }
   }
 
   test("repartitionByRange + sortWithinPartitions yields disjoint per-file key ranges (q189)") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_range_spec")
-    try {
+    SparkSpec.withTempDir("graft_range_spec") { tmp =>
       (1L to 400L).map(i => (i, i % 97)).toDF("id", "key")
         .repartitionByRange(4, col("key"), col("id"))
         .sortWithinPartitions(col("key"), col("id"))
@@ -94,17 +85,12 @@ class CsvSinkSpec extends SparkSpec {
         case Array((_, hi), (lo2, _)) => assert(hi <= lo2)
         case _ =>
       }
-    } finally {
-      java.nio.file.Files.walk(tmp)
-        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
     }
   }
 
   test("maxRecordsPerFile splits one task's output into capped files (q183)") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_mrpf_spec")
-    try {
+    SparkSpec.withTempDir("graft_mrpf_spec") { tmp =>
       (1L to 250L).toDF("id").repartition(1)
         .write.option("maxRecordsPerFile", 100).parquet(s"$tmp/c")
       val files = new java.io.File(s"$tmp/c").listFiles()
@@ -116,10 +102,6 @@ class CsvSinkSpec extends SparkSpec {
       files.foreach { f =>
         assert(spark.read.parquet(f.getPath).count() <= 100L)
       }
-    } finally {
-      java.nio.file.Files.walk(tmp)
-        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
     }
   }
 }

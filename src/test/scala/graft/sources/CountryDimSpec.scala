@@ -7,36 +7,41 @@ import graft.SparkSpec
 
 class CountryDimSpec extends SparkSpec {
 
-  private lazy val dimPath = {
-    val p = Files.createTempFile("country", ".json")
-    Files.writeString(p,
-      """[{"ISO": "US", "Country": "United States", "REG": "AMER"},
-        |{"ISO": "DE", "Country": "Germany", "REG": "EMEA"},
-        |{"ISO": "JP", "Country": "Japan", "REG": "APAC"}]""".stripMargin)
-    p.toString
-  }
+  private def withDim[T](body: String => T): T =
+    SparkSpec.withTempDir("country") { dir =>
+      val p = dir.resolve("country.json")
+      Files.writeString(p,
+        """[{"ISO": "US", "Country": "United States", "REG": "AMER"},
+          |{"ISO": "DE", "Country": "Germany", "REG": "EMEA"},
+          |{"ISO": "JP", "Country": "Japan", "REG": "APAC"}]""".stripMargin)
+      body(p.toString)
+    }
 
   test("reads the reference's array-of-objects format") {
-    val dim = CountryDim.read(spark, dimPath)
-    assert(dim.count() === 3)
-    assert(dim.columns.toSeq === Seq("ISO", "Country", "REG"))
+    withDim { dimPath =>
+      val dim = CountryDim.read(spark, dimPath)
+      assert(dim.count() === 3)
+      assert(dim.columns.toSeq === Seq("ISO", "Country", "REG"))
+    }
   }
 
   test("enrich matches case-insensitively on ISO then full name") {
     import spark.implicits._
-    val dim = CountryDim.read(spark, dimPath)
-    val fact = Seq(
-      (1L, "us"),             // ISO, lowercase
-      (2L, "germany"),        // full name, lowercase
-      (3L, "JP"),             // ISO, uppercase
-      (4L, "Atlantis")        // no match
-    ).toDF("id", "country_code")
-    val got = CountryDim.enrich(fact, dim, "country_code")
-      .select(col("id"), col("Geospecific"))
-      .orderBy("id").collect()
-      .map(r => (r.getLong(0), Option(r.getString(1))))
-    assert(got.toSeq === Seq(
-      (1L, Some("AMER")), (2L, Some("EMEA")), (3L, Some("APAC")), (4L, None)))
+    withDim { dimPath =>
+      val dim = CountryDim.read(spark, dimPath)
+      val fact = Seq(
+        (1L, "us"),             // ISO, lowercase
+        (2L, "germany"),        // full name, lowercase
+        (3L, "JP"),             // ISO, uppercase
+        (4L, "Atlantis")        // no match
+      ).toDF("id", "country_code")
+      val got = CountryDim.enrich(fact, dim, "country_code")
+        .select(col("id"), col("Geospecific"))
+        .orderBy("id").collect()
+        .map(r => (r.getLong(0), Option(r.getString(1))))
+      assert(got.toSeq === Seq(
+        (1L, Some("AMER")), (2L, Some("EMEA")), (3L, Some("APAC")), (4L, None)))
+    }
   }
 
   test("the real reference dim file loads when present") {

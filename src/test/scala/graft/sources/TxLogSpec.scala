@@ -6,15 +6,8 @@ import graft.SparkSpec
 
 class TxLogSpec extends SparkSpec {
 
-  private def withTable(f: String => Unit): Unit = {
-    val tmp = java.nio.file.Files.createTempDirectory("txlog_spec")
-    try f(s"$tmp/tbl")
-    finally {
-      java.nio.file.Files.walk(tmp).sorted(
-          java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-    }
-  }
+  private def withTable(f: String => Unit): Unit =
+    SparkSpec.withTempDir("txlog_spec")(tmp => f(s"$tmp/tbl"))
 
   test("commit numbers versions; append adds, overwrite resets") {
     import spark.implicits._
@@ -335,9 +328,7 @@ class TxLogSpec extends SparkSpec {
       assert(v2 === 1L && q2 === -1L)
       assert(TxLog.versions(q) === Seq(0L))
       // clean up the quarantine dir (outside withTable's tmp)
-      java.nio.file.Files.walk(java.nio.file.Paths.get(q)).sorted(
-          java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(q))
     }
   }
 

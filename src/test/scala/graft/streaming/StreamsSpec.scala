@@ -83,38 +83,39 @@ class StreamsSpec extends SparkSpec {
   test("QoE outages run incrementally via foreachBatch at day grain") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    // The reference refreshes QoE per complete (link, day) — the
-    // streaming form processes each arriving day-batch through the
-    // SAME declarative operator and merges idempotently downstream.
-    val input = MemoryStream[(Long, Timestamp, Long, Int)]
-    // the "merge" stand-in: keyed overwrite = the idempotent upsert
-    val merged = scala.collection.concurrent.TrieMap
-      .empty[(Long, java.sql.Date), (Int, Int)]
-    val q = Streams.dailyQoeStream(
-      input.toDF().toDF("edge_key", "ts", "tb", "state"),
-      merge = df => df.collect().foreach { r =>
-        merged((r.getAs[Long]("edge_key"), r.getAs[java.sql.Date]("day"))) =
-          (r.getAs[Int]("n_brownouts"), r.getAs[Int]("n_blackouts"))
-      },
-      checkpointDir = java.nio.file.Files
-        .createTempDirectory("qoe_ck").toString)
-    try {
-      // day 1 for edge 7: 4→2 brownout run, then 3→0 blackout
-      input.addData(
-        (7L, ts("2024-01-01 10:00:00"), 1L, 4),
-        (7L, ts("2024-01-01 10:00:07"), 2L, 2),
-        (7L, ts("2024-01-01 10:00:14"), 3L, 3),
-        (7L, ts("2024-01-01 10:00:21"), 4L, 0))
-      q.processAllAvailable()
-      // a second day-batch for another edge lands incrementally
-      input.addData(
-        (8L, ts("2024-01-02 00:00:00"), 1L, 4),
-        (8L, ts("2024-01-02 00:00:07"), 2L, 0))
-      q.processAllAvailable()
-      assert(merged.toMap === Map(
-        (7L, java.sql.Date.valueOf("2024-01-01")) -> ((1, 1)),
-        (8L, java.sql.Date.valueOf("2024-01-02")) -> ((0, 1))))
-    } finally q.stop()
+    SparkSpec.withTempDir("qoe_ck") { ck =>
+      // The reference refreshes QoE per complete (link, day) — the
+      // streaming form processes each arriving day-batch through the
+      // SAME declarative operator and merges idempotently downstream.
+      val input = MemoryStream[(Long, Timestamp, Long, Int)]
+      // the "merge" stand-in: keyed overwrite = the idempotent upsert
+      val merged = scala.collection.concurrent.TrieMap
+        .empty[(Long, java.sql.Date), (Int, Int)]
+      val q = Streams.dailyQoeStream(
+        input.toDF().toDF("edge_key", "ts", "tb", "state"),
+        merge = df => df.collect().foreach { r =>
+          merged((r.getAs[Long]("edge_key"), r.getAs[java.sql.Date]("day"))) =
+            (r.getAs[Int]("n_brownouts"), r.getAs[Int]("n_blackouts"))
+        },
+        checkpointDir = ck.toString)
+      try {
+        // day 1 for edge 7: 4→2 brownout run, then 3→0 blackout
+        input.addData(
+          (7L, ts("2024-01-01 10:00:00"), 1L, 4),
+          (7L, ts("2024-01-01 10:00:07"), 2L, 2),
+          (7L, ts("2024-01-01 10:00:14"), 3L, 3),
+          (7L, ts("2024-01-01 10:00:21"), 4L, 0))
+        q.processAllAvailable()
+        // a second day-batch for another edge lands incrementally
+        input.addData(
+          (8L, ts("2024-01-02 00:00:00"), 1L, 4),
+          (8L, ts("2024-01-02 00:00:07"), 2L, 0))
+        q.processAllAvailable()
+        assert(merged.toMap === Map(
+          (7L, java.sql.Date.valueOf("2024-01-01")) -> ((1, 1)),
+          (8L, java.sql.Date.valueOf("2024-01-02")) -> ((0, 1))))
+      } finally q.stop()
+    }
   }
 
   test("sessionize closes sessions on gap and keeps state across batches") {
@@ -201,112 +202,117 @@ class StreamsSpec extends SparkSpec {
   test("scd2Stream closes versions across micro-batches via Scd2.merge") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.types._
-    val input = MemoryStream[(Long, Timestamp, String, Long)]
-    val histSchema = StructType(Seq(
-      StructField("id", LongType), StructField("state", StringType),
-      StructField("valid_from", TimestampType),
-      StructField("valid_to", TimestampType)))
-    var gold = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), histSchema)
-    val q = Streams.scd2Stream(
-      input.toDF().toDF("id", "ts", "state", "seq"),
-      Seq("id"), Seq("state"), "ts", "seq",
-      latest => gold = graft.operators.Scd2.merge(gold, latest,
-          Seq("id"), Seq("state"), "ts")
-        .drop("is_current").localCheckpoint(true),
-      java.nio.file.Files.createTempDirectory("scd2_ck").toString)
-    try {
-      // batch 1: key 1 flaps A→B within the batch (collapses to B),
-      // key 2 arrives as X
-      input.addData(
-        (1L, ts("2024-01-01 00:00:00"), "A", 1L),
-        (1L, ts("2024-01-01 06:00:00"), "B", 2L),
-        (2L, ts("2024-01-01 00:00:00"), "X", 3L))
-      q.processAllAvailable()
-      // batch 2: key 1 changes (closes B), key 2 repeats X (no-op)
-      input.addData(
-        (1L, ts("2024-01-02 00:00:00"), "C", 4L),
-        (2L, ts("2024-01-02 00:00:00"), "X", 5L))
-      q.processAllAvailable()
-      val got = gold.orderBy(col("id"), col("valid_from")).collect()
-        .map(r => (r.getLong(0), r.getString(1), Option(r.getTimestamp(3))))
-      assert(got.toSeq === Seq(
-        (1L, "B", Some(ts("2024-01-02 00:00:00"))), // closed by batch 2
-        (1L, "C", None),                             // current
-        (2L, "X", None)))                            // no-op kept ONE version
-    } finally q.stop()
+    SparkSpec.withTempDir("scd2_ck") { ck =>
+      import org.apache.spark.sql.types._
+      val input = MemoryStream[(Long, Timestamp, String, Long)]
+      val histSchema = StructType(Seq(
+        StructField("id", LongType), StructField("state", StringType),
+        StructField("valid_from", TimestampType),
+        StructField("valid_to", TimestampType)))
+      var gold = spark.createDataFrame(
+        new java.util.ArrayList[org.apache.spark.sql.Row](), histSchema)
+      val q = Streams.scd2Stream(
+        input.toDF().toDF("id", "ts", "state", "seq"),
+        Seq("id"), Seq("state"), "ts", "seq",
+        latest => gold = graft.operators.Scd2.merge(gold, latest,
+            Seq("id"), Seq("state"), "ts")
+          .drop("is_current").localCheckpoint(true),
+        ck.toString)
+      try {
+        // batch 1: key 1 flaps A→B within the batch (collapses to B),
+        // key 2 arrives as X
+        input.addData(
+          (1L, ts("2024-01-01 00:00:00"), "A", 1L),
+          (1L, ts("2024-01-01 06:00:00"), "B", 2L),
+          (2L, ts("2024-01-01 00:00:00"), "X", 3L))
+        q.processAllAvailable()
+        // batch 2: key 1 changes (closes B), key 2 repeats X (no-op)
+        input.addData(
+          (1L, ts("2024-01-02 00:00:00"), "C", 4L),
+          (2L, ts("2024-01-02 00:00:00"), "X", 5L))
+        q.processAllAvailable()
+        val got = gold.orderBy(col("id"), col("valid_from")).collect()
+          .map(r => (r.getLong(0), r.getString(1), Option(r.getTimestamp(3))))
+        assert(got.toSeq === Seq(
+          (1L, "B", Some(ts("2024-01-02 00:00:00"))), // closed by batch 2
+          (1L, "C", None),                             // current
+          (2L, "X", None)))                            // no-op kept ONE version
+      } finally q.stop()
+    }
   }
 
   test("transformEachBatchWithId: engine batch ids key exactly-once TxLog commits") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Long]
-    val tmp = java.nio.file.Files.createTempDirectory("tebi_tx")
-    val tbl = s"$tmp/tbl"
-    var ids = Seq.empty[Long]
-    val q = Streams.transformEachBatchWithId(
-      input.toDF().toDF("doc_id"),
-      batch => batch.withColumn("v", col("doc_id") * 10),
-      (res, batchId) => {
-        ids = ids :+ batchId
-        // first commit under this (appId, batchId) applies; the
-        // simulated REPLAY of the same id below must be a no-op
-        graft.sources.TxLog.commitIdempotent(res, tbl, "append",
-          "doc_id", "tebi", batchId)
-        ()
-      },
-      java.nio.file.Files.createTempDirectory("tebi_ck").toString)
-    try {
-      input.addData(1L, 2L)
-      q.processAllAvailable()
-      input.addData(3L)
-      q.processAllAvailable()
-      assert(ids === Seq(0L, 1L)) // the engine's ids, in order
-      val n1 = graft.sources.TxLog.read(spark, tbl).count()
-      // replay batch 1's payload under its original id: skipped
-      val replayed = graft.sources.TxLog.commitIdempotent(
-        Seq(3L).toDF("doc_id").withColumn("v", col("doc_id") * 10),
-        tbl, "append", "doc_id", "tebi", 1L)
-      assert(replayed.isEmpty)
-      assert(graft.sources.TxLog.read(spark, tbl).count() === n1)
-      // a NEW id still applies
-      assert(graft.sources.TxLog.commitIdempotent(
-        Seq(4L).toDF("doc_id").withColumn("v", col("doc_id") * 10),
-        tbl, "append", "doc_id", "tebi", 2L).nonEmpty)
-      assert(graft.sources.TxLog.read(spark, tbl).count() === n1 + 1)
-    } finally q.stop()
+    SparkSpec.withTempDir("tebi_") { tmp =>
+      val input = MemoryStream[Long]
+      val tbl = s"$tmp/tbl"
+      var ids = Seq.empty[Long]
+      val q = Streams.transformEachBatchWithId(
+        input.toDF().toDF("doc_id"),
+        batch => batch.withColumn("v", col("doc_id") * 10),
+        (res, batchId) => {
+          ids = ids :+ batchId
+          // first commit under this (appId, batchId) applies; the
+          // simulated REPLAY of the same id below must be a no-op
+          graft.sources.TxLog.commitIdempotent(res, tbl, "append",
+            "doc_id", "tebi", batchId)
+          ()
+        },
+        s"$tmp/ck")
+      try {
+        input.addData(1L, 2L)
+        q.processAllAvailable()
+        input.addData(3L)
+        q.processAllAvailable()
+        assert(ids === Seq(0L, 1L)) // the engine's ids, in order
+        val n1 = graft.sources.TxLog.read(spark, tbl).count()
+        // replay batch 1's payload under its original id: skipped
+        val replayed = graft.sources.TxLog.commitIdempotent(
+          Seq(3L).toDF("doc_id").withColumn("v", col("doc_id") * 10),
+          tbl, "append", "doc_id", "tebi", 1L)
+        assert(replayed.isEmpty)
+        assert(graft.sources.TxLog.read(spark, tbl).count() === n1)
+        // a NEW id still applies
+        assert(graft.sources.TxLog.commitIdempotent(
+          Seq(4L).toDF("doc_id").withColumn("v", col("doc_id") * 10),
+          tbl, "append", "doc_id", "tebi", 2L).nonEmpty)
+        assert(graft.sources.TxLog.read(spark, tbl).count() === n1 + 1)
+      } finally q.stop()
+    }
   }
 
   test("transformEachBatch runs the batch operator per micro-batch, sink accumulates") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Long]
-    var seen = Seq.empty[(Long, Long)]
-    val q = Streams.transformEachBatch(
-      input.toDF().toDF("doc_id"),
-      // a stand-in for the multimodal pass: real decode+fingerprint
-      // of the batch via the SAME batch operator q221 gates
-      batch => graft.operators.Multimodal.dhashRoundTrip(batch, "doc_id")
-        .select(col("id"), col("dhash")),
-      res => seen = seen ++ res.collect()
-        .map(r => (r.getLong(0), r.getLong(1))),
-      java.nio.file.Files.createTempDirectory("teb_ck").toString)
-    try {
-      input.addData(3L, 67L) // 67 = 3 + 64 → identical scene image
-      q.processAllAvailable()
-      val afterBatch1 = seen.size
-      input.addData(4L)
-      q.processAllAvailable()
-      assert(afterBatch1 === 2 && seen.size === 3)
-      val m = seen.toMap
-      // per-batch results equal the batch operator's output
-      assert(m(3L) ===
-        graft.operators.Multimodal.dHash64(
-          graft.operators.Multimodal.syntheticScenePng(3L)).get)
-      assert(m(3L) === m(67L)) // same (scene, variant) across ids
-      assert(m(3L) !== m(4L))
-    } finally q.stop()
+    SparkSpec.withTempDir("teb_ck") { ck =>
+      val input = MemoryStream[Long]
+      var seen = Seq.empty[(Long, Long)]
+      val q = Streams.transformEachBatch(
+        input.toDF().toDF("doc_id"),
+        // a stand-in for the multimodal pass: real decode+fingerprint
+        // of the batch via the SAME batch operator q221 gates
+        batch => graft.operators.Multimodal.dhashRoundTrip(batch, "doc_id")
+          .select(col("id"), col("dhash")),
+        res => seen = seen ++ res.collect()
+          .map(r => (r.getLong(0), r.getLong(1))),
+        ck.toString)
+      try {
+        input.addData(3L, 67L) // 67 = 3 + 64 → identical scene image
+        q.processAllAvailable()
+        val afterBatch1 = seen.size
+        input.addData(4L)
+        q.processAllAvailable()
+        assert(afterBatch1 === 2 && seen.size === 3)
+        val m = seen.toMap
+        // per-batch results equal the batch operator's output
+        assert(m(3L) ===
+          graft.operators.Multimodal.dHash64(
+            graft.operators.Multimodal.syntheticScenePng(3L)).get)
+        assert(m(3L) === m(67L)) // same (scene, variant) across ids
+        assert(m(3L) !== m(4L))
+      } finally q.stop()
+    }
   }
 
   test("debounceStream: kept-relative-to-kept state carries across batches") {

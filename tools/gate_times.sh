@@ -4,7 +4,7 @@
 # checkouts, alternating which goes first, and append each run's
 # `{"metric":"total",...}` line, tagged with side and run number, to
 # <out.jsonl>.
-# Usage: gate_times.sh <parent-checkout> <change-checkout>
+# Usage: tools/gate_times.sh <parent-checkout> <change-checkout>
 #          <sf-dir> <q1,q2,...> <runs> <out.jsonl>
 set -e
 parent="$(cd "$1" && pwd)"; change="$(cd "$2" && pwd)"

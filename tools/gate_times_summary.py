@@ -1,10 +1,10 @@
 #!/usr/bin/env python3
-"""Per-gate medians of a gate_times.sh JSONL file: parent and change
+"""Per-gate medians of a tools/gate_times.sh JSONL file: parent and change
 median seconds, change/parent ratio, the parent's IQR, and a flag on
 every gate whose change median is worse than the parent's by more
 than the parent's IQR. Also reports any gate that errored.
 
-Usage: gate_times_summary.py <gate_times.jsonl>
+Usage: tools/gate_times_summary.py <gate_times.jsonl>
 """
 import json
 import statistics
